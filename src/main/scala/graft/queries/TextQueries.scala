@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.Rounding.dround
+import graft.sources.PersistedIndex
 
 /** Text-analysis + deduplication operators over the `documents` table
   * (SURVEY §7.5 extension mandate: exact dedup, MinHash-LSH, SimHash,
@@ -470,17 +471,14 @@ object TextQueries {
       .write.mode("overwrite").parquet(s"$path/filter")
   }
 
-  /** The persisted filter bytes, rebuilding when absent or older than
-    * the documents source (same staleness lifecycle as the MinHash /
-    * IVF indexes — a real deployment rebuilds once per eval-suite
-    * release, every query after that pays one small-file read).
+  val Bloom: PersistedIndex =
+    PersistedIndex("bloom", "documents", "filter", bloomIndexPath, bloomBuild)
+
+  /** The persisted filter bytes: a real deployment rebuilds once per
+    * eval-suite release, every query after that pays one small-file read.
     */
-  private[graft] def bloomFilterBytes(s: SparkSession, dir: String): Array[Byte] = {
-    val path = bloomIndexPath(dir)
-    if (indexStale(s, s"$path/filter", s"$dir/documents.parquet"))
-      bloomBuild(s, dir, path)
-    s.read.parquet(s"$path/filter").head().getAs[Array[Byte]](0)
-  }
+  private[graft] def bloomFilterBytes(s: SparkSession, dir: String): Array[Byte] =
+    s.read.parquet(s"${Bloom.ensure(s, dir)}/filter").head().getAs[Array[Byte]](0)
 
   /** The qd13b probe column over a `text` column — ONE definition shared
     * with the streaming twin ([[graft.streaming.TextStreaming.decontaminate]])
@@ -839,9 +837,8 @@ object TextQueries {
     * capped posting stage, [[bm25Postings]]), so the twin shares
     * qd17's DuckDB oracle and is hash-matched end-to-end at 3 sfs.
     *
-    * Commit order: stats first, postings last — the postings dir's
-    * `_SUCCESS` is the freshness witness [[indexStale]] probes, so a
-    * half-finished build can never read as fresh.
+    * Commit order: stats first, postings last — postings is the
+    * [[Bm25]] witness.
     */
   /** Term-hash bucket count for the persisted posting layout (VERDICT
     * r16 item 3 / What's-missing #2): the postings are PARTITIONED by
@@ -875,15 +872,13 @@ object TextQueries {
       .parquet(s"$path/postings")
   }
 
-  private def bm25Index(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val path = bm25IndexPath(dir)
-    if (indexStale(s, s"$path/postings", s"$dir/documents.parquet"))
-      bm25Build(s, dir, path)
-    (s.read.parquet(s"$path/postings"), s.read.parquet(s"$path/stats"))
-  }
+  val Bm25: PersistedIndex =
+    PersistedIndex("bm25", "documents", "postings", bm25IndexPath, bm25Build)
 
   def qd17b(s: SparkSession, dir: String): DataFrame = {
-    val (postings, stats) = bm25Index(s, dir)
+    val path = Bm25.ensure(s, dir)
+    val postings = s.read.parquet(s"$path/postings")
+    val stats = s.read.parquet(s"$path/stats")
     val qterms = bm25Queries(bm25Corpus(docs(s, dir)))
     // Partition pruning: the query vocab's bucket set is ≤ Bm25Buckets
     // driver-sized ints (the scalar-collect class — bounded by the
@@ -1438,23 +1433,11 @@ object TextQueries {
     qd6Sig(s, dir).select("doc_id", "grams", "sig", "bands")
       .write.mode("overwrite").parquet(s"$path/signatures")
 
-  /** Read the signature index, rebuilding when absent, stale (an index
-    * keyed only by dir path must not silently serve signatures of a
-    * replaced documents.parquet), or written in an older format (schema
-    * probe: pre-r6 indexes lack the grams column) — format evolution is
-    * a rebuild trigger, not a runtime failure.
-    */
-  private def minhashIndex(s: SparkSession, dir: String): DataFrame = {
-    val path = minhashIndexPath(dir)
-    def read() = s.read.parquet(s"$path/signatures")
-    if (indexStale(s, s"$path/signatures", s"$dir/documents.parquet")) {
-      minhashBuild(s, dir, path); read()
-    } else {
-      val idx = read()
-      if (idx.columns.contains("grams")) idx
-      else { minhashBuild(s, dir, path); read() }
-    }
-  }
+  val Minhash: PersistedIndex =
+    PersistedIndex("minhash", "documents", "signatures", minhashIndexPath, minhashBuild)
+
+  private def minhashIndex(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"${Minhash.ensure(s, dir)}/signatures")
 
   /** The probe path's band-collision candidate pairs straight off the
     * persisted index — exposed for the recall measurement (RECALL.json
@@ -1473,17 +1456,6 @@ object TextQueries {
       .withColumn("jac_est", sigEstimate(col("sa"), col("sb")))
     perDocDupCounts(est, col("jac_est"), idx.select("doc_id"))
   }
-
-  /** True when the index is missing or older than its source data.
-    * Probed through the Hadoop FileSystem API (sources.HadoopFs), NOT
-    * `java.io.File`: index/source paths are arbitrary and on a cluster
-    * name HDFS/S3 locations, where a local-file probe is always
-    * "missing" and would silently rebuild the index on every query.
-    */
-  private[graft] def indexStale(s: SparkSession, indexDir: String,
-      sourcePath: String): Boolean =
-    graft.sources.HadoopFs.indexStale(
-      s.sparkContext.hadoopConfiguration, indexDir, sourcePath)
 
   // ---------------------------------------------------------------- qd7
   /** SimHash fingerprint + banded Hamming near-dup count. Tokens →

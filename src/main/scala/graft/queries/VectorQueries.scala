@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.Rounding.dround
+import graft.sources.PersistedIndex
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   * brute-force cosine top-k as the exact baseline (qe1), sign-LSH
@@ -617,13 +618,11 @@ object VectorQueries {
   def qe5(s: SparkSession, dir: String): DataFrame = {
     // Seed from the persisted quantizer when it is FRESH: the fused
     // KMeans fit exists for corpora with no offline index yet, and
-    // re-fitting next to a current artifact is pure waste (it was the
-    // whole-suite bench maximum). Staleness falls back to the fit —
-    // identical results either way: the quantizer is seeded and
-    // deterministic, so index and fit produce the same centroids.
-    val path = ivfIndexPath(dir)
-    if (!TextQueries.indexStale(s, s"$path/assignments", s"$dir/embeddings.parquet"))
-      qe5b(s, dir)
+    // re-fitting next to a current artifact is pure waste. Staleness
+    // falls back to the fit — identical results either way: the
+    // quantizer is seeded and deterministic, so index and fit produce
+    // the same centroids.
+    if (Ivf.fresh(s, dir)) qe5b(s, dir)
     else {
       val (assigned, centDf) = ivfFit(s, dir)
       ivfProbe(assigned, centDf)
@@ -631,22 +630,26 @@ object VectorQueries {
   }
 
   // --------------------------------------------------------------- qe5b
-  /** IVF with a PERSISTED quantizer (VERDICT r1 item 10): at corpus
-    * scale the coarse quantizer is an offline artifact, not a per-query
-    * fit. `ivfBuild` writes centroids + corpus assignments as parquet
-    * once; the probe-only path reads them back — so the per-query cost
-    * is two parquet scans and the list equi-join, no ML fit. The index
-    * lands under java.io.tmpdir keyed by the data dir (the engine must
-    * not write into the read-only data roots).
+  /** IVF with a PERSISTED quantizer: at corpus scale the coarse
+    * quantizer is an offline artifact, not a per-query fit. `ivfBuild`
+    * writes centroids + corpus assignments as parquet once; the
+    * probe-only path reads them back — so the per-query cost is two
+    * parquet scans and the list equi-join, no ML fit. The index lands
+    * under java.io.tmpdir keyed by the data dir (the engine must not
+    * write into the read-only data roots).
     */
   def ivfIndexPath(dir: String): String =
     graft.sources.HadoopFs.indexPath("ivf", dir, IVF_NLIST, IvfFitIters, "lloyd6dp")
 
   def ivfBuild(s: SparkSession, dir: String, path: String): Unit = {
     val (assigned, centDf) = ivfFit(s, dir)
-    assigned.write.mode("overwrite").parquet(s"$path/assignments")
     centDf.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    // assignments, the witness, last
+    assigned.write.mode("overwrite").parquet(s"$path/assignments")
   }
+
+  val Ivf: PersistedIndex =
+    PersistedIndex("ivf", "embeddings", "assignments", ivfIndexPath, ivfBuild)
 
   def qe5b(s: SparkSession, dir: String): DataFrame = {
     // the probe path never touches embs(), so the native functions the
@@ -654,11 +657,7 @@ object VectorQueries {
     // this, qe5/qe5b fail with UNRESOLVED_ROUTINE when they are the
     // session's first vector query
     registerNative(s)
-    val path = ivfIndexPath(dir)
-    // rebuild when absent OR older than the source embeddings (stale
-    // /tmp artifact must not survive a testdata swap)
-    if (TextQueries.indexStale(s, s"$path/assignments", s"$dir/embeddings.parquet"))
-      ivfBuild(s, dir, path)
+    val path = Ivf.ensure(s, dir)
     ivfProbe(s.read.parquet(s"$path/assignments"),
       s.read.parquet(s"$path/centroids"))
   }
@@ -1310,11 +1309,8 @@ object VectorQueries {
   }
 
   def qe14(s: SparkSession, dir: String): DataFrame = {
-    // same index-freshness dispatch as qe5: re-fitting next to a
-    // current offline artifact is pure waste
-    val path = pqIndexPath(dir)
-    if (!TextQueries.indexStale(s, s"$path/codes", s"$dir/embeddings.parquet"))
-      qe14b(s, dir)
+    // re-fitting next to a current offline artifact is pure waste
+    if (Pq.fresh(s, dir)) qe14b(s, dir)
     else {
       val (cb, codes) = pqFit(s, dir)
       pqProbe(s, dir, cb, codes)
@@ -1463,30 +1459,30 @@ object VectorQueries {
   def pqBuild(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
     val (cb, codes) = pqFit(s, dir)
-    codes.write.mode("overwrite").parquet(s"$path/codes")
     (for (sub <- 0 until PqM; c <- 0 until PqKs) yield (sub, c, cb(sub)(c)))
       .toDF("sub", "code", "cent")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+    // codes, the witness, last
+    codes.write.mode("overwrite").parquet(s"$path/codes")
   }
 
-  /** Rebuild-if-stale, then read back the driver-resident codebook. */
-  private def pqReadIndex(s: SparkSession, dir: String)
-      : (Array[Array[Seq[Double]]], DataFrame) = {
-    val path = pqIndexPath(dir)
-    if (TextQueries.indexStale(s, s"$path/codes", s"$dir/embeddings.parquet"))
-      pqBuild(s, dir, path)
+  val Pq: PersistedIndex =
+    PersistedIndex("pq", "embeddings", "codes", pqIndexPath, pqBuild)
+
+  /** The driver-resident codebook of the PQ index at `path`. */
+  private def pqCodebook(s: SparkSession, path: String): Array[Array[Seq[Double]]] = {
     val cb = Array.fill(PqM, PqKs)(Seq.empty[Double])
     s.read.parquet(s"$path/codebook").collect().foreach { r =>
       cb(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
         r.getSeq[Double](r.fieldIndex("cent"))
     }
-    (cb, s.read.parquet(s"$path/codes"))
+    cb
   }
 
   def qe14b(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
-    val (cb, codes) = pqReadIndex(s, dir)
-    pqProbe(s, dir, cb, codes)
+    val path = Pq.ensure(s, dir)
+    pqProbe(s, dir, pqCodebook(s, path), s.read.parquet(s"$path/codes"))
   }
 
   // --------------------------------------------------------------- qe20
@@ -1513,38 +1509,28 @@ object VectorQueries {
     // the merged layout is DERIVED from the ivf assignments, so its
     // identity must include the quantizer's build params too — a
     // quantizer change with a same-named merged dir would silently pair
-    // NEW probe centroids with OLD list ids (exactly the r13 bug the
-    // fingerprints exist to kill: measured 0.16 recall until this line
-    // carried the upstream identity)
+    // NEW probe centroids with OLD list ids
     graft.sources.HadoopFs.indexPath(
       "ivfpq", dir, IVF_NLIST, IvfFitIters, "lloyd6dp", PqM, PqKs, PqIters, "m6dp")
 
-  /** Rebuild-if-stale of qe20's offline artifacts: the upstream IVF
-    * assignments and PQ codes, then the merged per-list codes layout
-    * (faiss stores codes PER inverted list) — the assignments⋈codes
-    * join happens ONCE at build time; the probe-path scan then reads
-    * (vec_id, list_id, codes) rows and never shuffles. Callable from
-    * Bench's offline stage so a cold tmpdir never pays the build
-    * inside the timed query.
+  /** The merged per-list codes layout (faiss stores codes PER inverted
+    * list), built from fresh IVF assignments and PQ codes: the
+    * assignments⋈codes join happens ONCE at build time; the probe-path
+    * scan then reads (vec_id, list_id, codes) rows and never shuffles.
     */
-  def ivfPqBuildIfStale(s: SparkSession, dir: String): Unit = {
-    val ivfPath = ivfIndexPath(dir)
-    if (TextQueries.indexStale(s, s"$ivfPath/assignments", s"$dir/embeddings.parquet"))
-      ivfBuild(s, dir, ivfPath)
-    val (_, codes) = pqReadIndex(s, dir)
-    val merged = ivfPqIndexPath(dir)
-    if (TextQueries.indexStale(s, s"$merged/codes", s"$dir/embeddings.parquet"))
-      s.read.parquet(s"$ivfPath/assignments").select("vec_id", "list_id")
-        .join(codes, Seq("vec_id"))
-        .write.mode("overwrite").parquet(s"$merged/codes")
-  }
+  def ivfPqBuild(s: SparkSession, dir: String, path: String): Unit =
+    s.read.parquet(s"${Ivf.ensure(s, dir)}/assignments").select("vec_id", "list_id")
+      .join(s.read.parquet(s"${Pq.ensure(s, dir)}/codes"), Seq("vec_id"))
+      .write.mode("overwrite").parquet(s"$path/codes")
+
+  val IvfPq: PersistedIndex =
+    PersistedIndex("ivfpq", "embeddings", "codes", ivfPqIndexPath, ivfPqBuild)
 
   def qe20(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
-    ivfPqBuildIfStale(s, dir)
-    val ivfPath = ivfIndexPath(dir)
-    val (cb, _) = pqReadIndex(s, dir)
-    val merged = ivfPqIndexPath(dir)
+    val ivfPath = Ivf.ensure(s, dir)
+    val cb = pqCodebook(s, Pq.ensure(s, dir))
+    val merged = IvfPq.ensure(s, dir)
     val centDf = s.read.parquet(s"$ivfPath/centroids")
     val probes = embs(s, dir).filter(col("vec_id") < NQUERIES)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
@@ -2060,8 +2046,8 @@ object VectorQueries {
   /** Persisted gate-index location for a data dir (tmpdir-keyed — the
     * engine must not write into the read-only data roots; parameter-
     * fingerprinted so a probe-budget/fit-parameter change forces a
-    * rebuild instead of silently serving an old index, ADVICE r12).
-    * r15: the fingerprint embeds the RESOLVED probe budget, so a sized
+    * rebuild instead of silently serving an old index). The
+    * fingerprint embeds the RESOLVED probe budget, so a sized
     * build and the constant fallback build never share a directory —
     * when a new sweep re-sizes the gate, the old index is simply
     * orphaned, never served.
@@ -2651,6 +2637,9 @@ object VectorQueries {
   def gateBuild(s: SparkSession, dir: String, path: String): Unit =
     gateCands(s, dir).write.mode("overwrite").parquet(s"$path/cands")
 
+  val Gate: PersistedIndex =
+    PersistedIndex("gate", "embeddings", "cands", gateIndexPath, gateBuild)
+
   /** Home-cell mass per cell of the PRODUCTION gate fit — the
     * tools/CellBalance diagnostic behind the r14 envelope note (a
     * skewed mass distribution, not the probe rule, is what inflates
@@ -2672,10 +2661,7 @@ object VectorQueries {
     // the probe path may never touch embs(), so register the native
     // cosine/dot functions explicitly (same contract as qe5b)
     registerNative(s)
-    val path = gateIndexPath(dir)
-    if (TextQueries.indexStale(s, s"$path/cands", s"$dir/embeddings.parquet"))
-      gateBuild(s, dir, path)
-    s.read.parquet(s"$path/cands")
+    s.read.parquet(s"${Gate.ensure(s, dir)}/cands")
   }
 
   /** qe15's production twin: K-th-NN distance + top-2% OOD flag over
@@ -2751,12 +2737,12 @@ object VectorQueries {
   def gateMassBuild(s: SparkSession, dir: String, path: String): Unit =
     gateMassCands(s, dir).write.mode("overwrite").parquet(s"$path/cands")
 
+  val GateMass: PersistedIndex =
+    PersistedIndex("gatemass", "embeddings", "cands", gateMassIndexPath, gateMassBuild)
+
   private def gatedMassSym(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
-    val path = gateMassIndexPath(dir)
-    if (TextQueries.indexStale(s, s"$path/cands", s"$dir/embeddings.parquet"))
-      gateMassBuild(s, dir, path)
-    s.read.parquet(s"$path/cands")
+    s.read.parquet(s"${GateMass.ensure(s, dir)}/cands")
   }
 
   /** qe15b's mass-budgeted sibling (r14, the production form of the
@@ -3934,7 +3920,7 @@ object VectorQueries {
   }
 
   // --------------------------------------------------------------- qe28b
-  /** PCA PROBE path with a full hash-match oracle (VERDICT r11 item 5):
+  /** PCA PROBE path with a full hash-match oracle:
     * the fitted basis is a persisted offline artifact (the qe5b/qd6b
     * lifecycle), and the PROJECTION stage — the per-row work a pipeline
     * actually runs — is a pure deterministic matrix multiply against
@@ -3959,8 +3945,7 @@ object VectorQueries {
       .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
     new java.io.File(path).mkdirs()
     // %.17e round-trips binary64 exactly AND parses as a DOUBLE (not
-    // DECIMAL) literal in DuckDB; sidecar first so a half-finished
-    // build can never pass the parquet staleness check
+    // DECIMAL) literal in DuckDB; sidecar first, basis (the witness) last
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$path/basis.json"),
       basis.map(_._2.map(v =>
@@ -3970,12 +3955,12 @@ object VectorQueries {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/basis")
   }
 
+  val Pca: PersistedIndex =
+    PersistedIndex("pca", "embeddings", "basis", pcaIndexPath, pcaBuild)
+
   def qe28b(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
-    val path = pcaIndexPath(dir)
-    if (TextQueries.indexStale(s, s"$path/basis", s"$dir/embeddings.parquet"))
-      pcaBuild(s, dir, path)
-    val basis = s.read.parquet(s"$path/basis").collect()
+    val basis = s.read.parquet(s"${Pca.ensure(s, dir)}/basis").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
     embs(s, dir).select(col("vec_id") +: basis.toSeq.map { case (i, c) =>
       dround(dot(col("vec"), typedLit(c)), 6).as(s"pc$i") }: _*)

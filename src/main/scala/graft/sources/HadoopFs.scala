@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Filesystem probes resolved through the Hadoop `FileSystem` API — the
-  * ONE place batch (qd6b / qe5b index staleness) and streaming
+  * ONE place batch (persisted-index staleness) and streaming
   * (TextStreaming / VectorStreaming history listing) answer "is this
   * artifact there, and how fresh is it".
   *
@@ -77,21 +77,8 @@ object HadoopFs {
     catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
-  /** Parameter-fingerprinted tmpdir location for a persisted index
-    * family (ADVICE r12): the directory name embeds a hash of every
-    * BUILD parameter, so a code/parameter change can never silently
-    * serve an artifact built by an older configuration —
-    * [[indexStale]]'s mtime check only protects against SOURCE changes,
-    * not against the builder itself changing. Distinct
-    * parameterizations get distinct directories (they coexist; the
-    * orphaned one ages out with the tmpdir). Concurrent writers of the
-    * SAME parameterization still share a path — acceptable because the
-    * build is deterministic (both produce identical bytes) and the
-    * `_SUCCESS`-last commit means a reader never sees a torn write as
-    * fresh.
-    */
   /** The parameter fingerprint [[indexPath]] embeds — exposed so the
-    * curve REGISTRY (r16) can key committed artifacts by the same
+    * curve registry can key committed artifacts by the same
     * build-parameter identity the tmpdir cache uses.
     */
   def paramFingerprint(params: Any*): String =
@@ -118,6 +105,18 @@ object HadoopFs {
     norm.replaceAll("[^A-Za-z0-9]", "_")
   }
 
+  /** Parameter-fingerprinted tmpdir location for a persisted index
+    * family: the directory name embeds a hash of every BUILD parameter,
+    * so a code/parameter change can never silently serve an artifact
+    * built by an older configuration — [[indexStale]]'s mtime check only
+    * protects against SOURCE changes, not against the builder itself
+    * changing. Distinct parameterizations get distinct directories
+    * (they coexist; the orphaned one ages out with the tmpdir).
+    * Concurrent writers of the SAME parameterization still share a
+    * path — acceptable because the build is deterministic (both produce
+    * identical bytes) and the witness-last commit means a reader never
+    * sees a torn write as fresh.
+    */
   def indexPath(family: String, dir: String, params: Any*): String = {
     val fp = paramFingerprint(params: _*)
     s"${sys.props("java.io.tmpdir")}/graft_${family}_${fp}_${dirSlug(dir)}"
@@ -156,9 +155,9 @@ object HadoopFs {
   }
 
   /** True when a persisted index at `indexDir` is missing or NOT NEWER
-    * than its source data — the rebuild trigger for qd6b / qe5b
-    * artifacts (a stale index keyed only by path must not silently
-    * serve signatures of a replaced source table). The index's
+    * than its source data — the rebuild trigger of every
+    * [[PersistedIndex]] (a stale index keyed only by path must not
+    * silently serve signatures of a replaced source table). The index's
     * freshness witness is its `_SUCCESS` marker (written last by the
     * committer); the source's is the newest file under it. A TIE
     * rebuilds: filesystem mtime granularity can be a full second

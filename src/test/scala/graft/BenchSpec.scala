@@ -39,6 +39,22 @@ class BenchSpec extends AnyFunSuite {
     assert(results.head._2 < 0.15, s"min-of-reps should drop the 200ms first rep: ${results.head._2}")
   }
 
+  test("a planted failing index build lands in the rendered line's errors") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bench").toFile
+    try {
+      val d = dir.getPath
+      val ok = sources.PersistedIndex("ok", "documents", "part", _ + "/ok_index",
+        (s, _, p) => s.range(1).write.mode("overwrite").parquet(s"$p/part"))
+      val planted = sources.PersistedIndex("planted", "documents", "part",
+        _ + "/planted_index", (_, _, _) => throw new RuntimeException("boom"))
+      val errors = Bench.prebuildIndexes(SparkSpecBase.spark, d, Seq(planted, ok))
+      assert(errors == Seq("index:planted"))
+      assert(ok.fresh(SparkSpecBase.spark, d), "a failed build must not skip the next one")
+      val line = Bench.renderLine(Seq("q1" -> 1.0), errors, "/x")
+      assert(line.contains(""""errors":["index:planted"]"""))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   test("renderLine emits the driver-contract JSON with errors visible") {
     val line = Bench.renderLine(
       Seq("q1" -> 1.5, "q2" -> 0.25), Seq("q2"), "/root/testdata/sf0.1")

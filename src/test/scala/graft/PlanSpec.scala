@@ -480,9 +480,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("qd6b probe reads only the signature index, never the documents table") {
     // ensure the index exists, then check the probe's scans
-    val path = queries.TextQueries.minhashIndexPath(sf)
-    if (!new java.io.File(s"$path/signatures/_SUCCESS").exists())
-      queries.TextQueries.minhashBuild(spark, sf, path)
+    queries.TextQueries.Minhash.ensure(spark, sf)
     val p = finalPlan(queries.TextQueries.qd6b(spark, sf))
     assert(!p.contains("documents.parquet"),
       "index probe must not re-read or re-shingle the corpus")
