@@ -2,12 +2,12 @@ package graft.cxc
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftConf
-import graft.operators.{Buckets, Pareto, ZScore}
+import graft.operators.{Buckets, Checkpoints, Pareto, ZScore}
 import graft.operators.Rounding.dround
 
 import CxcSchema._
@@ -110,7 +110,6 @@ object CxcReport {
     // display-order banding is global by definition (SURVEY §7.6.6);
     // the dense rank goes through Pareto's two-phase dispatch so a
     // fact-scale frame range-partitions instead of single-partitioning
-    // (VERDICT r10 item 4)
     Pareto.denseRankBy(df,
         Seq(col("NOMBRE_CLIENTE").asc_nulls_first,
           when(isCargo(df), col("DOCTO_CC_ID"))
@@ -121,17 +120,14 @@ object CxcReport {
       .drop("_BAND_RANK")
 
   /** A16 — z-score outliers on sales IMPORTE, DELTA_RECAUDO, DELTA_MORA
-    * (threshold 3.0, /root/reference/src/reporte_cxc.py:219-281).
+    * (threshold 3.0, the reference's reporte_cxc.py:219-281): the three
+    * statistics come from one aggregate over `df`.
     */
-  def withZScores(df: DataFrame): DataFrame = {
-    val ventas = esVenta(df)
-    val z1 = ZScore.withZScore(df.withColumn("_V_IMPORTE", when(ventas, col("IMPORTE"))),
-      col("_V_IMPORTE"), "ZSCORE_IMPORTE", "ATIPICO_IMPORTE", 3.0).drop("_V_IMPORTE")
-    val z2 = ZScore.withZScore(z1, col("DELTA_RECAUDO"),
-      "ZSCORE_DELTA_RECAUDO", "ATIPICO_DELTA_RECAUDO", 3.0)
-    ZScore.withZScore(z2, col("DELTA_MORA"),
-      "ZSCORE_DELTA_MORA", "ATIPICO_DELTA_MORA", 3.0)
-  }
+  def withZScores(df: DataFrame): DataFrame =
+    ZScore.withZScores(df, Seq(
+      (when(esVenta(df), col("IMPORTE")), "ZSCORE_IMPORTE", "ATIPICO_IMPORTE"),
+      (col("DELTA_RECAUDO"), "ZSCORE_DELTA_RECAUDO", "ATIPICO_DELTA_RECAUDO"),
+      (col("DELTA_MORA"), "ZSCORE_DELTA_MORA", "ATIPICO_DELTA_MORA")), 3.0)
 
   /** P3 — the reference's fixed per-view column lists
     * (/root/reference/src/reporte_cxc.py:57-149).
@@ -168,15 +164,29 @@ object CxcReport {
   /** Full report (PASO 2): the named views of
     * /root/reference/src/reporte_cxc.py:195-201 plus the full-width
     * master "movimientos_totales" every downstream stage consumes.
+    *
+    * The reference builds one master frame and slices the views from
+    * it (main.py `run_pipeline`); here the two frames every view shares
+    * are cut ONCE per refresh with [[Checkpoints.cut]]: the normalized
+    * input and `base` (the working movements with SALDO_FACTURA, the
+    * cycle metrics and the per-client SALDO_CLIENTE window — two joins
+    * and a window). Without the cuts each view's plan re-derives that
+    * chain, and every band-group dispatch plans against it.
+    * `reporte_cxc` is a projection of the master: the master only
+    * appends z-score columns to `withBandGroups(base)`, so the rows,
+    * their order and the band groups are the same, and a cached master
+    * serves both.
+    *
     * Mirroring the reference, each extracted view is the charge set
-    * UNION its linked 'R' payments, band groups are recomputed per view
-    * on the concatenated rows (reporte_cxc.py:481-482, 504-505), and
-    * only the master carries z-scores.
+    * UNION its linked 'R' payments, and band groups are recomputed per
+    * view on the concatenated rows (reporte_cxc.py:481-482, 504-505):
+    * a view's alternation follows its own display order, so it cannot
+    * be read off the master's. Only the master carries z-scores.
     */
   def run(raw: DataFrame, asOf: LocalDate): Map[String, DataFrame] = {
-    val df = normalize(raw)
-    val movs = movimientos(df)
-    val base = withSaldoCliente(withCycleMetrics(withSaldoFactura(movs), asOf))
+    val df = Checkpoints.cut(normalize(raw))
+    val base = Checkpoints.cut(
+      withSaldoCliente(withCycleMetrics(withSaldoFactura(movimientos(df)), asOf)))
     val abiertas = base.filter(isCargo(base) && col("SALDO_FACTURA") > 0)
     val cerradas = base.filter(isCargo(base) && col("SALDO_FACTURA") === 0)
     // payment legs are TIPO_IMPTE == 'R' only (reporte_cxc.py:479, 502):
@@ -188,8 +198,7 @@ object CxcReport {
     val master = withZScores(withBandGroups(base))
     Map(
       "movimientos_totales" -> master,
-      "reporte_cxc" -> seleccionarColumnas(
-        withBandGroups(base), columnasReporte, keepBand = true),
+      "reporte_cxc" -> seleccionarColumnas(master, columnasReporte, keepBand = true),
       "facturas_abiertas" -> seleccionarColumnas(
         withBandGroups(abiertas.unionByName(pagosDe(abiertas))),
         columnasFacturasAbiertas, keepBand = true),

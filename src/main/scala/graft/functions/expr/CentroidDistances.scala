@@ -18,8 +18,9 @@ import graft.operators.Rounding
   * - 2·dot(v,c) + |c|²), cid)` with `typedLit` centroids — unrolls to
   * O(K·dim) generated code, which blows past janino's 64 KB method
   * limit near K ≈ 100 and silently falls back to interpreted eval
-  * (measured in the r12 ScaleSmoke: 16 codegen-failure stacks on the
-  * 10×-corpus gate build at K = 142). This compiles to two nested
+  * (measured by a 10× weak-scaled smoke: 16 codegen-failure stacks on
+  * the 10×-corpus gate build at K = 142; BENCH_NOTES.md, "r12 10x
+  * headroom smoke"). This compiles to two nested
   * primitive loops with the flattened centroid matrix as a referenced
   * `double[]` — whole-stage-codegen'd at ANY K, which is what √n-cell
   * IVF sizing needs at corpus scale.

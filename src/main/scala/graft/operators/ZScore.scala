@@ -26,21 +26,40 @@ object ZScore {
       zName: String,
       flagName: String,
       threshold: Double,
+  ): DataFrame = withZScores(df, Seq((value, zName, flagName)), threshold)
+
+  /** Several z-scores over one frame, each spec `(value, zName, flagName)`:
+    * ONE aggregate computes every spec's (μ, σ, n) and ONE broadcast
+    * cross join carries them back, where chained [[withZScore]] calls
+    * would run an aggregate job and a cross join per spec. Columns are
+    * appended in spec order, z before flag, exactly as the chain
+    * appends them, and every value is the chain's bit for bit: each
+    * statistic aggregates the same rows of the same partitions.
+    */
+  def withZScores(
+      df: DataFrame,
+      specs: Seq[(Column, String, String)],
+      threshold: Double,
   ): DataFrame = {
-    val stats = df.agg(
-      avg(value).as("_mu"),
-      stddev_samp(value).as("_sigma"),
-      count(value).as("_nn"),
-    )
-    df.crossJoin(broadcast(stats))
-      .withColumn(
-        zName,
-        when(
-          col("_nn") >= 3 && col("_sigma") > 0,
-          dround(abs((value - col("_mu")) / col("_sigma")), 4),
-        ),
-      )
-      .withColumn(flagName, coalesce(col(zName) > threshold, lit(false)))
-      .drop("_mu", "_sigma", "_nn")
+    require(specs.nonEmpty, "withZScores needs at least one (value, zName, flagName) spec")
+    def mu(i: Int) = s"_mu$i"
+    def sigma(i: Int) = s"_sigma$i"
+    def nn(i: Int) = s"_nn$i"
+    val aggs = specs.zipWithIndex.flatMap { case ((value, _, _), i) =>
+      Seq(avg(value).as(mu(i)), stddev_samp(value).as(sigma(i)), count(value).as(nn(i)))
+    }
+    val stats = df.agg(aggs.head, aggs.tail: _*)
+    specs.zipWithIndex
+      .foldLeft(df.crossJoin(broadcast(stats))) { case (d, ((value, zName, flagName), i)) =>
+        d.withColumn(
+            zName,
+            when(
+              col(nn(i)) >= 3 && col(sigma(i)) > 0,
+              dround(abs((value - col(mu(i))) / col(sigma(i))), 4),
+            ),
+          )
+          .withColumn(flagName, coalesce(col(zName) > threshold, lit(false)))
+      }
+      .drop(specs.indices.flatMap(i => Seq(mu(i), sigma(i), nn(i))): _*)
   }
 }

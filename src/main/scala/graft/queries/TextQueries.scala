@@ -14,7 +14,7 @@ import graft.sources.PersistedIndex
   * n-gram Jaccard, language-ID, quality scoring, token stats,
   * fingerprinting).
   *
-  * Oracle coverage: qd1-qd9 ALL carry exact DuckDB oracles as of r13 —
+  * Oracle coverage: qd1-qd9 ALL carry exact DuckDB oracles —
   * qd6/qd6b/qd7 moved off xxhash64 onto the engine-portable md5-based
   * hashes (TextFunctions.shingleHash31 / tokenHash), which makes the
   * banded-LSH candidate generation itself SQL-replicable; the measured
@@ -438,10 +438,10 @@ object TextQueries {
     * doc (recall 1.0 STRUCTURALLY — pinned in RecallSpec on the
     * prefilter stage) and scrubs the fpp-bounded false positives back
     * to n_shared = 0 — which makes the cascade's output IDENTICAL to
-    * exact qd13 and lets it share qd13's DuckDB oracle (VERDICT r12
-    * item 7: the qm9 trick — a blocking scheme with structural recall
-    * 1.0 at the operator's own threshold upgrades its twin from
-    * sketch-graded to hash-matched). The prefilter's fpp now costs
+    * exact qd13 and lets it share qd13's DuckDB oracle (the qm9 trick:
+    * a blocking scheme with structural recall 1.0 at the operator's
+    * own threshold upgrades its twin from sketch-graded to
+    * hash-matched). The prefilter's fpp now costs
     * only stage-2 work, never correctness; its drift stays visible via
     * the [[qd13bPrefilter]] precision floor in RecallSpec.
     */
@@ -679,8 +679,8 @@ object TextQueries {
     * 100 TB the postings persist as an offline artifact (qd6b's
     * lifecycle).
     *
-    * r16 posting-list truncation (VERDICT r15 item 1 — the qd34 df-cap
-    * recipe applied to BM25's posting join): a term with document
+    * Posting-list truncation (the qd34 df-cap recipe applied to BM25's
+    * posting join): a term with document
     * frequency d contributes d scored rows to EVERY query carrying it,
     * so a high-df term makes the posting join quadratic in corpus
     * growth (query volume ×s AND its posting list ×s — measured
@@ -840,14 +840,13 @@ object TextQueries {
     * Commit order: stats first, postings last — postings is the
     * [[Bm25]] witness.
     */
-  /** Term-hash bucket count for the persisted posting layout (VERDICT
-    * r16 item 3 / What's-missing #2): the postings are PARTITIONED by
-    * `bucket = pmod(xxhash64(term), 64)` on disk — the standard
-    * inverted-index file layout — so a probe whose query vocabulary
-    * hashes into b buckets reads b/64 of the posting files and never
-    * touches the cold vocabulary's file groups at all. 64 buckets keeps
-    * the partitioned write at one file per bucket (the build
-    * repartitions by bucket first) while leaving real pruning room:
+  /** Term-hash bucket count for the persisted posting layout: the
+    * postings are PARTITIONED by `bucket = pmod(xxhash64(term), 64)` on
+    * disk — the standard inverted-index file layout — so a probe whose
+    * query vocabulary hashes into b buckets reads b/64 of the posting
+    * files and never touches the cold vocabulary's file groups at all.
+    * 64 buckets keeps the partitioned write at one file per bucket (the
+    * build repartitions by bucket first) while leaving real pruning room:
     * at 100 TB the cold tail of a zipfian vocabulary is almost all of
     * the index bytes, and a retrieval batch's vocab covers few buckets.
     */
@@ -914,10 +913,12 @@ object TextQueries {
     * more on doc_id. Never all-pairs, no suffix array to build.
     */
   /** The winnowed-fingerprint posting list (doc_id, fp), distinct
-    * within doc — qd18's map-only selection stage, exposed for the
-    * window-vs-groupBy formulation measurement (tools.Qd18Probe).
+    * within doc — qd18's map-only selection stage. The per-fp count
+    * over it is a window, not groupBy + join back: the join form pays a
+    * second full shuffle of the posting list (0.92 s vs 1.59 s at sf0.1;
+    * BENCH_NOTES.md, "qd18 per-fp count — window vs groupBy+join").
     */
-  def qd18Fingerprints(s: SparkSession, dir: String): DataFrame = {
+  private def qd18Fingerprints(s: SparkSession, dir: String): DataFrame = {
     val w = 4
     // The gram array MUST be bound once per row: naming it as a column
     // and referencing it from inside the window lambdas lets the
@@ -1150,8 +1151,8 @@ object TextQueries {
     * — no global cross product; at 100 TB block sizes bound the
     * quadratic term and MinHash-LSH (qd6) replaces it when blocks grow.
     */
-  /** qd8's near-dup threshold. 0.2 is a realistic near-dup floor (the
-    * round-1 value 0.01 kept essentially every gram-sharing pair alive
+  /** qd8's near-dup threshold. 0.2 is a realistic near-dup floor (a
+    * value of 0.01 kept essentially every gram-sharing pair alive
     * through the aggregation — noise, and a blow-up risk on Zipfian
     * grams). The oracle SQL carries the same constant in lockstep.
     */
@@ -1245,14 +1246,14 @@ object TextQueries {
   /** MinHash band-collision candidate pairs (doc_a < doc_b), ids only —
     * exposed for the recall measurement (RECALL.json). The posting list
     * carries ONLY (doc_id, band, hash): deduplicating (doc_a, doc_b)
-    * must never shuffle the gram arrays themselves (a round-1 version
+    * must never shuffle the gram arrays themselves (an earlier version
     * dragged both ~100-gram arrays through the distinct() exchange and
     * was 30× slower once the bench stopped letting count() prune it).
     */
   def qd6CandidatePairs(s: SparkSession, dir: String): DataFrame =
     bandCollisionPairs(qd6Sig(s, dir))
 
-  /** qd6/qd6b oracle chain (r13): with the portable md5-based shingle
+  /** qd6/qd6b oracle chain: with the portable md5-based shingle
     * hash ([[graft.functions.TextFunctions.shingleHash31]]) and the
     * polynomial band fold, the ENTIRE banded-LSH algorithm — shingles
     * → 64 affine-permutation minima (the (a,b) parameter stream is the
@@ -1459,13 +1460,14 @@ object TextQueries {
 
   // ---------------------------------------------------------------- qd7
   /** SimHash fingerprint + banded Hamming near-dup count. Tokens →
-    * portable 60-bit md5 hash per token ([[tokenHash]], r13 — was
-    * xxhash64) → per-bit signed vote sums → fingerprint; near-dups via
-    * 8×8-bit band blocking (pigeonhole: ≤7 flipped bits cannot dirty
-    * all 8 bands, so candidate recall at the Hamming-6 verify radius
-    * is 1.0 BY CONSTRUCTION), verified with bit_count(xor) ≤ 6.
+    * portable 60-bit md5 hash per token ([[tokenHash]], not xxhash64,
+    * so the oracle can replicate it) → per-bit signed vote sums →
+    * fingerprint; near-dups via 8×8-bit band blocking (pigeonhole: ≤7
+    * flipped bits cannot dirty all 8 bands, so candidate recall at the
+    * Hamming-6 verify radius is 1.0 BY CONSTRUCTION), verified with
+    * bit_count(xor) ≤ 6.
     *
-    * FULL SQL oracle (r13): the portable hash + structural banding
+    * FULL SQL oracle: the portable hash + structural banding
     * make the output equal to the exact all-pairs Hamming result, so
     * the oracle skips the banding entirely and recomputes fingerprints
     * + all-pairs verify — any banding bug that loses a pair (or an
@@ -1475,11 +1477,11 @@ object TextQueries {
     * measurement's exact-twin (all-pairs Hamming) computation.
     *
     * Map-only: token hashes stay an array and the native SimHashBits
-    * expression folds the 64 bit-votes in one fused loop. The round-1
-    * formulation (explode → groupBy(doc) with 64 conditional-sum
-    * aggregators) shuffled every token row; bit-vote math is integer
-    * and order-free, so this is bit-identical (parity-tested) with the
-    * shuffle gone from the plan.
+    * expression folds the 64 bit-votes in one fused loop. The
+    * relational formulation (explode → groupBy(doc) with 64
+    * conditional-sum aggregators) shuffled every token row; bit-vote
+    * math is integer and order-free, so this is bit-identical
+    * (parity-tested) with the shuffle gone from the plan.
     */
   def qd7Fingerprints(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
@@ -1505,7 +1507,7 @@ object TextQueries {
   /** SimHash band-collision candidate pairs (doc_a < doc_b), before the
     * Hamming verification — exposed for the recall measurement.
     *
-    * 8 bands × 8 bits (round 1 used 4×16, measured recall 0.646): by
+    * 8 bands × 8 bits (4×16 measured recall 0.646): by
     * pigeonhole, ≤ 7 flipped bits cannot dirty all 8 bands, so every
     * pair within the Hamming-6 verify radius shares ≥1 clean band —
     * candidate recall is exactly 1.0 BY CONSTRUCTION, at the cost of a
@@ -1613,13 +1615,12 @@ object TextQueries {
     val g = docs(s, dir)
       .withColumn("grams", array_distinct(wordGrams(tokens(col("text")), 3)))
       .select(col("doc_id"), col("grams"), size(col("grams")).as("ng"))
-    // r17 (guide §2.4): materialize the exploded posting list ONCE —
-    // both sides of the gram self-join re-ran the documents scan +
-    // tokenize + gram-ify + explode otherwise (2 documents scans in the
-    // r16-close edge plan; AQE re-plans each side so the scan-level
-    // reuse is not guaranteed). The cut also makes the two join inputs
-    // the same LogicalRDD, so the gram exchange is reusable by
-    // construction.
+    // materialize the exploded posting list ONCE — both sides of the
+    // gram self-join re-ran the documents scan + tokenize + gram-ify +
+    // explode otherwise (2 documents scans in the uncut plan; AQE
+    // re-plans each side so the scan-level reuse is not guaranteed).
+    // The cut also makes the two join inputs the same LogicalRDD, so
+    // the gram exchange is reusable by construction.
     val inv = graft.operators.Checkpoints.cut(
       g.select(col("doc_id"), col("ng"), explode(col("grams")).as("gram")))
     inv.as("a").join(inv.as("b"),
@@ -2353,8 +2354,8 @@ object TextQueries {
         dround(col("common").cast("double") / col("kp"), 6).as("est_jaccard"),
         // an under-full merged sketch (kp < K) holds EVERY distinct gram
         // of the union, so it is exhaustive, not a sample: `common` IS
-        // |A∩B| and the (k-1)/d estimator would only add bias (ADVICE
-        // r12). The estimator applies exactly when the sketch saturates.
+        // |A∩B| and the (k-1)/d estimator would only add bias. The
+        // estimator applies exactly when the sketch saturates.
         when(col("kp") < KmvK, col("common").cast("double"))
           .otherwise(dround((col("kp") - 1).cast("double") / col("d")
             * col("common") / col("kp"), 2)).as("est_shared"))
@@ -2567,12 +2568,12 @@ object TextQueries {
     * C ≥ t forces it) pruning pair-rows before the aggregation — the
     * PPJoin discipline in its asymmetric form. Full DuckDB oracle.
     *
-    * r14 df-cap (VERDICT r13 item 6): a gram with document frequency d
+    * df-cap: a gram with document frequency d
     * contributes d² pair-rows, so one boilerplate gram in a real
     * (duplication-heavy) corpus makes the join super-linear — measured
     * 25× wall at the 10×-duplicated smoke corpus, where the 22,492
     * grams with df > 64 carried 96% of the 279M-row pair volume
-    * (BENCH_NOTES r14). Containment is therefore computed over the
+    * (BENCH_NOTES.md). Containment is therefore computed over the
     * INFORMATIVE vocabulary: grams with df > [[ContainmentDfCap]] are
     * stop-grams, excluded from BOTH the shared count and the
     * denominator (the qd31 stop-term discipline at the gram level).
@@ -2726,7 +2727,7 @@ object TextQueries {
 
   /** Frame-parameterized twin (tests plant docs): (doc_id, text). */
   private[graft] def fuzzyDedupFrom(documents: DataFrame): DataFrame = {
-    // r18 (guide §2.4, the qd22/q38 treatment): the slim blocking
+    // the qd22/q38 treatment: the slim blocking
     // projection feeds FOUR consumers (two sides of two blocking
     // passes) — without the cut each one re-ran the documents scan +
     // substring projection. ~76 bytes/doc materialized once.
@@ -3487,7 +3488,7 @@ object TextQueries {
       if (top.nonEmpty) {
         val (u, v, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r, u, v, n))
-        // r18 (VERDICT r17 item 6): checkpoint-every-2nd-round was
+        // checkpoint-every-2nd-round was
         // measured at 10x and REVERTED — skipping the odd round's cut
         // makes both the odd argmax job and the even checkpoint job
         // re-evaluate the pending replace over the type table, and
@@ -3584,7 +3585,7 @@ object TextQueries {
     // COALESCE to a never-occurring sentinel: on a corpus that exhausts
     // its pair vocabulary before round 8, t_r is empty and the scalar
     // subquery is NULL — a bare replace would NULL every word, while
-    // the Spark side simply folds fewer merges (review r12 finding)
+    // the Spark side simply folds fewer merges
     val enc = (1 to BpeRounds).foldLeft("ws") { (inner, r) =>
       s"replace($inner, COALESCE((SELECT chr(31) || u || chr(31) || chr(31) || v || chr(31) FROM t$r), chr(1)), " +
         s"COALESCE((SELECT chr(31) || u || v || chr(31) FROM t$r), chr(1)))"
@@ -3671,11 +3672,11 @@ object TextQueries {
     "qd3_lang_id" -> qd3Sql,
     "qd4_quality_score" -> qd4Sql,
     "qd5_fingerprint" -> qd5Sql,
-    // r13: portable md5 shingle hash + polynomial band fold — the whole
+    // portable md5 shingle hash + polynomial band fold — the whole
     // banded-LSH algorithm replicates in SQL (candidates included)
     "qd6_minhash_lsh" -> qd6Sql,
     "qd6b_minhash_probe" -> qd6bSql,
-    // r13: portable md5 token hash + structural 8-band recall make the
+    // portable md5 token hash + structural 8-band recall make the
     // banded output equal to the exact all-pairs Hamming result
     "qd7_simhash" -> qd7Sql,
     "qd8_ngram_jaccard" -> qd8Sql,
@@ -3684,7 +3685,7 @@ object TextQueries {
     "qd11_hash_sample" -> qd11Sql,
     "qd12_token_histogram" -> qd12Sql,
     "qd13_decontamination" -> qd13Sql,
-    // r13: the Bloom CASCADE's output is identical to exact qd13 by the
+    // the Bloom CASCADE's output is identical to exact qd13 by the
     // no-false-negative structural guarantee + exact verify — same SQL
     "qd13b_decontam_bloom" -> qd13Sql,
     "qd14_pii_scrub" -> qd14Sql,

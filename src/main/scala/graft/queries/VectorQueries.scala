@@ -69,7 +69,7 @@ object VectorQueries {
   // ---------------------------------------------------------------- qe2
   /** Sign-LSH ANN, banded: 16 bands × 4 hyperplane bits; a corpus vector
     * is scored for a query iff they collide in ≥1 band (OR-of-ANDs —
-    * round 1's single 12-bit bucket had measured recall@5 of 0.0 on this
+    * a single 12-bit bucket had measured recall@5 of 0.0 on this
     * data: near-orthogonal true neighbors collide on 12 fixed bits with
     * p ≈ 0.55¹² ≈ 1e-3). With 16×4, a cos-0.3 neighbor misses every band
     * with (1−0.597⁴)¹⁶ ≈ 0.11. No SQL oracle (bucket assignment is
@@ -183,7 +183,7 @@ object VectorQueries {
 
   private val qe4Sql = qe4SqlAt("0.4")
 
-  /** Banded sign-LSH CTE chain (r13): the hyperplane matrix is
+  /** Banded sign-LSH CTE chain: the hyperplane matrix is
     * regenerated in SQL from the md5 closed form
     * ([[graft.functions.expr.LshBandBuckets.planeWeight]]), dots run
     * through SEQUENTIAL `list_dot_product` against d-ordered plane
@@ -280,7 +280,7 @@ object VectorQueries {
   // ---------------------------------------------------------------- qe4b
   /** qe4's near-dup dedup with LSH candidate generation instead of the
     * all-pairs non-equi join (which plans as BroadcastNestedLoopJoin —
-    * the O(n²) wall named in round 1). Candidates come from a banded
+    * the O(n²) wall). Candidates come from a banded
     * sign-LSH posting list: a pair is scored iff it shares a bucket in
     * ≥1 of `BANDS` bands of `RBITS` hyperplane bits; the aggregation
     * (n_near / max_cos / keep) is qe4's, unchanged, so the exact
@@ -292,12 +292,12 @@ object VectorQueries {
     * for a random pair — LSH exponent ρ = ln p1/ln p2 ≈ 0.67, i.e.
     * candidates ~ n^1.67: sub-quadratic but not cheap. 64 bands × 6 bits
     * give per-pair miss (1−0.63⁶)^64 ≈ 1.6% at the exact 0.40 boundary
-    * (≤0.3% by cos 0.5); r2 ran 64×4, where a random pair collides
+    * (≤0.3% by cos 0.5); with 64×4 bands a random pair collides
     * somewhere with p = 1−(1−2⁻⁴)⁶⁴ ≈ 0.98 — i.e. the candidate set WAS
     * all pairs plus posting-join overhead. 6-bit bands cut posting-join
     * volume 4× and candidates ~35%; the check is recall-floored
-    * (RecallSpec ≥0.9, RECALL.json) rather than exact-hash (ADVICE r2:
-    * an approximate operator must fail as a recall regression, not
+    * (RecallSpec ≥0.9, RECALL.json) rather than exact-hash (an
+    * approximate operator must fail as a recall regression, not
     * masquerade as a correctness bug). At a realistic dedup threshold
     * (cos ≥ 0.8, p1≈0.8) the same code needs ~8 bands for the same
     * recall and candidates collapse to near-linear — that is the 100 TB
@@ -481,7 +481,7 @@ object VectorQueries {
     * rerank set stays well under the corpus and the full-dim pass is
     * still the minority cost) while leaving recall headroom over the
     * RecallSpec floor — at 10% the sf0.1 margin was one unlucky corpus
-    * wide (0.58 vs floor 0.50, VERDICT r6 item 5). The same rule is a
+    * wide (0.58 vs floor 0.50). The same rule is a
     * scalar subquery in the oracle SQL so both engines cut identically.
     */
   private def rerankBudget(n: Long): Int = math.max(RERANK.toLong, n / 5).toInt
@@ -489,7 +489,7 @@ object VectorQueries {
   /** Corpus size per sf dir, computed once: qe7's budget needs the
     * count at PLAN time, and paying a table scan on every DataFrame
     * construction (PlanSpec inspection, query-map assembly) is wrong
-    * (ADVICE r6). Keyed by dir — the testdata corpora are immutable.
+    * Keyed by dir — the testdata corpora are immutable.
     */
   private val corpusCount = scala.collection.concurrent.TrieMap.empty[String, Long]
 
@@ -560,14 +560,14 @@ object VectorQueries {
     * on centroid id — the standard big-corpus ANN shape (vs qe2's
     * sign-LSH).
     *
-    * r13: the quantizer is the DETERMINISTIC seeded-Lloyd fit
+    * The quantizer is the DETERMINISTIC seeded-Lloyd fit
     * ([[kmeansCentroids]] — the qe9/gate machinery) instead of an ML
     * KMeans model. Same algorithm, two production wins: the index
     * build is bit-reproducible across runs/partitionings (an offline
     * artifact that re-builds identically is diffable and auditable),
     * and the whole fit+assign+probe path becomes SQL-expressible — so
     * qe5/qe5b graduate from recall-graded to FULL DuckDB hash-match
-    * (the r12-item-7 discipline, same move as the gated trio). Probe
+    * (the same move as the gated trio). Probe
     * distances use the identical rounded v·v − 2v·c + |c|² form as the
     * assignment so both engines rank cells on the same 6dp numbers.
     */
@@ -755,19 +755,19 @@ object VectorQueries {
     * ordering keeps both engines' FP summation orders from flipping
     * near-ties.
     *
-    * r12: dispatches to the native loop expression
+    * Dispatches to the native loop expression
     * ([[graft.functions.expr.CentroidDistances]]) — the literal
-    * `array(struct(...))` unroll stops whole-stage-compiling near
-    * K ≈ 100 (janino 64 KB method limit, hit by the ScaleSmoke
-    * 10×-corpus gate build at K = 142) and K = ⌈√n⌉ sizing needs
-    * arbitrary K. Bit-parity with the literal form (kept below for the
-    * pinned property) is guaranteed by identical operation order and
+    * `array(struct(...))` unroll stops whole-stage-compiling near K ≈ 100
+    * (janino 64 KB method limit, hit by a 10×-corpus gate build at K =
+    * 142: BENCH_NOTES.md, "r12 10x headroom smoke") and K = ⌈√n⌉ sizing
+    * needs arbitrary K. Bit-parity with the literal form (kept below for
+    * the pinned property) is guaranteed by identical operation order and
     * the droundD≡dround property.
     */
   private def centroidCands(cents: Array[(Int, Seq[Double])]): Column =
     centroidDists(col("vec"), cents)
 
-  /** The pre-r12 literal unroll — parity oracle for the native
+  /** The literal unroll — parity oracle for the native
     * expression (GraftProperties), never on a query path.
     */
   private[graft] def centroidCandsLit(cents: Array[(Int, Seq[Double])]): Column =
@@ -1218,7 +1218,7 @@ object VectorQueries {
         .select(col("sub"), col("code"), posexplode(
           slice(col("uvec"), col("sub") * PqSubDim + 1, lit(PqSubDim)))
           .as(Seq("dim", "x")))
-        // 6dp-rounded means (r13, the kmeansCentroids discipline): the
+        // 6dp-rounded means (the kmeansCentroids discipline): the
         // fit is reproducible across partitionings AND engines, which
         // is what lets qe14/qe14b/qe20 carry full DuckDB oracles — an
         // unrounded mean drifts with aggregation order and every
@@ -1317,16 +1317,15 @@ object VectorQueries {
     }
   }
 
-  /** PQ Lloyd-chain CTEs (r13): [[pqFit]]+[[pqEnc]] in SQL — the r13
-    * 6dp-rounded means make the codebooks engine-identical, every
-    * other number in the chain (uvec = x/nrm, per-subspace Σdiff²
-    * argmin with the code-asc first-win tiebreak, ADC dot tables) is
-    * deterministic binary64 arithmetic in the SAME evaluation order on
-    * both engines (list_reduce left-folds exactly like the engine
-    * loops), so the SQL replicates the fit bit-for-bit. Prototyped
-    * against an imperative reference model before wiring (BENCH_NOTES
-    * r13). Requires CTEs `e`/`n` upstream; ends at `cl` (per-vector
-    * code lists) and `lutl` (per-query ADC tables).
+  /** PQ Lloyd-chain CTEs: [[pqFit]]+[[pqEnc]] in SQL — the 6dp-rounded
+    * means make the codebooks engine-identical, every other number in the
+    * chain (uvec = x/nrm, per-subspace Σdiff² argmin with the code-asc
+    * first-win tiebreak, ADC dot tables) is deterministic binary64
+    * arithmetic in the SAME evaluation order on both engines (list_reduce
+    * left-folds exactly like the engine loops), so the SQL replicates the
+    * fit bit-for-bit. Prototyped against an imperative reference model
+    * before wiring (BENCH_NOTES.md). Requires CTEs `e`/`n` upstream; ends
+    * at `cl` (per-vector code lists) and `lutl` (per-query ADC tables).
     */
   private lazy val pqChainCtes: String = {
     def d2sub(u: String, cb: String) =
@@ -1542,7 +1541,7 @@ object VectorQueries {
         Window.partitionBy("query_id").orderBy(col("d2").asc, col("cent_id").asc)))
       .filter(col("pr") <= IVF_NPROBE)
       .select(col("query_id"), col("cent_id"))
-    // r13: the deterministic quantizer balances the inverted lists, so
+    // the deterministic quantizer balances the inverted lists, so
     // a 4/16 probe now pools ~25% of the corpus — at the old fixed
     // shortlist (50 ≈ 10% of the pool) ADC noise crowded true
     // neighbors out of the rerank (measured 0.16 recall at sf0.1, was
@@ -1748,7 +1747,7 @@ object VectorQueries {
   }
 
   def qe15(s: SparkSession, dir: String): DataFrame =
-    // blocked-kernel form of the retired theta self-join (r18): same
+    // blocked-kernel form of the retired theta self-join: same
     // rounded distances, same window selection — the kernel's per-tile
     // top-k frame provably contains each vector's true top-k
     oodFrom(blockedTopKCands(s, dir, DensityK, distKey = true)
@@ -1803,8 +1802,8 @@ object VectorQueries {
     * on the cell id — a posting-list scan, never an `ida < idb` theta
     * self-join.
     *
-    * Scale discipline (VERDICT r11 item 1 — this is what makes the
-    * gate a complexity-class win, not a constant):
+    * Scale discipline (this is what makes the gate a complexity-class
+    * win, not a constant):
     *
     *  - K = max(8, ⌈√n⌉) cells ([[gateK]]), P = [[GateProbes]] fixed.
     *    Per-query candidates ≈ P·n/K ≈ P·√n, total scored pairs
@@ -1826,7 +1825,7 @@ object VectorQueries {
     *
     * The nprobe trade (Jégou et al. 2011) is real on this data:
     * near-random 64-dim vectors put a 5-NN in the query's own argmin
-    * cell too rarely (the r10-documented 0.00/0.05 single-probe flag
+    * cell too rarely (the measured 0.00/0.05 single-probe flag
     * agreement), so the gate probes [[GateProbes]] cells and accepts
     * the recall the fixed P/√K budget buys. The exact forms stay
     * registered as the oracle anchors; the gated twins are
@@ -1835,39 +1834,37 @@ object VectorQueries {
     * agreement for qe25b), and PlanSpec pins that candidate generation
     * never contains a nested-loop or cartesian join.
     */
-  // r13 re-measure (tools/GateSweep, VERDICT r12 item 2): the probe/
+  // measured with tools/GateSweep: the probe/
   // recall curve over the SAME persisted-fit machinery reads, at sf0.1
   // (K=45): P=8 → 0.57/0.41/0.45, P=12 → 0.68/0.56/0.54, P=16 →
   // 0.78/0.71/0.65, P=24 → 0.89/0.85/0.81, with candidate volume
   // linear in P (713k/1.07M/1.43M/2.14M rows). P=16 is the knee that
-  // clears the r11 floor levels (0.60/0.50/0.50) on ALL three twins
+  // clears the earlier floor levels (0.60/0.50/0.50) on ALL three twins
   // while keeping the scanned fraction P/√n — at n=10⁹ that is 0.05%
   // of the corpus, the same complexity class as P=8.
   //
-  // r14 DESIGN ENVELOPE (VERDICT r13 item 1 / What's-wrong #3 — the
-  // sweep at the 10× corpus, n=20,000, K=142, gates/r14): the feared
-  // recall-vs-n decay at fixed P did NOT materialize — P=16 reads
-  // 0.867/0.806/0.775 at n=20k, ABOVE the n=2k 0.778/0.715/0.650 —
-  // because K=⌈√n⌉ refines the quantizer as n grows and the finer
-  // cells recover what the shrinking P/K probe fraction gives up.
-  // What DOES degrade on this near-uniform 64-dim corpus is the COST
-  // model: measured candidate volume at n=20k is 215M directed rows
-  // (53% of all pairs, 4.8× the balanced-cell P·n/K prediction; at
-  // n=2k the same model was within 2%). High-dimensional near-random
-  // vectors concentrate distances, so a K=142 Lloyd fit yields skewed
-  // cell masses and every query probes the same heavy central cells —
-  // uniformity taxes the SCAN, not the recall. Real embedding corpora
-  // are clustered (that is what an embedding model is FOR); there the
-  // cells track cluster structure and candidate volume stays near
-  // P·n/K. The operating contract at scale is therefore: size by
-  // K=⌈√n⌉, keep P=16, and READ the persisted measurement
-  // ([[gateSweepPath]], written by tools/GateSweep next to the index)
-  // before trusting either number on a new corpus — the sweep is
-  // cheap relative to one production run and the curve is corpus-
-  // specific state, not a universal constant.
+  // DESIGN ENVELOPE (the sweep at the 10× corpus, n=20,000, K=142,
+  // gates/r14): the feared recall-vs-n decay at fixed P did NOT
+  // materialize — P=16 reads 0.867/0.806/0.775 at n=20k, ABOVE the n=2k
+  // 0.778/0.715/0.650 — because K=⌈√n⌉ refines the quantizer as n grows
+  // and the finer cells recover what the shrinking P/K probe fraction
+  // gives up. What DOES degrade on this near-uniform 64-dim corpus is the
+  // COST model: measured candidate volume at n=20k is 215M directed rows
+  // (53% of all pairs, 4.8× the balanced-cell P·n/K prediction; at n=2k
+  // the same model was within 2%). High-dimensional near-random vectors
+  // concentrate distances, so a K=142 Lloyd fit yields skewed cell masses
+  // and every query probes the same heavy central cells — uniformity
+  // taxes the SCAN, not the recall. Real embedding corpora are clustered
+  // (that is what an embedding model is FOR); there the cells track
+  // cluster structure and candidate volume stays near P·n/K. The
+  // operating contract at scale is therefore: size by K=⌈√n⌉, keep P=16,
+  // and READ the persisted measurement ([[gateSweepPath]], written by
+  // tools/GateSweep next to the index) before trusting either number on a
+  // new corpus — the sweep is cheap relative to one production run and
+  // the curve is corpus-specific state, not a universal constant.
   //
   // The skew is NOT an under-iteration artifact (tools/CellBalance,
-  // BENCH_NOTES r14): at n=20k/K=142 the median cell holds ONE vector
+  // BENCH_NOTES.md): at n=20k/K=142 the median cell holds ONE vector
   // and the top-16 cells hold 56.4% of the corpus at 3 Lloyd iters —
   // and still 52.2% at 16 iters. Argmin cells on distance-concentrated
   // data are intrinsically mass-skewed. If a corpus needs a cost
@@ -1875,7 +1872,7 @@ object VectorQueries {
   // (rank cells by distance, cut at a cumulative-mass budget instead
   // of a fixed cell count — still deterministic and SQL-replicable via
   // a window over the ranked cells) trades recall for a pinned scan
-  // fraction. r14: that rule is SHIPPED as the oracle-checked qe15c
+  // fraction. That rule is SHIPPED as the oracle-checked qe15c
   // twin ([[gateCandsMassBudget]] at [[GateMassFrac]]); the measured
   // equivalence (recall is a function of scanned mass — at equal mass
   // the two rules agree to 3dp) is in gates/r14/mass_sweep_sf.txt.
@@ -1883,9 +1880,9 @@ object VectorQueries {
   private val GateFitIters = 3
   private val GateFitPerCell = 64
 
-  /** Default recall15 target for recall-targeted gate sizing (r15,
-    * VERDICT r14 item 1 — the round that converts the persisted sweep
-    * curves from advisory measurement into production behavior). 0.70
+  /** Default recall15 target for recall-targeted gate sizing (the
+    * persisted sweep curves as production behavior, not advisory
+    * measurement). 0.70
     * is the recall class the P=16 constant was chosen to deliver at the
     * tuned sf0.1 scale (measured 0.778 there, 0.867 at the n=20k skew
     * corpus — gates/r14), so on the tuned corpus the sized build and
@@ -1897,9 +1894,9 @@ object VectorQueries {
     */
   private[graft] val GateRecallTarget = 0.70
 
-  /** ADVICE r15 (medium): the sizing target certifies recall15, but the
-    * sized budget also serves qe22b's mutual-NN recall and qe25b's
-    * confusion agreement — and r15's floors for those were derived from
+  /** The sizing target certifies recall15, but the sized budget also
+    * serves qe22b's mutual-NN recall and qe25b's confusion agreement —
+    * and the floors for those were derived from
     * the SAME sweep that picked the budget, so a secondary-measure
     * collapse would have self-certified. Absolute minimums the
     * certified budget's curve row must ALSO meet on recall22/agree25:
@@ -1966,23 +1963,22 @@ object VectorQueries {
     resolvedRule.clear()
   }
 
-  /** Fixed-P vs mass-budget auto-dispatch threshold (r15, VERDICT r14
-    * item 2). Fixed-P's scan cost is P·n/K on a balanced fit; on a
-    * mass-skewed fit every query probes the same heavy cells and the
-    * scan inflates to the top-P cells' combined mass fraction —
-    * measured 4.8× the balanced model at the n=20k megacell fit where
-    * recall stayed HIGHER than at sf0.1 (gates/r14). The dispatch rule:
-    * when the production fit's top-P home-mass fraction exceeds this
-    * factor × the balanced P/K model, the fixed-P cost contract is
-    * broken badly enough that the mass-budgeted gate (cost pinned BY
-    * CONSTRUCTION, recall equal at equal scanned mass — reproduced to
-    * 3dp at two sfs and at 10×) is the right rule. 2.0 sits between
-    * the measured near-balanced oracle fits (gates/r15/cellbalance_sf
-    * .txt: top-16 mass 77.8% vs 69.6% balanced at sf0.01 → ratio 1.12;
-    * 40.4% vs 35.6% at sf0.1 → 1.14 — comfortably fixed-P) and the
-    * megacell regime (n=20k: 52-56% vs 11.3% → ratio 4.6-5.0 — mass),
-    * with the n=20k receipts as the justification for the gap being
-    * real and wide.
+  /** Fixed-P vs mass-budget auto-dispatch threshold. Fixed-P's scan cost
+    * is P·n/K on a balanced fit; on a mass-skewed fit every query probes
+    * the same heavy cells and the scan inflates to the top-P cells'
+    * combined mass fraction — measured 4.8× the balanced model at the
+    * n=20k megacell fit where recall stayed HIGHER than at sf0.1
+    * (gates/r14). The dispatch rule: when the production fit's top-P
+    * home-mass fraction exceeds this factor × the balanced P/K model, the
+    * fixed-P cost contract is broken badly enough that the mass-budgeted
+    * gate (cost pinned BY CONSTRUCTION, recall equal at equal scanned
+    * mass — reproduced to 3dp at two sfs and at 10×) is the right rule.
+    * 2.0 sits between the measured near-balanced oracle fits
+    * (gates/r15/cellbalance_sf.txt: top-16 mass 77.8% vs 69.6% balanced
+    * at sf0.01 → ratio 1.12; 40.4% vs 35.6% at sf0.1 → 1.14 — comfortably
+    * fixed-P) and the megacell regime (n=20k: 52-56% vs 11.3% → ratio
+    * 4.6-5.0 — mass), with the n=20k receipts as the justification for
+    * the gap being real and wide.
     */
   private[graft] val GateSkewFactor = 2.0
 
@@ -2037,8 +2033,7 @@ object VectorQueries {
     * meaningful on tiny corpora; when K ≤ [[GateProbes]] the gate
     * probes EVERY cell and degenerates to the exact all-pairs set —
     * correct (recall 1.0), just not sub-quadratic, which a ≤64-vector
-    * corpus doesn't need (ADVICE r12: the old comment claimed a strict
-    * subset).
+    * corpus doesn't need.
     */
   private[graft] def gateK(n: Long): Int =
     math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -2061,10 +2056,10 @@ object VectorQueries {
     */
   type SweepRow = (Int, Long, Double, Double, Double)
 
-  /** Persisted probe→recall curve for this corpus (VERDICT r13 item 8):
+  /** Persisted probe→recall curve for this corpus:
     * tools/GateSweep writes the measured table here; the production
     * sizing ([[resolvedGateProbes]]) and RecallSpec's gated-trio floors
-    * READ the recorded measurement instead of re-deriving it. r15: the
+    * READ the recorded measurement instead of re-deriving it. The
     * path is fingerprinted on the FIT parameters only — the curve
     * sweeps the probe-budget axis, so the budget must not key its
     * location (the sized build changes the budget, and could then never
@@ -2089,13 +2084,13 @@ object VectorQueries {
 
   /** Newest corpus mtime — captured by the sweep TOOLS before they
     * start measuring, so [[stampPastCorpus]] can refuse to freshness-
-    * stamp a curve whose corpus was regenerated mid-sweep (ADVICE r16).
+    * stamp a curve whose corpus was regenerated mid-sweep.
     */
   def corpusMtime(dir: String): Long =
     graft.sources.HadoopFs.newestMtime(
       new org.apache.hadoop.conf.Configuration(), s"$dir/embeddings.parquet")
 
-  /** ADVICE r14: on filesystems with coarse (1 s) mtime granularity a
+  /** On filesystems with coarse (1 s) mtime granularity a
     * sweep persisted in the same tick as the corpus it just measured
     * reads as stale under [[sweepCurrent]]'s strict `>` and is silently
     * orphaned. Mirror the index artifacts' _SUCCESS-last convention:
@@ -2106,18 +2101,17 @@ object VectorQueries {
   private def stampPastCorpus(f: java.io.File, dir: String,
       srcAtStart: Long = -1L): Unit = {
     val src = corpusMtime(dir)
-    // ADVICE r16, closing two holes the r15 form left open: (1) the
-    // sweep tools capture the corpus mtime at sweep START and pass it
-    // here — a corpus regenerated mid-sweep gets NO stamp (the curve
-    // measured replaced data; its natural write mtime then loses the
-    // strict-> staleness check, the safe side). (2) src+1000 future-
-    // dated the stamp by up to ~1 s past wall-clock, so a corpus
-    // regenerated in that window still read older than the stamp; the
-    // bump is now ONE millisecond past the corpus, applied only for
-    // the same-tick-orphan case this stamp exists for — on a coarse
-    // (1 s) mtime filesystem that degrades to a same-tick orphan,
-    // which is false-STALE (a re-sweep), never false-fresh. A vanished
-    // corpus (FNF sentinel Long.MaxValue) also gets no bump.
+    // two holes closed here: (1) the sweep tools capture the corpus mtime
+    // at sweep START and pass it here — a corpus regenerated mid-sweep
+    // gets NO stamp (the curve measured replaced data; its natural write
+    // mtime then loses the strict-> staleness check, the safe side). (2)
+    // src+1000 future-dated the stamp by up to ~1 s past wall-clock, so a
+    // corpus regenerated in that window still read older than the stamp;
+    // the bump is now ONE millisecond past the corpus, applied only for
+    // the same-tick-orphan case this stamp exists for — on a coarse (1 s)
+    // mtime filesystem that degrades to a same-tick orphan, which is
+    // false-STALE (a re-sweep), never false-fresh. A vanished corpus (FNF
+    // sentinel Long.MaxValue) also gets no bump.
     if (src != Long.MaxValue && (srcAtStart < 0L || src == srcAtStart))
       f.setLastModified(math.max(f.lastModified,
         math.max(System.currentTimeMillis, src + 1L)))
@@ -2131,7 +2125,7 @@ object VectorQueries {
     * the fingerprinted path pins the PARAMETERS, but a regenerated
     * source parquet keeps the same path — without this mtime guard a
     * stale curve would keep certifying budgets (and raising RecallSpec
-    * floors) measured on a different corpus (review r14; the same
+    * floors) measured on a different corpus (the same
     * staleness rule the index artifacts themselves use).
     */
   private def sweepCurrent(f: java.io.File, dir: String): Boolean =
@@ -2140,10 +2134,10 @@ object VectorQueries {
 
   // doubles serialize via toString, which goes scientific below 1e-3
   // ("1.0E-4") — the number pattern must accept exponents or rows
-  // silently drop (review r14)
+  // silently drop
   private val SweepNum = """-?[0-9.]+(?:[eE][-+]?[0-9]+)?"""
 
-  /** Repo-committed curve registry (r16, VERDICT r15 item 2): the
+  /** Repo-committed curve registry: the
     * persisted sweeps lived only in the tmpdir, so a clean machine
     * silently built the constant fallback where the round's receipts
     * built the certified-cheaper budget — gate sizing was correct
@@ -2176,15 +2170,14 @@ object VectorQueries {
     val conf = new org.apache.hadoop.conf.Configuration()
     // an absent/empty corpus has no content identity — it must never
     // alias a committed entry (and CurvePublish refuses to write one).
-    // review r16: key by PATH SLUG and content — size alone let two
-    // corpora whose parquet happened to total the same bytes share one
-    // certified curve (sf0.001/sf0.01 both hold n=500 and differ by 8
-    // bytes of compression noise). The slug (shared with the tmpdir
-    // cache via HadoopFs.dirSlug, path-normalized) pins which corpus
-    // the measurement was taken on; the content key (ADVICE r16:
-    // total bytes + file count + largest-file size, see
-    // [[graft.sources.HadoopFs.contentKey]]) is the staleness witness
-    // for THAT corpus.
+    // key by PATH SLUG and content — size alone let two corpora whose
+    // parquet happened to total the same bytes share one certified curve
+    // (sf0.001/sf0.01 both hold n=500 and differ by 8 bytes of
+    // compression noise). The slug (shared with the tmpdir cache via
+    // HadoopFs.dirSlug, path-normalized) pins which corpus the
+    // measurement was taken on; the content key (total bytes + file count
+    // + largest-file size, see [[graft.sources.HadoopFs.contentKey]]) is
+    // the staleness witness for THAT corpus.
     graft.sources.HadoopFs.contentKey(conf, s"$dir/embeddings.parquet").map { key =>
       val fp = graft.sources.HadoopFs.paramFingerprint(
         GateFitIters, GateFitPerCell, "sqrtK")
@@ -2198,7 +2191,7 @@ object VectorQueries {
     * as ever), then the committed registry entry keyed to this corpus.
     * Both are offered so a reader can fall through to the registry
     * when the cache text exists but no longer parses (an older-format
-    * artifact must not SHADOW a valid committed curve — review r16).
+    * artifact must not SHADOW a valid committed curve).
     * LAZY on purpose: the registry candidate costs a recursive corpus
     * byte listing, which a current-and-parsing cache hit — the common
     * case on a working box — must never pay.
@@ -2262,16 +2255,16 @@ object VectorQueries {
       .map(parseMassSweepRows).find(_.nonEmpty)
 
   /** Recall-targeted gate sizing from the persisted measurement (the
-    * policy the r14 envelope note committed to: sizing reads corpus-
-    * specific state, never a universal constant): the smallest swept
-    * probe budget whose measured neighbor recall meets `target` on
+    * policy the envelope note at [[GateProbes]] commits to: sizing reads
+    * corpus-specific state, never a universal constant): the smallest
+    * swept probe budget whose measured neighbor recall meets `target` on
     * this corpus. None when no sweep is persisted or no swept budget
-    * reaches the target — the caller escalates (re-sweep wider, or
-    * accept the largest measured budget explicitly); silently handing
-    * back a budget that MISSES the target is the one wrong answer.
-    * ADVICE r15: the certified row must also clear [[GateSecondaryMin]]
-    * on recall22/agree25 — the budget serves all three gated families,
-    * so the primary target alone must not certify a secondary collapse.
+    * reaches the target — the caller escalates (re-sweep wider, or accept
+    * the largest measured budget explicitly); silently handing back a
+    * budget that MISSES the target is the one wrong answer. The certified
+    * row must also clear [[GateSecondaryMin]] on recall22/agree25 — the
+    * budget serves all three gated families, so the primary target alone
+    * must not certify a secondary collapse.
     */
   def gateProbesFor(dir: String, targetRecall15: Double): Option[Int] =
     readGateSweep(dir).flatMap(rows =>
@@ -2297,7 +2290,7 @@ object VectorQueries {
   private[graft] def gateCandsFrom(e: DataFrame, k: Int, probes: Int,
       nHint: Long = -1L): DataFrame = {
     // nHint: gateCands already counted the table to size K — threading
-    // it avoids a second full count job per index build (review r12)
+    // it avoids a second full count job per index build
     val n = if (nHint >= 0L) nHint else e.count()
     gateCandsWithCents(e, gateFitCents(e, k, n), probes)
   }
@@ -2321,7 +2314,7 @@ object VectorQueries {
     */
   private[graft] def gateCandsWithCents(e: DataFrame,
       cents: Array[(Int, Seq[Double])], probes: Int): DataFrame = {
-    // r14 (VERDICT r13 item 3): the candidate join runs on bare ids —
+    // the candidate join runs on bare ids —
     // no embedding ever rides the explode or the cid shuffle — and each
     // UNORDERED pair is cosine-scored exactly once, then mirrored into
     // whichever directions survived the gate. At P ≫ 1 both directions
@@ -2366,7 +2359,7 @@ object VectorQueries {
   }
 
   /** Mass-budgeted probe (the design direction recorded at
-    * [[GateProbes]], promoted to production in r14 as the qe15c/qe22c/
+    * [[GateProbes]], in production as the qe15c/qe22c/
     * qe25c trio): instead of a fixed P nearest cells, each vector
     * probes its distance-ranked cells until the cumulative HOME MASS of
     * the cells already taken reaches ⌈massFrac·n⌉ (the nearest cell is
@@ -2377,12 +2370,12 @@ object VectorQueries {
     * SQL-replicable ([[gateMassCtes]], which keeps the equivalent
     * window-cumsum formulation — the selected cells are identical).
     *
-    * Scale class (r15, VERDICT r14 item 5): the cut is MAP-ONLY. The
+    * Scale class: the cut is MAP-ONLY. The
     * per-cell home-mass table is K rows — the same driver-sized scalar
     * class as the centroids themselves — collected once and inlined as
     * an array literal indexed by cell id, and each vector's ranked
     * cell list is cut by a running-sum `aggregate` over its own sorted
-    * candidate array inside the projection. The r14 formulation
+    * candidate array inside the projection. A window-cumsum formulation
     * shuffled n·K = n^1.5 ranked rows into a per-vector window cumsum;
     * now no Exchange exists between probe assignment and the candidate
     * equi-join (PlanSpec pins the build plan Window-free). Empty cells
@@ -2426,8 +2419,8 @@ object VectorQueries {
   /** The three exact-twin anchors every gate sweep measures against,
     * materialized once (they are the sweep's dominant cost), returned
     * as a measurement closure: candidate frame in → (scored rows,
-    * recall15, recall22, agree25) out. r15 refactor — the probe, mass,
-    * and K sweeps shared this tail verbatim.
+    * recall15, recall22, agree25) out — the probe, mass, and K sweeps
+    * share this tail.
     */
   private def gateSweepAnchors(s: SparkSession, dir: String)
       : DataFrame => (Long, Double, Double, Double) = {
@@ -2480,14 +2473,14 @@ object VectorQueries {
     }.reduce(_.unionByName(_))
   }
 
-  /** Probe-budget / recall trade for the gated trio (VERDICT r12 item
-    * 2): ONE quantizer fit at the production K = ⌈√n⌉, then for each
-    * probe budget the three twin-level recall measures RecallSpec
-    * floors — qe15b neighbor-pair recall, qe22b mutual-pair recall,
-    * qe25b per-vector prediction agreement — plus the scored-candidate
-    * row count (the cost the budget buys them with). The sweep is the
-    * measurement that PICKS the probe budget ([[resolvedGateProbes]]);
-    * qe26 is the same artifact for qe5's fixed-K IVF.
+  /** Probe-budget / recall trade for the gated trio: ONE quantizer fit at
+    * the production K = ⌈√n⌉, then for each probe budget the three
+    * twin-level recall measures RecallSpec floors — qe15b neighbor-pair
+    * recall, qe22b mutual-pair recall, qe25b per-vector prediction
+    * agreement — plus the scored-candidate row count (the cost the budget
+    * buys them with). The sweep is the measurement that PICKS the probe
+    * budget ([[resolvedGateProbes]]); qe26 is the same artifact for qe5's
+    * fixed-K IVF.
     */
   private[graft] def gateProbeSweep(s: SparkSession, dir: String,
       budgets: Seq[Int]): DataFrame = {
@@ -2504,21 +2497,19 @@ object VectorQueries {
     }.reduce(_.unionByName(_))
   }
 
-  /** Cell-count / recall trade (r15, VERDICT r14 item 8 — the last
-    * un-swept gate parameter): K = ⌈√n⌉ is what makes the gate's total
-    * work P·n^1.5, but the n=20k receipts showed K and P interact
-    * (recall ROSE with n at fixed P because K grew), so the K rule
-    * deserves its own measured curve. Each swept K is a FULL refit
-    * (unlike the probe/mass sweeps, which share one fit) probed at the
-    * budget the production build ACTUALLY resolves for this corpus
-    * ([[resolvedGateProbes]] — ADVICE r15: a corpus already curve-sized
-    * away from the [[GateProbes]] constant must sweep K at ITS budget,
-    * or the curve answers a question production never asks; the budget
-    * used is recorded in the persisted artifact); the curve answers
-    * "would a
-    * coarser/finer quantizer at the same probe budget deliver the
-    * recall cheaper on this corpus". The complexity trade is explicit:
-    * assignment cost is n·K (rises with K), candidate volume is
+  /** Cell-count / recall trade (the last un-swept gate parameter): K =
+    * ⌈√n⌉ is what makes the gate's total work P·n^1.5, but the n=20k
+    * receipts showed K and P interact (recall ROSE with n at fixed P
+    * because K grew), so the K rule deserves its own measured curve. Each
+    * swept K is a FULL refit (unlike the probe/mass sweeps, which share
+    * one fit) probed at the budget the production build ACTUALLY resolves
+    * for this corpus ([[resolvedGateProbes]] — a corpus already
+    * curve-sized away from the [[GateProbes]] constant must sweep K at
+    * ITS budget, or the curve answers a question production never asks;
+    * the budget used is recorded in the persisted artifact); the curve
+    * answers "would a coarser/finer quantizer at the same probe budget
+    * deliver the recall cheaper on this corpus". The complexity trade is
+    * explicit: assignment cost is n·K (rises with K), candidate volume is
     * ≈ P·n²/K on balanced fits (falls with K).
     */
   private[graft] def gateKSweep(s: SparkSession, dir: String,
@@ -2552,7 +2543,7 @@ object VectorQueries {
       probes: Int = GateProbes, srcAtStart: Long = -1L): Unit = {
     val f = new java.io.File(gateKSweepPath(dir))
     f.getParentFile.mkdirs()
-    // ADVICE r15: record the probe budget the sweep actually measured
+    // record the probe budget the sweep actually measured
     // at — a later reader must be able to tell a constant-budget curve
     // from one swept at a corpus-resolved budget
     val json = rows.map { case (k, n, r15, r22, r25) =>
@@ -2563,25 +2554,24 @@ object VectorQueries {
     stampPastCorpus(f, dir, srcAtStart)
   }
 
-  /** Onboarding contradiction check for the K rule (r16, VERDICT r15
-    * item 7): K = ⌈√n⌉ owns the gate's complexity class and the r15
-    * K-sweeps KEPT it with receipts at three corpora (equal-scanned-
-    * mass recall equivalence across the K axis). A persisted K curve
-    * CONTRADICTS the rule when some swept K strictly dominates the
-    * rule's own swept row — at least the recall15 for strictly fewer
-    * candidate rows; on an equivalence-shaped curve (recall a function
-    * of scanned mass alone) that cannot happen, so a hit means this
-    * corpus's geometry genuinely breaks the rule. Same philosophy as
-    * [[gateRuleFor]]: a measured check with a receipt, consulted at
-    * onboarding (tools/GateSweep prints it after every K sweep) — not
-    * an auto-resize.
+  /** Onboarding contradiction check for the K rule: K = ⌈√n⌉ owns the
+    * gate's complexity class and the K-sweeps KEPT it with receipts at
+    * three corpora (equal-scanned-mass recall equivalence across the K
+    * axis). A persisted K curve CONTRADICTS the rule when some swept K
+    * strictly dominates the rule's own swept row — at least the recall15
+    * for strictly fewer candidate rows; on an equivalence-shaped curve
+    * (recall a function of scanned mass alone) that cannot happen, so a
+    * hit means this corpus's geometry genuinely breaks the rule. Same
+    * philosophy as [[gateRuleFor]]: a measured check with a receipt,
+    * consulted at onboarding (tools/GateSweep prints it after every K
+    * sweep) — not an auto-resize.
     */
   def gateKRuleWarning(dir: String, n: Long): Option[String] =
     readGateKSweep(dir).flatMap { rows =>
       val k0 = gateK(n)
       // the sweeps bracket the rule (K/2, K, 2K) — judge its nearest row
       val base = rows.minBy(r => math.abs(r._1 - k0))
-      // ADVICE r16: dominance must hold on ALL THREE measures — the
+      // dominance must hold on ALL THREE measures — the
       // GateSecondaryMin philosophy is that a budget is only certified
       // when recall22/agree25 hold too, so a K that beats sqrt-n on
       // recall15 while collapsing the secondaries is a trade, not a
@@ -2593,8 +2583,8 @@ object VectorQueries {
           s"${r._3}/${r._4}/${r._5} >= ${base._3}/${base._4}/${base._5})")
     }
 
-  /** K rows + the probe budget the sweep was measured at (review r16:
-    * the recorded budget must be READABLE, not write-only — a K curve
+  /** K rows + the probe budget the sweep was measured at (the
+    * recorded budget must be READABLE, not write-only — a K curve
     * swept at a budget production no longer resolves is answering a
     * question production never asks, and GateResolve warns on it).
     */
@@ -2609,7 +2599,7 @@ object VectorQueries {
 
   /** (probe budget, rows) of the current K curve — tmpdir cache first,
     * committed registry second, skipping any source that fails to
-    * parse (pre-r16 artifacts lack the probes field by design: the
+    * parse (older artifacts lack the probes field by design: the
     * budget they measured at is unknowable, so they are re-sweep bait,
     * not data).
     */
@@ -2641,7 +2631,7 @@ object VectorQueries {
     PersistedIndex("gate", "embeddings", "cands", gateIndexPath, gateBuild)
 
   /** Home-cell mass per cell of the PRODUCTION gate fit — the
-    * tools/CellBalance diagnostic behind the r14 envelope note (a
+    * tools/CellBalance diagnostic behind the envelope note (a
     * skewed mass distribution, not the probe rule, is what inflates
     * the scan past the balanced P·n/K model on near-uniform corpora).
     */
@@ -2649,7 +2639,7 @@ object VectorQueries {
       iters: Int = GateFitIters): DataFrame = {
     val e = embs(s, dir)
     val n = Tables.embeddings(s, dir).count()
-    // the PRODUCTION fit path (review r14: a copy of the stride/sample
+    // the PRODUCTION fit path (a copy of the stride/sample
     // rule here would silently diverge from what the gate actually
     // runs — the diagnostic must measure the production quantizer)
     val cents = gateFitCents(e, gateK(n), n, iters)
@@ -2667,14 +2657,14 @@ object VectorQueries {
   /** qe15's production twin: K-th-NN distance + top-2% OOD flag over
     * the gated candidates. A vector with fewer than [[DensityK]] gated
     * candidates keeps its max-rank candidate distance instead of
-    * silently dropping out (ADVICE r11: a dropped vector would shrink
+    * silently dropping out (a dropped vector would shrink
     * the top-2% denominator relative to exact qe15 — every vector
     * stays in the census with its best available distance estimate),
     * and a vector with ZERO gated candidates — possible on degenerate
     * corpora where its probed cells hold no other vector — enters at
     * the maximum cosine distance 2.0, i.e. maximally OOD, via the
-    * left join from the full vector list (review r12: the max-rank fix
-    * alone still lost the zero-candidate case from the denominator).
+    * left join from the full vector list (the max-rank fix alone
+    * still lost the zero-candidate case from the denominator).
     */
   def qe15b(s: SparkSession, dir: String): DataFrame =
     densityTailFrom(s, dir, gatedSym(s, dir))
@@ -2712,7 +2702,7 @@ object VectorQueries {
     * 0.7811/0.7166/0.6505 vs 0.778/0.715/0.650) — so the twin pays
     * P=16's cost at the sfs where the fit is near-balanced, and holds
     * that cost BY CONSTRUCTION when a skewed fit would inflate the
-    * fixed-P scan (the n=20k megacell regime, BENCH_NOTES r14).
+    * fixed-P scan (the n=20k megacell regime, BENCH_NOTES.md).
     */
   private[graft] val GateMassFrac = 0.35
 
@@ -2745,7 +2735,7 @@ object VectorQueries {
     s.read.parquet(s"${GateMass.ensure(s, dir)}/cands")
   }
 
-  /** qe15b's mass-budgeted sibling (r14, the production form of the
+  /** qe15b's mass-budgeted sibling (the production form of the
     * envelope note at [[GateProbes]]): identical density/OOD tail,
     * candidate generation by [[gateCandsMassBudget]] at
     * [[GateMassFrac]]. The operating difference is the COST contract:
@@ -2758,7 +2748,7 @@ object VectorQueries {
   def qe15c(s: SparkSession, dir: String): DataFrame =
     densityTailFrom(s, dir, gatedMassSym(s, dir))
 
-  /** The AUTO-DISPATCHED gated density twin (r15, VERDICT r14 item 2):
+  /** The AUTO-DISPATCHED gated density twin:
     * measures the production fit's home-mass skew and serves whichever
     * gate rule [[gateRuleFor]] certifies for THIS corpus — fixed-P
     * where the fit is near-balanced (the oracle sfs; fixed-P's scan
@@ -2772,13 +2762,13 @@ object VectorQueries {
   def qe15d(s: SparkSession, dir: String): DataFrame =
     if (gateUseMass(s, dir)) qe15c(s, dir) else qe15b(s, dir)
 
-  /** The mutual-NN family's auto-dispatched entry (r16, VERDICT r15
-    * item 4: qe15d recorded the rule's decision for the density family
-    * only — a corpus onboarding should read ONE oracle-checked receipt
-    * per gated family). The dispatch signal is corpus-level (the
-    * production fit's home-mass skew), so all three families share the
-    * memoized decision; what this entry adds is the hash-checked
-    * receipt that the mutual-NN TAIL routes through it too.
+  /** The mutual-NN family's auto-dispatched entry (qe15d recorded the
+    * rule's decision for the density family only — a corpus onboarding
+    * should read ONE oracle-checked receipt per gated family). The
+    * dispatch signal is corpus-level (the production fit's home-mass
+    * skew), so all three families share the memoized decision; what this
+    * entry adds is the hash-checked receipt that the mutual-NN TAIL
+    * routes through it too.
     */
   def qe22d(s: SparkSession, dir: String): DataFrame =
     if (gateUseMass(s, dir)) qe22c(s, dir) else qe22b(s, dir)
@@ -2842,14 +2832,13 @@ object VectorQueries {
   private[graft] def qe25PredGated(s: SparkSession, dir: String): DataFrame =
     knnPredFrom(gatedSym(s, dir))
 
-  /** DuckDB CTE chain replicating [[gateCands]] bit-for-bit — the r13
-    * upgrade that moves the three gated twins from sketch-graded to
-    * HASH-MATCHED (VERDICT r12 item 7, the qm9 "structural oracle"
-    * discipline): the gate's quantizer is the same deterministic
-    * seeded-Lloyd fit the qe9/qe10 oracles already replicate
-    * ([[kmeansCtes]]), just at K = ⌈√n⌉ with [[GateFitIters]] refits —
-    * so the ENTIRE candidate-generation path (seeds → Lloyd loop →
-    * argmin homes → top-[[GateProbes]] probed cells → cell equi-join →
+  /** DuckDB CTE chain replicating [[gateCands]] bit-for-bit — what moves
+    * the three gated twins from sketch-graded to HASH-MATCHED (the qm9
+    * "structural oracle" discipline): the gate's quantizer is the same
+    * deterministic seeded-Lloyd fit the qe9/qe10 oracles already
+    * replicate ([[kmeansCtes]]), just at K = ⌈√n⌉ with [[GateFitIters]]
+    * refits — so the ENTIRE candidate-generation path (seeds → Lloyd loop
+    * → argmin homes → top-[[GateProbes]] probed cells → cell equi-join →
     * 6dp cosine) is expressible as SQL over the same parquet, and each
     * twin's tail is its exact anchor's oracle tail verbatim. Ends at
     * `gcand` = (ida, la, idb, lb, cos), the directed candidate frame.
@@ -2926,7 +2915,7 @@ object VectorQueries {
        |  FROM probed JOIN home USING (cid) WHERE ida <> idb)""".stripMargin
   }
 
-  /** qe5/qe5b oracle (r13): the deterministic IVF — fixed-K Lloyd fit,
+  /** qe5/qe5b oracle: the deterministic IVF — fixed-K Lloyd fit,
     * argmin inverted lists, queries probe their [[IVF_NPROBE]] nearest
     * cells by the same rounded distance, exact cosine rank inside the
     * probed lists. qe5b reads the persisted build of the SAME fit, so
@@ -3410,7 +3399,7 @@ object VectorQueries {
     * never corpus x corpus.
     */
   def qe22(s: SparkSession, dir: String): DataFrame =
-    // blocked-kernel form of the retired theta self-join (r18): the
+    // blocked-kernel form of the retired theta self-join: the
     // tail's rn ≤ K sums and rn = 1 picks read only each ida's true
     // top-K, which the kernel frame contains by construction
     mutualMarginFrom(blockedTopKCands(s, dir, K, distKey = false)
@@ -3616,14 +3605,15 @@ object VectorQueries {
     confusionFrom(knnPredFrom(labeledSymExact(s, dir)))
 
   /** Exact directed labeled candidate frame shared by qe25 and the
-    * qe25b recall measurement — the blocked-kernel form (r18) of the
-    * retired mirrored theta self-join: every consumer (knnPredFrom's
-    * rn ≤ K votes, knnPairsExact's rn ≤ DensityK pairs, K = DensityK)
-    * reads only each ida's true top-K under (cos desc, idb asc), which
-    * the per-tile top-K union contains by construction.
+    * qe25b recall measurement — the blocked-kernel form of the retired
+    * mirrored theta self-join. Its consumers read each ida's true top-k
+    * under (cos desc, idb asc) for k = K (knnPredFrom's votes) and
+    * k = DensityK (knnPairsExact's pairs); building with the larger of
+    * the two keeps both inside the per-tile top-k union by
+    * construction, whatever values the constants take.
     */
   private def labeledSymExact(s: SparkSession, dir: String): DataFrame =
-    blockedTopKCands(s, dir, K, distKey = false)
+    blockedTopKCands(s, dir, math.max(K, DensityK), distKey = false)
       .withColumn("cos", dround(col("rawcos"), 6))
       .select("ida", "la", "idb", "lb", "cos")
 
@@ -3707,9 +3697,9 @@ object VectorQueries {
     val nExact = exact.count() // NQUERIES * K
     val corpus = cached.count()
     // loop-invariant: the number of query vectors present is the same at
-    // every sweep point (VERDICT r12 item 6 — was re-counted per probe)
+    // every sweep point, so it is counted once
     val scanned = cached.filter(col("vec_id") < NQUERIES).count()
-    // r17 (guide §2.6): the five sweep points are INDEPENDENT jobs over
+    // the five sweep points are INDEPENDENT jobs over
     // the same checkpointed frames — submitted sequentially, each
     // point's stage tail left most of the session idle. Three driver
     // threads keep the scheduler back-filled (FIFO: earlier points get
@@ -3742,7 +3732,7 @@ object VectorQueries {
     rows.toDF("nprobe", "recall", "scanned_frac")
   }
 
-  /** qe26 oracle (r13): with the quantizer deterministic, the whole
+  /** qe26 oracle: with the quantizer deterministic, the whole
     * sweep is SQL — one Lloyd chain, the probe budgets as a VALUES
     * dimension (generated from the same Scala list as the Spark loop so
     * the sweep points can never drift), per-budget top-K recall against
@@ -3974,8 +3964,8 @@ object VectorQueries {
     * false failure.
     */
   /** The six gated-twin oracles, generated AT DUMP TIME with the SAME
-    * resolved budgets the production builds used for this corpus (r15,
-    * VERDICT r14 item 1): when Verify threads a concrete sf dir, the
+    * resolved budgets the production builds used for this corpus: when
+    * Verify threads a concrete sf dir, the
     * probe count / mass fraction interpolated into the CTE chains is
     * [[resolvedGateProbes]] / [[resolvedGateMassFrac]] — memoized per
     * JVM, so the engine run earlier in the same Verify process built
@@ -3993,11 +3983,10 @@ object VectorQueries {
       "qe15c_massgated_density" -> densityTailSql(gateMassCtes(f)),
       "qe22c_massgated_mutual_nn" -> mutualTailSql(gateMassCtes(f)),
       "qe25c_massgated_confusion" -> confusionTailSql(gateMassCtes(f)),
-      // the auto-dispatched twins' oracles mirror the decision the
-      // engine memoized for this corpus earlier in the same JVM
-      // (unset = the fixed-P default the engine would also take);
-      // r16: one dispatched receipt per gated family (VERDICT r15
-      // item 4) — the corpus-level rule routes all three
+      // the auto-dispatched twins' oracles mirror the decision the engine
+      // memoized for this corpus earlier in the same JVM (unset = the
+      // fixed-P default the engine would also take); one dispatched
+      // receipt per gated family — the corpus-level rule routes all three
       "qe15d_autogated_density" ->
         (if (sfDir.flatMap(gateRuleDecided).getOrElse(false))
           densityTailSql(gateMassCtes(f))
@@ -4308,7 +4297,7 @@ object VectorQueries {
 
   val oracle: Map[String, String] = Map(
     "qe1_cosine_topk" -> qe1Sql,
-    // r13: md5 closed-form hyperplanes make the banding SQL-replicable
+    // md5 closed-form hyperplanes make the banding SQL-replicable
     // — qe2/qe4b hash-match transparent-model oracles (candidates
     // included); the RecallSpec floors vs the exact twins stay as the
     // approximation-quality artifact on top
@@ -4330,11 +4319,11 @@ object VectorQueries {
     "qe12_mmr_topk" -> qe12Sql,
     "qe13_hard_negatives" -> qe13Sql,
     "qe15_knn_density" -> qe15Sql,
-    // r13 (VERDICT r12 item 7): the gated twins' quantizer is the same
+    // the gated twins' quantizer is the same
     // deterministic seeded-Lloyd fit the qe9 oracle replicates, so the
     // whole gate is SQL-expressible — sketch-graded no more
     "qe15b_gated_density" -> qe15bSql,
-    // r14: the mass-budgeted twins' cut rule is a window cumsum over
+    // the mass-budgeted twins' cut rule is a window cumsum over
     // the same ranked cells — the whole chain stays SQL-replicable,
     // and the three c-twins share one gateMassCtes + the b-trio tails
     "qe15c_massgated_density" -> qe15cSql,
@@ -4342,13 +4331,13 @@ object VectorQueries {
     "qe25c_massgated_confusion" -> qe25cSql,
     "qe22b_gated_mutual_nn" -> qe22bSql,
     "qe25b_gated_confusion" -> qe25bSql,
-    // r13: the IVF quantizer moved to the same deterministic fit, so
+    // the IVF quantizer is the same deterministic fit, so
     // the fused and persisted-probe paths hash-match one oracle, and
     // even the probe-sweep tuning curve is SQL-checkable
     "qe5_ann_ivf" -> qe5Sql,
     "qe5b_ann_ivf_probe" -> qe5Sql,
     "qe26_probe_sweep" -> qe26Sql,
-    // r13: 6dp-rounded PQ fit means make the codebooks engine-identical
+    // 6dp-rounded PQ fit means make the codebooks engine-identical
     // and the rest of the chain is order-matched binary64 — so the PQ
     // family (fused, persisted-probe, and the IVFADC composition) all
     // hash-match SQL replications
@@ -4373,7 +4362,7 @@ object VectorQueries {
     // which is oracle-checked but joins via SparkEntry.oracleSqlFor
     // because its SQL inlines the persisted runtime basis (see
     // qe28bOracle). Every approximate operator above hash-matches its
-    // full candidate-generation chain (r13-r14); RecallSpec floors sit
+    // full candidate-generation chain; RecallSpec floors sit
     // on top as the approximation-quality artifact.
   )
 }

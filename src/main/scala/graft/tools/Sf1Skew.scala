@@ -3,19 +3,19 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** True-distribution ~sf1 scale smoke (VERDICT r12 item 5): generate a
-  * 10× cut whose JOIN/GROUP KEYS keep their sf0.1 identity — the same
-  * customer gets 10× the orders, the same part 10× the lineitems, the
-  * same user 10× the events — so cross-copy hot keys actually
-  * concentrate, which is exactly what [[ScaleSmoke]]'s key-SHIFTED
-  * union cannot exercise (its disjoint keyspaces make 10 independent
-  * sf0.1 problems; a skew report or salted join never sees a heavier
-  * key there). Row-identity keys (orderkey, event_id, vec_id) fan out
+/** True-distribution ~sf1 scale smoke: generate a 10× cut whose
+  * JOIN/GROUP KEYS keep their sf0.1 identity — the same customer gets 10×
+  * the orders, the same part 10× the lineitems, the same user 10× the
+  * events — so cross-copy hot keys actually concentrate, which a
+  * key-SHIFTED union of copies cannot exercise (its disjoint keyspaces
+  * make 10 independent sf0.1 problems; a skew report or salted join never
+  * sees a heavier key there — the earlier 10× smoke in BENCH_NOTES.md was
+  * of that kind). Row-identity keys (orderkey, event_id, vec_id) fan out
   * `key·16 + copy` to stay unique; every value column keeps the sf0.1
   * marginal distribution verbatim, and copies > 0 of a vector are
   * REGENERATED (deterministic xxhash64-seeded uniform[-0.5,0.5), the
-  * source family) rather than duplicated — a copied embedding would
-  * plant 20k exact dups and turn kNN distance into a constant 0.
+  * source family) rather than duplicated — a copied embedding would plant
+  * 20k exact dups and turn kNN distance into a constant 0.
   *
   * What this is NOT: the driver's own sf1 (its generator is not
   * available). It is a volume-true, skew-true scale-up of the driver's
@@ -37,8 +37,8 @@ object Sf1Skew {
     * the sf0.1 source tables are single parquet files, so a bare
     * fan-out writes ONE file and every downstream non-shuffle stage of
     * the smoke (all-pairs generation, explodes, map-side scans) runs
-    * single-task — the r14 20k gate sweep burned an hour on one core
-    * before this. 32 output files ≡ the local[32] task width.
+    * single-task — a 20k-vector gate sweep burned an hour on one core
+    * that way. 32 output files ≡ the local[32] task width.
     */
   private def fanOut(df: DataFrame): DataFrame =
     df.withColumn("_c", explode(lit((0 until Copies).toArray)))
@@ -50,10 +50,10 @@ object Sf1Skew {
   private def u(cols: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
     xxhash64(cols: _*).cast("double") / 1.8446744073709552e19
 
-  /** Zipfian vocabulary for the regenerated text copies (r17, VERDICT
-    * r16 "what's missing" #1): rank r = ⌊V^u⌋ with u uniform[0,1) puts
-    * P(r) ≈ 1/(r·ln V) — Zipf's law with exponent ~1, the empirical
-    * shape of real text — over a 50k-token vocabulary. At the 50k-doc
+  /** Zipfian vocabulary for the regenerated text copies: rank r = ⌊V^u⌋
+    * with u uniform[0,1) puts P(r) ≈ 1/(r·ln V) — Zipf's law with
+    * exponent ~1, the empirical shape of real text — over a 50k-token
+    * vocabulary. At the 50k-doc
     * corpus this yields ~60 df-saturated head terms (where the qd17
     * posting cap actually bites) and a ~50k-term cold tail, vs the
     * verbatim fan-out's 31 words with every term saturated.
@@ -76,15 +76,15 @@ object Sf1Skew {
 
   private def writeDocuments(spark: SparkSession): Unit = {
     def src(t: String) = spark.read.parquet(s"$SrcDir/$t.parquet")
-    // documents ×10 (r17, VERDICT r16 missing #1): copies 0-4 keep the
-    // source text VERBATIM — every doc stays a 5-way exact-dup cluster,
-    // preserving the duplication-heavy regime the dedup family's 10×
-    // receipts measure — while copies 5-9 regenerate text from the
-    // seeded zipfian vocabulary above, so the BM25 cap, stop-list, PMI
-    // and TF-IDF operators measure on a realistically shaped df
-    // distribution (saturated head + long cold tail) instead of the
-    // degenerate everything-saturated 31-word fan-out. Token length
-    // keeps the source marginal (10-100); n_chars tracks the new text.
+    // documents ×10: copies 0-4 keep the source text VERBATIM — every doc
+    // stays a 5-way exact-dup cluster, preserving the duplication-heavy
+    // regime the dedup family's 10× receipts measure — while copies 5-9
+    // regenerate text from the seeded zipfian vocabulary above, so the
+    // BM25 cap, stop-list, PMI and TF-IDF operators measure on a
+    // realistically shaped df distribution (saturated head + long cold
+    // tail) instead of the degenerate everything-saturated 31-word
+    // fan-out. Token length keeps the source marginal (10-100); n_chars
+    // tracks the new text.
     val len = lit(10L) + pmod(xxhash64(col("doc_id"), lit("len")), lit(91L))
     val newText = concat_ws(" ",
       transform(sequence(lit(1L), len), p => zipfTok(col("doc_id"), p)))
@@ -145,40 +145,37 @@ object Sf1Skew {
       println(s"[sf1] built $OutDir")
     }
 
-    // r14 (VERDICT r13 item 6): the text-family smoke. The documents
-    // fan-out KEEPS text verbatim across all 10 copies, so this corpus
-    // is maximally duplication-heavy — every doc is a 10-way exact-dup
-    // cluster and every gram's df is 10× its sf0.1 value, which is
-    // precisely the boilerplate regime that stresses qd34's uncapped
-    // gram inverted index (df d contributes d² pairs) and qd36/qd39's
-    // within-block quadratics. SPARK_GRAFT_SUITE=text selects it.
+    // the text-family smoke. The documents fan-out KEEPS text verbatim
+    // across all 10 copies, so this corpus is maximally duplication-heavy
+    // — every doc is a 10-way exact-dup cluster and every gram's df is
+    // 10× its sf0.1 value, which is precisely the boilerplate regime that
+    // stresses qd34's uncapped gram inverted index (df d contributes d²
+    // pairs) and qd36/qd39's within-block quadratics.
+    // SPARK_GRAFT_SUITE=text selects it.
     val textQs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "qd34_containment" -> (graft.queries.TextQueries.qd34 _),
       "qd36_fuzzy_dedup" -> (graft.queries.TextQueries.qd36 _),
       "qd39_fuzzy_clusters" -> (graft.queries.TextQueries.qd39 _),
       "qd46_dedup_survivorship" -> (graft.queries.TextQueries.qd46 _),
       "qd13b_decontam_bloom" -> (graft.queries.TextQueries.qd13b _),
-      // r15 (VERDICT r14 item 7): the remaining >2 s text queries never
-      // measured at 10x — BM25 (df-driven like qd34, but per-term not
-      // per-pair), the dup-cluster join tail, and the LM perplexity
+      // the >2 s text queries — BM25 (df-driven like qd34, but per-term
+      // not per-pair), the dup-cluster join tail, and the LM perplexity
       // gram chain (the widest cold-vs-warm bench spread in the family)
       "qd17_bm25" -> (graft.queries.TextQueries.qd17 _),
-      // r16: the persisted-postings probe — rep 1 pays the one-off
-      // index build, so the min-of-reps line is the amortized probe
+      // the persisted-postings probe — rep 1 pays the one-off index
+      // build, so the min-of-reps line is the amortized probe
       "qd17b_bm25_index" -> (graft.queries.TextQueries.qd17b _),
       "qd22_dup_clusters" -> (graft.queries.TextQueries.qd22 _),
       "qd27_lm_perplexity" -> (graft.queries.TextQueries.qd27 _),
-      // r17 (VERDICT r16 item 2): the df-distribution-shaped operators
-      // join the smoke now that the corpus has a realistic vocabulary
-      // (zipfv2) — stop-list saturation, PMI bigram stats and TF-IDF
-      // keyword extraction all measure on the 49k-term zipf df axis
+      // the df-distribution-shaped operators on the corpus's realistic
+      // vocabulary (zipfv2) — stop-list saturation, PMI bigram stats and
+      // TF-IDF keyword extraction all measure on the 49k-term zipf df axis
       "qd31_stop_terms" -> (graft.queries.TextQueries.qd31 _),
       "qd33_pmi_collocations" -> (graft.queries.TextQueries.qd33 _),
       "qd37_tfidf_keywords" -> (graft.queries.TextQueries.qd37 _),
-      // r18 (VERDICT r17 item 6): the BPE family joins the 10x smoke —
-      // 8 serial merge rounds over the zipf word-type table (vocab-sized,
-      // so the zipfv2 49k-term axis is exactly what scales it), to price
-      // the per-round checkpoint cadence question
+      // the BPE family — 8 serial merge rounds over the zipf word-type
+      // table (vocab-sized, so the zipfv2 49k-term axis is exactly what
+      // scales it), to price the per-round checkpoint cadence question
       "qd50_bpe_train" -> (graft.queries.TextQueries.qd50 _),
       "qd51_bpe_encode" -> (graft.queries.TextQueries.qd51 _))
     val skewQs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -188,46 +185,44 @@ object Sf1Skew {
       "q44_triangle_count" -> (graft.queries.CoreQueries.q44 _),
       "q45_lpa_communities" -> (graft.queries.CoreQueries.q45 _),
       "qe15b_gated_density" -> (graft.queries.VectorQueries.qe15b _),
-      // r14: the mass-budgeted twin — at this corpus's mass-skewed fit
-      // its pinned 0.35·n² scan is ~0.7× the fixed gate's inflated
-      // volume, so the smoke tracks BOTH probe rules' 10× behavior
+      // the mass-budgeted twin — at this corpus's mass-skewed fit its
+      // pinned 0.35·n² scan is ~0.7× the fixed gate's inflated volume, so
+      // the smoke tracks BOTH probe rules' 10× behavior
       "qe15c_massgated_density" -> (graft.queries.VectorQueries.qe15c _))
     val qs = sys.env.get("SPARK_GRAFT_SUITE") match {
       case Some("text") => textQs
       case Some("all") => skewQs ++ textQs
       case _ => skewQs
     }
-    // r16 (VERDICT r15 item 3): the receipts this prints carry the same
-    // self-adjudication key the Bench artifacts grew in r14 — the
-    // machine 1-min load average at [start, end] of each query's reps.
-    // The skew corpus's 80 g sessions showed 2-3× back-to-back variance
-    // (qe15b read 80-129 s where a controlled same-session A/B read
-    // 38.9 s), and every round burned an A/B re-adjudicating the
-    // instrument; a receipt line whose load reads hot now names its own
-    // contamination. Read rule (BENCH_NOTES): trust a line only when
-    // both samples sit ≲ 0.2 over the session's own width.
+    // the receipts this prints carry the same self-adjudication key as
+    // the Bench artifacts — the machine 1-min load average at [start,
+    // end] of each query's reps. The skew corpus's 80 g sessions showed
+    // 2-3× back-to-back variance (qe15b read 80-129 s where a controlled
+    // same-session A/B read 38.9 s); a receipt line whose load reads hot
+    // names its own contamination. Read rule (BENCH_NOTES): trust a line
+    // only when both samples sit ≲ 0.2 over the session's own width.
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
     val onlyQ = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def loadAvg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
         .split("\\s+")(0).toDouble
       catch { case _: Exception => -1.0 }
-    // r17 (VERDICT r16 item 7): record post-AQE stage widths alongside
-    // each timing — the advisory check on the 192-shuffle knob. The
-    // listener collects completed-stage task counts across the reps;
-    // the min/med/max summary shows what AQE actually RAN (coalesced
-    // widths included), not what the knob asked for, so the receipts
-    // themselves say when a grown corpus outruns the knob.
+    // record post-AQE stage widths alongside each timing — the advisory
+    // check on the 192-shuffle knob. The listener collects
+    // completed-stage task counts across the reps; the min/med/max
+    // summary shows what AQE actually RAN (coalesced widths included),
+    // not what the knob asked for, so the receipts themselves say when a
+    // grown corpus outruns the knob.
     val stageWidths = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         stageWidths.add(sc.stageInfo.numTasks)
     })
-    // r18 (VERDICT r17 item 5): SPARK_GRAFT_SINK=count times count()
-    // instead of the noop write — count lets Catalyst prune every
-    // unused column/subtree, so (noop − count) separates "computing
-    // the full output rows" from the aggregation tree's inherent work
+    // SPARK_GRAFT_SINK=count times count() instead of the noop write —
+    // count lets Catalyst prune every unused column/subtree, so (noop −
+    // count) separates "computing the full output rows" from the
+    // aggregation tree's inherent work
     val countSink = sys.env.get("SPARK_GRAFT_SINK").contains("count")
     for ((name, fn) <- qs if onlyQ.forall(_.contains(name))) {
       val l0 = loadAvg()

@@ -35,7 +35,7 @@ class CoreQueriesSpec extends AnyFunSuite {
     // q22 sums pagos_totales/cobros_periodo THROUGH the orders join
     // while the DuckDB oracle sums all of lineitem; the two agree only
     // when every lineitem row carries a non-null l_orderkey that exists
-    // in orders (ADVICE r6). Pin the generator invariant here so a
+    // in orders. Pin the generator invariant here so a
     // testdata change surfaces as this assertion, not as an opaque
     // oracle hash mismatch.
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
@@ -104,6 +104,39 @@ class CoreQueriesSpec extends AnyFunSuite {
     val base = Seq.fill(30)(10.0) ++ Seq(10.5, 9.5, 1000.0)
     val z2 = operators.ZScore.withZScore(base.toDF("v"), col("v"), "z", "flag", 3.0)
     assert(z2.filter(col("flag")).count() == 1)
+  }
+
+  test("zscore: one withZScores call equals chained withZScore calls bit for bit") {
+    import spark.implicits._
+    // `flat` is constant (σ = 0), `sparse` has two non-nulls (n < 3),
+    // `v` is ordinary with one planted outlier
+    val rows = (0 until 33).map { i =>
+      val v = if (i == 32) 1000.0 else 10.0 + (i % 7) * 0.37
+      (i, v, 5.0, if (i < 2) Some(i.toDouble) else None)
+    }
+    val df = rows.toDF("id", "v", "flat", "sparse")
+    val specs = Seq(
+      (col("flat"), "z_flat", "f_flat"),
+      (col("sparse"), "z_sparse", "f_sparse"),
+      (col("v"), "z_v", "f_v"))
+    val one = operators.ZScore.withZScores(df, specs, 3.0)
+    val chained = specs.foldLeft(df) { case (d, (c, z, f)) =>
+      operators.ZScore.withZScore(d, c, z, f, 3.0)
+    }
+    assert(one.columns.toSeq == chained.columns.toSeq)
+    assert(one.columns.toSeq ==
+      Seq("id", "v", "flat", "sparse", "z_flat", "f_flat", "z_sparse", "f_sparse", "z_v", "f_v"))
+    def bits(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect().toSeq.map(
+      _.toSeq.map {
+        case x: Double => java.lang.Double.doubleToRawLongBits(x)
+        case other => other
+      })
+    assert(bits(one) == bits(chained))
+    // the guards held: no z where σ = 0 or n < 3, one flag on the outlier
+    val z = one.orderBy("id").collect()
+    assert(z.forall(r => r.isNullAt(r.fieldIndex("z_flat")) && !r.getAs[Boolean]("f_flat")))
+    assert(z.forall(r => r.isNullAt(r.fieldIndex("z_sparse")) && !r.getAs[Boolean]("f_sparse")))
+    assert(z.count(_.getAs[Boolean]("f_v")) == 1 && z.last.getAs[Boolean]("f_v"))
   }
 
   test("buckets: partition is complete and ordinals are dense") {

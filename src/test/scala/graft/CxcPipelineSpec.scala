@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.cxc._
@@ -135,6 +136,93 @@ class CxcPipelineSpec extends AnyFunSuite {
   test("band groups alternate in {0,1}") {
     val bands = movs.select("_BAND_GROUP").distinct().collect().map(_.getInt(0)).toSet
     assert(bands.subsetOf(Set(0, 1)))
+  }
+
+  /** The eight report views built the way every view re-derived them
+    * before the shared cuts: each view's plan carries its own chain from
+    * `normalize(raw)`, `reporte_cxc` re-runs `withBandGroups(base)`, and
+    * the master's z-scores are three chained `withZScore` calls.
+    */
+  private def perViewChains(raw: DataFrame): Map[String, DataFrame] = {
+    import CxcReport._
+    import CxcSchema._
+    val df = normalize(raw)
+    val base = withSaldoCliente(withCycleMetrics(withSaldoFactura(movimientos(df)),
+      CxcFixture.asOfDate))
+    val abiertas = base.filter(isCargo(base) && col("SALDO_FACTURA") > 0)
+    val cerradas = base.filter(isCargo(base) && col("SALDO_FACTURA") === 0)
+    def pagosDe(charges: DataFrame): DataFrame = base
+      .filter(isAbono(base))
+      .join(charges.select(col("DOCTO_CC_ID").as("_link_id")),
+        base("DOCTO_CC_ACR_ID") === col("_link_id"), "left_semi")
+    def chainedZ(d: DataFrame): DataFrame = {
+      val z1 = operators.ZScore.withZScore(
+        d.withColumn("_V_IMPORTE", when(esVenta(d), col("IMPORTE"))),
+        col("_V_IMPORTE"), "ZSCORE_IMPORTE", "ATIPICO_IMPORTE", 3.0).drop("_V_IMPORTE")
+      val z2 = operators.ZScore.withZScore(z1, col("DELTA_RECAUDO"),
+        "ZSCORE_DELTA_RECAUDO", "ATIPICO_DELTA_RECAUDO", 3.0)
+      operators.ZScore.withZScore(z2, col("DELTA_MORA"),
+        "ZSCORE_DELTA_MORA", "ATIPICO_DELTA_MORA", 3.0)
+    }
+    Map(
+      "movimientos_totales" -> chainedZ(withBandGroups(base)),
+      "reporte_cxc" -> seleccionarColumnas(
+        withBandGroups(base), columnasReporte, keepBand = true),
+      "facturas_abiertas" -> seleccionarColumnas(
+        withBandGroups(abiertas.unionByName(pagosDe(abiertas))),
+        columnasFacturasAbiertas, keepBand = true),
+      "facturas_cerradas" -> seleccionarColumnas(
+        withBandGroups(cerradas.unionByName(pagosDe(cerradas))),
+        columnasFacturasCerradas, keepBand = true),
+      "por_acreditar" -> seleccionarColumnas(porAcreditar(df), columnasPorAcreditar),
+      "registros_totales" -> withBandGroups(df),
+      "registros_por_acreditar" -> withBandGroups(porAcreditar(df)),
+      "registros_cancelados" -> withBandGroups(cancelados(df)))
+  }
+
+  test("shared cuts: every report view equals its per-view chain (columns and row multiset)") {
+    val expected = perViewChains(raw)
+    assert(expected.keySet.forall(views.contains))
+    expected.foreach { case (name, want) =>
+      val got = views(name)
+      assert(got.columns.toSeq == want.columns.toSeq, s"$name column order")
+      assert(got.count() == want.count(), s"$name row count")
+      assert(got.exceptAll(want).isEmpty, s"$name has rows the per-view chain lacks")
+      assert(want.exceptAll(got).isEmpty, s"$name lacks rows of the per-view chain")
+    }
+  }
+
+  test("shared cuts: reporte_cxc reads the cached master, the master runs one z-score aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.StddevSamp
+    import org.apache.spark.sql.catalyst.plans.Cross
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    // collect walks children only, so the cached master's own plan (an
+    // inner child of the scan) is not searched for a Window
+    val reporte = unwrap(views("reporte_cxc").queryExecution.executedPlan)
+    assert(reporte.collect { case m: InMemoryTableScanExec => m }.nonEmpty,
+      s"reporte_cxc must read the cached master; plan was:\n$reporte")
+    assert(reporte.collect { case w: WindowExec => w }.isEmpty,
+      s"reporte_cxc must not recompute the band-group window; plan was:\n$reporte")
+    def zScoreShape(p: LogicalPlan): (Int, Int) = (
+      p.collect { case a: Aggregate if a.aggregateExpressions.exists(
+        _.collectFirst { case _: StddevSamp => true }.isDefined) => a }.size,
+      p.collect { case j: Join if j.joinType == Cross => j }.size)
+    val cut = CxcReport.run(raw, CxcFixture.asOfDate)("movimientos_totales")
+    assert(zScoreShape(cut.queryExecution.optimizedPlan) == ((1, 1)),
+      "the master's three z-scores must share one aggregate and one cross join")
+    // the chain runs three aggregates, and each later aggregate reads a
+    // (column-pruned) copy of the earlier cross joins: 1 + 2 + 4 joins
+    assert(zScoreShape(perViewChains(raw)("movimientos_totales")
+      .queryExecution.optimizedPlan) == ((3, 7)),
+      "the chained form this pin is measured against")
   }
 
   test("auditor finds the planted edge cases") {
