@@ -5,8 +5,9 @@ import org.apache.spark.sql.DataFrame
 import graft.GraftConf
 
 /** Lineage cuts for iterative operators (PageRank q43, LPA q45, the
-  * alternating-star connected-components rounds), dispatched by the
-  * `graft.checkpoint.dir` session conf (VERDICT r10 item 5):
+  * alternating-star connected-components rounds) and for the range cut
+  * of Pareto's two-phase ranks, dispatched by the `graft.checkpoint.dir`
+  * session conf:
   *
   *  - conf UNSET (local/test default): `localCheckpoint()` — executor-
   *    memory blocks, zero filesystem setup, exactly what a single-JVM
@@ -31,12 +32,11 @@ object Checkpoints {
     * whatever `setCheckpointDir` received, so an equality test against
     * the configured dir never matches and `setCheckpointDir` (mkdirs +
     * new UUID dir) would re-run on every single cut — once per
-    * PageRank/LPA/CC iteration (ADVICE r11).
+    * PageRank/LPA/CC iteration.
     */
   // keyed by applicationId, NOT the SparkContext itself: an object-level
   // strong reference would pin every stopped context (and everything it
   // retains) for the JVM's lifetime in session-cycling harnesses
-  // (review r12 finding)
   private val applied =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 

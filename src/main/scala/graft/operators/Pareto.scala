@@ -16,25 +16,23 @@ import graft.GraftConf
   *    exceeds the A threshold;
   *  - the final row's cumulative share is force-set to exactly 1.0.
   *
-  * Two execution shapes behind one API:
-  *  - global window (`twoPhase = Some(false)`): single partition,
-  *    correct at the reference's cardinality (accounts, not facts), and
-  *    the only shape whose left-to-right double summation is
-  *    bit-identical to the sequential oracle.
-  *  - distributed prefix sum (`twoPhase = Some(true)`): for when the key
+  * Two execution shapes behind one API, picked by the input's Catalyst
+  * size estimate vs `graft.pareto.twoPhase.bytes` (runtime conf, default
+  * [[GraftConf.paretoTwoPhaseBytesDefault]]):
+  *  - global window (below the threshold): single partition, correct at
+  *    the reference's cardinality (accounts, not facts), and the only
+  *    shape whose left-to-right double summation is bit-identical to the
+  *    sequential oracle. Report cardinalities stay here.
+  *  - distributed prefix sum (at or above it): for when the key
   *    dimension itself explodes — range-repartition by (value desc, key
-  *    asc), per-partition local windows, per-partition (sum, count)
-  *    offsets collected (one tiny P-row action) and broadcast back, then
-  *    cum = local + offset. Ranks are exactly the global ranks (range
-  *    partitioning preserves the total order); cumulative sums differ
-  *    from the sequential form only by floating-point re-association
-  *    (ulps) — property-tested to agree on ranks and rounded outputs.
-  *  - `twoPhase = None` (default) AUTO-DISPATCHES on the input's
-  *    Catalyst size estimate vs `graft.pareto.twoPhase.bytes` (runtime
-  *    conf, default [[GraftConf.paretoTwoPhaseBytesDefault]]): report
-  *    cardinalities stay on the oracle-exact global window; a 100×
-  *    key-dimension blow-up flips to the distributed shape instead of
-  *    silently single-partitioning.
+  *    asc), cut once ([[Checkpoints.cut]]), per-partition local windows,
+  *    per-partition (sum, count) offsets collected (one tiny P-row
+  *    action) and broadcast back, then cum = local + offset. Ranks are
+  *    exactly the global ranks (range partitioning preserves the total
+  *    order); cumulative sums differ from the sequential form only by
+  *    floating-point re-association (ulps) — property-tested to agree on
+  *    ranks and rounded outputs. A 100× key-dimension blow-up flips here
+  *    instead of silently single-partitioning.
   */
 object Pareto {
 
@@ -47,21 +45,15 @@ object Pareto {
     * two-phase shape is property-tested for exact rank agreement and
     * rounded-output agreement on its own.
     */
-  def abc(
-      perKey: DataFrame,
-      keyCol: Column,
-      valueCol: Column,
-      twoPhase: Option[Boolean] = None,
-  ): DataFrame = {
-    requireNoTempCollision(perKey)
-    if (twoPhase.getOrElse(autoTwoPhase(perKey))) abcTwoPhase(perKey, keyCol, valueCol)
-    else abcGlobalWindow(perKey, keyCol, valueCol)
-  }
+  def abc(perKey: DataFrame, keyCol: Column, valueCol: Column): DataFrame =
+    classify(
+      rankCumBy(perKey, Seq(valueCol.desc, keyCol.asc), valueCol, "rnk", "_cum", "_tot", "_n"),
+      valueCol)
 
   /** The two-phase reconstruction's own working columns — also the
     * names [[rankCumBy]] refuses as caller-chosen OUTPUT names (the
-    * trailing .drop would silently eat them; review r16: one shared
-    * definition, not two lists to keep in sync).
+    * trailing .drop would silently eat them; one shared definition, not
+    * two lists to keep in sync).
     */
   private val twoPhaseInternal = Seq("_pid", "_lrn", "_lcum", "_coff", "_soff")
 
@@ -100,21 +92,19 @@ object Pareto {
   }
 
   /** Global rank + running value sum + grand total + row count over
-    * arbitrary sort `keys`, with [[abc]]'s two execution shapes (r15,
-    * VERDICT r14 item 4: the CxC dual-sort concentración needed exactly
-    * abc's window quartet but with its OWN classification quirks, so
-    * the quartet is factored out here and both [[abc]] arms are now
-    * thin wrappers). Below the dispatch threshold the four columns come
-    * from one global window pass, bit-identical to a sequential oracle;
-    * above it the range-partition + offset reconstruction runs — ranks
-    * and counts exact, cumulative/total sums equal up to double
-    * re-association (same contract as [[abc]]).
+    * arbitrary sort `keys`, with [[abc]]'s two execution shapes (the CxC
+    * dual-sort concentración needs exactly abc's window quartet but with
+    * its OWN classification quirks, so the quartet lives here and
+    * [[abc]] classifies its output). Below the dispatch threshold the
+    * four columns come from one global window pass, bit-identical to a
+    * sequential oracle; above it the range-partition + offset
+    * reconstruction runs — ranks and counts exact, cumulative/total sums
+    * equal up to double re-association (same contract as [[abc]]).
     */
   def rankCumBy(df: DataFrame, keys: Seq[Column], valueCol: Column,
-      rankCol: String, cumCol: String, totCol: String, nCol: String,
-      twoPhase: Option[Boolean] = None): DataFrame = {
+      rankCol: String, cumCol: String, totCol: String, nCol: String): DataFrame = {
     requireNoTempCollision(df)
-    // ADVICE r15: the INPUT check above guards df's columns, but a
+    // the INPUT check above guards df's columns, but a
     // caller-chosen OUTPUT name colliding with the two-phase WORKING
     // columns would be silently dropped by the trailing .drop
     // (cumCol="_lcum") or corrupt the _pid join — refuse loudly
@@ -124,7 +114,7 @@ object Pareto {
     val clash = Seq(rankCol, cumCol, totCol, nCol).filter(twoPhaseInternal.contains)
     require(clash.isEmpty,
       s"rankCumBy output names collide with two-phase internals: ${clash.mkString(", ")}")
-    if (twoPhase.getOrElse(autoTwoPhase(df)))
+    if (autoTwoPhase(df))
       rankCumTwoPhase(df, keys, valueCol, rankCol, cumCol, totCol, nCol)
     else {
       val w = Window.orderBy(keys: _*)
@@ -141,12 +131,14 @@ object Pareto {
       rankCol: String, cumCol: String, totCol: String, nCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // Same boundary-pinning rationale as rankTwoPhase: the stats collect
-    // and the returned plan must see the SAME range partitioning.
-    val parted = df
+    // Range partitioning gives partition i ≤ partition i+1 in key
+    // order, so local rank/cumsum + an exclusive per-partition offset
+    // reconstruct the global quantities. The cut pins the boundaries:
+    // the stats collect and the returned plan must see the SAME range
+    // partitioning.
+    val parted = Checkpoints.cut(df
       .repartitionByRange(keys: _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("_pid", spark_partition_id()))
     // P rows — driver-sized by construction (P = shuffle partitions).
     // Cast+coalesce: a non-double valueCol (decimal, int) or an all-NULL
     // partition must not blow up the driver-side getDouble.
@@ -182,36 +174,33 @@ object Pareto {
     * reconstruction above it. Ranks are exact integers either way, so
     * results are identical — only the plan shape changes.
     */
-  def rankBy(df: DataFrame, keys: Seq[Column], rankCol: String,
-      twoPhase: Option[Boolean] = None): DataFrame = {
+  def rankBy(df: DataFrame, keys: Seq[Column], rankCol: String): DataFrame = {
     requireNoTempCollision(df)
-    if (twoPhase.getOrElse(autoTwoPhase(df))) rankTwoPhase(df, keys, rankCol)
+    if (autoTwoPhase(df)) rankTwoPhase(df, keys, rankCol)
     else df.withColumn(rankCol, row_number().over(Window.orderBy(keys: _*)))
   }
 
   /** Global `dense_rank` over `keys` with the same dispatch as
-    * [[rankBy]] (VERDICT r10 item 4 — the band-group window was the
-    * last undispatched global window on the parity path). Two-phase
+    * [[rankBy]] (the band-group window, otherwise an undispatched global
+    * window on the parity path). Two-phase
     * correctness: range partitioning sends EQUAL key tuples to the same
     * partition, so per-partition local dense ranks never split a group,
     * and the global dense rank is local + the cumulative max local
     * dense rank of the preceding partitions (an exclusive scan over a
     * P-row collect, like rankBy's row-count offsets).
     */
-  def denseRankBy(df: DataFrame, keys: Seq[Column], rankCol: String,
-      twoPhase: Option[Boolean] = None): DataFrame = {
+  def denseRankBy(df: DataFrame, keys: Seq[Column], rankCol: String): DataFrame = {
     requireNoTempCollision(df)
-    if (twoPhase.getOrElse(autoTwoPhase(df))) denseRankTwoPhase(df, keys, rankCol)
+    if (autoTwoPhase(df)) denseRankTwoPhase(df, keys, rankCol)
     else df.withColumn(rankCol, dense_rank().over(Window.orderBy(keys: _*)).cast("int"))
   }
 
   private def denseRankTwoPhase(df: DataFrame, keys: Seq[Column], rankCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parted = df
+    val parted = Checkpoints.cut(df
       .repartitionByRange(keys: _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("_pid", spark_partition_id()))
     val wLocal = Window.partitionBy("_pid").orderBy(keys: _*)
     val local = parted.withColumn("_lrn", dense_rank().over(wLocal))
     // P rows: each partition's distinct-group count is its max local
@@ -233,12 +222,11 @@ object Pareto {
   private def rankTwoPhase(df: DataFrame, keys: Seq[Column], rankCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // Same boundary-pinning rationale as abcTwoPhase: the count collect
-    // and the returned plan must see the SAME range partitioning.
-    val parted = df
+    // Same boundary-pinning rationale as rankCumTwoPhase: the count
+    // collect and the returned plan must see the SAME range partitioning.
+    val parted = Checkpoints.cut(df
       .repartitionByRange(keys: _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("_pid", spark_partition_id()))
     val counts = parted.groupBy("_pid").agg(count(lit(1)).as("_c"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val offsets = counts
@@ -274,23 +262,4 @@ object Pareto {
           .otherwise("C"),
       )
       .drop("_cum_raw", "_n", "_cum", "_tot")
-
-  private def abcGlobalWindow(
-      perKey: DataFrame, keyCol: Column, valueCol: Column): DataFrame =
-    classify(
-      rankCumBy(perKey, Seq(valueCol.desc, keyCol.asc), valueCol,
-        "rnk", "_cum", "_tot", "_n", twoPhase = Some(false)),
-      valueCol)
-
-  // Phase 1 (inside rankCumTwoPhase): range partitioning gives
-  // partition i ≤ partition i+1 in (value desc, key asc) order, so
-  // local rank/cumsum + an exclusive per-partition offset reconstruct
-  // the global quantities exactly (ranks/counts bit-exact, sums up to
-  // double re-association — the class-doc contract).
-  private def abcTwoPhase(
-      perKey: DataFrame, keyCol: Column, valueCol: Column): DataFrame =
-    classify(
-      rankCumBy(perKey, Seq(valueCol.desc, keyCol.asc), valueCol,
-        "rnk", "_cum", "_tot", "_n", twoPhase = Some(true)),
-      valueCol)
 }

@@ -19,7 +19,7 @@ object VectorQueries {
   private val K = 5
   private val NQUERIES = 10
 
-  private def embs(s: SparkSession, dir: String): DataFrame = {
+  private[queries] def embs(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
     Tables.embeddings(s, dir)
       .withColumn("vec", toDouble(col("embedding")))
@@ -1858,7 +1858,7 @@ object VectorQueries {
   // (that is what an embedding model is FOR); there the cells track
   // cluster structure and candidate volume stays near P·n/K. The
   // operating contract at scale is therefore: size by K=⌈√n⌉, keep P=16,
-  // and READ the persisted measurement ([[gateSweepPath]], written by
+  // and READ the persisted measurement ([[GateCurve.Probe]], written by
   // tools/GateSweep next to the index) before trusting either number on a
   // new corpus — the sweep is cheap relative to one production run and
   // the curve is corpus-specific state, not a universal constant.
@@ -1877,8 +1877,8 @@ object VectorQueries {
   // equivalence (recall is a function of scanned mass — at equal mass
   // the two rules agree to 3dp) is in gates/r14/mass_sweep_sf.txt.
   private[graft] val GateProbes = 16
-  private val GateFitIters = 3
-  private val GateFitPerCell = 64
+  private[queries] val GateFitIters = 3
+  private[queries] val GateFitPerCell = 64
 
   /** Default recall15 target for recall-targeted gate sizing (the
     * persisted sweep curves as production behavior, not advisory
@@ -1920,46 +1920,30 @@ object VectorQueries {
       t
     }.getOrElse(GateRecallTarget)
 
-  // Resolution is memoized per corpus dir for the JVM lifetime: one
-  // Verify process runs the gated queries AND dumps their oracle SQL,
-  // and both MUST see the same resolved budget even if a concurrent
-  // GateSweep rewrites the curve between the two reads. First
-  // resolution wins; specs that plant curves use clearGateSizing().
-  private val resolvedProbes =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private val resolvedFrac =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-
   /** The probe budget the production gate actually builds with: the
-    * cheapest budget the persisted, staleness-guarded sweep curve
+    * cheapest budget the persisted, staleness-guarded probe curve
     * certifies at [[gateTarget]] when such a curve exists for this
     * corpus; the static [[GateProbes]] otherwise (no curve, stale
     * curve, or no swept budget reaching the target — escalating to a
     * budget the curve does NOT certify would silently miss the target,
     * so the fallback is the documented constant, not the largest swept
-    * value).
+    * value). Memoized per corpus, like every [[GateCurve.resolved]].
     */
   private[graft] def resolvedGateProbes(dir: String): Int =
-    resolvedProbes.computeIfAbsent(dir,
-      _ => Integer.valueOf(gateProbesFor(dir, gateTarget).getOrElse(GateProbes))
-    ).intValue
+    GateCurve.Probe.resolved(dir, GateProbes).toInt
 
   /** [[resolvedGateProbes]]'s mass-budget twin: cheapest certified
     * scanned-mass fraction at [[gateTarget]], else [[GateMassFrac]].
     */
   private[graft] def resolvedGateMassFrac(dir: String): Double =
-    resolvedFrac.computeIfAbsent(dir,
-      _ => java.lang.Double.valueOf(
-        gateMassFracFor(dir, gateTarget).getOrElse(GateMassFrac))
-    ).doubleValue
+    GateCurve.Mass.resolved(dir, GateMassFrac)
 
   /** Spec hook: drop memoized sizing decisions (a test that plants a
     * curve, resolves, then plants a different curve needs the second
     * plant to be visible). Never called on a production path.
     */
   private[graft] def clearGateSizing(): Unit = {
-    resolvedProbes.clear()
-    resolvedFrac.clear()
+    GateCurve.clearResolved()
     resolvedRule.clear()
   }
 
@@ -2051,235 +2035,6 @@ object VectorQueries {
     graft.sources.HadoopFs.indexPath(
       "gate", dir, resolvedGateProbes(dir), GateFitIters, GateFitPerCell, "sqrtK")
 
-  /** One measured sweep row: (probes, cand_rows, recall15, recall22,
-    * agree25) — the units tools/GateSweep prints and RecallSpec floors.
-    */
-  type SweepRow = (Int, Long, Double, Double, Double)
-
-  /** Persisted probe→recall curve for this corpus:
-    * tools/GateSweep writes the measured table here; the production
-    * sizing ([[resolvedGateProbes]]) and RecallSpec's gated-trio floors
-    * READ the recorded measurement instead of re-deriving it. The
-    * path is fingerprinted on the FIT parameters only — the curve
-    * sweeps the probe-budget axis, so the budget must not key its
-    * location (the sized build changes the budget, and could then never
-    * find the curve that sized it). A fit-parameter change still moves
-    * the path, so a curve can never be paired with a differently-fitted
-    * quantizer.
-    */
-  def gateSweepPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath(
-      "gatesweep", dir, GateFitIters, GateFitPerCell, "sqrtK") + "/_sweep.json"
-
-  def writeGateSweep(dir: String, rows: Seq[SweepRow],
-      srcAtStart: Long = -1L): Unit = {
-    val f = new java.io.File(gateSweepPath(dir))
-    f.getParentFile.mkdirs()
-    val json = rows.map { case (p, n, r15, r22, r25) =>
-      s"""{"probes":$p,"cand_rows":$n,"recall15":$r15,"recall22":$r22,"agree25":$r25}"""
-    }.mkString("[", ",", "]")
-    java.nio.file.Files.write(f.toPath, json.getBytes("UTF-8"))
-    stampPastCorpus(f, dir, srcAtStart)
-  }
-
-  /** Newest corpus mtime — captured by the sweep TOOLS before they
-    * start measuring, so [[stampPastCorpus]] can refuse to freshness-
-    * stamp a curve whose corpus was regenerated mid-sweep.
-    */
-  def corpusMtime(dir: String): Long =
-    graft.sources.HadoopFs.newestMtime(
-      new org.apache.hadoop.conf.Configuration(), s"$dir/embeddings.parquet")
-
-  /** On filesystems with coarse (1 s) mtime granularity a
-    * sweep persisted in the same tick as the corpus it just measured
-    * reads as stale under [[sweepCurrent]]'s strict `>` and is silently
-    * orphaned. Mirror the index artifacts' _SUCCESS-last convention:
-    * stamp the freshly written sweep strictly past the corpus. The
-    * write HAS just measured this corpus, so the claim the stamp makes
-    * is true by construction.
-    */
-  private def stampPastCorpus(f: java.io.File, dir: String,
-      srcAtStart: Long = -1L): Unit = {
-    val src = corpusMtime(dir)
-    // two holes closed here: (1) the sweep tools capture the corpus mtime
-    // at sweep START and pass it here — a corpus regenerated mid-sweep
-    // gets NO stamp (the curve measured replaced data; its natural write
-    // mtime then loses the strict-> staleness check, the safe side). (2)
-    // src+1000 future-dated the stamp by up to ~1 s past wall-clock, so a
-    // corpus regenerated in that window still read older than the stamp;
-    // the bump is now ONE millisecond past the corpus, applied only for
-    // the same-tick-orphan case this stamp exists for — on a coarse (1 s)
-    // mtime filesystem that degrades to a same-tick orphan, which is
-    // false-STALE (a re-sweep), never false-fresh. A vanished corpus (FNF
-    // sentinel Long.MaxValue) also gets no bump.
-    if (src != Long.MaxValue && (srcAtStart < 0L || src == srcAtStart))
-      f.setLastModified(math.max(f.lastModified,
-        math.max(System.currentTimeMillis, src + 1L)))
-    else if (srcAtStart >= 0L && src != srcAtStart)
-      System.err.println(s"[sweep] REFUSING freshness stamp for $f — " +
-        s"corpus $dir changed during the sweep (mtime $srcAtStart -> $src); " +
-        "the curve measured replaced data and will read stale")
-  }
-
-  /** A persisted sweep is only valid for the corpus it was measured on:
-    * the fingerprinted path pins the PARAMETERS, but a regenerated
-    * source parquet keeps the same path — without this mtime guard a
-    * stale curve would keep certifying budgets (and raising RecallSpec
-    * floors) measured on a different corpus (the same
-    * staleness rule the index artifacts themselves use).
-    */
-  private def sweepCurrent(f: java.io.File, dir: String): Boolean =
-    f.lastModified > graft.sources.HadoopFs.newestMtime(
-      new org.apache.hadoop.conf.Configuration(), s"$dir/embeddings.parquet")
-
-  // doubles serialize via toString, which goes scientific below 1e-3
-  // ("1.0E-4") — the number pattern must accept exponents or rows
-  // silently drop
-  private val SweepNum = """-?[0-9.]+(?:[eE][-+]?[0-9]+)?"""
-
-  /** Repo-committed curve registry: the
-    * persisted sweeps lived only in the tmpdir, so a clean machine
-    * silently built the constant fallback where the round's receipts
-    * built the certified-cheaper budget — gate sizing was correct
-    * either way (the oracle adapts), but the ARTIFACT a driver or user
-    * got differed by what had run on the box before. The registry is a
-    * conf'd directory of committed curves (`SPARK_GRAFT_CURVE_REGISTRY`,
-    * default `gates/curves` — resolved against the process working
-    * directory, i.e. the repo root under sbt) that the sweep readers
-    * fall back to when no current tmpdir cache exists: committed curves
-    * are the source of truth a clean checkout reproduces from, the
-    * tmpdir is the measurement cache in front of them (a fresh local
-    * sweep of the same corpus + fit parameters is deterministic, so
-    * precedence cannot change values — only availability).
-    *
-    * Registry entries are keyed by the same FIT-parameter fingerprint
-    * and normalized dir slug as the tmpdir paths, plus the corpus's
-    * content key ([[graft.sources.HadoopFs.contentKey]]: total bytes +
-    * file count + largest-file size) instead of the cache's mtime rule
-    * — checkout mtimes are meaningless, content is the witness, and
-    * the slug keeps two same-sized corpora from aliasing one curve. `graft.tools.CurvePublish <sfDir>...`
-    * copies the current tmpdir curves into the registry under those
-    * names.
-    */
-  private[graft] def curveRegistryDir: String =
-    sys.env.get("SPARK_GRAFT_CURVE_REGISTRY")
-      .orElse(sys.props.get("graft.curve.registry")) // spec hook (env is process-fixed)
-      .getOrElse("gates/curves")
-
-  private[graft] def registryCurveFile(family: String, dir: String): Option[java.io.File] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    // an absent/empty corpus has no content identity — it must never
-    // alias a committed entry (and CurvePublish refuses to write one).
-    // key by PATH SLUG and content — size alone let two corpora whose
-    // parquet happened to total the same bytes share one certified curve
-    // (sf0.001/sf0.01 both hold n=500 and differ by 8 bytes of
-    // compression noise). The slug (shared with the tmpdir cache via
-    // HadoopFs.dirSlug, path-normalized) pins which corpus the
-    // measurement was taken on; the content key (total bytes + file count
-    // + largest-file size, see [[graft.sources.HadoopFs.contentKey]]) is
-    // the staleness witness for THAT corpus.
-    graft.sources.HadoopFs.contentKey(conf, s"$dir/embeddings.parquet").map { key =>
-      val fp = graft.sources.HadoopFs.paramFingerprint(
-        GateFitIters, GateFitPerCell, "sqrtK")
-      val slug = graft.sources.HadoopFs.dirSlug(dir)
-      new java.io.File(s"$curveRegistryDir/graft_${family}_${fp}_${slug}_$key.json")
-    }
-  }
-
-  /** Candidate curve texts for `family`/`dir`, most-authoritative
-    * first: the tmpdir cache when current (same mtime staleness rule
-    * as ever), then the committed registry entry keyed to this corpus.
-    * Both are offered so a reader can fall through to the registry
-    * when the cache text exists but no longer parses (an older-format
-    * artifact must not SHADOW a valid committed curve).
-    * LAZY on purpose: the registry candidate costs a recursive corpus
-    * byte listing, which a current-and-parsing cache hit — the common
-    * case on a working box — must never pay.
-    */
-  private def curveTexts(family: String, tmpFile: java.io.File,
-      dir: String): Iterator[String] = {
-    val tmp = Iterator(tmpFile)
-      .filter(f => f.exists() && sweepCurrent(f, dir))
-    val reg = Iterator(()).flatMap(_ =>
-      registryCurveFile(family, dir).filter(_.exists()).iterator)
-    (tmp ++ reg).map(f =>
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-  }
-
-  private[graft] def parseSweepRows(txt: String): Seq[SweepRow] = {
-    val row = (s"""\\{"probes":(\\d+),"cand_rows":(\\d+),"recall15":($SweepNum),""" +
-      s""""recall22":($SweepNum),"agree25":($SweepNum)\\}""").r
-    row.findAllMatchIn(txt).map(m =>
-      (m.group(1).toInt, m.group(2).toLong, m.group(3).toDouble,
-        m.group(4).toDouble, m.group(5).toDouble)).toSeq
-  }
-
-  def readGateSweep(dir: String): Option[Seq[SweepRow]] =
-    curveTexts("gatesweep", new java.io.File(gateSweepPath(dir)), dir)
-      .map(parseSweepRows).find(_.nonEmpty)
-
-  /** One measured mass-sweep row: (mass_frac, cand_rows, recall15,
-    * recall22, agree25) — the mass-budget twin of [[SweepRow]].
-    */
-  type MassSweepRow = (Double, Long, Double, Double, Double)
-
-  /** The mass-budget gate's persisted sweep curve — same fit-only
-    * fingerprint lifecycle as [[gateSweepPath]] (the curve sweeps the
-    * mass-fraction axis, so the fraction must not key its location).
-    */
-  def gateMassSweepPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath(
-      "gatemasssweep", dir, GateFitIters, GateFitPerCell, "sqrtK") + "/_sweep.json"
-
-  def writeGateMassSweep(dir: String, rows: Seq[MassSweepRow],
-      srcAtStart: Long = -1L): Unit = {
-    val f = new java.io.File(gateMassSweepPath(dir))
-    f.getParentFile.mkdirs()
-    val json = rows.map { case (fr, n, r15, r22, r25) =>
-      s"""{"mass_frac":$fr,"cand_rows":$n,"recall15":$r15,"recall22":$r22,"agree25":$r25}"""
-    }.mkString("[", ",", "]")
-    java.nio.file.Files.write(f.toPath, json.getBytes("UTF-8"))
-    stampPastCorpus(f, dir, srcAtStart)
-  }
-
-  private[graft] def parseMassSweepRows(txt: String): Seq[MassSweepRow] = {
-    val row = (s"""\\{"mass_frac":($SweepNum),"cand_rows":(\\d+),"recall15":($SweepNum),""" +
-      s""""recall22":($SweepNum),"agree25":($SweepNum)\\}""").r
-    row.findAllMatchIn(txt).map(m =>
-      (m.group(1).toDouble, m.group(2).toLong, m.group(3).toDouble,
-        m.group(4).toDouble, m.group(5).toDouble)).toSeq
-  }
-
-  def readGateMassSweep(dir: String): Option[Seq[MassSweepRow]] =
-    curveTexts("gatemasssweep", new java.io.File(gateMassSweepPath(dir)), dir)
-      .map(parseMassSweepRows).find(_.nonEmpty)
-
-  /** Recall-targeted gate sizing from the persisted measurement (the
-    * policy the envelope note at [[GateProbes]] commits to: sizing reads
-    * corpus-specific state, never a universal constant): the smallest
-    * swept probe budget whose measured neighbor recall meets `target` on
-    * this corpus. None when no sweep is persisted or no swept budget
-    * reaches the target — the caller escalates (re-sweep wider, or accept
-    * the largest measured budget explicitly); silently handing back a
-    * budget that MISSES the target is the one wrong answer. The certified
-    * row must also clear [[GateSecondaryMin]] on recall22/agree25 — the
-    * budget serves all three gated families, so the primary target alone
-    * must not certify a secondary collapse.
-    */
-  def gateProbesFor(dir: String, targetRecall15: Double): Option[Int] =
-    readGateSweep(dir).flatMap(rows =>
-      rows.sortBy(_._1).find(r => r._3 >= targetRecall15 &&
-        r._4 >= GateSecondaryMin && r._5 >= GateSecondaryMin).map(_._1))
-
-  /** [[gateProbesFor]]'s mass-budget twin: the smallest swept scanned-
-    * mass fraction meeting the recall target — i.e. the cheapest
-    * PINNED-cost configuration the persisted curve certifies.
-    */
-  def gateMassFracFor(dir: String, targetRecall15: Double): Option[Double] =
-    readGateMassSweep(dir).flatMap(rows =>
-      rows.sortBy(_._1).find(r => r._3 >= targetRecall15 &&
-        r._4 >= GateSecondaryMin && r._5 >= GateSecondaryMin).map(_._1))
-
   /** Directed, labeled, cosine-scored candidate frame shared by the
     * three gated twins: (ida, la, idb, lb, cos) where idb's home cell
     * is among ida's probed cells. Map-only probe/home assignment
@@ -2297,7 +2052,7 @@ object VectorQueries {
 
   /** The gate's quantizer fit alone (strided sample + Lloyd refits) —
     * split from the probe stage so the probe-budget sweep
-    * ([[gateProbeSweep]]) fits ONCE and re-probes at each budget (the
+    * ([[GateCurve.Probe]]) fits ONCE and re-probes at each budget (the
     * fit does not depend on the probe count).
     */
   private[graft] def gateFitCents(e: DataFrame, k: Int, n: Long,
@@ -2419,10 +2174,10 @@ object VectorQueries {
   /** The three exact-twin anchors every gate sweep measures against,
     * materialized once (they are the sweep's dominant cost), returned
     * as a measurement closure: candidate frame in → (scored rows,
-    * recall15, recall22, agree25) out — the probe, mass, and K sweeps
-    * share this tail.
+    * recall15, recall22, agree25) out — every [[GateCurve]] sweep
+    * shares this tail.
     */
-  private def gateSweepAnchors(s: SparkSession, dir: String)
+  private[queries] def gateSweepAnchors(s: SparkSession, dir: String)
       : DataFrame => (Long, Double, Double, Double) = {
     val exact15 = knnPairsExact(s, dir).localCheckpoint()
     val exact22 = qe22(s, dir).select("vec_a", "vec_b").localCheckpoint()
@@ -2454,106 +2209,6 @@ object VectorQueries {
     }
   }
 
-  /** Mass-budget / recall trade measurement (the experimental-probe
-    * twin of [[gateProbeSweep]]): same exact anchors, same three recall
-    * measures, with the scanned-mass fraction as the swept axis.
-    */
-  private[graft] def gateMassSweep(s: SparkSession, dir: String,
-      fracs: Seq[Double]): DataFrame = {
-    val e = embs(s, dir)
-    val n = Tables.embeddings(s, dir).count()
-    val cents = gateFitCents(e, gateK(n), n)
-    val measure = gateSweepAnchors(s, dir)
-    val s2 = s
-    import s2.implicits._
-    fracs.map { f =>
-      val (rows, r15, r22, r25) = measure(gateCandsMassBudget(e, cents, f, n))
-      Seq((f, rows, r15, r22, r25))
-        .toDF("mass_frac", "cand_rows", "recall15", "recall22", "agree25")
-    }.reduce(_.unionByName(_))
-  }
-
-  /** Probe-budget / recall trade for the gated trio: ONE quantizer fit at
-    * the production K = ⌈√n⌉, then for each probe budget the three
-    * twin-level recall measures RecallSpec floors — qe15b neighbor-pair
-    * recall, qe22b mutual-pair recall, qe25b per-vector prediction
-    * agreement — plus the scored-candidate row count (the cost the budget
-    * buys them with). The sweep is the measurement that PICKS the probe
-    * budget ([[resolvedGateProbes]]); qe26 is the same artifact for qe5's
-    * fixed-K IVF.
-    */
-  private[graft] def gateProbeSweep(s: SparkSession, dir: String,
-      budgets: Seq[Int]): DataFrame = {
-    val e = embs(s, dir)
-    val n = Tables.embeddings(s, dir).count()
-    val cents = gateFitCents(e, gateK(n), n)
-    val measure = gateSweepAnchors(s, dir)
-    val s2 = s
-    import s2.implicits._
-    budgets.map { p =>
-      val (rows, r15, r22, r25) = measure(gateCandsWithCents(e, cents, p))
-      Seq((p, rows, r15, r22, r25))
-        .toDF("probes", "cand_rows", "recall15", "recall22", "agree25")
-    }.reduce(_.unionByName(_))
-  }
-
-  /** Cell-count / recall trade (the last un-swept gate parameter): K =
-    * ⌈√n⌉ is what makes the gate's total work P·n^1.5, but the n=20k
-    * receipts showed K and P interact (recall ROSE with n at fixed P
-    * because K grew), so the K rule deserves its own measured curve. Each
-    * swept K is a FULL refit (unlike the probe/mass sweeps, which share
-    * one fit) probed at the budget the production build ACTUALLY resolves
-    * for this corpus ([[resolvedGateProbes]] — a corpus already
-    * curve-sized away from the [[GateProbes]] constant must sweep K at
-    * ITS budget, or the curve answers a question production never asks;
-    * the budget used is recorded in the persisted artifact); the curve
-    * answers "would a coarser/finer quantizer at the same probe budget
-    * deliver the recall cheaper on this corpus". The complexity trade is
-    * explicit: assignment cost is n·K (rises with K), candidate volume is
-    * ≈ P·n²/K on balanced fits (falls with K).
-    */
-  private[graft] def gateKSweep(s: SparkSession, dir: String,
-      ks: Seq[Int]): DataFrame = {
-    val e = embs(s, dir)
-    val n = Tables.embeddings(s, dir).count()
-    val measure = gateSweepAnchors(s, dir)
-    val p = resolvedGateProbes(dir)
-    val s2 = s
-    import s2.implicits._
-    ks.map { k =>
-      val cents = gateFitCents(e, k, n)
-      val (rows, r15, r22, r25) = measure(gateCandsWithCents(e, cents, p))
-      Seq((k, rows, r15, r22, r25))
-        .toDF("k_cells", "cand_rows", "recall15", "recall22", "agree25")
-    }.reduce(_.unionByName(_))
-  }
-
-  /** The K-sweep's persisted artifact, beside the probe curve in the
-    * fit-fingerprinted dir (informational: the production rule stays
-    * K = ⌈√n⌉ unless a curve shows it mis-sized — decision recorded in
-    * BENCH_NOTES, not auto-consumed).
-    */
-  def gateKSweepPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath(
-      "gatesweep", dir, GateFitIters, GateFitPerCell, "sqrtK") + "/_ksweep.json"
-
-  type KSweepRow = (Int, Long, Double, Double, Double)
-
-  def writeGateKSweep(dir: String, rows: Seq[KSweepRow],
-      probes: Int = GateProbes, srcAtStart: Long = -1L): Unit = {
-    val f = new java.io.File(gateKSweepPath(dir))
-    f.getParentFile.mkdirs()
-    // record the probe budget the sweep actually measured
-    // at — a later reader must be able to tell a constant-budget curve
-    // from one swept at a corpus-resolved budget
-    val json = rows.map { case (k, n, r15, r22, r25) =>
-      s"""{"k_cells":$k,"probes":$probes,"cand_rows":$n,""" +
-        s""""recall15":$r15,"recall22":$r22,"agree25":$r25}"""
-    }.mkString("[", ",", "]")
-    java.nio.file.Files.write(f.toPath, json.getBytes("UTF-8"))
-    stampPastCorpus(f, dir, srcAtStart)
-  }
-
   /** Onboarding contradiction check for the K rule: K = ⌈√n⌉ owns the
     * gate's complexity class and the K-sweeps KEPT it with receipts at
     * three corpora (equal-scanned-mass recall equivalence across the K
@@ -2567,7 +2222,7 @@ object VectorQueries {
     * sweep) — not an auto-resize.
     */
   def gateKRuleWarning(dir: String, n: Long): Option[String] =
-    readGateKSweep(dir).flatMap { rows =>
+    GateCurve.K.read(dir).flatMap { rows =>
       val k0 = gateK(n)
       // the sweeps bracket the rule (K/2, K, 2K) — judge its nearest row
       val base = rows.minBy(r => math.abs(r._1 - k0))
@@ -2578,37 +2233,10 @@ object VectorQueries {
       // domination, and must not flag the rule
       rows.find(r => r._1 != base._1 && r._2 < base._2 &&
           r._3 >= base._3 && r._4 >= base._4 && r._5 >= base._5).map(r =>
-        s"K-sweep contradicts K=ceil(sqrt(n))=$k0: K=${r._1} dominates " +
-          s"K=${base._1} (cand_rows ${r._2} < ${base._2}, recall15/22/agree25 " +
+        s"K-sweep contradicts K=ceil(sqrt(n))=$k0: K=${r._1.toInt} dominates " +
+          s"K=${base._1.toInt} (cand_rows ${r._2} < ${base._2}, recall15/22/agree25 " +
           s"${r._3}/${r._4}/${r._5} >= ${base._3}/${base._4}/${base._5})")
     }
-
-  /** K rows + the probe budget the sweep was measured at (the
-    * recorded budget must be READABLE, not write-only — a K curve
-    * swept at a budget production no longer resolves is answering a
-    * question production never asks, and GateResolve warns on it).
-    */
-  private[graft] def parseKSweepRows(txt: String): (Option[Int], Seq[KSweepRow]) = {
-    val row = (s"""\\{"k_cells":(\\d+),"probes":(\\d+),"cand_rows":(\\d+),"recall15":($SweepNum),""" +
-      s""""recall22":($SweepNum),"agree25":($SweepNum)\\}""").r
-    val ms = row.findAllMatchIn(txt).toSeq
-    (ms.headOption.map(_.group(2).toInt),
-      ms.map(m => (m.group(1).toInt, m.group(3).toLong, m.group(4).toDouble,
-        m.group(5).toDouble, m.group(6).toDouble)))
-  }
-
-  /** (probe budget, rows) of the current K curve — tmpdir cache first,
-    * committed registry second, skipping any source that fails to
-    * parse (older artifacts lack the probes field by design: the
-    * budget they measured at is unknowable, so they are re-sweep bait,
-    * not data).
-    */
-  def readGateKSweepFull(dir: String): Option[(Option[Int], Seq[KSweepRow])] =
-    curveTexts("gateksweep", new java.io.File(gateKSweepPath(dir)), dir)
-      .map(parseKSweepRows).find(_._2.nonEmpty)
-
-  def readGateKSweep(dir: String): Option[Seq[KSweepRow]] =
-    readGateKSweepFull(dir).map(_._2)
 
   /** The corpus gate at its production sizing (K = ⌈√n⌉, P =
     * [[resolvedGateProbes]] — curve-sized when a current sweep exists

@@ -2,73 +2,57 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Publish the tmpdir gate-sweep curves into the repo-committed curve
-  * registry (r16, VERDICT r15 item 2): sizing used to depend on hidden
-  * machine state — the probe/mass/K curves lived only under the
-  * tmpdir, so `rm -rf /tmp/graft_gate*` (or a clean checkout) silently
-  * flipped the production gate builds from the certified-cheaper sized
-  * budget back to the constants. This copies each corpus's CURRENT
-  * tmpdir curves into `SPARK_GRAFT_CURVE_REGISTRY` (default
-  * `gates/curves`) under the names the readers resolve
-  * (`graft_<family>_<fitFingerprint>_<dirSlug>_<contentKey>.json` —
-  * the slug pins the corpus, the content key (total bytes + file
-  * count + largest-file size, ADVICE r16) is its staleness witness),
-  * making the sized build reproducible from the committed tree alone.
+import graft.queries.GateCurve
+
+/** Publish the tmpdir gate sizing curves into the repo-committed curve
+  * registry. Without it sizing depended on hidden machine state: the
+  * curves lived only under the tmpdir, so `rm -rf /tmp/graft_gate*` (or
+  * a clean checkout) silently flipped the production gate builds from
+  * the certified-cheaper sized budget back to the constants. This copies
+  * each corpus's CURRENT tmpdir curve of every [[GateCurve.all]] family
+  * into `SPARK_GRAFT_CURVE_REGISTRY` (default `gates/curves`) under the
+  * name the reader resolves ([[GateCurve.registryFile]]: the slug pins
+  * the corpus, the content key is its staleness witness), making the
+  * sized build reproducible from the committed tree alone.
   *
   * No Spark session: the curves are small JSON files and the corpus
   * fingerprint is a filesystem stat. Usage:
   * `sbt "runMain graft.tools.CurvePublish <sfDir> [<sfDir> ...]"`.
-  * Stale tmpdir curves (older than the corpus) are refused — a
-  * registry must never launder a measurement of a replaced corpus.
+  * Stale tmpdir curves (older than the corpus) are refused: a registry
+  * must never launder a measurement of a replaced corpus.
   */
 object CurvePublish {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: CurvePublish <sfDir> [<sfDir> ...]")
-    val reg = graft.queries.VectorQueries.curveRegistryDir
-    Files.createDirectories(Paths.get(reg))
-    for (dir <- args) {
-      val sources = Seq(
-        "gatesweep" -> graft.queries.VectorQueries.gateSweepPath(dir),
-        "gatemasssweep" -> graft.queries.VectorQueries.gateMassSweepPath(dir),
-        "gateksweep" -> graft.queries.VectorQueries.gateKSweepPath(dir))
-      for ((family, tmp) <- sources) {
-        val src = Paths.get(tmp)
-        graft.queries.VectorQueries.registryCurveFile(family, dir) match {
-          case None =>
-            println(s"[publish] SKIP $family @ $dir — corpus absent/empty (no content identity)")
-          case Some(dst) if !Files.exists(src) =>
-            println(s"[publish] skip $family @ $dir — no tmpdir curve at $tmp (target ${dst.getName})")
-          case Some(dst) =>
-            // same strict-> freshness rule the cache reader applies,
-            // checked against the TMPDIR file directly (the reader
-            // would fall back to the registry itself — circular here)
-            val conf = new org.apache.hadoop.conf.Configuration()
-            val fresh = Files.getLastModifiedTime(src).toMillis >
-              graft.sources.HadoopFs.newestMtime(conf, s"$dir/embeddings.parquet")
-            // review r16: a registry entry that doesn't parse with its
-            // reader is worse than none — the clean-machine build
-            // would silently fall back to constants while the registry
-            // claims the curve is published. Validate BEFORE copying.
-            lazy val txt = new String(Files.readAllBytes(src), "UTF-8")
-            lazy val parses = family match {
-              case "gatesweep" =>
-                graft.queries.VectorQueries.parseSweepRows(txt).nonEmpty
-              case "gatemasssweep" =>
-                graft.queries.VectorQueries.parseMassSweepRows(txt).nonEmpty
-              case _ =>
-                graft.queries.VectorQueries.parseKSweepRows(txt)._2.nonEmpty
-            }
-            if (!fresh)
-              println(s"[publish] REFUSE $family @ $dir — tmpdir curve is stale vs the corpus")
-            else if (!parses)
-              println(s"[publish] REFUSE $family @ $dir — tmpdir curve does not parse " +
-                "with its reader (pre-r16 format or corrupt); re-sweep before publishing")
-            else {
-              Files.copy(src, dst.toPath, StandardCopyOption.REPLACE_EXISTING)
-              println(s"[publish] $family @ $dir -> $dst")
-            }
-        }
+    Files.createDirectories(Paths.get(GateCurve.registryDir))
+    for (dir <- args; curve <- GateCurve.all) {
+      val family = curve.family
+      val src = Paths.get(curve.path(dir))
+      curve.registryFile(dir) match {
+        case None =>
+          println(s"[publish] SKIP $family @ $dir — corpus absent/empty (no content identity)")
+        case Some(dst) if !Files.exists(src) =>
+          println(s"[publish] skip $family @ $dir — no tmpdir curve at $src (target ${dst.getName})")
+        case Some(dst) =>
+          // the cache reader's strict-> freshness rule, checked against
+          // the TMPDIR file directly (the reader would fall back to the
+          // registry itself, which is circular here)
+          val fresh = GateCurve.cacheCurrent(src.toFile, dir)
+          // a registry entry that doesn't parse with its reader is worse
+          // than none: the clean-machine build would silently fall back
+          // to constants while the registry claims the curve is
+          // published. Validate BEFORE copying.
+          lazy val parses = curve.parse(new String(Files.readAllBytes(src), "UTF-8"))._1.nonEmpty
+          if (!fresh)
+            println(s"[publish] REFUSE $family @ $dir — tmpdir curve is stale vs the corpus")
+          else if (!parses)
+            println(s"[publish] REFUSE $family @ $dir — tmpdir curve does not parse " +
+              "with its reader (older format or corrupt); re-sweep before publishing")
+          else {
+            Files.copy(src, dst.toPath, StandardCopyOption.REPLACE_EXISTING)
+            println(s"[publish] $family @ $dir -> $dst")
+          }
       }
     }
   }

@@ -1,23 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.{GateCurve, VectorQueries}
 
-/** One-stop gate onboarding readout for a corpus (r16): what the
-  * production gate would ACTUALLY build here, from the committed curve
-  * registry / tmpdir cache state as it stands — the resolved probe
-  * budget and mass fraction ([[graft.queries.VectorQueries
-  * .resolvedGateProbes]]/[[graft.queries.VectorQueries
-  * .resolvedGateMassFrac]], curve-sized when a current curve exists),
-  * the fixed-P vs mass-budget dispatch decision with its measured skew
-  * signal, and the K-rule contradiction check over the persisted K
-  * curve. This is the receipt VERDICT r15 items 2/4/7 converge on: a
-  * clean checkout runs it and reads the same numbers the round's
-  * receipts were built with.
+/** One-stop gate onboarding readout for a corpus: what the production
+  * gate would ACTUALLY build here, from the committed curve registry and
+  * tmpdir cache as they stand. It prints the resolved probe budget and
+  * mass fraction ([[graft.queries.VectorQueries.resolvedGateProbes]],
+  * [[graft.queries.VectorQueries.resolvedGateMassFrac]], curve-sized
+  * when a current curve exists), the curve each [[GateCurve.all]]
+  * family reads, the fixed-P vs mass-budget dispatch decision with its
+  * measured skew signal, and the K-rule contradiction check over the
+  * persisted K curve. A clean checkout runs it and reads the same
+  * numbers the committed receipts were built with.
   *
   * Usage: `sbt "runMain graft.tools.GateResolve <sfDir> [...]"`.
   * `SPARK_GRAFT_RESOLVE_ONLY=1` skips the Spark-session steps (the
   * dispatch signal needs a fit) and prints just the curve-driven
-  * sizing — enough to audit registry resolution without a cluster.
+  * sizing, enough to audit registry resolution without a cluster.
   */
 object GateResolve {
 
@@ -27,12 +26,11 @@ object GateResolve {
     val spark =
       if (sizingOnly) None
       else Some(ToolSession.local(defaultCpus = "8"))
-    import graft.queries.VectorQueries
-    println(s"[resolve] curve registry: ${VectorQueries.curveRegistryDir}")
-    // review r16: the default registry path resolves against the
-    // process cwd (repo root under sbt) — a run launched elsewhere
-    // silently loses the committed curves, so say so loudly
-    if (!new java.io.File(VectorQueries.curveRegistryDir).isDirectory)
+    println(s"[resolve] curve registry: ${GateCurve.registryDir}")
+    // the default registry path resolves against the process cwd (repo
+    // root under sbt): a run launched elsewhere silently loses the
+    // committed curves, so say so loudly
+    if (!new java.io.File(GateCurve.registryDir).isDirectory)
       println(s"[resolve] WARNING: registry dir not found from cwd " +
         s"${sys.props("user.dir")} — sizing will use tmpdir cache/constants " +
         "only (set SPARK_GRAFT_CURVE_REGISTRY to the committed gates/curves)")
@@ -42,11 +40,13 @@ object GateResolve {
       val pSrc = if (p == VectorQueries.GateProbes) "constant-or-curve" else "curve-sized"
       val fSrc = if (f == VectorQueries.GateMassFrac) "constant-or-curve" else "curve-sized"
       println(s"[resolve] $dir probes=$p ($pSrc) massFrac=$f ($fSrc)")
-      // K-curve budget audit — pure filesystem reads, so it runs in
-      // RESOLVE_ONLY mode too (review r16: the one audit this receipt
-      // adds must not vanish in the auditing mode)
-      val kCurve = VectorQueries.readGateKSweepFull(dir)
-      val kBudgetMismatch = kCurve.flatMap(_._1).filter(_ != p)
+      for (curve <- GateCurve.all)
+        println(s"[resolve] $dir ${curve.family}: " + curve.read(dir).fold("no curve")(rows =>
+          s"${rows.size} rows, ${curve.axisKey} ${rows.map(r => curve.show(r._1)).mkString("/")}"))
+      // K-curve budget audit: pure filesystem reads, so it runs in
+      // RESOLVE_ONLY mode too
+      val kCurve = GateCurve.K.readRecorded(dir)
+      val kBudgetMismatch = kCurve.flatMap(_._2).filter(_ != p)
       (kCurve, kBudgetMismatch) match {
         case (None, _) =>
           println(s"[resolve] $dir K curve: none persisted (run the GateSweep K mode to measure)")

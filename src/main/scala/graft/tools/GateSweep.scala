@@ -1,115 +1,64 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.{GateCurve, VectorQueries}
 
-/** Probe-budget sweep for the √n-cell IVF gate behind qe15b/qe22b/qe25b
-  * (VERDICT r12 item 2): measure the three twin-level recall numbers
-  * and the candidate volume at probe budgets around the production
-  * setting, at both oracle scales. This is the measurement that picks
-  * `VectorQueries.GateProbes` — the r12 verdict's point was that the
-  * re-sized gate lowered recall floors WITHOUT measuring what a bigger
-  * probe budget would buy back, even though the sweep machinery (qe26)
-  * already existed for the plain IVF index.
+/** Measure one gate sizing curve ([[graft.queries.GateCurve]]) per sf
+  * dir: the three twin-level recall numbers and the candidate volume
+  * behind qe15b/qe22b/qe25b (and their mass-budget twins) at each swept
+  * value, then persist the table next to the gate index. This is the
+  * measurement that sizes `VectorQueries.GateProbes` and
+  * `GateMassFrac` per corpus, and that RecallSpec floors read.
   *
-  * Usage: `sbt "runMain graft.tools.GateSweep [sfDir ...]"` — prints a
-  * table per sf dir; results are recorded in BENCH_NOTES.md and the
-  * chosen budget lands in GateProbes + the RecallSpec floors.
+  * Usage: `sbt "runMain graft.tools.GateSweep [sfDir ...]"`. The family
+  * is picked by the first env var set:
+  *  - `SPARK_GRAFT_K_BUDGETS=23,45,90`: the cell count K, each value a
+  *    full refit probed at the budget production resolves for the corpus;
+  *  - `SPARK_GRAFT_MASS_BUDGETS=0.2,0.35`: scanned-mass fractions;
+  *  - otherwise probe budgets, `SPARK_GRAFT_BUDGETS` (default
+  *    8,12,16,24). The 10× decay study needs budgets past the sf0.1 knee.
+  *
+  * The 10× study (n=20k) sorts ~200M-row exact-pairs frames, where each
+  * sort task buffers more than its heap share at full width, so the
+  * session honors `SPARK_GRAFT_SHUFFLE`: fewer concurrent tasks and more,
+  * smaller shuffle partitions keep the same wall-clock shape inside
+  * memory. Both knobs default to the production values.
   */
 object GateSweep {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    // r14: the 10× decay study (n=20k) sorts ~200M-row exact-pairs
-    // frames — at local[32]×32 partitions each sort task buffers more
-    // than its heap share. Fewer concurrent tasks + more (smaller)
-    // shuffle partitions keep the same wall-clock shape inside memory;
-    // both knobs default to the production values.
+    def env(key: String) = sys.env.get(key).map(_.split(",").map(_.trim).toSeq)
+    val (curve, raw) = env("SPARK_GRAFT_K_BUDGETS").map(GateCurve.K -> _)
+      .orElse(env("SPARK_GRAFT_MASS_BUDGETS").map(GateCurve.Mass -> _))
+      .getOrElse(GateCurve.Probe ->
+        env("SPARK_GRAFT_BUDGETS").getOrElse(Seq("8", "12", "16", "24")))
+    val axes = raw.map(v => if (curve.integralAxis) v.toInt.toDouble else v.toDouble)
     val spark = ToolSession.local(honorShuffleEnv = true)
-    // r14: the decay study at the 10× corpus (n=20k, K=142) needs
-    // budgets past the sf0.1 knee — override via SPARK_GRAFT_BUDGETS
-    val budgets = sys.env.get("SPARK_GRAFT_BUDGETS")
-      .map(_.split(",").map(_.trim.toInt).toSeq)
-      .getOrElse(Seq(8, 12, 16, 24))
-    // r15 (VERDICT r14 item 8): when set, sweep the CELL COUNT instead
-    // — each K is a full refit probed at the production GateProbes;
-    // closes the gate's parameter space (P, massFrac, K all measured)
-    val kBudgets = sys.env.get("SPARK_GRAFT_K_BUDGETS")
-      .map(_.split(",").map(_.trim.toInt).toSeq)
-    kBudgets.foreach { ks =>
-      for (dir <- dirs) {
-        // ADVICE r15: the sweep probes at the budget production
-        // RESOLVES for this corpus (curve-sized when a current probe
-        // curve exists), not the GateProbes constant
-        val p = graft.queries.VectorQueries.resolvedGateProbes(dir)
-        println(s"== gate K sweep @ $dir (P = $p resolved, Ks ${ks.mkString("/")}) ==")
-        // ADVICE r16: capture the corpus identity at sweep START so the
-        // persist step can refuse the freshness stamp if it moved
-        val srcAtStart = graft.queries.VectorQueries.corpusMtime(dir)
-        val t0 = System.nanoTime()
-        val rows = graft.queries.VectorQueries.gateKSweep(spark, dir, ks).collect()
-        println(f"${"k_cells"}%8s ${"cand_rows"}%10s ${"recall15"}%9s ${"recall22"}%9s ${"agree25"}%9s")
-        rows.foreach { r =>
-          println(f"${r.getInt(0)}%8d ${r.getLong(1)}%10d ${r.getDouble(2)}%9.4f ${r.getDouble(3)}%9.4f ${r.getDouble(4)}%9.4f")
-        }
-        println(f"K sweep wall: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        graft.queries.VectorQueries.writeGateKSweep(dir, rows.toSeq.map(r =>
-          (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))),
-          p, srcAtStart)
-        println(s"K sweep persisted: ${graft.queries.VectorQueries.gateKSweepPath(dir)}")
-        // r16 (VERDICT r15 item 7): the onboarding check — does the
-        // curve we just measured contradict the sqrt-n rule?
+    for (dir <- dirs) {
+      val at = curve.sweptAt(dir)
+      println(s"== gate ${curve.family} @ $dir (${at.fold("")(p => s"P = $p resolved, ")}" +
+        s"${curve.axisKey} ${axes.map(curve.show).mkString("/")}) ==")
+      // the corpus identity at sweep START, so the write can refuse the
+      // freshness stamp if the corpus moved while the sweep measured it
+      val srcAtStart = GateCurve.corpusMtime(dir)
+      val t0 = System.nanoTime()
+      val rows = curve.sweep(spark, dir, axes)
+      println(f"${curve.axisKey}%9s ${"cand_rows"}%10s ${"recall15"}%9s ${"recall22"}%9s ${"agree25"}%9s")
+      rows.foreach { case (a, n, r15, r22, r25) =>
+        println(f"${curve.show(a)}%9s $n%10d $r15%9.4f $r22%9.4f $r25%9.4f")
+      }
+      println(f"sweep wall: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      curve.write(dir, rows, srcAtStart, at)
+      println(s"${curve.family} persisted: ${curve.path(dir)}")
+      if (curve eq GateCurve.K) {
+        // the onboarding check: does the curve just measured contradict
+        // the sqrt-n rule?
         val n = graft.Tables.embeddings(spark, dir).count()
-        graft.queries.VectorQueries.gateKRuleWarning(dir, n) match {
+        VectorQueries.gateKRuleWarning(dir, n) match {
           case Some(w) => println(s"K RULE WARNING: $w")
           case None => println(s"K rule check: ceil(sqrt($n)) undominated on the swept axis — KEEP")
         }
       }
-      spark.stop()
-      return
-    }
-    // experimental mass-budgeted probe measurement (r14): when set,
-    // sweep scanned-mass fractions instead of fixed probe counts
-    val massFracs = sys.env.get("SPARK_GRAFT_MASS_BUDGETS")
-      .map(_.split(",").map(_.trim.toDouble).toSeq)
-    massFracs.foreach { fracs =>
-      for (dir <- dirs) {
-        println(s"== gate MASS-BUDGET sweep @ $dir (fracs ${fracs.mkString("/")}) ==")
-        val srcAtStart = graft.queries.VectorQueries.corpusMtime(dir)
-        val t0 = System.nanoTime()
-        val rows = graft.queries.VectorQueries.gateMassSweep(spark, dir, fracs)
-          .collect()
-        println(f"${"massfrac"}%9s ${"cand_rows"}%10s ${"recall15"}%9s ${"recall22"}%9s ${"agree25"}%9s")
-        rows.foreach { r =>
-          println(f"${r.getDouble(0)}%9.3f ${r.getLong(1)}%10d ${r.getDouble(2)}%9.4f ${r.getDouble(3)}%9.4f ${r.getDouble(4)}%9.4f")
-        }
-        println(f"mass sweep wall: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        // persist alongside the mass-gate index (same contract as the
-        // probe sweep: RecallSpec floors + gateMassFracFor read it)
-        graft.queries.VectorQueries.writeGateMassSweep(dir, rows.toSeq.map(r =>
-          (r.getDouble(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))),
-          srcAtStart)
-        println(s"mass sweep persisted: ${graft.queries.VectorQueries.gateMassSweepPath(dir)}")
-      }
-      spark.stop()
-      return
-    }
-    for (dir <- dirs) {
-      println(s"== gate probe sweep @ $dir (K = ceil(sqrt(n)), budgets ${budgets.mkString("/")}) ==")
-      val srcAtStart = graft.queries.VectorQueries.corpusMtime(dir)
-      val t0 = System.nanoTime()
-      val rows = graft.queries.VectorQueries.gateProbeSweep(spark, dir, budgets)
-        .collect()
-      println(f"${"probes"}%8s ${"cand_rows"}%10s ${"recall15"}%9s ${"recall22"}%9s ${"agree25"}%9s")
-      rows.foreach { r =>
-        println(f"${r.getInt(0)}%8d ${r.getLong(1)}%10d ${r.getDouble(2)}%9.4f ${r.getDouble(3)}%9.4f ${r.getDouble(4)}%9.4f")
-      }
-      println(f"sweep wall: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      // persist the measured curve alongside the gate index (VERDICT
-      // r13 item 8): RecallSpec and future sizing read this state
-      graft.queries.VectorQueries.writeGateSweep(dir, rows.toSeq.map(r =>
-        (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))),
-        srcAtStart)
-      println(s"sweep persisted: ${graft.queries.VectorQueries.gateSweepPath(dir)}")
     }
     spark.stop()
   }

@@ -3,9 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path => JPath}
 
-import queries.VectorQueries
+import queries.{GateCurve, VectorQueries}
 
-/** Recall-targeted gate sizing (r15, VERDICT r14 item 1): the persisted
+/** Recall-targeted gate sizing: the persisted
   * sweep curves now DRIVE the production builds. Both arms pinned:
   *
   *  - planted current curve → the build resolves the cheapest budget
@@ -23,7 +23,7 @@ class GateSizingSpec extends AnyFunSuite {
 
   private def tmpDir(): JPath = Files.createTempDirectory("graft_sizing")
 
-  /** ADVICE r16: `graft.curve.registry` is a JVM-global system
+  /** `graft.curve.registry` is a JVM-global system
     * property — any test that points it at a temp dir must hold this
     * lock for the whole set→use→clear span, so a parallel suite can
     * never observe (or race another mutation of) the redirected
@@ -46,23 +46,23 @@ class GateSizingSpec extends AnyFunSuite {
   // sf0.1-shaped curves: P=8 misses 0.70, P=16/24 clear it; mass 0.2
   // misses, 0.35/0.5 clear — so at the default target the resolutions
   // reproduce the production constants (the tuned-corpus identity).
-  private val sf01Probe: Seq[VectorQueries.SweepRow] = Seq(
+  private val sf01Probe: Seq[GateCurve.Row] = Seq(
     (8, 713160L, 0.5658, 0.4109, 0.4475),
     (16, 1425810L, 0.7782, 0.7146, 0.65),
     (24, 2138598L, 0.8924, 0.8543, 0.81))
   // sf0.01-shaped curve: P=8 already clears 0.70 → sized build is
   // CHEAPER than the constant.
-  private val sf001Probe: Seq[VectorQueries.SweepRow] = Seq(
+  private val sf001Probe: Seq[GateCurve.Row] = Seq(
     (8, 90527L, 0.7376, 0.6304, 0.596),
     (16, 177485L, 0.9452, 0.9348, 0.902))
-  private val sf01Mass: Seq[VectorQueries.MassSweepRow] = Seq(
+  private val sf01Mass: Seq[GateCurve.Row] = Seq(
     (0.2, 839988L, 0.6118, 0.4656, 0.4855),
     (0.35, 1440819L, 0.7811, 0.7166, 0.6505),
     (0.5, 2043242L, 0.8812, 0.8381, 0.7945))
-  // (r16: the 0.2 row's secondaries sit above GateSecondaryMin — a row
+  // (the 0.2 row's secondaries sit above GateSecondaryMin — a row
   // that cleared recall15 but collapsed a secondary would no longer
   // certify; that arm has its own test below)
-  private val sf001Mass: Seq[VectorQueries.MassSweepRow] = Seq(
+  private val sf001Mass: Seq[GateCurve.Row] = Seq(
     (0.2, 55365L, 0.7052, 0.5672, 0.522),
     (0.35, 92619L, 0.7448, 0.6377, 0.606))
 
@@ -84,8 +84,8 @@ class GateSizingSpec extends AnyFunSuite {
     val constantIndex = VectorQueries.gateIndexPath(dir)
     val constantMassIndex = VectorQueries.gateMassIndexPath(dir)
     VectorQueries.clearGateSizing()
-    VectorQueries.writeGateSweep(dir, sf001Probe)
-    VectorQueries.writeGateMassSweep(dir, sf001Mass)
+    GateCurve.Probe.write(dir, sf001Probe)
+    GateCurve.Mass.write(dir, sf001Mass)
     // cheapest certified at the 0.70 default: P=8 (0.7376), frac=0.35
     // (0.7448; 0.2's 0.7052 also clears — so 0.2 wins)
     assert(VectorQueries.resolvedGateProbes(dir) == 8)
@@ -110,8 +110,8 @@ class GateSizingSpec extends AnyFunSuite {
   test("tuned-corpus identity: the sf0.1-shaped curve certifies exactly the production constants") {
     VectorQueries.clearGateSizing()
     val dir = tmpDir().toString
-    VectorQueries.writeGateSweep(dir, sf01Probe)
-    VectorQueries.writeGateMassSweep(dir, sf01Mass)
+    GateCurve.Probe.write(dir, sf01Probe)
+    GateCurve.Mass.write(dir, sf01Mass)
     assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes,
       "at the default target the committed sf0.1 curve picks P=16 — the constant IS curve-certified there")
     assert(VectorQueries.resolvedGateMassFrac(dir) == VectorQueries.GateMassFrac)
@@ -121,7 +121,7 @@ class GateSizingSpec extends AnyFunSuite {
   test("a curve that never reaches the target falls back to the constants, not the largest swept budget") {
     VectorQueries.clearGateSizing()
     val dir = tmpDir().toString
-    VectorQueries.writeGateSweep(dir,
+    GateCurve.Probe.write(dir,
       Seq((8, 1000L, 0.30, 0.2, 0.2), (16, 2000L, 0.45, 0.3, 0.3)))
     assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes,
       "handing back an uncertified budget would silently miss the target")
@@ -129,7 +129,7 @@ class GateSizingSpec extends AnyFunSuite {
   }
 
   test("a budget whose curve row collapses a secondary measure is not certifiable (ADVICE r15)") {
-    // the r15 sizing certified recall15 alone, and the sized budget's
+    // an earlier sizing certified recall15 alone, and the sized budget's
     // sweep row then REPLACED the static floors of qe22b/qe25b — the
     // same sweep that picked the budget set the pass criterion for the
     // measures it never certified. Now the certified row must also
@@ -137,10 +137,10 @@ class GateSizingSpec extends AnyFunSuite {
     // collapsed secondary is skipped for the next fully-certified one.
     VectorQueries.clearGateSizing()
     val dir = tmpDir().toString
-    VectorQueries.writeGateSweep(dir, Seq(
+    GateCurve.Probe.write(dir, Seq(
       (8, 90527L, 0.7376, 0.42, 0.596), // primary certifies, recall22 collapsed
       (16, 177485L, 0.9452, 0.9348, 0.902)))
-    VectorQueries.writeGateMassSweep(dir, Seq(
+    GateCurve.Mass.write(dir, Seq(
       (0.2, 55365L, 0.7052, 0.5672, 0.43), // agree25 collapsed
       (0.35, 92619L, 0.7448, 0.6377, 0.606)))
     assert(VectorQueries.resolvedGateProbes(dir) == 16,
@@ -153,7 +153,7 @@ class GateSizingSpec extends AnyFunSuite {
     // swept budgets deliberately != GateProbes so the assertion can
     // tell the constants FALLBACK from wrongly certifying a swept row
     val dir2 = tmpDir().toString
-    VectorQueries.writeGateSweep(dir2,
+    GateCurve.Probe.write(dir2,
       Seq((8, 1000L, 0.95, 0.45, 0.45), (24, 2000L, 0.99, 0.49, 0.48)))
     assert(VectorQueries.resolvedGateProbes(dir2) == VectorQueries.GateProbes)
     VectorQueries.clearGateSizing()
@@ -163,8 +163,8 @@ class GateSizingSpec extends AnyFunSuite {
     VectorQueries.clearGateSizing()
     val dirP = tmpDir()
     val dir = dirP.toString
-    VectorQueries.writeGateSweep(dir, sf001Probe)
-    val sweepF = new java.io.File(VectorQueries.gateSweepPath(dir))
+    GateCurve.Probe.write(dir, sf001Probe)
+    val sweepF = new java.io.File(GateCurve.Probe.path(dir))
     touch(dirP.resolve("embeddings.parquet"), sweepF.lastModified + 60_000)
     assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes,
       "a curve measured on a replaced corpus may not size the gate")
@@ -178,15 +178,15 @@ class GateSizingSpec extends AnyFunSuite {
     // corpus written 'now'; the sweep lands in the same mtime tick —
     // without the stamp the strict > guard would discard it
     touch(dirP.resolve("embeddings.parquet"), System.currentTimeMillis())
-    VectorQueries.writeGateSweep(dir, sf001Probe)
-    assert(VectorQueries.readGateSweep(dir).contains(sf001Probe),
+    GateCurve.Probe.write(dir, sf001Probe)
+    assert(GateCurve.Probe.read(dir).contains(sf001Probe),
       "a sweep written after measuring this corpus must read as current")
     assert(VectorQueries.resolvedGateProbes(dir) == 8)
     VectorQueries.clearGateSizing()
   }
 
   test("curve registry: clean-machine resolution (no tmpdir state) equals the committed-curve resolution") {
-    // VERDICT r15 item 2: before the registry, `rm -rf /tmp/graft_gate*`
+    // before the registry, `rm -rf /tmp/graft_gate*`
     // silently flipped a sized P=8 build back to the P=16 constant.
     // Both arms of the new contract: (a) with ONLY a committed registry
     // entry the sizing resolves the same budget a tmpdir curve would;
@@ -199,29 +199,27 @@ class GateSizingSpec extends AnyFunSuite {
     val reg = tmpDir()
     try withRegistryProp(reg.toString) {
       // publish a curve into the registry ONLY (no tmpdir write)
-      val entry = VectorQueries.registryCurveFile("gatesweep", dir)
+      val entry = GateCurve.Probe.registryFile(dir)
         .getOrElse(fail("a non-empty corpus must have a registry identity"))
-      Files.write(entry.toPath, sf001Probe.map { case (p, n, r15, r22, r25) =>
-        s"""{"probes":$p,"cand_rows":$n,"recall15":$r15,"recall22":$r22,"agree25":$r25}"""
-      }.mkString("[", ",", "]").getBytes("UTF-8"))
-      assert(!new java.io.File(VectorQueries.gateSweepPath(dir)).exists(),
+      Files.write(entry.toPath, GateCurve.Probe.encode(sf001Probe).getBytes("UTF-8"))
+      assert(!new java.io.File(GateCurve.Probe.path(dir)).exists(),
         "precondition: no tmpdir cache for this corpus")
-      assert(VectorQueries.readGateSweep(dir).contains(sf001Probe),
+      assert(GateCurve.Probe.read(dir).contains(sf001Probe),
         "the committed entry must resolve with zero tmpdir state")
       assert(VectorQueries.resolvedGateProbes(dir) == 8,
         "clean-machine sizing must equal the committed-curve sizing")
       VectorQueries.clearGateSizing()
       // a tmpdir cache of the same (deterministic) measurement resolves
       // identically — cache presence cannot change the answer
-      VectorQueries.writeGateSweep(dir, sf001Probe)
+      GateCurve.Probe.write(dir, sf001Probe)
       assert(VectorQueries.resolvedGateProbes(dir) == 8)
       VectorQueries.clearGateSizing()
       // content key: grow the corpus → the old entry no longer applies
       Files.write(dirP.resolve("embeddings.parquet"), Array.fill[Byte](5678)(7))
-      new java.io.File(VectorQueries.gateSweepPath(dir)).delete()
-      assert(VectorQueries.readGateSweep(dir).isEmpty,
+      new java.io.File(GateCurve.Probe.path(dir)).delete()
+      assert(GateCurve.Probe.read(dir).isEmpty,
         "a registry entry keyed to other bytes must not serve this corpus")
-      // ADVICE r16 content key: same TOTAL bytes, different file shape
+      // same TOTAL bytes, different file shape
       // (a second file) — the old bytes-only witness aliased this
       Files.delete(dirP.resolve("embeddings.parquet"))
       Files.createDirectory(dirP.resolve("embeddings.parquet"))
@@ -229,13 +227,13 @@ class GateSizingSpec extends AnyFunSuite {
         Array.fill[Byte](1000)(7))
       Files.write(dirP.resolve("embeddings.parquet").resolve("part-1"),
         Array.fill[Byte](234)(7))
-      assert(VectorQueries.readGateSweep(dir).isEmpty,
+      assert(GateCurve.Probe.read(dir).isEmpty,
         "equal total bytes with a different file shape must not alias the entry")
     } finally VectorQueries.clearGateSizing()
   }
 
   test("dispatch rule: megacell fit → mass-budget, balanced fit → fixed-P, K ≤ P → fixed-P") {
-    // VERDICT r14 item 2, both arms as pure functions of the home-mass
+    // Both arms as pure functions of the home-mass
     // distribution. Balanced K=142 fit: top-16 fraction = 16/142 ≈
     // 0.113 = exactly the balanced model → fixed-P.
     val k = 142
@@ -258,7 +256,7 @@ class GateSizingSpec extends AnyFunSuite {
       "the tiny near-balanced fixture must dispatch to the fixed-P gate")
     val b = VectorQueries.qe15b(spark, dir)
     assert(auto.collect().toSet == b.collect().toSet)
-    // r16 (VERDICT r15 item 4): the corpus-level decision routes ALL
+    // the corpus-level decision routes ALL
     // three gated families, each with its own oracle-checked receipt
     assert(VectorQueries.qe22d(spark, dir).collect().toSet
       == VectorQueries.qe22b(spark, dir).collect().toSet)
@@ -276,7 +274,7 @@ class GateSizingSpec extends AnyFunSuite {
     VectorQueries.clearGateSizing()
     val dir = tmpDir().toString
     assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes)
-    VectorQueries.writeGateSweep(dir, sf001Probe)
+    GateCurve.Probe.write(dir, sf001Probe)
     // one Verify process must build and dump against the same numbers
     assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes)
     VectorQueries.clearGateSizing()
@@ -293,14 +291,42 @@ class GateSizingSpec extends AnyFunSuite {
     // registry still LOOKS populated. Fails on zero registry hit for a
     // corpus with a committed curve; fix by re-running CurvePublish.
     for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
-      val f = VectorQueries.registryCurveFile("gatesweep", dir)
+      val f = GateCurve.Probe.registryFile(dir)
         .getOrElse(fail(s"$dir corpus must have a registry identity"))
       assert(f.exists,
         s"no committed curve at ${f.getPath} — key scheme drifted vs the " +
           "committed entries? re-publish with graft.tools.CurvePublish")
-      val rows = VectorQueries.parseSweepRows(
-        Files.readString(f.toPath))
+      val rows = GateCurve.Probe.parse(
+        Files.readString(f.toPath))._1
       assert(rows.nonEmpty, s"committed curve ${f.getName} must parse with its reader")
+    }
+  }
+
+  test("curve format is stable: committed curves re-encode byte for byte, paths keep their names") {
+    // every committed registry file parses with its family's reader and
+    // re-encodes to the identical bytes: integer axes print as integers,
+    // K rows keep their probes field
+    val committed = new java.io.File("gates/curves").listFiles
+      .filter(_.getName.endsWith(".json")).toSeq
+    assert(committed.nonEmpty, "the committed registry must hold curves")
+    for (f <- committed) {
+      val curve = GateCurve.all.find(c => f.getName.startsWith(s"graft_${c.family}_"))
+        .getOrElse(fail(s"${f.getName} names no curve family"))
+      val txt = Files.readString(f.toPath)
+      val (rows, probes) = curve.parse(txt)
+      assert(rows.nonEmpty, s"${f.getName} must parse with the ${curve.family} reader")
+      assert(curve.encode(rows, probes) == txt, s"${f.getName} must re-encode byte for byte")
+    }
+    // the tmpdir cache names: fit fingerprint + dir slug; the K curve
+    // lives beside the probe curve in the gatesweep directory
+    val tmp = sys.props("java.io.tmpdir")
+    val testdata = new java.io.File(SparkSpecBase.sf).getParent
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = s"$testdata/$sf"
+      val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
+      assert(GateCurve.Probe.path(dir) == s"$tmp/graft_gatesweep_c714b87_$slug/_sweep.json")
+      assert(GateCurve.Mass.path(dir) == s"$tmp/graft_gatemasssweep_c714b87_$slug/_sweep.json")
+      assert(GateCurve.K.path(dir) == s"$tmp/graft_gatesweep_c714b87_$slug/_ksweep.json")
     }
   }
 
@@ -309,14 +335,14 @@ class GateSizingSpec extends AnyFunSuite {
     val dirP = tmpDir()
     val dir = dirP.toString
     touch(dirP.resolve("embeddings.parquet"), System.currentTimeMillis() - 60_000)
-    val srcAtStart = VectorQueries.corpusMtime(dir)
+    val srcAtStart = GateCurve.corpusMtime(dir)
     // the corpus is regenerated while the (long) sweep measures it — a
     // deliberately future mtime so the natural write mtime alone could
     // never accidentally clear the strict-> check: only a (wrongly
     // granted) stamp would read fresh, which is what the test pins
     touch(dirP.resolve("embeddings.parquet"), System.currentTimeMillis() + 5_000)
-    VectorQueries.writeGateSweep(dir, sf001Probe, srcAtStart)
-    assert(VectorQueries.readGateSweep(dir).isEmpty,
+    GateCurve.Probe.write(dir, sf001Probe, srcAtStart)
+    assert(GateCurve.Probe.read(dir).isEmpty,
       "a curve measured across a corpus regeneration must read stale")
     assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes)
     VectorQueries.clearGateSizing()
@@ -325,7 +351,7 @@ class GateSizingSpec extends AnyFunSuite {
 
 object GateSizingSpec {
   /** Guards every set/clear of the JVM-global `graft.curve.registry`
-    * system property across suites (ADVICE r16).
+    * system property across suites.
     */
   val registryPropLock = new Object
 }

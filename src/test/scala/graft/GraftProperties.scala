@@ -14,8 +14,8 @@ object GraftProperties extends Properties("graft") {
   import spark.implicits._
 
   // Pin the generator seed so `sbt test` is reproducible run-to-run:
-  // a property that passes or fails by generator luck is not a gate
-  // (round-10 verdict). Any falsifying case found by bumping the seed
+  // a property that passes or fails by generator luck is not a gate.
+  // Any falsifying case found by bumping the seed
   // locally must be promoted to a deterministic regression below.
   override def overrideParameters(p: org.scalacheck.Test.Parameters)
       : org.scalacheck.Test.Parameters =
@@ -120,11 +120,12 @@ object GraftProperties extends Properties("graft") {
       val rnd = new scala.util.Random(seed)
       val rows = (1 to n).map(i => (s"k$i", math.rint(rnd.nextDouble() * 1e6) / 100))
       val df = rows.toDF("k", "v").repartition(4)
-      def snap(two: Boolean) =
-        operators.Pareto.abc(df, col("k"), col("v"), twoPhase = Some(two))
+      def snap(two: Boolean) = SparkSpecBase.withParetoTwoPhase(two) {
+        operators.Pareto.abc(df, col("k"), col("v"))
           .select("k", "rnk", "pct", "pct_acumulado", "clase_abc").collect()
           .map(r => r.getString(0) ->
             (r.getInt(1), r.getDouble(2), r.getDouble(3), r.getString(4))).toMap
+      }
       snap(two = false) == snap(two = true)
     }
 
@@ -147,10 +148,11 @@ object GraftProperties extends Properties("graft") {
       // correctness precondition being tested)
       val rows = (1 to n).map(i => (i.toLong, rnd.nextInt(6).toDouble))
       val df = rows.toDF("k", "v").repartition(4)
-      def snap(two: Boolean) =
-        operators.Pareto.denseRankBy(df, Seq(col("v").asc), "dr", twoPhase = Some(two))
+      def snap(two: Boolean) = SparkSpecBase.withParetoTwoPhase(two) {
+        operators.Pareto.denseRankBy(df, Seq(col("v").asc), "dr")
           .select("k", "dr").collect()
           .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      }
       snap(two = false) == snap(two = true)
     }
 
@@ -162,10 +164,11 @@ object GraftProperties extends Properties("graft") {
       val rows = (1 to n).map(i => (i.toLong, rnd.nextInt(10).toDouble))
       val df = rows.toDF("k", "v").repartition(4)
       val keys = Seq(col("v").desc, col("k").asc)
-      def snap(two: Boolean) =
-        operators.Pareto.rankBy(df, keys, "rnk", twoPhase = Some(two))
+      def snap(two: Boolean) = SparkSpecBase.withParetoTwoPhase(two) {
+        operators.Pareto.rankBy(df, keys, "rnk")
           .select("k", "rnk").collect()
           .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      }
       snap(two = false) == snap(two = true)
     }
 
@@ -233,7 +236,7 @@ object GraftProperties extends Properties("graft") {
     }
 
   // Gen.listOf (not nonEmptyListOf): the empty shingle set must agree
-  // too — both forms emit p for every component (ADVICE r2).
+  // too — both forms emit p for every component.
   property("native minhash signature equals the HOF formulation exactly") =
     forAll(Gen.listOf(Gen.alphaNumStr.suchThat(_.nonEmpty)),
       Gen.oneOf(16, 64)) { (shingles, k) =>
@@ -356,7 +359,7 @@ object GraftProperties extends Properties("graft") {
   }
 
   property("gate candidate set invariant to input partitioning") = {
-    // VERDICT r11 item 7: the qe15b/qe22b/qe25b recall floors assume
+    // the qe15b/qe22b/qe25b recall floors assume
     // the IVF gate fit is reproducible — the seed pick is an
     // orderBy(vec_id).limit(k) (partition-independent by sort), and
     // every refit component is a 6dp-rounded avg, so FP summation
@@ -381,7 +384,7 @@ object GraftProperties extends Properties("graft") {
   }
 
   property("mass-budgeted gate: full budget = probe-all, unit budget = home cell, budgets nest") = {
-    // r14 experimental probe (gateCandsMassBudget): the fixed-P rule's
+    // the mass-budgeted probe (gateCandsMassBudget): the fixed-P rule's
     // cost guarantee dies on mass-skewed fits, so the alternative cuts
     // each vector's ranked-cell list at a cumulative home-mass budget.
     // Its contract, pinned here against the production probe stage over
@@ -484,7 +487,7 @@ object GraftProperties extends Properties("graft") {
         // active sources each get +1, and that unit can push a source
         // to its cap one above the unsaturated minimum — e.g. sizes
         // [1,1], budget 1 → allocation {1,0}, which IS max-min fair
-        // because a whole unit can't be split (round-10 verdict: the
+        // because a whole unit can't be split (the
         // original `a <= unsat.min` clause was wrong on this edge)
         val fair = unsat.isEmpty ||
           rows.filter { case (_, n, a) => a == n }
@@ -495,7 +498,7 @@ object GraftProperties extends Properties("graft") {
 
   property("water-fill remainder edge: sizes [1,1] allocates {1,0} (regression)") =
     Prop {
-      // the exact case that falsified the round-10 property: two
+      // the exact case that falsified the original property: two
       // 1-doc sources, budget = 2/2 = 1. Max-min fairness with
       // integer units gives the whole unit to the first source by
       // name — {s00→1, s01→0} — and the sum must hit the budget.

@@ -32,7 +32,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("CostModel dim join is a pinned function of ANALYZE stats: broadcast under budget, shuffle over it") {
-    // the q56→CBO hook (VERDICT r12 item 8): SAME frames, SAME measured
+    // the q56→CBO hook: SAME frames, SAME measured
     // stats — only the budget differs, so the plan flip below is driven
     // entirely by the statistics comparison, never by Spark's
     // file-size heuristic (planted in-memory frames have no files)
@@ -56,7 +56,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("CostModel prices array columns: an embedding-carrying dim must NOT broadcast") {
-    // VERDICT r13 item 4: the r13 ANALYZE measured only strings and
+    // the first ANALYZE measured only strings and
     // scored arrays at ZERO bytes — this dim (1k rows × 256 doubles ≈
     // 2 MB decompressed) read as ~40 KB and sailed under any budget.
     // Pin the fix end-to-end: the estimate must price the array payload
@@ -81,7 +81,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("CostModel ANALYZE refuses unpriceable column types instead of scoring zero") {
-    // review r14: a type neither the fixed-width table nor varMeasure
+    // a type neither the fixed-width table nor varMeasure
     // prices (CalendarInterval here; UDTs are the production analog)
     // used to fall through both and contribute ZERO bytes — the silent
     // undersizing the class doc forbids. It must refuse loudly.
@@ -112,12 +112,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q22 scans lineitem exactly once (single-consumer aggregation, r6 rewrite)") {
-    // The r6 rewrite exists because AQE silently killed the
+    // The rewrite exists because AQE silently killed the
     // ReusedExchange the old two-branch shape depended on (two lineitem
     // scans, 1.5x slower). Pin the invariant the rewrite bought:
     // EXACTLY one lineitem scan, no reuse escape hatch — a refactor
-    // that regresses this should fail here, not in bench archaeology
-    // (VERDICT r6 item 7).
+    // that regresses this should fail here, not in bench archaeology.
     val p = finalPlan(queries.KpiQueries.q22(spark, sf))
     val lineitemScans = "FileScan parquet[^\\n]*lineitem".r.findAllMatchIn(p).size
     assert(lineitemScans == 1,
@@ -213,7 +212,7 @@ class PlanSpec extends AnyFunSuite {
     // the operator's entire point at 100 TB: the corpus-side PREFILTER
     // must be a pure scan→project (the eval-side filter rides in as a
     // literal), never a shuffle of corpus grams like qd13's inverted
-    // index — the r13 cascade moved the exact verify behind this stage,
+    // index — the cascade moved the exact verify behind this stage,
     // so the stage itself is what carries the map-only guarantee
     val df = queries.TextQueries.qd13bPrefilter(spark, sf)
     val p = finalPlan(df)
@@ -228,7 +227,7 @@ class PlanSpec extends AnyFunSuite {
     // Bloom stage could not clear — the gram explode must sit above a
     // Filter carrying the native probe, so a plan that explodes the
     // whole corpus (prefilter dropped/reordered away) fails here
-    // ADVICE r13: the old rendered-string check (`explode` printed after
+    // the old rendered-string check (`explode` printed after
     // `graft_bloom_any`) was satisfied by the EVAL-side explode, which
     // prints later regardless of gating — walk the tree instead and
     // require a Generate whose SUBTREE carries the Bloom Filter, i.e.
@@ -285,7 +284,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("postings"), "probe must scan the persisted posting index")
     val docScans = "documents\\.parquet".r.findAllIn(p).length
     assert(docScans == 1, s"probe must scan documents once (queries), saw $docScans")
-    // r17 (VERDICT r16 item 3): the postings are partitioned by term-
+    // the postings are partitioned by term-
     // hash bucket and the probe's IN filter must reach the scan as a
     // PARTITION filter — pruning cold buckets' file groups, the
     // standard inverted-index layout — not as a post-scan row filter
@@ -304,23 +303,21 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("pareto two-phase plan has no single-partition exchange") {
-    // twoPhase=Some(true) selects the shape explicitly — mutating the
-    // suite-global session conf here would silently force concurrent
-    // tests' auto-dispatch onto the two-phase path
     import org.apache.spark.sql.functions.col
-    val abc = operators.Pareto.abc(
-      Tables.customer(spark, sf).select("c_custkey", "c_acctbal"),
-      col("c_custkey"), col("c_acctbal"), twoPhase = Some(true))
-    val p = finalPlan(abc)
-    assert(!p.contains("Exchange SinglePartition"),
-      "two-phase pareto must not funnel the frame through one partition")
-    val ranked = operators.Pareto.rankBy(
-      Tables.customer(spark, sf).select("c_custkey", "c_acctbal"),
-      Seq(col("c_acctbal").desc, col("c_custkey").asc), "rnk",
-      twoPhase = Some(true))
-    val p2 = finalPlan(ranked)
-    assert(!p2.contains("Exchange SinglePartition"),
-      "two-phase rank must not funnel the frame through one partition")
+    SparkSpecBase.withParetoTwoPhase(true) {
+      val abc = operators.Pareto.abc(
+        Tables.customer(spark, sf).select("c_custkey", "c_acctbal"),
+        col("c_custkey"), col("c_acctbal"))
+      val p = finalPlan(abc)
+      assert(!p.contains("Exchange SinglePartition"),
+        "two-phase pareto must not funnel the frame through one partition")
+      val ranked = operators.Pareto.rankBy(
+        Tables.customer(spark, sf).select("c_custkey", "c_acctbal"),
+        Seq(col("c_acctbal").desc, col("c_custkey").asc), "rnk")
+      val p2 = finalPlan(ranked)
+      assert(!p2.contains("Exchange SinglePartition"),
+        "two-phase rank must not funnel the frame through one partition")
+    }
   }
 
   test("pareto auto-dispatch: flips on a large size estimate, stays off at report size") {
@@ -336,18 +333,11 @@ class PlanSpec extends AnyFunSuite {
       "report-sized frames must stay on the oracle-exact global window")
     // a malformed threshold fails loudly at the misconfiguration, and
     // names the conf key rather than surfacing a bare NumberFormatException
-    val prev = spark.conf.getOption(GraftConf.paretoTwoPhaseBytesKey)
-    spark.conf.set(GraftConf.paretoTwoPhaseBytesKey, "256m")
-    try {
+    SparkSpecBase.withConf(GraftConf.paretoTwoPhaseBytesKey, "256m") {
       val e = intercept[IllegalArgumentException] {
         operators.Pareto.rankBy(small, Seq(col("k")), "rnk")
       }
       assert(e.getMessage.contains(GraftConf.paretoTwoPhaseBytesKey))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(GraftConf.paretoTwoPhaseBytesKey, v)
-        case None => spark.conf.unset(GraftConf.paretoTwoPhaseBytesKey)
-      }
     }
     // a frame already carrying an internal working column is rejected
     // loudly instead of silently corrupting ranks
@@ -379,7 +369,7 @@ class PlanSpec extends AnyFunSuite {
     // the b-variants exist to replace the exact `ida < idb` self-joins
     // of qe15/qe22/qe25 with a multi-probe posting-list equi-join on
     // the IVF cell id — a nested-loop or cartesian anywhere means the
-    // gate regressed to the all-pairs shape. r12: the scored candidate
+    // gate regressed to the all-pairs shape. The scored candidate
     // frame is a PERSISTED shared index, so the load-bearing pin is on
     // the BUILD plan (gateCands — the fit + probe/home equi-join);
     // the per-twin plans must additionally stay free of theta joins
@@ -402,8 +392,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("qe15c mass-budgeted gate: map-only running-mass cut, no theta join, no Window") {
-    // r14 shipped the twin with an n·K window cumsum; r15 (VERDICT r14
-    // item 5) cuts each vector's ranked cell list by a running-sum
+    // an earlier twin used an n·K window cumsum; the build now cuts
+    // each vector's ranked cell list by a running-sum
     // `aggregate` over its own sorted candidate array with the K-row
     // mass table inlined as a literal — so the build plan must carry
     // NO Window operator and no Exchange between probe assignment and
@@ -414,7 +404,7 @@ class PlanSpec extends AnyFunSuite {
       !build.contains("CartesianProduct"),
       "mass-budget build must stay equi-joins on the cell id")
     assert(!build.contains("Window"),
-      "the r15 cut is map-only — a Window in the build means the n·K cumsum shuffle is back")
+      "the cut is map-only — a Window in the build means the n·K cumsum shuffle is back")
     for (q <- Seq(queries.VectorQueries.knnPairsMassGated(spark, sf),
                   queries.VectorQueries.qe22c(spark, sf),
                   queries.VectorQueries.qe25c(spark, sf)))
@@ -423,15 +413,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("no undispatched unpartitioned window on the parity path (threshold 0)") {
-    // VERDICT r10 item 4: every global-order operator on the parity
+    // every global-order operator on the parity
     // path (rank, Pareto cumsum, dense-rank band groups) must flow
     // through the two-phase dispatch. Forcing the threshold to 0 makes
     // every dispatch flip to the range-partitioned shape — any
     // remaining `Exchange SinglePartition` means a global window
     // bypassed the dispatch.
-    val prev = spark.conf.getOption(GraftConf.paretoTwoPhaseBytesKey)
-    spark.conf.set(GraftConf.paretoTwoPhaseBytesKey, "0")
-    try {
+    SparkSpecBase.withParetoTwoPhase(true) {
       for ((name, q) <- Seq(
           "q07" -> queries.CoreQueries.q07(spark, sf),
           "q08" -> queries.CoreQueries.q08(spark, sf),
@@ -440,11 +428,6 @@ class PlanSpec extends AnyFunSuite {
         val p = finalPlan(q)
         assert(!p.contains("Exchange SinglePartition"),
           s"$name still funnels through a single-partition exchange at threshold 0")
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(GraftConf.paretoTwoPhaseBytesKey, v)
-        case None => spark.conf.unset(GraftConf.paretoTwoPhaseBytesKey)
       }
     }
   }
@@ -551,7 +534,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q38 reads the materialized basket membership — no parquet scan in the final plan") {
-    // r17: `op` (distinct orderkey/partkey) is Checkpoints.cut once and
+    // `op` (distinct orderkey/partkey) is Checkpoints.cut once and
     // feeds all three consumers; before the cut the final plan re-ran
     // the lineitem scan+distinct up to 5 times (plans/r17/
     // q38_before.txt). A parquet scan reappearing here means the
@@ -562,9 +545,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("qd22 edge plan starts at the materialized posting list — no re-tokenize per join side") {
-    // r17: `inv` (doc_id, ng, gram) is cut once; both self-join sides
+    // `inv` (doc_id, ng, gram) is cut once; both self-join sides
     // read the same LogicalRDD instead of re-running scan+tokenize+
-    // gram-ify+explode (2 documents scans in the r16-close edge plan)
+    // gram-ify+explode (2 documents scans in the earlier edge plan)
     val p = finalPlan(queries.TextQueries.qd22Edges(spark, sf))
     assert(!p.contains("Scan parquet"),
       "qd22's gram self-join must read the one cut posting list")
@@ -695,9 +678,7 @@ class PlanSpec extends AnyFunSuite {
     // force auto-dispatch onto the two-phase path (the sf0.001 frame is
     // below the default size threshold) — the 100×-scale shape is what
     // the pin freezes
-    val prev = spark.conf.getOption(GraftConf.paretoTwoPhaseBytesKey)
-    spark.conf.set(GraftConf.paretoTwoPhaseBytesKey, "0")
-    try {
+    SparkSpecBase.withParetoTwoPhase(true) {
       val p = finalPlan(queries.CoreQueries.q55(spark, sf))
       // two-phase rank = range-partitioned sort + a LOCAL row_number
       // window partitioned on _pid; the global-window fallback would
@@ -709,9 +690,6 @@ class PlanSpec extends AnyFunSuite {
       val ranks = "row_number\\(\\) windowspecdefinition\\([^)]*".r.findAllIn(p).toSeq
       assert(ranks.nonEmpty && ranks.forall(_.contains("_pid")),
         s"every layout rank must be a _pid-partitioned local window:\n$ranks")
-    } finally prev match {
-      case Some(v) => spark.conf.set(GraftConf.paretoTwoPhaseBytesKey, v)
-      case None => spark.conf.unset(GraftConf.paretoTwoPhaseBytesKey)
     }
   }
 
@@ -766,7 +744,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("unpartitioned windows appear only at allowlisted report-cardinality sites") {
-    // VERDICT r17 item 4: a global (no-PARTITION-BY) window moves all
+    // a global (no-PARTITION-BY) window moves all
     // rows to ONE partition — the classic 100 TB killer if it ever
     // lands on a corpus-scale frame. Standing adjudications say every
     // declared instance sits on a report-cardinality frame (fixed

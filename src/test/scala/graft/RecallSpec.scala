@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 /** Measured recall of every approximate operator against its exact twin,
-  * with hard floors (VERDICT r1 item 8): the tests FAIL if a parameter
+  * with hard floors: the tests FAIL if a parameter
   * change drops recall, and the measured values are written to
   * RECALL.json next to the CORRECTNESS artifacts.
   *
-  * Measured at BOTH sf0.01 and sf0.1 (VERDICT r5 item 5): LSH band/row
+  * Measured at BOTH sf0.01 and sf0.1: LSH band/row
   * and IVF probe regimes are density-dependent — a fixed banding that
   * clears a sparse corpus can miss in a dense one — and the bench runs
   * at sf0.1, so the floors must hold where the bench measures.
@@ -29,7 +29,7 @@ class RecallSpec extends AnyFunSuite {
   // floor must track what the operator actually delivers there
   private val floors: Map[(String, String), Double] = Map(
     ("qe2_ann_lsh", "sf0.01") -> 0.70, ("qe2_ann_lsh", "sf0.1") -> 0.70,
-    // r13: the IVF quantizer moved to the deterministic seeded-Lloyd
+    // the IVF quantizer moved to the deterministic seeded-Lloyd
     // fit (3 refits) — measured recall jumped 0.58/0.70 -> 0.88/0.92
     // (balanced lists put far more of the true top-5 inside a 4/16
     // probe), so the floors rise off the old ML-quantizer margin
@@ -37,51 +37,51 @@ class RecallSpec extends AnyFunSuite {
     ("qe4b_embedding_dedup_lsh", "sf0.01") -> 0.90,
     ("qe4b_embedding_dedup_lsh", "sf0.1") -> 0.90,
     ("qd6_minhash_lsh", "sf0.01") -> 0.90, ("qd6_minhash_lsh", "sf0.1") -> 0.90,
-    // r13: 8 bands × 8 bits over the Hamming-6 radius is pigeonhole-
+    // 8 bands × 8 bits over the Hamming-6 radius is pigeonhole-
     // EXACT (≤7 flips cannot dirty all 8 bands) — like qd13b's Bloom,
     // 1.0 is structural, so any miss is a bug, not an unlucky corpus
     ("qd7_simhash", "sf0.01") -> 1.0, ("qd7_simhash", "sf0.1") -> 1.0,
     ("qe6_quantized_topk", "sf0.01") -> 0.80, ("qe6_quantized_topk", "sf0.1") -> 0.80,
-    // r7: rerank pool n/10 -> n/5 lifted measured recall to 0.68/0.82;
-    // floors raised off the old one-unlucky-corpus margin (VERDICT r6 #5)
+    // rerank pool n/10 -> n/5 lifted measured recall to 0.68/0.82;
+    // floors raised off the old one-unlucky-corpus margin
     ("qe7_truncated_rerank", "sf0.01") -> 0.55, ("qe7_truncated_rerank", "sf0.1") -> 0.65,
     // a Bloom filter cannot false-negative: 1.0 is a structural
     // guarantee, so any miss is a bug, not an unlucky corpus
     ("qd13b_bloom_decontam", "sf0.01") -> 1.0, ("qd13b_bloom_decontam", "sf0.1") -> 1.0,
-    // persisted-index PROBE variants (VERDICT r8 item 7): equivalence
+    // persisted-index PROBE variants: equivalence
     // to the fused twins is spec-pinned elsewhere, but the artifact
     // must carry probe-path evidence of its own — same floors as the
     // fused operators they share machinery with
     ("qd6b_minhash_probe", "sf0.01") -> 0.90, ("qd6b_minhash_probe", "sf0.1") -> 0.90,
     ("qe5b_ann_ivf_probe", "sf0.01") -> 0.70, ("qe5b_ann_ivf_probe", "sf0.1") -> 0.70,
-    // r9: PQ-ADC 8×16 codebooks + exact rerank of the 50-deep ADC
+    // PQ-ADC 8×16 codebooks + exact rerank of the 50-deep ADC
     // shortlist. Unstructured random vectors are PQ's worst case
     // (measured 0.24/0.30 WITHOUT the rerank stage); the refine step
     // lifts it to 0.74/0.62 — floors sit under that with
     // one-unlucky-corpus margin
     ("qe14_pq_ann", "sf0.01") -> 0.40, ("qe14_pq_ann", "sf0.1") -> 0.40,
     ("qe14b_pq_probe", "sf0.01") -> 0.40, ("qe14b_pq_probe", "sf0.1") -> 0.40,
-    // r10: 1-bit sign quantization + Hamming shortlist 50 + exact
+    // 1-bit sign quantization + Hamming shortlist 50 + exact
     // rerank. The operator itself is deterministic and oracle-checked;
     // this row measures how much of the exact top-5 the 50-deep
     // Hamming shortlist retains (random vectors again the worst case —
     // sign bits carry angle/π of the signal)
     ("qe19_binary_ann", "sf0.01") -> 0.40, ("qe19_binary_ann", "sf0.1") -> 0.40,
-    // r13: the Lloyd quantizer's balanced lists pool ~25% of the corpus
+    // the Lloyd quantizer's balanced lists pool ~25% of the corpus
     // per 4/16 probe, so the gated path reranks a 2·PqShort ADC
     // shortlist (~100 float rows/query — scan-cut economics unchanged);
     // measured 0.54/0.56 -> 0.88/0.80. NB the gate no longer binds via
     // qe14b's shortlist (different depths), so the old ≤-qe14b note is
     // retired with the ML quantizer.
     ("qe20_ivf_pq", "sf0.01") -> 0.60, ("qe20_ivf_pq", "sf0.1") -> 0.60,
-    // r13 re-earn (VERDICT r12 item 2): r12's scale-true resizing
+    // The scale-true resizing
     // (K = ⌈√n⌉ cells) bought the n^1.5 complexity class by LOWERING
     // the sf0.1 floors to 0.48/0.33/0.38 at a fixed 8-probe budget.
     // tools/GateSweep measured the probe/recall curve the verdict
     // asked for: at sf0.1, P=8 → 0.57/0.41/0.45, P=12 →
     // 0.68/0.56/0.54, P=16 → 0.78/0.71/0.65, P=24 → 0.89/0.85/0.81,
     // candidate volume linear in P. GateProbes=16 is the knee that
-    // clears the r11 floor levels on all three twins while the
+    // clears the earlier floor levels on all three twins while the
     // scanned fraction stays P/√n (0.05% at n=10⁹) — complexity
     // class unchanged, bench bars (≤2 s, ≤ exact anchor) re-measured
     // and held (BENCH_NOTES r13). Floors sit under measured
@@ -90,7 +90,7 @@ class RecallSpec extends AnyFunSuite {
     // structurally lowest (a mutual pair must survive the gate in
     // BOTH directions).
     ("qe15b_gated_density", "sf0.01") -> 0.85, ("qe15b_gated_density", "sf0.1") -> 0.65,
-    // r14: the mass-budgeted twin pins COST (⌈0.35·n⌉ scanned mass per
+    // the mass-budgeted twin pins COST (⌈0.35·n⌉ scanned mass per
     // query) and lets recall float — measured 0.7448/0.7811 at
     // sf0.01/sf0.1 (gates/r14/mass_sweep_sf.txt); floors are measured
     // minus the 0.10 one-unlucky-corpus margin. No probe-sweep curve
@@ -116,10 +116,10 @@ class RecallSpec extends AnyFunSuite {
           functions.TextFunctions.tokens(col("text")), 3)))
         .filter(size(col("grams")) > 0)
         .select("doc_id", "grams")
-      // r18: inverted-index form of the SAME exact ground truth. The
+      // inverted-index form of the SAME exact ground truth. The
       // old all-pairs theta join evaluated array_intersect/array_union
       // on every (n choose 2) doc pair — minutes at sf0.1, the single
-      // largest cost in the whole suite (the r17 driver's `sbt test`
+      // largest cost in the whole suite (an earlier `sbt test`
       // died mid-suite on wall clock). Equivalence is exact, not
       // approximate: grams are distinct, so |A∪B| = |A|+|B|-|A∩B| with
       // integer counts, the division is the same double op
@@ -143,8 +143,8 @@ class RecallSpec extends AnyFunSuite {
     })
 
   /** Gated-trio floor from the PERSISTED sweep curve when one exists
-    * for this corpus (VERDICT r13 item 8): measured recall at the
-    * budget the production build RESOLVED (r15 — curve-sized when a
+    * for this corpus: measured recall at the
+    * budget the production build RESOLVED (curve-sized when a
     * current sweep exists) minus the one-unlucky-corpus margin (0.10),
     * floored to 2dp. Floor policy: when sizing kept the static budget,
     * the effective floor is max(static, sweep-derived) — a sweep can
@@ -156,7 +156,7 @@ class RecallSpec extends AnyFunSuite {
     * Returns (floor, sizedAway).
     */
   private def sweepFloor(name: String, sf: Sf): Option[(Double, Boolean)] = {
-    // r14: the c-trio reads the MASS sweep at GateMassFrac, the b-trio
+    // the c-trio reads the MASS sweep at GateMassFrac, the b-trio
     // the probe sweep at GateProbes — each curve lives inside its own
     // fingerprinted index dir, so neither can cross-apply.
     val probeCol = name match {
@@ -176,27 +176,27 @@ class RecallSpec extends AnyFunSuite {
       case 4 => r._4
       case _ => r._5
     }
-    // r15: the production build is sized by resolvedGateProbes /
+    // the production build is sized by resolvedGateProbes /
     // resolvedGateMassFrac (curve-driven when a current sweep exists),
     // so the floor must read the curve at the budget the build ACTUALLY
     // used — reading the static constant would floor a P=8-sized build
     // against P=16's measured recall and fail spuriously.
     val measured = probeCol.flatMap { c =>
       val p = queries.VectorQueries.resolvedGateProbes(sf.dir)
-      queries.VectorQueries.readGateSweep(sf.dir)
+      queries.GateCurve.Probe.read(sf.dir)
         .flatMap(_.find(_._1 == p))
         .map(r => (pick(c, r), c, p != queries.VectorQueries.GateProbes))
     }.orElse(massCol.flatMap { c =>
       val f = queries.VectorQueries.resolvedGateMassFrac(sf.dir)
-      queries.VectorQueries.readGateMassSweep(sf.dir)
+      queries.GateCurve.Mass.read(sf.dir)
         .flatMap(_.find(_._1 == f))
         .map(r => (pick(c, r), c, f != queries.VectorQueries.GateMassFrac))
     })
-    // ADVICE r15 (medium): when sizing chose a non-constant budget, the
+    // when sizing chose a non-constant budget, the
     // sweep-derived floor is measured-minus-margin AT the budget the
     // same sweep picked — self-certifying on its own. There the sizing
     // rule's own promises (recall15 >= target, secondaries >=
-    // GateSecondaryMin, both checked by gateProbesFor/gateMassFracFor)
+    // GateSecondaryMin, both checked by GateCurve.cheapest)
     // become an ABSOLUTE backstop, derated by the same 0.10 margin: a
     // sized build may never floor below what certification guaranteed,
     // no matter what the curve says. Constant-fallback builds keep the
@@ -225,7 +225,7 @@ class RecallSpec extends AnyFunSuite {
   }
 
   test("exact-Jaccard ground truth: inverted-index form == theta-join form [sf0.01]") {
-    // guards the r18 rewrite above: the recall floors are only as good
+    // guards the inverted-index rewrite above: the recall floors are only as good
     // as their ground truth, so the cheap sf (125k pairs) re-derives it
     // the retired all-pairs way and demands set equality
     val dir = "/root/testdata/sf0.01"
@@ -305,7 +305,7 @@ class RecallSpec extends AnyFunSuite {
     }
 
     test(s"qd13b Bloom prefilter: no false negatives vs exact qd13, precision bounded [${sf.label}]") {
-      // r13: qd13b's OUTPUT is the cascade (prefilter + exact verify)
+      // qd13b's OUTPUT is the cascade (prefilter + exact verify)
       // and is hash-matched against qd13's oracle in CORRECTNESS — the
       // recall artifact instead floors the PREFILTER stage, where the
       // one-sided Bloom guarantee lives and where an fpp drift would
@@ -463,10 +463,10 @@ class RecallSpec extends AnyFunSuite {
   }
 
   test("write RECALL.json artifact") {
-    // VERDICT r16 item 1: MERGE with the on-disk artifact by (sf, name)
+    // MERGE with the on-disk artifact by (sf, name)
     // instead of rebuilding it from this run alone — a partial or
-    // interrupted run (a driver-side subset run erased 17 of 20 sf0.1
-    // entries in round 16) now refreshes only what it measured and
+    // interrupted run (a subset run once erased 17 of 20 sf0.1
+    // entries) now refreshes only what it measured and
     // every other committed entry survives. Keys outside the floors map
     // are dropped so a renamed operator can't linger.
     val current = results.map { case ((k, l), (r, f, vs)) =>

@@ -28,4 +28,26 @@ object SparkSpecBase {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with `key` set on the shared session, restoring the
+    * previous value (or unsetting it) afterwards: suites share one
+    * session, so a leaked conf would silently change every later test.
+    */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Select Pareto's execution arm through its dispatch conf: threshold
+    * 0 forces the two-phase shape, the largest threshold the global
+    * window.
+    */
+  def withParetoTwoPhase[A](twoPhase: Boolean)(body: => A): A =
+    withConf(GraftConf.paretoTwoPhaseBytesKey,
+      if (twoPhase) "0" else Long.MaxValue.toString)(body)
 }
