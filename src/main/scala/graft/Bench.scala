@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.sources.PersistedIndex
 
@@ -50,6 +52,14 @@ object Bench {
     secs.foreach { case (name, t) => System.err.println(f"[bench] $name $t%.2f s") }
     errors
   }
+
+  /** Generated classes compiled so far in this JVM and their total
+    * compile ms (Spark's `CodegenMetrics` count and `CodeGenerator`
+    * compile time). The count falls when the generated-class cache holds
+    * a pass's working set; see `GraftConf.contextDefaults`.
+    */
+  def codegenSoFar(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
 
   /** JSON string-escape: sfDir is env-controlled (quotes/backslashes in
     * the path would otherwise emit a line json.loads rejects, and the
@@ -110,25 +120,23 @@ object Bench {
     */
   private[graft] def idOf(name: String): String = name.takeWhile(_ != '_')
 
-  /** Start-load ceiling above which the artifact self-flags (VERDICT
-    * r16 item 4): three rounds of driver benches started on a hot
-    * machine (r14/r15/r16, start loads 4-7) each cost a judge
-    * adjudication cycle proving the flagged cluster was contention.
-    * Idle on the reference box is ≲0.2; the round's honest close takes
-    * read ~2; the phantom artifacts started at 4+. A take whose start
-    * load exceeds this is not evidence — the annotation rides inside
+  /** Start-load ceiling above which the artifact self-flags: benches
+    * started on a hot machine (start loads 4-7) produced flagged
+    * clusters that turned out to be contention. Idle on the reference
+    * box is ≲0.2; honest takes read ~2; the phantom artifacts started
+    * at 4+. A take whose start load exceeds this is not evidence — the annotation rides inside
     * the JSON so benchdiff (and the judge) read the verdict from the
     * artifact itself. Read rule in BENCH_NOTES: discard or re-take an
     * annotated artifact; never adjudicate per-query flags from one.
     */
   private[graft] val LoadWarnThreshold = 3.0
 
-  /** Machine-state canary (r17): a fixed, data-independent workload —
+  /** Machine-state canary: a fixed, data-independent workload —
     * refill 8M longs from a seeded xorshift and sort them, min of 2 —
     * timed BEFORE the Spark session exists. The post-80g/post-suite
     * residue class (page cache + GC debris) inflates untouched queries
-    * 15-35% uniformly while the 1-min load reads idle (BENCH_NOTES
-    * r16/r17: a take at load [0.7, 1.7] read 1.35× smear), so the
+    * 15-35% uniformly while the 1-min load reads idle (BENCH_NOTES:
+    * a take at load [0.7, 1.7] read 1.35× smear), so the
     * load_warn gate cannot see it; the canary gives two artifacts a
     * direct machine-state ratio, and benchdiff prints it next to the
     * flags — a uniform smear now adjudicates itself from the artifacts
@@ -165,10 +173,9 @@ object Bench {
       // the quoted path
       val sfJson = "sf([0-9]+(?:\\.[0-9]+)?)/?$".r.findFirstMatchIn(sfDir)
         .map(_.group(1)).getOrElse("\"" + jesc(sfDir) + "\"")
-      // machine 1-min load average at [start, end] of the run (r8/r9/
-      // r11/r12/r13/r14 each burned an adjudication cycle proving a
-      // driver-artifact regression was background load — the artifact
-      // now carries the datum that settles it; absent when the JVM
+      // machine 1-min load average at [start, end] of the run (several
+      // bench-artifact "regressions" were background load — the
+      // artifact carries the datum that settles it; absent when the JVM
       // can't sample, ~22 chars when present, extra keys are ignored
       // by every consumer)
       val loadJson =
@@ -189,7 +196,7 @@ object Bench {
     else {
       val one = mk(1)
       // suite outgrew even decisecond full names (86 queries crossed
-      // the budget in r9): drop to unique id prefixes — names shrink
+      // the budget): drop to unique id prefixes — names shrink
       // ~12 chars each, benchdiff normalizes both sides to ids
       if (one.length <= LineBudget) one else mk(1, ids = true)
     }
@@ -214,7 +221,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       // natives via the sanctioned extension hook — registerNative then
-      // no-ops instead of WARN-spamming the artifact tail (VERDICT r13)
+      // no-ops instead of WARN-spamming the artifact tail
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -251,19 +258,20 @@ object Bench {
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names not in the suite: $unknown")
     }
-    // Min-of-REPS steady-state timing: rounds 5 and 6 both burned
-    // judge/builder cycles on contiguous transient clusters in the
-    // single-shot artifact (GC pause / page-cache warmup inflating a
-    // window of untouched queries). The min over 2 runs is the
-    // post-JIT number and kills that noise class for ~60 s extra wall
-    // at sf0.1. SPARK_GRAFT_REPS=1 restores single-shot.
+    // Min-of-REPS steady-state timing: single-shot artifacts showed
+    // contiguous transient clusters (GC pause / page-cache warmup
+    // inflating a window of untouched queries). The min over 2 runs is
+    // the post-JIT number and kills that noise class for ~60 s extra
+    // wall at sf0.1. SPARK_GRAFT_REPS=1 restores single-shot.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
     val (results, errors) = timeQueries(
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) => name -> (() => run(fn)) },
       reps)
-    // ADVICE r14: the load key is documented as [start, end]; a lone
+    val (compiles, compileMs) = codegenSoFar()
+    System.err.println(f"[bench] codegen $compiles classes $compileMs%.0f ms")
+    // the load key is documented as [start, end]; a lone
     // surviving sample is ambiguous about which endpoint it is, so the
     // key is all-or-nothing.
     val loads = Seq(load0, loadAvg())

@@ -3,14 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Parquet table loaders for the driver testdata star schema
-  * (see /root/repo/TESTDATA.md). Plain `spark.read.parquet` so Catalyst
-  * owns projection/predicate pushdown — callers `.select`/`.filter`
-  * declaratively and pruning reaches the scan.
+/** Parquet table loaders for the test data's star schema (see
+  * TESTDATA.md). A plain parquet relation so Catalyst owns
+  * projection/predicate pushdown — callers `.select`/`.filter`
+  * declaratively and pruning reaches the scan. The schema is inferred
+  * once per version of the table's files ([[graft.sources.HadoopFs.parquet]]),
+  * so building a query plan runs no Spark job.
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.HadoopFs.parquet(spark, s"$dir/$name.parquet")
 
   /** CSV variant of a table directory (header row; schema REQUIRED — at
     * data scale `inferSchema` is a full extra pass over the files, so

@@ -1,6 +1,8 @@
 package graft.cxc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.storage.StorageLevel
 
 /** Serving layer (SURVEY §2.1 S10): the Spark mapping of the reference
@@ -19,6 +21,10 @@ import org.apache.spark.storage.StorageLevel
   * Scale note: "materialize" here is Spark caching + temp-view
   * registration — executors hold the report-sized views in memory
   * (MEMORY_AND_DISK, so an oversized view spills instead of OOMing).
+  * Each frame is held once: a view the `CacheManager` already holds
+  * (the master `CxcPipeline` caches) is not persisted again, and a view
+  * that only selects columns of another served view (`reporte_cxc` of
+  * the master) reads that view's cache instead of keeping a copy.
   * The clock is injectable so TTL behavior is unit-testable.
   */
 class CxcServing(
@@ -36,16 +42,29 @@ class CxcServing(
     */
   def builds: Int = synchronized(buildCount)
 
+  /** True when `df` only selects columns of another frame in `frames`:
+    * its plan is a projection of plain attributes over that frame's
+    * plan, so once that frame is cached the `CacheManager` serves `df`
+    * from the same in-memory copy.
+    */
+  private def projectsAnother(df: DataFrame, frames: Iterable[DataFrame]): Boolean =
+    df.queryExecution.analyzed match {
+      case Project(list, child) if list.forall(_.isInstanceOf[Attribute]) =>
+        frames.exists(o => (o ne df) && o.queryExecution.analyzed.sameResult(child))
+      case _ => false
+    }
+
   /** Materialize a fresh view set: unpersist the previous generation,
     * cache + register the new one under its view names.
     */
   def refresh(): Unit = synchronized {
     current.valuesIterator.foreach(_.unpersist(blocking = false))
-    current = build().map { case (name, df) =>
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-      cached.createOrReplaceTempView(name)
-      name -> cached
-    }
+    val views = build()
+    views.valuesIterator
+      .filter(df => !projectsAnother(df, views.values) && df.storageLevel == StorageLevel.NONE)
+      .foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    current = views
     buildCount += 1
     lastRefreshMs = clock()
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.Rounding.dround
-import graft.sources.PersistedIndex
+import graft.sources.{HadoopFs, PersistedIndex}
 
 /** Text-analysis + deduplication operators over the `documents` table
   * (SURVEY §7.5 extension mandate: exact dedup, MinHash-LSH, SimHash,
@@ -446,7 +446,7 @@ object TextQueries {
     * the [[qd13bPrefilter]] precision floor in RecallSpec.
     */
   def bloomIndexPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath("bloom", dir, 5, 50, "1e-6")
+    HadoopFs.indexPath("bloom", dir, 5, 50, "1e-6")
 
   /** Offline build: aggregate the eval slice's grams into a Bloom
     * filter and persist it (one-row binary parquet — FS-agnostic,
@@ -478,7 +478,7 @@ object TextQueries {
     * eval-suite release, every query after that pays one small-file read.
     */
   private[graft] def bloomFilterBytes(s: SparkSession, dir: String): Array[Byte] =
-    s.read.parquet(s"${Bloom.ensure(s, dir)}/filter").head().getAs[Array[Byte]](0)
+    HadoopFs.parquet(s, s"${Bloom.ensure(s, dir)}/filter").head().getAs[Array[Byte]](0)
 
   /** The qd13b probe column over a `text` column — ONE definition shared
     * with the streaming twin ([[graft.streaming.TextStreaming.decontaminate]])
@@ -856,7 +856,7 @@ object TextQueries {
     pmod(xxhash64(term), lit(Bm25Buckets)).cast("int")
 
   def bm25IndexPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath(
+    HadoopFs.indexPath(
       "bm25", dir, Bm25PostingDfCap, Bm25Buckets, "cappedtfdf")
 
   def bm25Build(s: SparkSession, dir: String, path: String): Unit = {
@@ -876,8 +876,8 @@ object TextQueries {
 
   def qd17b(s: SparkSession, dir: String): DataFrame = {
     val path = Bm25.ensure(s, dir)
-    val postings = s.read.parquet(s"$path/postings")
-    val stats = s.read.parquet(s"$path/stats")
+    val postings = HadoopFs.parquet(s, s"$path/postings")
+    val stats = HadoopFs.parquet(s, s"$path/stats")
     val qterms = bm25Queries(bm25Corpus(docs(s, dir)))
     // Partition pruning: the query vocab's bucket set is ≤ Bm25Buckets
     // driver-sized ints (the scalar-collect class — bounded by the
@@ -1388,11 +1388,10 @@ object TextQueries {
     // pass dominates qd6's cost, and the frame is referenced five times
     // downstream (both sides of the band self-join, the two gram
     // lookups, the zero-fill doc list) — each reference would otherwise
-    // re-run the full pass. An earlier round pinned a localCheckpoint
-    // instead, but that parks the frame in executor block-manager
-    // storage for the LIFETIME OF THE SESSION with no release hook, and
-    // BENCH_r05 showed every query running after qd6 regressed 1.5–3.4×
-    // under that storage pressure. The parquet index has an explicit
+    // re-run the full pass. A localCheckpoint would instead park the
+    // frame in executor block-manager storage for the LIFETIME OF THE
+    // SESSION with no release hook (BENCH_r05: every query running after
+    // qd6 regressed 1.5–3.4× under that storage pressure). The parquet index has an explicit
     // lifecycle (staleness-probed, overwrite-on-rebuild), costs one
     // column-pruned read per reference, and is the artifact a 100 TB
     // deployment would ship anyway.
@@ -1424,7 +1423,7 @@ object TextQueries {
     * determinism + agreement with qd6's candidates asserted in tests.
     */
   def minhashIndexPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath("minhash", dir, 3, 64, 16, 4, "md5p31")
+    HadoopFs.indexPath("minhash", dir, 3, 64, 16, 4, "md5p31")
 
   /** Write-once signature index shared by qd6 (fused verify, reads
     * grams) and qd6b (index-only probe, column-pruned to sig/bands —
@@ -1438,7 +1437,7 @@ object TextQueries {
     PersistedIndex("minhash", "documents", "signatures", minhashIndexPath, minhashBuild)
 
   private def minhashIndex(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${Minhash.ensure(s, dir)}/signatures")
+    HadoopFs.parquet(s, s"${Minhash.ensure(s, dir)}/signatures")
 
   /** The probe path's band-collision candidate pairs straight off the
     * persisted index — exposed for the recall measurement (RECALL.json

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.Rounding.dround
-import graft.sources.PersistedIndex
+import graft.sources.{HadoopFs, PersistedIndex}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   * brute-force cosine top-k as the exact baseline (qe1), sign-LSH
@@ -639,7 +639,7 @@ object VectorQueries {
     * write into the read-only data roots).
     */
   def ivfIndexPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath("ivf", dir, IVF_NLIST, IvfFitIters, "lloyd6dp")
+    HadoopFs.indexPath("ivf", dir, IVF_NLIST, IvfFitIters, "lloyd6dp")
 
   def ivfBuild(s: SparkSession, dir: String, path: String): Unit = {
     val (assigned, centDf) = ivfFit(s, dir)
@@ -658,8 +658,8 @@ object VectorQueries {
     // session's first vector query
     registerNative(s)
     val path = Ivf.ensure(s, dir)
-    ivfProbe(s.read.parquet(s"$path/assignments"),
-      s.read.parquet(s"$path/centroids"))
+    ivfProbe(HadoopFs.parquet(s, s"$path/assignments"),
+      HadoopFs.parquet(s, s"$path/centroids"))
   }
 
   // ---------------------------------------------------------------- qe8
@@ -1453,7 +1453,7 @@ object VectorQueries {
     * no Lloyd rounds, no corpus re-encode.
     */
   def pqIndexPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath("pq", dir, PqM, PqKs, PqSubDim, PqIters, "m6dp")
+    HadoopFs.indexPath("pq", dir, PqM, PqKs, PqSubDim, PqIters, "m6dp")
 
   def pqBuild(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
@@ -1471,7 +1471,7 @@ object VectorQueries {
   /** The driver-resident codebook of the PQ index at `path`. */
   private def pqCodebook(s: SparkSession, path: String): Array[Array[Seq[Double]]] = {
     val cb = Array.fill(PqM, PqKs)(Seq.empty[Double])
-    s.read.parquet(s"$path/codebook").collect().foreach { r =>
+    HadoopFs.parquet(s, s"$path/codebook").collect().foreach { r =>
       cb(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
         r.getSeq[Double](r.fieldIndex("cent"))
     }
@@ -1481,7 +1481,7 @@ object VectorQueries {
   def qe14b(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
     val path = Pq.ensure(s, dir)
-    pqProbe(s, dir, pqCodebook(s, path), s.read.parquet(s"$path/codes"))
+    pqProbe(s, dir, pqCodebook(s, path), HadoopFs.parquet(s, s"$path/codes"))
   }
 
   // --------------------------------------------------------------- qe20
@@ -1509,7 +1509,7 @@ object VectorQueries {
     // identity must include the quantizer's build params too — a
     // quantizer change with a same-named merged dir would silently pair
     // NEW probe centroids with OLD list ids
-    graft.sources.HadoopFs.indexPath(
+    HadoopFs.indexPath(
       "ivfpq", dir, IVF_NLIST, IvfFitIters, "lloyd6dp", PqM, PqKs, PqIters, "m6dp")
 
   /** The merged per-list codes layout (faiss stores codes PER inverted
@@ -1518,8 +1518,8 @@ object VectorQueries {
     * scan then reads (vec_id, list_id, codes) rows and never shuffles.
     */
   def ivfPqBuild(s: SparkSession, dir: String, path: String): Unit =
-    s.read.parquet(s"${Ivf.ensure(s, dir)}/assignments").select("vec_id", "list_id")
-      .join(s.read.parquet(s"${Pq.ensure(s, dir)}/codes"), Seq("vec_id"))
+    HadoopFs.parquet(s, s"${Ivf.ensure(s, dir)}/assignments").select("vec_id", "list_id")
+      .join(HadoopFs.parquet(s, s"${Pq.ensure(s, dir)}/codes"), Seq("vec_id"))
       .write.mode("overwrite").parquet(s"$path/codes")
 
   val IvfPq: PersistedIndex =
@@ -1530,7 +1530,7 @@ object VectorQueries {
     val ivfPath = Ivf.ensure(s, dir)
     val cb = pqCodebook(s, Pq.ensure(s, dir))
     val merged = IvfPq.ensure(s, dir)
-    val centDf = s.read.parquet(s"$ivfPath/centroids")
+    val centDf = HadoopFs.parquet(s, s"$ivfPath/centroids")
     val probes = embs(s, dir).filter(col("vec_id") < NQUERIES)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
       .crossJoin(broadcast(centDf))
@@ -1549,7 +1549,7 @@ object VectorQueries {
     // smaller). The gated path reranks 2·PqShort: still ~100 float
     // rows/query — the scan-cut economics are unchanged, and recall
     // re-earns its floor instead of the floor chasing recall down.
-    pqProbe(s, dir, cb, s.read.parquet(s"$merged/codes"), Some(probes),
+    pqProbe(s, dir, cb, HadoopFs.parquet(s, s"$merged/codes"), Some(probes),
       shortN = 2 * PqShort)
   }
 
@@ -2032,7 +2032,7 @@ object VectorQueries {
     * orphaned, never served.
     */
   def gateIndexPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath(
+    HadoopFs.indexPath(
       "gate", dir, resolvedGateProbes(dir), GateFitIters, GateFitPerCell, "sqrtK")
 
   /** Directed, labeled, cosine-scored candidate frame shared by the
@@ -2279,7 +2279,7 @@ object VectorQueries {
     // the probe path may never touch embs(), so register the native
     // cosine/dot functions explicitly (same contract as qe5b)
     registerNative(s)
-    s.read.parquet(s"${Gate.ensure(s, dir)}/cands")
+    HadoopFs.parquet(s, s"${Gate.ensure(s, dir)}/cands")
   }
 
   /** qe15's production twin: K-th-NN distance + top-2% OOD flag over
@@ -2339,7 +2339,7 @@ object VectorQueries {
     * [[gateIndexPath]].
     */
   def gateMassIndexPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath(
+    HadoopFs.indexPath(
       "gatemass", dir, resolvedGateMassFrac(dir), GateFitIters, GateFitPerCell, "sqrtK")
 
   /** Offline build of the mass-budgeted candidate frame (same fit as
@@ -2360,7 +2360,7 @@ object VectorQueries {
 
   private def gatedMassSym(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
-    s.read.parquet(s"${GateMass.ensure(s, dir)}/cands")
+    HadoopFs.parquet(s, s"${GateMass.ensure(s, dir)}/cands")
   }
 
   /** qe15b's mass-budgeted sibling (the production form of the
@@ -3556,7 +3556,7 @@ object VectorQueries {
     * projection (8 codegen'd dot products per row) — no shuffle at all.
     */
   def pcaIndexPath(dir: String): String =
-    graft.sources.HadoopFs.indexPath("pca", dir, 8)
+    HadoopFs.indexPath("pca", dir, 8)
 
   def pcaBuild(s: SparkSession, dir: String, path: String): Unit = {
     val basis = pcaModel(s, dir).pc.colIter.zipWithIndex
@@ -3578,7 +3578,7 @@ object VectorQueries {
 
   def qe28b(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
-    val basis = s.read.parquet(s"${Pca.ensure(s, dir)}/basis").collect()
+    val basis = HadoopFs.parquet(s, s"${Pca.ensure(s, dir)}/basis").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
     embs(s, dir).select(col("vec_id") +: basis.toSeq.map { case (i, c) =>
       dround(dot(col("vec"), typedLit(c)), 6).as(s"pc$i") }: _*)

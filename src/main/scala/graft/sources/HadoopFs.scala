@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Filesystem probes resolved through the Hadoop `FileSystem` API — the
   * ONE place batch (persisted-index staleness) and streaming
@@ -16,6 +18,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * disables cross-batch dedup. Resolving each path through
   * `Path.getFileSystem(conf)` gives the same one-RPC probe on every
   * filesystem Spark can read.
+  *
+  * [[parquet]] is the one parquet reader of the table loaders and the
+  * persisted-index probes: it infers each dataset's schema once per
+  * version of its files instead of once per plan.
   */
 object HadoopFs {
 
@@ -24,7 +30,7 @@ object HadoopFs {
   /** Modification time of `path` itself, 0 if absent. The exists /
     * getFileStatus pair can race a concurrent delete — a path that
     * vanishes between the two calls IS absent, so FNF maps to 0L
-    * rather than failing the probe (ADVICE r6).
+    * rather than failing the probe.
     */
   def mtimeOf(conf: Configuration, path: String): Long = {
     val p = new Path(path)
@@ -45,8 +51,8 @@ object HadoopFs {
     if (!fs.exists(p)) 0L
     else
       // the FNF guard covers the WHOLE post-exists probe (getFileStatus
-      // + recursive listing, ADVICE r6): a path or part file deleted
-      // after exists() returned true means "the source is changing
+      // + recursive listing): a path or part file deleted after
+      // exists() returned true means "the source is changing
       // right now", which must read as maximally fresh (forcing an
       // index rebuild), not as a query failure
       try {
@@ -87,18 +93,18 @@ object HadoopFs {
 
   /** The slug a data dir contributes to cache/registry names — shared
     * by [[indexPath]] and the curve registry so the two key the same
-    * corpus identically (review r16). Normalized first: a trailing
+    * corpus identically. Normalized first: a trailing
     * slash or redundant `.` segment must not silently derail a lookup
     * onto a different name (for already-clean absolute paths the
     * normalization is the identity, so existing artifact names are
     * unchanged).
     */
   def dirSlug(dir: String): String = {
-    // ADVICE r16: Paths.get collapses the "//" in URI-style dirs
-    // (hdfs://, s3a://), which would shift their slug vs the pre-r16
-    // raw form and orphan existing registry/cache entries for remote
-    // roots — only scheme-less local paths get path-normalized (where
-    // normalization of an already-clean path is the identity)
+    // Paths.get collapses the "//" in URI-style dirs (hdfs://, s3a://),
+    // which would shift their slug vs the raw form and orphan existing
+    // registry/cache entries for remote roots — only scheme-less local
+    // paths get path-normalized (where normalization of an already-clean
+    // path is the identity)
     val norm =
       if (dir.contains("://")) dir
       else java.nio.file.Paths.get(dir).normalize.toString
@@ -126,9 +132,9 @@ object HadoopFs {
     * (`<totalBytes>b<fileCount>f<maxFileBytes>`): a checkout's mtimes
     * are meaningless (git stamps them at checkout time), so committed
     * curves can't use the tmpdir cache's mtime staleness rule — file
-    * sizes are the cheap content witness. ADVICE r16: total bytes
-    * ALONE let a corpus regenerated in place with coincidentally equal
-    * totals silently serve the old committed curve (same-shape parquet
+    * sizes are the cheap content witness. Total bytes ALONE let a
+    * corpus regenerated in place with coincidentally equal totals
+    * silently serve the old committed curve (same-shape parquet
     * totals differ by only a few bytes of compression noise); the file
     * count and the largest file's exact size now have to collide too.
     * None for an absent/empty corpus — no content, no identity.
@@ -169,4 +175,94 @@ object HadoopFs {
     val successM = mtimeOf(conf, s"$indexDir/_SUCCESS")
     successM == 0L || successM <= newestMtime(conf, sourcePath)
   }
+
+  /** Listing fingerprint of every file under `path`
+    * (`<files>f<totalBytes>b<newestMtime>m<nameHash>`); None when the
+    * path is absent or holds no file. The name hash is what catches a
+    * Spark overwrite whose counts, sizes and mtime tick all collide:
+    * every write job names its part files with a fresh UUID.
+    */
+  private def listingKey(conf: Configuration, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = fsOf(conf, p)
+    try {
+      if (!fs.exists(p)) None
+      else {
+        val it = fs.listFiles(p, true)
+        var n = 0L
+        var bytes = 0L
+        var newest = 0L
+        var names = 0
+        while (it.hasNext) {
+          val st = it.next()
+          n += 1
+          bytes += st.getLen
+          newest = math.max(newest, st.getModificationTime)
+          // order-independent: listing order is not part of the identity
+          names += scala.util.hashing.MurmurHash3.stringHash(st.getPath.toString)
+        }
+        if (n == 0L) None else Some(s"${n}f${bytes}b${newest}m$names")
+      }
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** The session confs that change what parquet schema inference returns
+    * (`ParquetToSparkSchemaConverter`'s flags, plus merge and summary
+    * handling): a memoized schema is reused only under the same values.
+    */
+  private val ParquetInferenceConfs: Seq[String] = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive")
+
+  private final case class Inferred(listing: String, confs: Seq[String], schema: StructType)
+
+  /** At most this many paths keep a memoized schema, least recently
+    * read evicted first. One entry per path: a new version of the files
+    * or a changed inference conf replaces it, so the memo holds one
+    * StructType per recently read dataset and nothing else.
+    */
+  private val SchemaMemoPaths = 256
+
+  private val schemaMemo = new java.util.LinkedHashMap[String, Inferred](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Inferred]): Boolean =
+      size() > SchemaMemoPaths
+  }
+
+  /** `s.read.parquet(path)` that infers the schema once per version of
+    * the files. Without a schema every read runs a Spark job to read a
+    * footer (`ParquetFileFormat.mergeSchemasInParallel`) while the plan
+    * is still being built; with the memoized one, building a plan runs
+    * none. A schema is reused only while both halves of its key hold:
+    *  - the listing fingerprint ([[listingKey]]): file count, total
+    *    bytes, newest mtime and file names, so a rewrite of the dataset
+    *    at the same path is re-inferred;
+    *  - the [[ParquetInferenceConfs]] values, so flipping, say,
+    *    `binaryAsString` is re-inferred.
+    * A miss is the plain read, whose schema is kept; a hit passes that
+    * schema back, so the relation and every plan over it are the ones a
+    * plain read gives. An absent or empty path takes the plain read and
+    * fails as it does.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    listingKey(s.sparkContext.hadoopConfiguration, path) match {
+      case None => s.read.parquet(path)
+      case Some(listing) =>
+        val confs = ParquetInferenceConfs.map(k => s.conf.getOption(k).orNull)
+        schemaMemo.synchronized(Option(schemaMemo.get(path)))
+          .filter(m => m.listing == listing && m.confs == confs) match {
+          case Some(m) => s.read.schema(m.schema).parquet(path)
+          case None =>
+            val df = s.read.parquet(path)
+            schemaMemo.synchronized(schemaMemo.put(path, Inferred(listing, confs, df.schema)))
+            df
+        }
+    }
 }

@@ -31,9 +31,9 @@ object CurvePublish {
       val src = Paths.get(curve.path(dir))
       curve.registryFile(dir) match {
         case None =>
-          println(s"[publish] SKIP $family @ $dir — corpus absent/empty (no content identity)")
+          println(s"[publish] SKIP $family @ $dir - corpus absent/empty (no content identity)")
         case Some(dst) if !Files.exists(src) =>
-          println(s"[publish] skip $family @ $dir — no tmpdir curve at $src (target ${dst.getName})")
+          println(s"[publish] skip $family @ $dir - no tmpdir curve at $src (target ${dst.getName})")
         case Some(dst) =>
           // the cache reader's strict-> freshness rule, checked against
           // the TMPDIR file directly (the reader would fall back to the
@@ -45,9 +45,9 @@ object CurvePublish {
           // published. Validate BEFORE copying.
           lazy val parses = curve.parse(new String(Files.readAllBytes(src), "UTF-8"))._1.nonEmpty
           if (!fresh)
-            println(s"[publish] REFUSE $family @ $dir — tmpdir curve is stale vs the corpus")
+            println(s"[publish] REFUSE $family @ $dir - tmpdir curve is stale vs the corpus")
           else if (!parses)
-            println(s"[publish] REFUSE $family @ $dir — tmpdir curve does not parse " +
+            println(s"[publish] REFUSE $family @ $dir - tmpdir curve does not parse " +
               "with its reader (older format or corrupt); re-sweep before publishing")
           else {
             Files.copy(src, dst.toPath, StandardCopyOption.REPLACE_EXISTING)

@@ -32,7 +32,7 @@ object GateResolve {
     // committed curves, so say so loudly
     if (!new java.io.File(GateCurve.registryDir).isDirectory)
       println(s"[resolve] WARNING: registry dir not found from cwd " +
-        s"${sys.props("user.dir")} — sizing will use tmpdir cache/constants " +
+        s"${sys.props("user.dir")} - sizing will use tmpdir cache/constants " +
         "only (set SPARK_GRAFT_CURVE_REGISTRY to the committed gates/curves)")
     for (dir <- args) {
       val p = VectorQueries.resolvedGateProbes(dir)
@@ -52,7 +52,7 @@ object GateResolve {
           println(s"[resolve] $dir K curve: none persisted (run the GateSweep K mode to measure)")
         case (_, Some(pk)) =>
           println(s"[resolve] $dir K curve was swept at P=$pk but production " +
-            s"resolves P=$p — re-sweep (GateSweep K mode) before trusting it")
+            s"resolves P=$p - re-sweep (GateSweep K mode) before trusting it")
         case _ => () // budget-matched; the rule check below adjudicates it
       }
       spark.foreach { s =>
@@ -67,7 +67,7 @@ object GateResolve {
           VectorQueries.gateKRuleWarning(dir, n) match {
             case Some(w) => println(s"[resolve] $dir K RULE WARNING: $w")
             case None =>
-              println(s"[resolve] $dir K rule: sqrt-n undominated on the persisted curve (P=$p) — KEEP")
+              println(s"[resolve] $dir K rule: sqrt-n undominated on the persisted curve (P=$p) - KEEP")
           }
       }
     }

@@ -56,7 +56,7 @@ object GateSweep {
         val n = graft.Tables.embeddings(spark, dir).count()
         VectorQueries.gateKRuleWarning(dir, n) match {
           case Some(w) => println(s"K RULE WARNING: $w")
-          case None => println(s"K rule check: ceil(sqrt($n)) undominated on the swept axis — KEEP")
+          case None => println(s"K rule check: ceil(sqrt($n)) undominated on the swept axis - KEEP")
         }
       }
     }

@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench harness's failure/timing contract (VERDICT r6 item 2: a
-  * planted failing query must trip the gate, not read as a fast one).
+/** The bench harness's failure/timing contract (a planted failing
+  * query must trip the gate, not read as a fast one).
   * The downstream half — tools/benchdiff.py failing on a non-empty
   * "errors" list and parsing the driver's truncated wrappers — is
   * covered by its own `--selftest`.
@@ -55,6 +55,20 @@ class BenchSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
+  test("Sf1Skew's pre-build prints a planted failing index build and still builds the rest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sf1").toFile
+    try {
+      val d = dir.getPath
+      val ok = sources.PersistedIndex("ok", "documents", "part", _ + "/ok_index",
+        (s, _, p) => s.range(1).write.mode("overwrite").parquet(s"$p/part"))
+      val planted = sources.PersistedIndex("planted", "documents", "part",
+        _ + "/planted_index", (_, _, _) => throw new RuntimeException("boom"))
+      val lines = tools.Sf1Skew.prebuild(SparkSpecBase.spark, d, Seq(planted, ok))
+      assert(lines.size == 1 && lines.head.startsWith("[sf1] index:planted FAILED"), lines)
+      assert(ok.fresh(SparkSpecBase.spark, d), "a failed build must not skip the next one")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   test("renderLine emits the driver-contract JSON with errors visible") {
     val line = Bench.renderLine(
       Seq("q1" -> 1.5, "q2" -> 0.25), Seq("q2"), "/root/testdata/sf0.1")
@@ -73,9 +87,9 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("renderLine carries the [start, end] load averages when sampled") {
-    // r14: the contention datum that adjudicates driver-artifact
-    // regression clusters rides inside the artifact itself; absent
-    // loads render the r13-and-earlier line byte-for-byte
+    // the contention datum that adjudicates bench-artifact regression
+    // clusters rides inside the artifact itself; absent loads render
+    // the line without the key, byte-for-byte
     val line = Bench.renderLine(
       Seq("q1" -> 1.0), Seq.empty, "/root/testdata/sf0.1", Seq(0.1, 27.42))
     assert(line.contains(""""errors":[],"load":[0.1,27.4],"sf":0.1}"""))
@@ -84,9 +98,9 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("a hot-start take self-flags with load_warn; the END sample alone does not (it includes the bench's own load)") {
-    // VERDICT r16 item 4: three rounds of driver artifacts started hot
-    // and each cost an adjudication cycle — the verdict now rides in
-    // the artifact. Threshold pinned so a silent change re-opens this.
+    // artifacts started hot each needed a separate adjudication — the
+    // verdict rides in the artifact. Threshold pinned so a silent
+    // change re-opens this.
     val hot = Bench.renderLine(
       Seq("q1" -> 1.0), Seq.empty, "/root/testdata/sf0.1", Seq(6.8, 3.8))
     assert(hot.contains(""""load":[6.8,3.8],"load_warn":"start 6.8 > 3"""),
@@ -97,7 +111,7 @@ class BenchSpec extends AnyFunSuite {
       Seq("q1" -> 1.0), Seq.empty, "/x", Seq(0.1, 27.4))
     assert(!endOnly.contains("load_warn"))
     assert(Bench.LoadWarnThreshold == 3.0)
-    // r17: the machine canary rides next to the loads — two artifacts'
+    // the machine canary rides next to the loads — two artifacts'
     // canary ratio is the residue-class signal 1-min load cannot see
     val withCanary = Bench.renderLine(
       Seq("q1" -> 1.0), Seq.empty, "/x", Seq(0.1, 0.2), Some(0.517))
@@ -139,7 +153,7 @@ class BenchSpec extends AnyFunSuite {
     // Render the actual suite at the realistic worst case — EVERY query
     // at 9.99 s ("9.99", 4 chars; today's slowest single query is ~4 s
     // and the whole-suite mean is ~0.7 s, so all-queries-at-10s is
-    // already a catastrophically failed round). Even if some query does
+    // already a catastrophically failed take). Even if some query does
     // blow past 10 s, only the line's HEAD (metric/value) is cut, which
     // benchdiff's salvage extractors parse.
     // Envelope derivation lives at Bench.LineBudget; renderLine
@@ -151,7 +165,8 @@ class BenchSpec extends AnyFunSuite {
       s"bench line is ${line.length} chars — the driver tail capture will " +
         "truncate it again; shorten new query names or the rendering")
     // every query must be present under SOME rendering of its name
-    // (full or id prefix — r9 crossed into the id regime at 86 queries)
+    // (full or id prefix — the suite crossed into the id regime at 86
+    // queries)
     assert(names.forall(n => line.contains("\"" + n + "\":")
       || line.contains("\"" + Bench.idOf(n) + "\":")))
   }

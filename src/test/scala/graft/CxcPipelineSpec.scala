@@ -311,6 +311,62 @@ class CxcPipelineSpec extends AnyFunSuite {
     assert(serving.builds == 3)
   }
 
+  test("S10 serving holds each frame once: the master once, reporte_cxc from its cache") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.storage.StorageLevel
+    // a second persist of a cached plan is a no-op Spark only logs
+    val recached = new java.util.concurrent.atomic.AtomicInteger()
+    val probe = new AbstractAppender("recache-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("already cached")) recached.incrementAndGet()
+    }
+    probe.start()
+    val log = LogManager.getLogger(classOf[org.apache.spark.sql.execution.CacheManager])
+      .asInstanceOf[Logger]
+    log.addAppender(probe)
+    // the CLI's report stage: CxcPipeline itself caches the master
+    val serving = new CxcServing(spark, build = () => CxcPipeline.run(spark, raw,
+      CxcPipeline.Options(skipAudit = true, skipAnalytics = true, skipKpis = true)))
+    try {
+      serving.refresh()
+      val names = serving.viewNames
+      names.foreach(v => serving.view(v).count())
+      assert(recached.get == 0, "the master CxcPipeline cached was persisted again")
+      val cm = spark.sharedState.cacheManager
+      def cacheOf(df: DataFrame) =
+        cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      // one in-memory copy per frame: reporte_cxc adds none
+      assert(names.toSeq.flatMap(v => cacheOf(serving.view(v)))
+        .map(_.cachedRepresentation.cacheBuilder).distinct.size == names.size - 1)
+      val master = serving.view("movimientos_totales")
+      val reporte = serving.view("reporte_cxc")
+      assert(master.storageLevel.useMemory)
+      assert(reporte.storageLevel == StorageLevel.NONE, "reporte_cxc must not be a second copy")
+      val plan = reporte.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val cached = cacheOf(master)
+      val scans = plan.collect { case m: InMemoryTableScanExec => m }
+      assert(scans.size == 1 && cached.exists(
+        _.cachedRepresentation.cacheBuilder eq scans.head.relation.cacheBuilder),
+        s"reporte_cxc must read the master's InMemoryTableScan; plan was:\n$plan")
+      assert(reporte.count() == master.count())
+      // unpersist-on-refresh: the next generation replaces the last
+      serving.refresh()
+      assert(!master.storageLevel.useMemory, "the previous master must be unpersisted")
+      assert(serving.view("movimientos_totales").storageLevel.useMemory)
+    } finally {
+      log.removeAppender(probe)
+      serving.viewNames.foreach(v => serving.view(v).unpersist(blocking = false))
+    }
+  }
+
   test("P13 interactive filters: option lists + empty-selection identity") {
     val m = views("movimientos_totales")
     val cls = CxcFilters.clientes(m)
