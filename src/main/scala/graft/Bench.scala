@@ -12,14 +12,14 @@ import graft.sources.PersistedIndex
 object Bench {
 
   /** Min-of-`reps` timing over named thunks. A thunk that throws stops
-    * its rep loop, logs to stderr, and lands in the returned error
-    * list — a broken query must NOT read as a fast one (its
-    * time-to-failure still appears in the map, but the gate fails on
-    * the error list). Factored out of main so the planted-failure
-    * contract is unit-testable without a SparkSession.
+    * its rep loop, logs `[<tag>] <name> FAILED: <error>` to stderr, and
+    * lands in the returned error list — a broken query must NOT read as
+    * a fast one (its time-to-failure still appears in the map, but the
+    * gate fails on the error list). Factored out of main so the
+    * planted-failure contract is unit-testable without a SparkSession.
     */
-  def timeQueries(qs: Seq[(String, () => Unit)],
-      reps: Int): (Seq[(String, Double)], Seq[String]) = {
+  def timeQueries(qs: Seq[(String, () => Unit)], reps: Int,
+      tag: String = "bench"): (Seq[(String, Double)], Seq[String]) = {
     val errors = scala.collection.mutable.ArrayBuffer[String]()
     val results = qs.map { case (name, thunk) =>
       var best = Double.MaxValue
@@ -30,7 +30,7 @@ object Bench {
         try thunk() catch {
           case e: Throwable =>
             failed = true
-            System.err.println(s"[bench] $name FAILED: $e")
+            System.err.println(s"[$tag] $name FAILED: $e")
         }
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
         r += 1
@@ -56,10 +56,19 @@ object Bench {
   /** Generated classes compiled so far in this JVM and their total
     * compile ms (Spark's `CodegenMetrics` count and `CodeGenerator`
     * compile time). The count falls when the generated-class cache holds
-    * a pass's working set; see `GraftConf.contextDefaults`.
+    * a pass's working set; see `GraftConf.contextDefaults`. Refuses to
+    * run before a session exists: the first touch of `CodeGenerator`
+    * sizes its class cache from the session conf, so a touch before the
+    * session would leave `spark.sql.codegen.cache.maxEntries` unapplied
+    * for the JVM's lifetime.
     */
-  def codegenSoFar(): (Long, Double) =
+  def codegenSoFar(): (Long, Double) = {
+    require(SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined,
+      "codegenSoFar needs a SparkSession first: the first use of CodeGenerator sizes " +
+        "its class cache, and before a session exists that ignores " +
+        "spark.sql.codegen.cache.maxEntries")
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
+  }
 
   /** JSON string-escape: sfDir is env-controlled (quotes/backslashes in
     * the path would otherwise emit a line json.loads rejects, and the
@@ -91,7 +100,7 @@ object Bench {
 
   /** The line must fit the driver's tail capture WITH the sbt suffix:
     * tail = "[info] " (7) + line + "\n" + "[success] Total time: …,
-    * completed <date>" (72 measured on the r8 artifact; +12 headroom
+    * completed <date>" (72 measured on BENCH_r08.json; +12 headroom
     * for the longest month/duration renderings) + "\n" ≤ 2000
     * ⇒ line ≤ ~1907. Target 1900 below for margin.
     */
@@ -202,7 +211,10 @@ object Bench {
     }
   }
 
-  private def loadAvg(): Double =
+  /** The machine's 1-min load average; negative where the JVM cannot
+    * sample it.
+    */
+  private[graft] def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 

@@ -75,7 +75,7 @@ final class GateCurve private (
     * the [[VectorQueries.GateProbes]] constant.
     */
   def sweptAt(dir: String): Option[Int] =
-    if (recordsProbes) Some(VectorQueries.resolvedGateProbes(dir)) else None
+    if (recordsProbes) Some(GateRule.Fixed.resolved(dir).toInt) else None
 
   /** One row per axis value, measured against the exact anchors, which
     * are materialized once for the whole sweep (they dominate its cost).
@@ -164,7 +164,7 @@ final class GateCurve private (
       r._4 >= VectorQueries.GateSecondaryMin && r._5 >= VectorQueries.GateSecondaryMin)
       .map(_._1))
 
-  /** [[cheapest]] at [[VectorQueries.gateTarget]], else `fallback`,
+  /** [[cheapest]] at [[VectorQueries.GateRecallTarget]], else `fallback`,
     * memoized per (family, corpus dir) for the JVM lifetime: one Verify
     * process runs the gated queries AND dumps their oracle SQL, and both
     * must see the same value even if a concurrent GateSweep rewrites
@@ -173,7 +173,7 @@ final class GateCurve private (
     */
   def resolved(dir: String, fallback: Double): Double =
     resolvedAxis.computeIfAbsent((family, dir), _ => java.lang.Double.valueOf(
-      cheapest(dir, VectorQueries.gateTarget).getOrElse(fallback))).doubleValue
+      cheapest(dir, VectorQueries.GateRecallTarget).getOrElse(fallback))).doubleValue
 }
 
 object GateCurve {
@@ -198,22 +198,22 @@ object GateCurve {
     val n: Long = Tables.embeddings(s, dir).count()
     lazy val cents: Array[(Int, Seq[Double])] =
       VectorQueries.gateFitCents(e, VectorQueries.gateK(n), n)
-    lazy val probes: Int = VectorQueries.resolvedGateProbes(dir)
+    lazy val probes: Int = GateRule.Fixed.resolved(dir).toInt
   }
 
-  /** Probe budget P at the production K. The sweep picks
-    * [[VectorQueries.resolvedGateProbes]].
+  /** Probe budget P at the production K. The sweep sizes
+    * [[GateRule.Fixed]].
     */
   val Probe = new GateCurve("gatesweep", "gatesweep", "_sweep.json", "probes",
     integralAxis = true, recordsProbes = false,
-    (in, p) => VectorQueries.gateCandsWithCents(in.e, in.cents, p.toInt))
+    (in, p) => GateRule.Fixed.candsWith(in.e, in.cents, p, in.n))
 
   /** Scanned-mass fraction of the mass-budgeted probe at the production
-    * K. The sweep picks [[VectorQueries.resolvedGateMassFrac]].
+    * K. The sweep sizes [[GateRule.Mass]].
     */
   val Mass = new GateCurve("gatemasssweep", "gatemasssweep", "_sweep.json", "mass_frac",
     integralAxis = false, recordsProbes = false,
-    (in, f) => VectorQueries.gateCandsMassBudget(in.e, in.cents, f, in.n))
+    (in, f) => GateRule.Mass.candsWith(in.e, in.cents, f, in.n))
 
   /** Cell count K, each value a full refit probed at the resolved
     * budget. Informational: production keeps K = ⌈√n⌉ unless
@@ -222,8 +222,8 @@ object GateCurve {
     */
   val K = new GateCurve("gateksweep", "gatesweep", "_ksweep.json", "k_cells",
     integralAxis = true, recordsProbes = true,
-    (in, k) => VectorQueries.gateCandsWithCents(
-      in.e, VectorQueries.gateFitCents(in.e, k.toInt, in.n), in.probes))
+    (in, k) => GateRule.Fixed.candsWith(
+      in.e, VectorQueries.gateFitCents(in.e, k.toInt, in.n), in.probes, in.n))
 
   val all: Seq[GateCurve] = Seq(Probe, Mass, K)
 

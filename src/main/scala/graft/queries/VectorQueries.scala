@@ -764,7 +764,7 @@ object VectorQueries {
     * the pinned property) is guaranteed by identical operation order and
     * the droundD≡dround property.
     */
-  private def centroidCands(cents: Array[(Int, Seq[Double])]): Column =
+  private[queries] def centroidCands(cents: Array[(Int, Seq[Double])]): Column =
     centroidDists(col("vec"), cents)
 
   /** The literal unroll — parity oracle for the native
@@ -1863,8 +1863,8 @@ object VectorQueries {
   // new corpus — the sweep is cheap relative to one production run and
   // the curve is corpus-specific state, not a universal constant.
   //
-  // The skew is NOT an under-iteration artifact (tools/CellBalance,
-  // BENCH_NOTES.md): at n=20k/K=142 the median cell holds ONE vector
+  // The skew is NOT an under-iteration artifact (BENCH_NOTES.md; the
+  // GateResolve tool prints a corpus's home-mass distribution): at n=20k/K=142 the median cell holds ONE vector
   // and the top-16 cells hold 56.4% of the corpus at 3 Lloyd iters —
   // and still 52.2% at 16 iters. Argmin cells on distance-concentrated
   // data are intrinsically mass-skewed. If a corpus needs a cost
@@ -1873,7 +1873,7 @@ object VectorQueries {
   // of a fixed cell count — still deterministic and SQL-replicable via
   // a window over the ranked cells) trades recall for a pinned scan
   // fraction. That rule is SHIPPED as the oracle-checked qe15c
-  // twin ([[gateCandsMassBudget]] at [[GateMassFrac]]); the measured
+  // twin ([[GateRule.Mass]] at [[GateMassFrac]]); the measured
   // equivalence (recall is a function of scanned mass — at equal mass
   // the two rules agree to 3dp) is in gates/r14/mass_sweep_sf.txt.
   private[graft] val GateProbes = 16
@@ -1888,9 +1888,7 @@ object VectorQueries {
     * corpus — gates/r14), so on the tuned corpus the sized build and
     * the constant build coincide, while a corpus whose curve certifies
     * a CHEAPER budget at the target (e.g. sf0.01: P=8 at 0.738)
-    * actually gets the cheaper index. Override per run with the
-    * `SPARK_GRAFT_GATE_TARGET` env knob (same operator family as
-    * SPARK_GRAFT_CPUS/SHUFFLE).
+    * actually gets the cheaper index.
     */
   private[graft] val GateRecallTarget = 0.70
 
@@ -1909,34 +1907,6 @@ object VectorQueries {
     * binds only on genuine collapse.
     */
   private[graft] val GateSecondaryMin = 0.50
-
-  private[graft] def gateTarget: Double =
-    sys.env.get("SPARK_GRAFT_GATE_TARGET").map { v =>
-      val t = scala.util.Try(v.trim.toDouble).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_GATE_TARGET must be a recall fraction (got '$v')"))
-      require(t > 0.0 && t <= 1.0,
-        s"SPARK_GRAFT_GATE_TARGET must be in (0, 1] (got $t)")
-      t
-    }.getOrElse(GateRecallTarget)
-
-  /** The probe budget the production gate actually builds with: the
-    * cheapest budget the persisted, staleness-guarded probe curve
-    * certifies at [[gateTarget]] when such a curve exists for this
-    * corpus; the static [[GateProbes]] otherwise (no curve, stale
-    * curve, or no swept budget reaching the target — escalating to a
-    * budget the curve does NOT certify would silently miss the target,
-    * so the fallback is the documented constant, not the largest swept
-    * value). Memoized per corpus, like every [[GateCurve.resolved]].
-    */
-  private[graft] def resolvedGateProbes(dir: String): Int =
-    GateCurve.Probe.resolved(dir, GateProbes).toInt
-
-  /** [[resolvedGateProbes]]'s mass-budget twin: cheapest certified
-    * scanned-mass fraction at [[gateTarget]], else [[GateMassFrac]].
-    */
-  private[graft] def resolvedGateMassFrac(dir: String): Double =
-    GateCurve.Mass.resolved(dir, GateMassFrac)
 
   /** Spec hook: drop memoized sizing decisions (a test that plants a
     * curve, resolves, then plants a different curve needs the second
@@ -1967,41 +1937,32 @@ object VectorQueries {
   private[graft] val GateSkewFactor = 2.0
 
   /** The dispatch rule as a pure function of the fit's home-mass
-    * distribution (spec-pinned both ways in GateSizingSpec): true =
-    * use the mass-budgeted gate. K ≤ P means the gate probes every
-    * cell — fixed-P is exact AND cost-capped there, so it wins by
-    * construction.
+    * distribution (spec-pinned both ways in GateSizingSpec). K ≤ P means
+    * the gate probes every cell: fixed-P is exact AND cost-capped there,
+    * so it wins by construction.
     */
-  private[graft] def gateRuleFor(masses: Seq[Long], n: Long, probes: Int, k: Int): Boolean =
-    k > probes && n > 0 && {
+  private[graft] def gateRuleFor(masses: Seq[Long], n: Long, probes: Int, k: Int): GateRule =
+    if (k > probes && n > 0 && {
       val topP = masses.sorted(Ordering[Long].reverse).take(probes).map(_.toDouble).sum
       topP / n > GateSkewFactor * probes.toDouble / k
-    }
+    }) GateRule.Mass
+    else GateRule.Fixed
 
   private val resolvedRule =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    new java.util.concurrent.ConcurrentHashMap[String, GateRule]()
 
   /** Production dispatch for this corpus: measure the production fit's
-    * home-mass skew once per JVM and pick the rule ([[gateRuleFor]]).
-    * `SPARK_GRAFT_GATE_RULE` ∈ {auto, fixed, mass} forces a side (env,
-    * not session conf, so the oracle dump — which has no session — and
-    * the build read the same switch). Memoized like the sizing: one
-    * Verify process decides once and both the engine run and the
-    * dumped oracle SQL see that decision.
+    * home-mass skew once per JVM and pick the rule ([[gateRuleFor]] at
+    * the resolved probe budget). Memoized like the sizing: one Verify
+    * process decides once and both the engine run and the dumped oracle
+    * SQL see that decision.
     */
-  private[graft] def gateUseMass(s: SparkSession, dir: String): Boolean =
-    resolvedRule.computeIfAbsent(dir, _ => java.lang.Boolean.valueOf {
-      sys.env.getOrElse("SPARK_GRAFT_GATE_RULE", "auto") match {
-        case "fixed" => false
-        case "mass" => true
-        case "auto" =>
-          val masses = gateHomeMasses(s, dir).collect().map(_.getLong(1)).toSeq
-          val n = masses.sum
-          gateRuleFor(masses, n, resolvedGateProbes(dir), gateK(n))
-        case other => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_GATE_RULE must be auto|fixed|mass (got '$other')")
-      }
-    }).booleanValue
+  private[graft] def gateRule(s: SparkSession, dir: String): GateRule =
+    resolvedRule.computeIfAbsent(dir, _ => {
+      val masses = gateHomeMasses(s, dir)
+      val n = masses.sum
+      gateRuleFor(masses, n, GateRule.Fixed.resolved(dir).toInt, gateK(n))
+    })
 
   /** The decision already made for `dir` this JVM, if any — what the
     * dump-time oracle reads (the engine ran qe15d earlier in the same
@@ -2009,8 +1970,8 @@ object VectorQueries {
     * and the entry defaults to the fixed-P arm, matching the engine's
     * no-information default).
     */
-  private[graft] def gateRuleDecided(dir: String): Option[Boolean] =
-    Option(resolvedRule.get(dir)).map(_.booleanValue)
+  private[graft] def gateRuleDecided(dir: String): Option[GateRule] =
+    Option(resolvedRule.get(dir))
 
   /** √n-list IVF sizing: candidate volume per query is P·n/K, so
     * K ~ √n holds total work at P·n^1.5. Floor 8 keeps the quantizer
@@ -2022,76 +1983,33 @@ object VectorQueries {
   private[graft] def gateK(n: Long): Int =
     math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
 
-  /** Persisted gate-index location for a data dir (tmpdir-keyed — the
-    * engine must not write into the read-only data roots; parameter-
-    * fingerprinted so a probe-budget/fit-parameter change forces a
-    * rebuild instead of silently serving an old index). The
-    * fingerprint embeds the RESOLVED probe budget, so a sized
-    * build and the constant fallback build never share a directory —
-    * when a new sweep re-sizes the gate, the old index is simply
-    * orphaned, never served.
-    */
-  def gateIndexPath(dir: String): String =
-    HadoopFs.indexPath(
-      "gate", dir, resolvedGateProbes(dir), GateFitIters, GateFitPerCell, "sqrtK")
-
-  /** Directed, labeled, cosine-scored candidate frame shared by the
-    * three gated twins: (ida, la, idb, lb, cos) where idb's home cell
-    * is among ida's probed cells. Map-only probe/home assignment
-    * (broadcast centroids), one equi-join on the cell id. Frame-
-    * parameterized so the partitioning-invariance property and the
-    * PlanSpec build-plan pin can run it on planted corpora.
-    */
-  private[graft] def gateCandsFrom(e: DataFrame, k: Int, probes: Int,
-      nHint: Long = -1L): DataFrame = {
-    // nHint: gateCands already counted the table to size K — threading
-    // it avoids a second full count job per index build
-    val n = if (nHint >= 0L) nHint else e.count()
-    gateCandsWithCents(e, gateFitCents(e, k, n), probes)
-  }
-
   /** The gate's quantizer fit alone (strided sample + Lloyd refits) —
-    * split from the probe stage so the probe-budget sweep
-    * ([[GateCurve.Probe]]) fits ONCE and re-probes at each budget (the
-    * fit does not depend on the probe count).
+    * split from the probe stage so a budget sweep ([[GateCurve]]) fits
+    * ONCE and re-probes at each budget (the fit does not depend on the
+    * probe rule or its budget).
     */
-  private[graft] def gateFitCents(e: DataFrame, k: Int, n: Long,
-      iters: Int = GateFitIters): Array[(Int, Seq[Double])] = {
+  private[graft] def gateFitCents(e: DataFrame, k: Int, n: Long): Array[(Int, Seq[Double])] = {
     val stride = math.max(1L, n / (GateFitPerCell.toLong * k))
     val fit =
       if (stride == 1L) e else e.filter(pmod(col("vec_id"), lit(stride)) === 0)
-    kmeansCentroids(fit.select("vec_id", "vec", "nrm"), k, iters)
+    kmeansCentroids(fit.select("vec_id", "vec", "nrm"), k, GateFitIters)
   }
 
-  /** Probe stage over a fitted quantizer: home every vector in its
-    * argmin cell, probe each vector's `probes` nearest cells, equi-join
-    * on the cell id, score candidates by 6dp cosine.
+  /** Shared unordered-pair scoring tail of every [[GateRule]]: directed
+    * (cid, ida) probes × (cid, idb) homes → each unordered pair
+    * cosine-scored once and mirrored into its surviving directions.
     */
-  private[graft] def gateCandsWithCents(e: DataFrame,
-      cents: Array[(Int, Seq[Double])], probes: Int): DataFrame = {
+  private[queries] def gateScoreCands(e: DataFrame, probed: DataFrame,
+      home: DataFrame): DataFrame = {
     // the candidate join runs on bare ids —
     // no embedding ever rides the explode or the cid shuffle — and each
     // UNORDERED pair is cosine-scored exactly once, then mirrored into
     // whichever directions survived the gate. At P ≫ 1 both directions
     // almost always survive (every vector probes its own home cell), so
-    // the old directed frame scored nearly every cosine twice. dot() is
+    // a directed frame would score nearly every cosine twice. dot() is
     // an index-ordered fold of commutative products, so cos(a,b) is
     // bit-equal to cos(b,a): the directed output rows — and the DuckDB
     // oracle hashes over them — are unchanged by construction.
-    val cands = centroidCands(cents)
-    val home = e.withColumn("cid", array_min(cands).getField("cid"))
-      .select(col("cid"), col("vec_id").as("idb"))
-    val probed = e.withColumn("pc", explode(slice(array_sort(cands), 1, probes)))
-      .select(col("pc").getField("cid").as("cid"), col("vec_id").as("ida"))
-    gateScoreCands(e, probed, home)
-  }
-
-  /** Shared unordered-pair scoring tail: directed (cid, ida) probes ×
-    * (cid, idb) homes → each unordered pair cosine-scored once and
-    * mirrored into its surviving directions.
-    */
-  private def gateScoreCands(e: DataFrame, probed: DataFrame,
-      home: DataFrame): DataFrame = {
     val pairs = probed.join(home, Seq("cid"))
       .filter(col("ida") =!= col("idb"))
       .select(least(col("ida"), col("idb")).as("lo"),
@@ -2113,64 +2031,6 @@ object VectorQueries {
           col("lo").as("idb"), col("l_lo").as("lb"), col("cos")))
   }
 
-  /** Mass-budgeted probe (the design direction recorded at
-    * [[GateProbes]], in production as the qe15c/qe22c/
-    * qe25c trio): instead of a fixed P nearest cells, each vector
-    * probes its distance-ranked cells until the cumulative HOME MASS of
-    * the cells already taken reaches ⌈massFrac·n⌉ (the nearest cell is
-    * always taken). On mass-skewed fits this pins the scanned fraction
-    * by construction — to within the last cell's overshoot — which is
-    * the guarantee the fixed-P rule loses when megacells form.
-    * Deterministic (ranked cells + a running-mass cut) and
-    * SQL-replicable ([[gateMassCtes]], which keeps the equivalent
-    * window-cumsum formulation — the selected cells are identical).
-    *
-    * Scale class: the cut is MAP-ONLY. The
-    * per-cell home-mass table is K rows — the same driver-sized scalar
-    * class as the centroids themselves — collected once and inlined as
-    * an array literal indexed by cell id, and each vector's ranked
-    * cell list is cut by a running-sum `aggregate` over its own sorted
-    * candidate array inside the projection. A window-cumsum formulation
-    * shuffled n·K = n^1.5 ranked rows into a per-vector window cumsum;
-    * now no Exchange exists between probe assignment and the candidate
-    * equi-join (PlanSpec pins the build plan Window-free). Empty cells
-    * (no home mass) may survive the cut where the old inner mass join
-    * dropped them — they carry zero mass (identical running sums) and
-    * zero candidates (no home rows to match), so the scored frame is
-    * identical; only a few zero-match probe rows ride the join.
-    * tools/GateSweep's SPARK_GRAFT_MASS_BUDGETS mode measures the
-    * recall/mass curve.
-    */
-  private[graft] def gateCandsMassBudget(e: DataFrame,
-      cents: Array[(Int, Seq[Double])], massFrac: Double, n: Long): DataFrame = {
-    val cands = centroidCands(cents)
-    val home = e.withColumn("cid", array_min(cands).getField("cid"))
-      .select(col("cid"), col("vec_id").as("idb"))
-    val massByCid: Array[Long] = {
-      val arr = new Array[Long](cents.map(_._1).max + 1)
-      home.groupBy("cid").agg(count(lit(1)).as("mass"))
-        .collect().foreach(r => arr(r.getInt(0)) = r.getLong(1))
-      arr
-    }
-    val budget = math.max(1L, math.ceil(massFrac * n).toLong)
-    val mlit = typedLit(massByCid.toSeq)
-    // running cut over the sorted (distance, cid) array: the rk=1 home
-    // cell is always taken (empty keep list), then a cell is kept while
-    // the cumulative home mass BEFORE it is under the budget
-    val kept = aggregate(
-      array_sort(cands),
-      struct(lit(0L).as("cum"), typedLit(Seq.empty[Int]).as("keep")),
-      (acc, x) => struct(
-        (acc.getField("cum") + element_at(mlit, x.getField("cid") + 1)).as("cum"),
-        when(size(acc.getField("keep")) === 0 || acc.getField("cum") < budget,
-          concat(acc.getField("keep"), array(x.getField("cid"))))
-          .otherwise(acc.getField("keep")).as("keep")),
-      acc => acc.getField("keep"))
-    val probed = e.select(col("vec_id").as("ida"), explode(kept).as("cid"))
-      .select("cid", "ida")
-    gateScoreCands(e, probed, home)
-  }
-
   /** The three exact-twin anchors every gate sweep measures against,
     * materialized once (they are the sweep's dominant cost), returned
     * as a measurement closure: candidate frame in → (scored rows,
@@ -2189,12 +2049,8 @@ object VectorQueries {
     candsIn => {
       val cands = candsIn.localCheckpoint()
       val rows = cands.count()
-      val g15 = cands
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("ida").orderBy(col("cos").desc, col("idb").asc)))
-        .filter(col("rn") <= DensityK).select("ida", "idb")
-      val r15 = exact15.join(g15, Seq("ida", "idb"), "left_semi").count().toDouble /
-        math.max(n15, 1L)
+      val r15 = exact15.join(topKPairs(cands), Seq("ida", "idb"), "left_semi")
+        .count().toDouble / math.max(n15, 1L)
       val g22 = mutualMarginFrom(cands.select("ida", "idb", "cos"))
         .select("vec_a", "vec_b")
       val r22 = exact22.join(g22, Seq("vec_a", "vec_b"), "left_semi").count().toDouble /
@@ -2238,48 +2094,21 @@ object VectorQueries {
           s"${r._3}/${r._4}/${r._5} >= ${base._3}/${base._4}/${base._5})")
     }
 
-  /** The corpus gate at its production sizing (K = ⌈√n⌉, P =
-    * [[resolvedGateProbes]] — curve-sized when a current sweep exists
-    * for this corpus, the [[GateProbes]] constant otherwise) — what
-    * [[gateBuild]] persists and PlanSpec pins.
+  /** Home-cell mass per non-empty cell of the PRODUCTION gate fit,
+    * heaviest first: the dispatch signal of [[gateRule]], and what
+    * tools/GateResolve prints (a skewed mass distribution, not the probe
+    * rule, is what inflates the scan past the balanced P·n/K model on
+    * near-uniform corpora).
     */
-  private[graft] def gateCands(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val n = Tables.embeddings(s, dir).count()
-    gateCandsFrom(e, gateK(n), resolvedGateProbes(dir), n)
-  }
-
-  /** Offline build of the shared gate index (one fit + one scored
-    * equi-join, written once; all three twins read it).
-    */
-  def gateBuild(s: SparkSession, dir: String, path: String): Unit =
-    gateCands(s, dir).write.mode("overwrite").parquet(s"$path/cands")
-
-  val Gate: PersistedIndex =
-    PersistedIndex("gate", "embeddings", "cands", gateIndexPath, gateBuild)
-
-  /** Home-cell mass per cell of the PRODUCTION gate fit — the
-    * tools/CellBalance diagnostic behind the envelope note (a
-    * skewed mass distribution, not the probe rule, is what inflates
-    * the scan past the balanced P·n/K model on near-uniform corpora).
-    */
-  private[graft] def gateHomeMasses(s: SparkSession, dir: String,
-      iters: Int = GateFitIters): DataFrame = {
+  private[graft] def gateHomeMasses(s: SparkSession, dir: String): Seq[Long] = {
     val e = embs(s, dir)
     val n = Tables.embeddings(s, dir).count()
     // the PRODUCTION fit path (a copy of the stride/sample
     // rule here would silently diverge from what the gate actually
     // runs — the diagnostic must measure the production quantizer)
-    val cents = gateFitCents(e, gateK(n), n, iters)
-    e.withColumn("cid", array_min(centroidCands(cents)).getField("cid"))
-      .groupBy("cid").agg(count(lit(1)).as("mass"))
-  }
-
-  private def gatedSym(s: SparkSession, dir: String): DataFrame = {
-    // the probe path may never touch embs(), so register the native
-    // cosine/dot functions explicitly (same contract as qe5b)
-    registerNative(s)
-    HadoopFs.parquet(s, s"${Gate.ensure(s, dir)}/cands")
+    val cents = gateFitCents(e, gateK(n), n)
+    GateRule.homes(e, centroidCands(cents)).groupBy("cid").count()
+      .collect().map(_.getLong(1)).sorted(Ordering[Long].reverse).toSeq
   }
 
   /** qe15's production twin: K-th-NN distance + top-2% OOD flag over
@@ -2295,11 +2124,11 @@ object VectorQueries {
     * still lost the zero-candidate case from the denominator).
     */
   def qe15b(s: SparkSession, dir: String): DataFrame =
-    densityTailFrom(s, dir, gatedSym(s, dir))
+    densityTailFrom(s, dir, GateRule.Fixed.read(s, dir))
 
   /** qe15's census/OOD tail over ANY directed scored candidate frame —
-    * shared verbatim by the fixed-P twin (qe15b) and the mass-budgeted
-    * twin (qe15c), so the two differ in candidate GENERATION only.
+    * shared verbatim by every [[GateRule]]'s twin, so the twins differ
+    * in candidate GENERATION only.
     */
   private def densityTailFrom(s: SparkSession, dir: String,
       sym: DataFrame): DataFrame = {
@@ -2334,47 +2163,17 @@ object VectorQueries {
     */
   private[graft] val GateMassFrac = 0.35
 
-  /** Persisted mass-budgeted gate index (the qe15c candidate frame) —
-    * fingerprinted on its own family + the RESOLVED fraction, like
-    * [[gateIndexPath]].
-    */
-  def gateMassIndexPath(dir: String): String =
-    HadoopFs.indexPath(
-      "gatemass", dir, resolvedGateMassFrac(dir), GateFitIters, GateFitPerCell, "sqrtK")
-
-  /** Offline build of the mass-budgeted candidate frame (same fit as
-    * the fixed-P gate; only the ranked-cell cut rule differs). Sized
-    * from the persisted mass sweep when one exists ([[resolvedGateMassFrac]]).
-    */
-  private[graft] def gateMassCands(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir)
-    val n = Tables.embeddings(s, dir).count()
-    gateCandsMassBudget(e, gateFitCents(e, gateK(n), n), resolvedGateMassFrac(dir), n)
-  }
-
-  def gateMassBuild(s: SparkSession, dir: String, path: String): Unit =
-    gateMassCands(s, dir).write.mode("overwrite").parquet(s"$path/cands")
-
-  val GateMass: PersistedIndex =
-    PersistedIndex("gatemass", "embeddings", "cands", gateMassIndexPath, gateMassBuild)
-
-  private def gatedMassSym(s: SparkSession, dir: String): DataFrame = {
-    registerNative(s)
-    HadoopFs.parquet(s, s"${GateMass.ensure(s, dir)}/cands")
-  }
-
   /** qe15b's mass-budgeted sibling (the production form of the
     * envelope note at [[GateProbes]]): identical density/OOD tail,
-    * candidate generation by [[gateCandsMassBudget]] at
-    * [[GateMassFrac]]. The operating difference is the COST contract:
-    * qe15b's fixed P=16 probes scan P·n/K on balanced fits but inflate
-    * to >50% of all pairs when argmin cells go mass-skewed (measured at
-    * n=20k, gates/r14), while qe15c's scanned mass is ⌈0.35·n⌉ per
-    * query regardless of the fit's mass distribution — recall floats,
-    * cost does not. Pick per corpus by reading the persisted sweeps.
+    * candidate generation by [[GateRule.Mass]]. The operating difference
+    * is the COST contract: qe15b's fixed P=16 probes scan P·n/K on
+    * balanced fits but inflate to >50% of all pairs when argmin cells
+    * go mass-skewed (measured at n=20k, gates/r14), while qe15c's
+    * scanned mass is ⌈0.35·n⌉ per query regardless of the fit's mass
+    * distribution — recall floats, cost does not.
     */
   def qe15c(s: SparkSession, dir: String): DataFrame =
-    densityTailFrom(s, dir, gatedMassSym(s, dir))
+    densityTailFrom(s, dir, GateRule.Mass.read(s, dir))
 
   /** The AUTO-DISPATCHED gated density twin:
     * measures the production fit's home-mass skew and serves whichever
@@ -2388,96 +2187,66 @@ object VectorQueries {
     * the dump-time oracle ([[gateOracle]]).
     */
   def qe15d(s: SparkSession, dir: String): DataFrame =
-    if (gateUseMass(s, dir)) qe15c(s, dir) else qe15b(s, dir)
+    densityTailFrom(s, dir, gateRule(s, dir).read(s, dir))
 
-  /** The mutual-NN family's auto-dispatched entry (qe15d recorded the
-    * rule's decision for the density family only — a corpus onboarding
-    * should read ONE oracle-checked receipt per gated family). The
-    * dispatch signal is corpus-level (the production fit's home-mass
-    * skew), so all three families share the memoized decision; what this
-    * entry adds is the hash-checked receipt that the mutual-NN TAIL
-    * routes through it too.
+  /** The mutual-NN family's auto-dispatched entry. The dispatch signal is
+    * corpus-level (the production fit's home-mass skew), so all three
+    * families share the memoized decision; what this entry adds is the
+    * hash-checked receipt that the mutual-NN TAIL routes through it too.
     */
   def qe22d(s: SparkSession, dir: String): DataFrame =
-    if (gateUseMass(s, dir)) qe22c(s, dir) else qe22b(s, dir)
+    mutualMarginFrom(gateRule(s, dir).read(s, dir).select("ida", "idb", "cos"))
 
   /** The confusion family's auto-dispatched entry — see [[qe22d]]. */
   def qe25d(s: SparkSession, dir: String): DataFrame =
-    if (gateUseMass(s, dir)) qe25c(s, dir) else qe25b(s, dir)
+    confusionFrom(knnPredFrom(gateRule(s, dir).read(s, dir)))
 
   /** qe22b's mass-budgeted sibling: identical mutual-top-1 ratio-margin
-    * tail over the [[GateMassFrac]] candidate frame (one shared
-    * persisted index serves all three c-twins, the b-trio lifecycle).
+    * tail over the [[GateRule.Mass]] candidate frame (one persisted
+    * index serves all three c-twins).
     */
   def qe22c(s: SparkSession, dir: String): DataFrame =
-    mutualMarginFrom(gatedMassSym(s, dir).select("ida", "idb", "cos"))
+    mutualMarginFrom(GateRule.Mass.read(s, dir).select("ida", "idb", "cos"))
 
   /** qe25b's mass-budgeted sibling: identical vote/confusion tail. */
   def qe25c(s: SparkSession, dir: String): DataFrame =
-    confusionFrom(knnPredFrom(gatedMassSym(s, dir)))
-
-  private[graft] def qe25PredMassGated(s: SparkSession, dir: String): DataFrame =
-    knnPredFrom(gatedMassSym(s, dir))
+    confusionFrom(knnPredFrom(GateRule.Mass.read(s, dir)))
 
   /** qe22's production twin: mutual-top-1 ratio-margin pairs over the
     * gated candidates (both directions must survive the gate AND be
     * each other's top-1 — the mutual check is unchanged).
     */
   def qe22b(s: SparkSession, dir: String): DataFrame =
-    mutualMarginFrom(gatedSym(s, dir).select("ida", "idb", "cos"))
+    mutualMarginFrom(GateRule.Fixed.read(s, dir).select("ida", "idb", "cos"))
 
   /** qe25's production twin: leave-one-out majority-label confusion
     * matrix voted over the gated candidate top-K.
     */
   def qe25b(s: SparkSession, dir: String): DataFrame =
-    confusionFrom(knnPredFrom(gatedSym(s, dir)))
+    confusionFrom(knnPredFrom(GateRule.Fixed.read(s, dir)))
 
   /** Recall-spec probes: per-vector top-[[DensityK]] neighbor id pairs
-    * on the exact and gated paths (ida, idb), and the per-vector label
-    * predictions on both paths.
+    * (ida, idb) and per-vector label predictions, on the exact path and
+    * on one gate rule's persisted candidates.
     */
+  private def topKPairs(sym: DataFrame): DataFrame =
+    sym.withColumn("rn", row_number().over(
+        Window.partitionBy("ida").orderBy(col("cos").desc, col("idb").asc)))
+      .filter(col("rn") <= DensityK).select("ida", "idb")
+
   private[graft] def knnPairsExact(s: SparkSession, dir: String): DataFrame =
-    labeledSymExact(s, dir)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("ida").orderBy(col("cos").desc, col("idb").asc)))
-      .filter(col("rn") <= DensityK).select("ida", "idb")
+    topKPairs(labeledSymExact(s, dir))
 
-  private[graft] def knnPairsGated(s: SparkSession, dir: String): DataFrame =
-    gatedSym(s, dir)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("ida").orderBy(col("cos").desc, col("idb").asc)))
-      .filter(col("rn") <= DensityK).select("ida", "idb")
-
-  private[graft] def knnPairsMassGated(s: SparkSession, dir: String): DataFrame =
-    gatedMassSym(s, dir)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("ida").orderBy(col("cos").desc, col("idb").asc)))
-      .filter(col("rn") <= DensityK).select("ida", "idb")
+  private[graft] def knnPairsAt(s: SparkSession, dir: String, rule: GateRule): DataFrame =
+    topKPairs(rule.read(s, dir))
 
   private[graft] def qe25PredExact(s: SparkSession, dir: String): DataFrame =
     knnPredFrom(labeledSymExact(s, dir))
 
-  private[graft] def qe25PredGated(s: SparkSession, dir: String): DataFrame =
-    knnPredFrom(gatedSym(s, dir))
+  private[graft] def qe25PredAt(s: SparkSession, dir: String, rule: GateRule): DataFrame =
+    knnPredFrom(rule.read(s, dir))
 
-  /** DuckDB CTE chain replicating [[gateCands]] bit-for-bit — what moves
-    * the three gated twins from sketch-graded to HASH-MATCHED (the qm9
-    * "structural oracle" discipline): the gate's quantizer is the same
-    * deterministic seeded-Lloyd fit the qe9/qe10 oracles already
-    * replicate ([[kmeansCtes]]), just at K = ⌈√n⌉ with [[GateFitIters]]
-    * refits — so the ENTIRE candidate-generation path (seeds → Lloyd loop
-    * → argmin homes → top-[[GateProbes]] probed cells → cell equi-join →
-    * 6dp cosine) is expressible as SQL over the same parquet, and each
-    * twin's tail is its exact anchor's oracle tail verbatim. Ends at
-    * `gcand` = (ida, la, idb, lb, cos), the directed candidate frame.
-    *
-    * Two assumptions, both true at every oracle scale (sf0.001/0.01/
-    * 0.1) and asserted nowhere else, so recorded here: the fit stride
-    * is 1 (n ≤ [[GateFitPerCell]]·K ⇔ n ≤ 64·⌈√n⌉ ⇔ n ≤ ~4.2M — the
-    * strided fit only engages beyond that), and seed relabeling is by
-    * vec_id order (exact for any ids; the row_number form below
-    * replicates it generally).
-    */
+  /** Rounded squared L2 distance, the SQL twin of [[centroidCands]]. */
   private def d2Sql(v: String, c: String) =
     s"""round(list_dot_product($v, $v) - 2 * list_dot_product($v, $c)
        |        + list_dot_product($c, $c), 6)""".stripMargin
@@ -2487,10 +2256,10 @@ object VectorQueries {
     * refits follow, and the chain ends at `af` — every vector's rank
     * over the FINAL centroids by the 6dp-rounded squared-L2 (rk = 1 is
     * the argmin home; rk ≤ P is the multi-probe list). Used by the
-    * gate oracle (K = ⌈√n⌉, [[GateFitIters]]) and the IVF oracle
-    * (K = [[IVF_NLIST]], [[IvfFitIters]]).
+    * gate oracle ([[GateRule.ctes]]: K = ⌈√n⌉, [[GateFitIters]]) and the
+    * IVF oracle (K = [[IVF_NLIST]], [[IvfFitIters]]).
     */
-  private def lloydCtes(kpBody: String, iters: Int): String = {
+  private[queries] def lloydCtes(kpBody: String, iters: Int): String = {
     val head =
       s"""WITH e AS (
          |  SELECT vec_id, label,
@@ -2526,23 +2295,6 @@ object VectorQueries {
     (head +: its :+ af).mkString(",\n")
   }
 
-  private[graft] def gateCtes(probes: Int = GateProbes): String = {
-    val fit = lloydCtes(
-      "SELECT greatest(8, CAST(ceil(sqrt(count(*))) AS INT)) AS k FROM e",
-      GateFitIters)
-    s"""$fit,
-       |home AS (
-       |  SELECT n.vec_id AS idb, n.label AS lb, n.vec AS vb, n.nrm AS nb, af.cid
-       |  FROM af JOIN n ON af.vec_id = n.vec_id WHERE af.rk = 1),
-       |probed AS (
-       |  SELECT n.vec_id AS ida, n.label AS la, n.vec AS va, n.nrm AS na, af.cid
-       |  FROM af JOIN n ON af.vec_id = n.vec_id WHERE af.rk <= $probes),
-       |gcand AS (
-       |  SELECT ida, la, idb, lb,
-       |         round(list_dot_product(va, vb) / (na * nb), 6) AS cos
-       |  FROM probed JOIN home USING (cid) WHERE ida <> idb)""".stripMargin
-  }
-
   /** qe5/qe5b oracle: the deterministic IVF — fixed-K Lloyd fit,
     * argmin inverted lists, queries probe their [[IVF_NPROBE]] nearest
     * cells by the same rounded distance, exact cosine rank inside the
@@ -2568,59 +2320,10 @@ object VectorQueries {
        |WHERE rnk <= $K""".stripMargin
   }
 
-  /** qe15b oracle: the gate chain + qe15's density/OOD tail, with the
-    * twin's own census semantics (max-rank fallback when a vector has
-    * fewer than [[DensityK]] gated candidates; distance 2.0 when it has
-    * none).
-    */
-  private lazy val qe15bSql = densityTailSql(gateCtes())
-
-  /** The mass-budgeted gate's candidate chain in SQL ([[gateCandsMassBudget]]
-    * at [[GateMassFrac]]): the same Lloyd fit and `af` ranked-cell frame
-    * as [[gateCtes]], then each vector's ranked list is cut by a window
-    * cumsum of home-cell mass instead of `rk ≤ P` — empty cells drop out
-    * of the ranking (they carry no mass and no candidates), the rk = 1
-    * home cell is always taken, and a cell is probed while the mass
-    * BEFORE it is under ⌈[[GateMassFrac]]·n⌉. The budget is computed in
-    * DOUBLE on both engines (a bare 0.35 literal is DECIMAL in DuckDB
-    * and would ceil differently on FP-edge products).
-    */
-  private[graft] def gateMassCtes(massFrac: Double = GateMassFrac): String = {
-    val fit = lloydCtes(
-      "SELECT greatest(8, CAST(ceil(sqrt(count(*))) AS INT)) AS k FROM e",
-      GateFitIters)
-    s"""$fit,
-       |home AS (
-       |  SELECT n.vec_id AS idb, n.label AS lb, n.vec AS vb, n.nrm AS nb, af.cid
-       |  FROM af JOIN n ON af.vec_id = n.vec_id WHERE af.rk = 1),
-       |mass AS (
-       |  SELECT cid, CAST(count(*) AS BIGINT) AS mass
-       |  FROM af WHERE rk = 1 GROUP BY cid),
-       |bdg AS (
-       |  SELECT greatest(1, CAST(ceil(CAST($massFrac AS DOUBLE) * count(*))
-       |                          AS BIGINT)) AS b FROM e),
-       |ranked AS (
-       |  SELECT af.vec_id, af.cid, af.rk,
-       |         coalesce(sum(m.mass) OVER (PARTITION BY af.vec_id
-       |           ORDER BY af.rk
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |           AS cum_before
-       |  FROM af JOIN mass m USING (cid)),
-       |probed AS (
-       |  SELECT n.vec_id AS ida, n.label AS la, n.vec AS va, n.nrm AS na, r.cid
-       |  FROM ranked r JOIN n ON r.vec_id = n.vec_id, bdg
-       |  WHERE r.rk = 1 OR r.cum_before < bdg.b),
-       |gcand AS (
-       |  SELECT ida, la, idb, lb,
-       |         round(list_dot_product(va, vb) / (na * nb), 6) AS cos
-       |  FROM probed JOIN home USING (cid) WHERE ida <> idb)""".stripMargin
-  }
-
-  private lazy val qe15cSql = densityTailSql(gateMassCtes())
-
-  /** qe15's density/OOD tail over any `gcand` chain — shared by the
-    * fixed-P (qe15b) and mass-budgeted (qe15c) oracles, mirroring
-    * [[densityTailFrom]] on the engine side.
+  /** qe15's density/OOD tail over any `gcand` chain ([[GateRule.ctes]]),
+    * with the twin's own census semantics (max-rank fallback when a
+    * vector has fewer than [[DensityK]] gated candidates; distance 2.0
+    * when it has none), mirroring [[densityTailFrom]] on the engine side.
     */
   private def densityTailSql(ctes: String): String =
     s"""$ctes,
@@ -2642,12 +2345,7 @@ object VectorQueries {
        |FROM (SELECT *, CAST(row_number() OVER (
        |        ORDER BY knn_dist DESC, vec_id) AS INT) AS grnk FROM census), t""".stripMargin
 
-  /** qe22b oracle: the gate chain + qe22's mutual-top-1 ratio-margin
-    * tail over the directed candidates.
-    */
-  private lazy val qe22bSql = mutualTailSql(gateCtes())
-  private lazy val qe22cSql = mutualTailSql(gateMassCtes())
-
+  /** qe22's mutual-top-1 ratio-margin tail over any `gcand` chain. */
   private def mutualTailSql(ctes: String): String =
     s"""$ctes,
        |rk2 AS (
@@ -2668,10 +2366,7 @@ object VectorQueries {
        |JOIN top ta ON vec_a = ta.ida
        |JOIN top tb ON vec_b = tb.ida""".stripMargin
 
-  /** qe25b oracle: the gate chain + qe25's vote/confusion tail. */
-  private lazy val qe25bSql = confusionTailSql(gateCtes())
-  private lazy val qe25cSql = confusionTailSql(gateMassCtes())
-
+  /** qe25's vote/confusion tail over any `gcand` chain. */
   private def confusionTailSql(ctes: String): String =
     s"""$ctes,
        |knn AS (
@@ -3584,6 +3279,28 @@ object VectorQueries {
       dround(dot(col("vec"), typedLit(c)), 6).as(s"pc$i") }: _*)
   }
 
+  /** The nine gated-twin oracles (three tails × {fixed-P, mass-budget,
+    * dispatched}), generated AT DUMP TIME with the SAME resolved budgets
+    * the production builds used for this corpus: when Verify threads a
+    * concrete sf dir, each rule's budget is [[GateRule.resolved]],
+    * memoized per JVM, so the engine run earlier in the same Verify
+    * process built against the identical numbers. With no dir
+    * (SparkEntry.oracleSql) the documented constants are interpolated,
+    * matching the no-curve fallback build. The dispatched twins mirror
+    * the decision the engine memoized for this corpus earlier in the
+    * same JVM (unset = the fixed-P default the engine would also take).
+    */
+  def gateOracle(sfDir: Option[String]): Map[String, String] = {
+    val dispatched = sfDir.flatMap(gateRuleDecided).getOrElse(GateRule.Fixed)
+    val rules = Seq("b_gated" -> GateRule.Fixed, "c_massgated" -> GateRule.Mass,
+      "d_autogated" -> dispatched)
+    val tails = Seq[(String, String, String => String)](
+      ("qe15", "density", densityTailSql), ("qe22", "mutual_nn", mutualTailSql),
+      ("qe25", "confusion", confusionTailSql))
+    (for ((q, t, tail) <- tails; (arm, r) <- rules)
+      yield s"$q${arm}_$t" -> tail(r.ctes(sfDir.fold(r.fallback)(r.resolved)))).toMap
+  }
+
   /** The qe28b oracle, generated AT DUMP TIME from the persisted
     * sidecar of the sf dir Verify ran (the basis is runtime state, so
     * this SQL cannot be a compile-time constant — Verify threads the
@@ -3591,44 +3308,6 @@ object VectorQueries {
     * the driver then records the weaker rows-only check rather than a
     * false failure.
     */
-  /** The six gated-twin oracles, generated AT DUMP TIME with the SAME
-    * resolved budgets the production builds used for this corpus: when
-    * Verify threads a concrete sf dir, the
-    * probe count / mass fraction interpolated into the CTE chains is
-    * [[resolvedGateProbes]] / [[resolvedGateMassFrac]] — memoized per
-    * JVM, so the engine run earlier in the same Verify process built
-    * against the identical numbers. With no dir (the static
-    * [[oracle]] map / SparkEntry.oracleSql) the documented constants
-    * are interpolated, matching the no-curve fallback build.
-    */
-  def gateOracle(sfDir: Option[String]): Map[String, String] = {
-    val p = sfDir.map(resolvedGateProbes).getOrElse(GateProbes)
-    val f = sfDir.map(resolvedGateMassFrac).getOrElse(GateMassFrac)
-    Map(
-      "qe15b_gated_density" -> densityTailSql(gateCtes(p)),
-      "qe22b_gated_mutual_nn" -> mutualTailSql(gateCtes(p)),
-      "qe25b_gated_confusion" -> confusionTailSql(gateCtes(p)),
-      "qe15c_massgated_density" -> densityTailSql(gateMassCtes(f)),
-      "qe22c_massgated_mutual_nn" -> mutualTailSql(gateMassCtes(f)),
-      "qe25c_massgated_confusion" -> confusionTailSql(gateMassCtes(f)),
-      // the auto-dispatched twins' oracles mirror the decision the engine
-      // memoized for this corpus earlier in the same JVM (unset = the
-      // fixed-P default the engine would also take); one dispatched
-      // receipt per gated family — the corpus-level rule routes all three
-      "qe15d_autogated_density" ->
-        (if (sfDir.flatMap(gateRuleDecided).getOrElse(false))
-          densityTailSql(gateMassCtes(f))
-        else densityTailSql(gateCtes(p))),
-      "qe22d_autogated_mutual_nn" ->
-        (if (sfDir.flatMap(gateRuleDecided).getOrElse(false))
-          mutualTailSql(gateMassCtes(f))
-        else mutualTailSql(gateCtes(p))),
-      "qe25d_autogated_confusion" ->
-        (if (sfDir.flatMap(gateRuleDecided).getOrElse(false))
-          confusionTailSql(gateMassCtes(f))
-        else confusionTailSql(gateCtes(p))))
-  }
-
   def qe28bOracle(sfDir: Option[String]): Map[String, String] =
     sfDir.map(d => java.nio.file.Paths.get(s"${pcaIndexPath(d)}/basis.json"))
       .filter(java.nio.file.Files.exists(_))
@@ -3947,18 +3626,6 @@ object VectorQueries {
     "qe12_mmr_topk" -> qe12Sql,
     "qe13_hard_negatives" -> qe13Sql,
     "qe15_knn_density" -> qe15Sql,
-    // the gated twins' quantizer is the same
-    // deterministic seeded-Lloyd fit the qe9 oracle replicates, so the
-    // whole gate is SQL-expressible — sketch-graded no more
-    "qe15b_gated_density" -> qe15bSql,
-    // the mass-budgeted twins' cut rule is a window cumsum over
-    // the same ranked cells — the whole chain stays SQL-replicable,
-    // and the three c-twins share one gateMassCtes + the b-trio tails
-    "qe15c_massgated_density" -> qe15cSql,
-    "qe22c_massgated_mutual_nn" -> qe22cSql,
-    "qe25c_massgated_confusion" -> qe25cSql,
-    "qe22b_gated_mutual_nn" -> qe22bSql,
-    "qe25b_gated_confusion" -> qe25bSql,
     // the IVF quantizer is the same deterministic fit, so
     // the fused and persisted-probe paths hash-match one oracle, and
     // even the probe-sweep tuning curve is SQL-checkable

@@ -35,11 +35,12 @@ final case class PersistedIndex(
 }
 
 object PersistedIndex {
-  import graft.queries.{TextQueries => T, VectorQueries => V}
+  import graft.queries.{GateRule, TextQueries => T, VectorQueries => V}
 
   /** Every family, in the order an offline pre-build runs them (ivf and
     * pq before ivfpq, which merges them).
     */
   lazy val all: Seq[PersistedIndex] =
-    Seq(V.Ivf, T.Minhash, T.Bm25, V.Pq, V.IvfPq, V.Gate, V.GateMass, V.Pca, T.Bloom)
+    Seq(V.Ivf, T.Minhash, T.Bm25, V.Pq, V.IvfPq) ++ GateRule.all.map(_.index) ++
+      Seq(V.Pca, T.Bloom)
 }

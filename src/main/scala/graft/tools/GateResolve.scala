@@ -1,21 +1,25 @@
 package graft.tools
 
-import graft.queries.{GateCurve, VectorQueries}
+import graft.queries.{GateCurve, GateRule, VectorQueries}
 
 /** One-stop gate onboarding readout for a corpus: what the production
   * gate would ACTUALLY build here, from the committed curve registry and
-  * tmpdir cache as they stand. It prints the resolved probe budget and
-  * mass fraction ([[graft.queries.VectorQueries.resolvedGateProbes]],
-  * [[graft.queries.VectorQueries.resolvedGateMassFrac]], curve-sized
-  * when a current curve exists), the curve each [[GateCurve.all]]
-  * family reads, the fixed-P vs mass-budget dispatch decision with its
-  * measured skew signal, and the K-rule contradiction check over the
-  * persisted K curve. A clean checkout runs it and reads the same
-  * numbers the committed receipts were built with.
+  * tmpdir cache as they stand. It prints each [[GateRule]]'s resolved
+  * budget (curve-sized when a current curve exists), the curve each
+  * [[GateCurve.all]] family reads, the home-cell mass distribution of
+  * the production fit with the fixed-P vs mass-budget dispatch decision
+  * it drives, and the K-rule contradiction check over the persisted K
+  * curve. A clean checkout runs it and reads the same numbers the
+  * committed receipts were built with.
+  *
+  * The mass line reads `n`, `K`, the non-empty cell count, the heaviest
+  * and median cell, and the top-P cells' share of the corpus next to
+  * the P/K share a balanced fit would give: empty cells and a heavy
+  * tail mean the quantizer, not the probe rule, skews the scan.
   *
   * Usage: `sbt "runMain graft.tools.GateResolve <sfDir> [...]"`.
   * `SPARK_GRAFT_RESOLVE_ONLY=1` skips the Spark-session steps (the
-  * dispatch signal needs a fit) and prints just the curve-driven
+  * mass distribution needs a fit) and prints just the curve-driven
   * sizing, enough to audit registry resolution without a cluster.
   */
 object GateResolve {
@@ -35,11 +39,12 @@ object GateResolve {
         s"${sys.props("user.dir")} - sizing will use tmpdir cache/constants " +
         "only (set SPARK_GRAFT_CURVE_REGISTRY to the committed gates/curves)")
     for (dir <- args) {
-      val p = VectorQueries.resolvedGateProbes(dir)
-      val f = VectorQueries.resolvedGateMassFrac(dir)
-      val pSrc = if (p == VectorQueries.GateProbes) "constant-or-curve" else "curve-sized"
-      val fSrc = if (f == VectorQueries.GateMassFrac) "constant-or-curve" else "curve-sized"
-      println(s"[resolve] $dir probes=$p ($pSrc) massFrac=$f ($fSrc)")
+      def budget(r: GateRule) = {
+        val b = r.resolved(dir)
+        r.curve.show(b) + (if (b == r.fallback) " (constant-or-curve)" else " (curve-sized)")
+      }
+      val p = GateRule.Fixed.resolved(dir).toInt
+      println(s"[resolve] $dir probes=${budget(GateRule.Fixed)} massFrac=${budget(GateRule.Mass)}")
       for (curve <- GateCurve.all)
         println(s"[resolve] $dir ${curve.family}: " + curve.read(dir).fold("no curve")(rows =>
           s"${rows.size} rows, ${curve.axisKey} ${rows.map(r => curve.show(r._1)).mkString("/")}"))
@@ -56,9 +61,19 @@ object GateResolve {
         case _ => () // budget-matched; the rule check below adjudicates it
       }
       spark.foreach { s =>
-        val n = graft.Tables.embeddings(s, dir).count()
-        val rule = if (VectorQueries.gateUseMass(s, dir)) "MASS-BUDGET" else "FIXED-P"
-        println(s"[resolve] $dir n=$n K=${VectorQueries.gateK(n)} dispatch=$rule")
+        val masses = VectorQueries.gateHomeMasses(s, dir)
+        val n = masses.sum
+        val k = VectorQueries.gateK(n)
+        val topP = masses.take(p).sum
+        println(s"[resolve] $dir mass: n=$n K=$k non-empty=${masses.size} " +
+          s"max=${masses.head} p50=${masses(masses.size / 2)} " +
+          f"top${p}Mass=$topP (${100.0 * topP / n}%.1f%% of corpus; " +
+          f"balanced would be ${100.0 * math.min(p, k) / k}%.1f%%)")
+        val rule = VectorQueries.gateRuleFor(masses, n, p, k) match {
+          case GateRule.Mass => "MASS-BUDGET"
+          case GateRule.Fixed => "FIXED-P"
+        }
+        println(s"[resolve] $dir n=$n K=$k dispatch=$rule")
         // the contradiction check only speaks for curves measured at
         // the budget production actually resolves — a wrong-budget
         // curve answers a question production never asks (the audit

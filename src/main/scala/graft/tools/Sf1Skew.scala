@@ -114,6 +114,51 @@ object Sf1Skew {
     graft.Bench.prebuildIndexes(spark, dir, indexes)
       .map(e => s"[sf1] $e FAILED: its queries time a cold build")
 
+  /** Times each query min-of-`reps` through [[graft.Bench.timeQueries]]
+    * and emits one receipt line per query as it finishes. A query that
+    * throws reads `[sf1] <name> FAILED` (its error goes to stderr) and
+    * the queries after it still run.
+    *
+    * Each line carries the same self-adjudication key as the Bench
+    * artifacts: the machine 1-min load average at [start, end] of the
+    * query's reps. The skew corpus's 80 g sessions showed 2-3×
+    * back-to-back variance (qe15b read 80-129 s where a controlled
+    * same-session A/B read 38.9 s); a receipt line whose load reads hot
+    * names its own contamination. Read rule (BENCH_NOTES): trust a line
+    * only when both samples sit ≲ 0.2 over the session's own width.
+    *
+    * Each line also summarizes the post-AQE stage widths of its reps
+    * (min/median/max completed-stage task counts): what AQE actually
+    * RAN, coalesced widths included, not what the shuffle knob asked
+    * for, so the receipts say when a grown corpus outruns the knob.
+    */
+  private[graft] def timeSuite(spark: SparkSession, qs: Seq[(String, () => Unit)],
+      reps: Int)(emit: String => Unit): Unit = {
+    val stageWidths = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stageWidths.add(sc.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for ((name, thunk) <- qs) {
+      val l0 = graft.Bench.loadAvg()
+      stageWidths.clear()
+      val (times, failed) = graft.Bench.timeQueries(Seq(name -> thunk), reps, "sf1")
+      // the listener bus is async — give it a beat before summarizing
+      Thread.sleep(300)
+      val ws = {
+        import scala.jdk.CollectionConverters._
+        stageWidths.asScala.map(_.toInt).toSeq.sorted
+      }
+      val aqe =
+        if (ws.isEmpty) "aqe n/a"
+        else s"aqe stages ${ws.size} width ${ws.head}/${ws(ws.size / 2)}/${ws.last}"
+      val took = if (failed.nonEmpty) "FAILED" else f"min-of-$reps ${times.head._2}%.2f s"
+      emit(f"[sf1] $name%-24s $took load [$l0%.1f, ${graft.Bench.loadAvg()}%.1f] $aqe")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = ToolSession.local()
     def src(t: String) = spark.read.parquet(s"$SrcDir/$t.parquet")
@@ -207,60 +252,21 @@ object Sf1Skew {
       case Some("all") => skewQs ++ textQs
       case _ => skewQs
     }
-    // the receipts this prints carry the same self-adjudication key as
-    // the Bench artifacts — the machine 1-min load average at [start,
-    // end] of each query's reps. The skew corpus's 80 g sessions showed
-    // 2-3× back-to-back variance (qe15b read 80-129 s where a controlled
-    // same-session A/B read 38.9 s); a receipt line whose load reads hot
-    // names its own contamination. Read rule (BENCH_NOTES): trust a line
-    // only when both samples sit ≲ 0.2 over the session's own width.
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
     val onlyQ = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def loadAvg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+")(0).toDouble
-      catch { case _: Exception => -1.0 }
-    // record post-AQE stage widths alongside each timing — the advisory
-    // check on the 192-shuffle knob. The listener collects
-    // completed-stage task counts across the reps; the min/med/max
-    // summary shows what AQE actually RAN (coalesced widths included),
-    // not what the knob asked for, so the receipts themselves say when a
-    // grown corpus outruns the knob.
-    val stageWidths = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stageWidths.add(sc.stageInfo.numTasks)
-    })
     // SPARK_GRAFT_SINK=count times count() instead of the noop write —
     // count lets Catalyst prune every unused column/subtree, so (noop −
     // count) separates "computing the full output rows" from the
     // aggregation tree's inherent work
     val countSink = sys.env.get("SPARK_GRAFT_SINK").contains("count")
     prebuild(spark, OutDir, PersistedIndex.all).foreach(println)
-    for ((name, fn) <- qs if onlyQ.forall(_.contains(name))) {
-      val l0 = loadAvg()
-      stageWidths.clear()
-      var best = Double.MaxValue
-      for (_ <- 1 to reps) {
-        val t0 = System.nanoTime()
+    timeSuite(spark, qs.filter { case (name, _) => onlyQ.forall(_.contains(name)) }
+      .map { case (name, fn) => name -> (() => {
         val df = fn(spark, OutDir)
         if (countSink) df.count()
         else df.write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      // the listener bus is async — give it a beat before summarizing
-      Thread.sleep(300)
-      val ws = {
-        import scala.jdk.CollectionConverters._
-        stageWidths.asScala.map(_.toInt).toSeq.sorted
-      }
-      val aqe =
-        if (ws.isEmpty) "aqe n/a"
-        else s"aqe stages ${ws.size} width ${ws.head}/${ws(ws.size / 2)}/${ws.last}"
-      println(f"[sf1] $name%-24s min-of-$reps ${best}%.2f s " +
-        f"load [$l0%.1f, ${loadAvg()}%.1f] $aqe")
-    }
+        ()
+      }) }, reps)(println)
     spark.stop()
   }
 }

@@ -69,6 +69,36 @@ class BenchSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
+  test("Sf1Skew's timing loop reports a planted failing query and still times the next") {
+    val spark = SparkSpecBase.spark
+    val lines = scala.collection.mutable.ArrayBuffer[String]()
+    tools.Sf1Skew.timeSuite(spark, Seq(
+      "planted" -> (() => throw new RuntimeException("boom")),
+      "ok" -> (() => { spark.range(10).count(); () })), reps = 2)(lines += _)
+    assert(lines.size == 2, lines)
+    assert(lines(0).startsWith("[sf1] planted") && lines(0).contains(" FAILED "), lines)
+    assert(lines(1).startsWith("[sf1] ok") && lines(1).contains("min-of-2") &&
+      lines(1).contains("load [") && lines(1).contains("aqe"), lines)
+  }
+
+  test("codegenSoFar refuses to run before a session exists") {
+    // the first use of CodeGenerator sizes its class cache from the
+    // session conf; a touch with no session would pin the default size
+    SparkSpecBase.spark // the session to clear and restore must exist
+    val active = org.apache.spark.sql.SparkSession.getActiveSession
+    val default = org.apache.spark.sql.SparkSession.getDefaultSession
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val e = intercept[IllegalArgumentException](Bench.codegenSoFar())
+      assert(e.getMessage.contains("spark.sql.codegen.cache.maxEntries"))
+    } finally {
+      default.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
+      active.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
+    }
+    assert(Bench.codegenSoFar()._1 >= 0L, "the restored session lets it run again")
+  }
+
   test("renderLine emits the driver-contract JSON with errors visible") {
     val line = Bench.renderLine(
       Seq("q1" -> 1.5, "q2" -> 0.25), Seq("q2"), "/root/testdata/sf0.1")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path => JPath}
 
-import queries.{GateCurve, VectorQueries}
+import queries.{GateCurve, GateRule, VectorQueries}
 
 /** Recall-targeted gate sizing: the persisted
   * sweep curves now DRIVE the production builds. Both arms pinned:
@@ -69,8 +69,8 @@ class GateSizingSpec extends AnyFunSuite {
   test("no curve → static constants; oracle matches the static map byte-for-byte") {
     VectorQueries.clearGateSizing()
     val dir = tmpDir().toString
-    assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes)
-    assert(VectorQueries.resolvedGateMassFrac(dir) == VectorQueries.GateMassFrac)
+    assert(GateRule.Fixed.resolved(dir) == VectorQueries.GateProbes)
+    assert(GateRule.Mass.resolved(dir) == VectorQueries.GateMassFrac)
     val sized = VectorQueries.gateOracle(Some(dir))
     val static = VectorQueries.gateOracle(None)
     assert(sized == static,
@@ -81,19 +81,19 @@ class GateSizingSpec extends AnyFunSuite {
   test("planted curve sizes the build: cheaper certified budget, moved fingerprint, matching oracle") {
     VectorQueries.clearGateSizing()
     val dir = tmpDir().toString
-    val constantIndex = VectorQueries.gateIndexPath(dir)
-    val constantMassIndex = VectorQueries.gateMassIndexPath(dir)
+    val constantIndex = GateRule.Fixed.index.path(dir)
+    val constantMassIndex = GateRule.Mass.index.path(dir)
     VectorQueries.clearGateSizing()
     GateCurve.Probe.write(dir, sf001Probe)
     GateCurve.Mass.write(dir, sf001Mass)
     // cheapest certified at the 0.70 default: P=8 (0.7376), frac=0.35
     // (0.7448; 0.2's 0.7052 also clears — so 0.2 wins)
-    assert(VectorQueries.resolvedGateProbes(dir) == 8)
-    assert(VectorQueries.resolvedGateMassFrac(dir) == 0.2)
+    assert(GateRule.Fixed.resolved(dir) == 8)
+    assert(GateRule.Mass.resolved(dir) == 0.2)
     // the sized index lives in its own fingerprinted dir — the constant
     // build is orphaned, never served
-    assert(VectorQueries.gateIndexPath(dir) != constantIndex)
-    assert(VectorQueries.gateMassIndexPath(dir) != constantMassIndex)
+    assert(GateRule.Fixed.index.path(dir) != constantIndex)
+    assert(GateRule.Mass.index.path(dir) != constantMassIndex)
     // the dump-time oracle interpolates the SAME resolved budgets
     val sql = VectorQueries.gateOracle(Some(dir))
     assert(sql("qe15b_gated_density").contains("af.rk <= 8"))
@@ -112,9 +112,9 @@ class GateSizingSpec extends AnyFunSuite {
     val dir = tmpDir().toString
     GateCurve.Probe.write(dir, sf01Probe)
     GateCurve.Mass.write(dir, sf01Mass)
-    assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes,
+    assert(GateRule.Fixed.resolved(dir) == VectorQueries.GateProbes,
       "at the default target the committed sf0.1 curve picks P=16 — the constant IS curve-certified there")
-    assert(VectorQueries.resolvedGateMassFrac(dir) == VectorQueries.GateMassFrac)
+    assert(GateRule.Mass.resolved(dir) == VectorQueries.GateMassFrac)
     VectorQueries.clearGateSizing()
   }
 
@@ -123,7 +123,7 @@ class GateSizingSpec extends AnyFunSuite {
     val dir = tmpDir().toString
     GateCurve.Probe.write(dir,
       Seq((8, 1000L, 0.30, 0.2, 0.2), (16, 2000L, 0.45, 0.3, 0.3)))
-    assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes,
+    assert(GateRule.Fixed.resolved(dir) == VectorQueries.GateProbes,
       "handing back an uncertified budget would silently miss the target")
     VectorQueries.clearGateSizing()
   }
@@ -143,9 +143,9 @@ class GateSizingSpec extends AnyFunSuite {
     GateCurve.Mass.write(dir, Seq(
       (0.2, 55365L, 0.7052, 0.5672, 0.43), // agree25 collapsed
       (0.35, 92619L, 0.7448, 0.6377, 0.606)))
-    assert(VectorQueries.resolvedGateProbes(dir) == 16,
+    assert(GateRule.Fixed.resolved(dir) == 16,
       "P=8's collapsed recall22 must push sizing to the next certified budget")
-    assert(VectorQueries.resolvedGateMassFrac(dir) == 0.35,
+    assert(GateRule.Mass.resolved(dir) == 0.35,
       "frac=0.2's collapsed agree25 must push sizing to the next certified fraction")
     VectorQueries.clearGateSizing()
     // and when NO swept budget clears the secondary minimums, the
@@ -155,7 +155,7 @@ class GateSizingSpec extends AnyFunSuite {
     val dir2 = tmpDir().toString
     GateCurve.Probe.write(dir2,
       Seq((8, 1000L, 0.95, 0.45, 0.45), (24, 2000L, 0.99, 0.49, 0.48)))
-    assert(VectorQueries.resolvedGateProbes(dir2) == VectorQueries.GateProbes)
+    assert(GateRule.Fixed.resolved(dir2) == VectorQueries.GateProbes)
     VectorQueries.clearGateSizing()
   }
 
@@ -166,7 +166,7 @@ class GateSizingSpec extends AnyFunSuite {
     GateCurve.Probe.write(dir, sf001Probe)
     val sweepF = new java.io.File(GateCurve.Probe.path(dir))
     touch(dirP.resolve("embeddings.parquet"), sweepF.lastModified + 60_000)
-    assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes,
+    assert(GateRule.Fixed.resolved(dir) == VectorQueries.GateProbes,
       "a curve measured on a replaced corpus may not size the gate")
     VectorQueries.clearGateSizing()
   }
@@ -181,7 +181,7 @@ class GateSizingSpec extends AnyFunSuite {
     GateCurve.Probe.write(dir, sf001Probe)
     assert(GateCurve.Probe.read(dir).contains(sf001Probe),
       "a sweep written after measuring this corpus must read as current")
-    assert(VectorQueries.resolvedGateProbes(dir) == 8)
+    assert(GateRule.Fixed.resolved(dir) == 8)
     VectorQueries.clearGateSizing()
   }
 
@@ -206,13 +206,13 @@ class GateSizingSpec extends AnyFunSuite {
         "precondition: no tmpdir cache for this corpus")
       assert(GateCurve.Probe.read(dir).contains(sf001Probe),
         "the committed entry must resolve with zero tmpdir state")
-      assert(VectorQueries.resolvedGateProbes(dir) == 8,
+      assert(GateRule.Fixed.resolved(dir) == 8,
         "clean-machine sizing must equal the committed-curve sizing")
       VectorQueries.clearGateSizing()
       // a tmpdir cache of the same (deterministic) measurement resolves
       // identically — cache presence cannot change the answer
       GateCurve.Probe.write(dir, sf001Probe)
-      assert(VectorQueries.resolvedGateProbes(dir) == 8)
+      assert(GateRule.Fixed.resolved(dir) == 8)
       VectorQueries.clearGateSizing()
       // content key: grow the corpus → the old entry no longer applies
       Files.write(dirP.resolve("embeddings.parquet"), Array.fill[Byte](5678)(7))
@@ -238,13 +238,13 @@ class GateSizingSpec extends AnyFunSuite {
     // 0.113 = exactly the balanced model → fixed-P.
     val k = 142
     val p = 16
-    assert(!VectorQueries.gateRuleFor(Seq.fill(k)(141L), 141L * k, p, k))
+    assert(VectorQueries.gateRuleFor(Seq.fill(k)(141L), 141L * k, p, k) == GateRule.Fixed)
     // the n=20k megacell receipts (gates/r14): top-16 cells hold ~54%
     // of the corpus vs the 11.3% balanced model — ratio ≈ 4.8 → mass
     val mega = Seq.fill(16)(675L) ++ Seq.fill(k - 16)(71L)
-    assert(VectorQueries.gateRuleFor(mega, mega.sum, p, k))
+    assert(VectorQueries.gateRuleFor(mega, mega.sum, p, k) == GateRule.Mass)
     // K ≤ P probes every cell: fixed-P is exact AND cost-capped there
-    assert(!VectorQueries.gateRuleFor(Seq.fill(8)(1000L), 8000L, 16, 8))
+    assert(VectorQueries.gateRuleFor(Seq.fill(8)(1000L), 8000L, 16, 8) == GateRule.Fixed)
   }
 
   test("qe15d auto-dispatch: picks fixed-P on the near-balanced fixture and equals qe15b row-for-row") {
@@ -252,7 +252,7 @@ class GateSizingSpec extends AnyFunSuite {
     VectorQueries.clearGateSizing()
     val dir = "/root/testdata/sf0.001"
     val auto = VectorQueries.qe15d(spark, dir)
-    assert(VectorQueries.gateRuleDecided(dir).contains(false),
+    assert(VectorQueries.gateRuleDecided(dir).contains(GateRule.Fixed),
       "the tiny near-balanced fixture must dispatch to the fixed-P gate")
     val b = VectorQueries.qe15b(spark, dir)
     assert(auto.collect().toSet == b.collect().toSet)
@@ -270,15 +270,54 @@ class GateSizingSpec extends AnyFunSuite {
     VectorQueries.clearGateSizing()
   }
 
+  test("qe15d auto-dispatch: picks mass-budget on a megacell corpus and equals qe15c row-for-row") {
+    import org.apache.spark.sql.functions._
+    val spark = SparkSpecBase.spark
+    VectorQueries.clearGateSizing()
+    val dirP = tmpDir()
+    val dir = dirP.toString
+    // n = 1,025 is the smallest corpus where K = 33 > 2P = 32, so the
+    // mass rule can win. A tight cluster holds 1,000 vectors (97.6% of
+    // n) and 25 scattered outliers take the smallest ids; the Lloyd
+    // seeds are the 33 smallest ids, so the cluster homes in the 8 cells
+    // its own seeds open and the top-16 cells hold over 98% of n against
+    // the 2·16/33 = 97% bar.
+    def u(d: Int) = xxhash64(col("id"), lit(d)).cast("double") / 1.8446744073709552e19
+    spark.range(1025).select(col("id").as("vec_id"),
+        array((0 until 8).map(d =>
+          when(col("id") < 25, u(d) * 4).otherwise(lit(3.0) + u(d) * 1e-3)
+            .cast("float")): _*).as("embedding"),
+        (col("id") % 4).cast("int").as("label"))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val index = GateRule.Mass.index.path(dir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    try {
+      val auto = VectorQueries.qe15d(spark, dir)
+      assert(VectorQueries.gateRuleDecided(dir).contains(GateRule.Mass),
+        "a 98% top-16 fit must dispatch to the mass-budgeted gate")
+      assert(rows(auto) == rows(VectorQueries.qe15c(spark, dir)))
+      assert(rows(VectorQueries.qe22d(spark, dir)) == rows(VectorQueries.qe22c(spark, dir)))
+      assert(rows(VectorQueries.qe25d(spark, dir)) == rows(VectorQueries.qe25c(spark, dir)))
+      val sql = VectorQueries.gateOracle(Some(dir))
+      assert(sql("qe15d_autogated_density") == sql("qe15c_massgated_density"))
+      assert(sql("qe22d_autogated_mutual_nn") == sql("qe22c_massgated_mutual_nn"))
+      assert(sql("qe25d_autogated_confusion") == sql("qe25c_massgated_confusion"))
+    } finally {
+      VectorQueries.clearGateSizing()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(index))
+      org.apache.commons.io.FileUtils.deleteQuietly(dirP.toFile)
+    }
+  }
+
   test("resolution is memoized per JVM: a curve planted after first use is invisible until cleared") {
     VectorQueries.clearGateSizing()
     val dir = tmpDir().toString
-    assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes)
+    assert(GateRule.Fixed.resolved(dir) == VectorQueries.GateProbes)
     GateCurve.Probe.write(dir, sf001Probe)
     // one Verify process must build and dump against the same numbers
-    assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes)
+    assert(GateRule.Fixed.resolved(dir) == VectorQueries.GateProbes)
     VectorQueries.clearGateSizing()
-    assert(VectorQueries.resolvedGateProbes(dir) == 8)
+    assert(GateRule.Fixed.resolved(dir) == 8)
     VectorQueries.clearGateSizing()
   }
 
@@ -344,7 +383,7 @@ class GateSizingSpec extends AnyFunSuite {
     GateCurve.Probe.write(dir, sf001Probe, srcAtStart)
     assert(GateCurve.Probe.read(dir).isEmpty,
       "a curve measured across a corpus regeneration must read stale")
-    assert(VectorQueries.resolvedGateProbes(dir) == VectorQueries.GateProbes)
+    assert(GateRule.Fixed.resolved(dir) == VectorQueries.GateProbes)
     VectorQueries.clearGateSizing()
   }
 }

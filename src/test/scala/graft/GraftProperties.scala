@@ -374,7 +374,8 @@ object GraftProperties extends Properties("graft") {
         val e = rows.toDF("vec_id", "label", "vec")
           .repartition(parts)
           .withColumn("nrm", functions.VectorFunctions.norm(col("vec")))
-        queries.VectorQueries.gateCandsFrom(e, 8, 4)
+        queries.GateRule.Fixed.candsWith(
+            e, queries.VectorQueries.gateFitCents(e, 8, n.toLong), 4, n.toLong)
           .select("ida", "idb", "cos").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
       }
@@ -384,7 +385,7 @@ object GraftProperties extends Properties("graft") {
   }
 
   property("mass-budgeted gate: full budget = probe-all, unit budget = home cell, budgets nest") = {
-    // the mass-budgeted probe (gateCandsMassBudget): the fixed-P rule's
+    // the mass-budgeted probe (GateRule.Mass): the fixed-P rule's
     // cost guarantee dies on mass-skewed fits, so the alternative cuts
     // each vector's ranked-cell list at a cumulative home-mass budget.
     // Its contract, pinned here against the production probe stage over
@@ -404,9 +405,9 @@ object GraftProperties extends Properties("graft") {
         df.select("ida", "idb", "cos").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       def mass(frac: Double) = collectSet(
-        queries.VectorQueries.gateCandsMassBudget(e, cents, frac, n.toLong))
+        queries.GateRule.Mass.candsWith(e, cents, frac, n.toLong))
       def fixed(p: Int) = collectSet(
-        queries.VectorQueries.gateCandsWithCents(e, cents, p))
+        queries.GateRule.Fixed.candsWith(e, cents, p, n.toLong))
       val full = mass(1.0)
       val unit = mass(1e-12)
       val mid = mass(0.5)

@@ -371,17 +371,17 @@ class PlanSpec extends AnyFunSuite {
     // the IVF cell id — a nested-loop or cartesian anywhere means the
     // gate regressed to the all-pairs shape. The scored candidate
     // frame is a PERSISTED shared index, so the load-bearing pin is on
-    // the BUILD plan (gateCands — the fit + probe/home equi-join);
+    // the BUILD plan (GateRule.Fixed.cands — the fit + probe/home equi-join);
     // the per-twin plans must additionally stay free of theta joins
     // in their rank/agg tails. qe15b's full plan carries ONE
     // BroadcastNestedLoopJoin: the 1-row n_all count
     // crossJoin(broadcast(...)) in the OOD tail — the scalar-broadcast
     // idiom, scale-safe.
-    val build = finalPlan(queries.VectorQueries.gateCands(spark, sf))
+    val build = finalPlan(queries.GateRule.Fixed.cands(spark, sf))
     assert(!build.contains("BroadcastNestedLoopJoin") &&
       !build.contains("CartesianProduct"),
       "gate index build must stay an equi-join on the cell id")
-    for (q <- Seq(queries.VectorQueries.knnPairsGated(spark, sf),
+    for (q <- Seq(queries.VectorQueries.knnPairsAt(spark, sf, queries.GateRule.Fixed),
                   queries.VectorQueries.qe22b(spark, sf),
                   queries.VectorQueries.qe25b(spark, sf))) {
       val p = finalPlan(q)
@@ -399,13 +399,13 @@ class PlanSpec extends AnyFunSuite {
     // NO Window operator and no Exchange between probe assignment and
     // the candidate equi-join (the only joins left are the cell-id
     // equi-join and the two id-side lookups).
-    val build = finalPlan(queries.VectorQueries.gateMassCands(spark, sf))
+    val build = finalPlan(queries.GateRule.Mass.cands(spark, sf))
     assert(!build.contains("BroadcastNestedLoopJoin") &&
       !build.contains("CartesianProduct"),
       "mass-budget build must stay equi-joins on the cell id")
     assert(!build.contains("Window"),
       "the cut is map-only — a Window in the build means the n·K cumsum shuffle is back")
-    for (q <- Seq(queries.VectorQueries.knnPairsMassGated(spark, sf),
+    for (q <- Seq(queries.VectorQueries.knnPairsAt(spark, sf, queries.GateRule.Mass),
                   queries.VectorQueries.qe22c(spark, sf),
                   queries.VectorQueries.qe25c(spark, sf)))
       assert(!finalPlan(q).contains("CartesianProduct"),

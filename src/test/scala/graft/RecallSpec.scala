@@ -176,18 +176,18 @@ class RecallSpec extends AnyFunSuite {
       case 4 => r._4
       case _ => r._5
     }
-    // the production build is sized by resolvedGateProbes /
-    // resolvedGateMassFrac (curve-driven when a current sweep exists),
+    // the production build is sized by GateRule.Fixed/Mass.resolved
+    // (curve-driven when a current sweep exists),
     // so the floor must read the curve at the budget the build ACTUALLY
     // used — reading the static constant would floor a P=8-sized build
     // against P=16's measured recall and fail spuriously.
     val measured = probeCol.flatMap { c =>
-      val p = queries.VectorQueries.resolvedGateProbes(sf.dir)
+      val p = queries.GateRule.Fixed.resolved(sf.dir)
       queries.GateCurve.Probe.read(sf.dir)
         .flatMap(_.find(_._1 == p))
         .map(r => (pick(c, r), c, p != queries.VectorQueries.GateProbes))
     }.orElse(massCol.flatMap { c =>
-      val f = queries.VectorQueries.resolvedGateMassFrac(sf.dir)
+      val f = queries.GateRule.Mass.resolved(sf.dir)
       queries.GateCurve.Mass.read(sf.dir)
         .flatMap(_.find(_._1 == f))
         .map(r => (pick(c, r), c, f != queries.VectorQueries.GateMassFrac))
@@ -401,16 +401,16 @@ class RecallSpec extends AnyFunSuite {
 
     test(s"qe15b gated-density neighbor recall@5 vs exact all-pairs [${sf.label}]") {
       val exact = queries.VectorQueries.knnPairsExact(spark, sf.dir)
-      val gated = queries.VectorQueries.knnPairsGated(spark, sf.dir)
+      val gated = queries.VectorQueries.knnPairsAt(spark, sf.dir, queries.GateRule.Fixed)
       val n = exact.count()
       val hit = exact.join(gated, Seq("ida", "idb"), "left_semi").count()
       record("qe15b_gated_density", sf, hit.toDouble / n,
-        s"qe15 exact 5-NN pairs, sqrt(n)-cell ${queries.VectorQueries.resolvedGateProbes(sf.dir)}-probe IVF gate")
+        s"qe15 exact 5-NN pairs, sqrt(n)-cell ${queries.GateRule.Fixed.resolved(sf.dir).toInt}-probe IVF gate")
     }
 
     test(s"qe15c mass-gated density neighbor recall@5 vs exact all-pairs [${sf.label}]") {
       val exact = queries.VectorQueries.knnPairsExact(spark, sf.dir)
-      val gated = queries.VectorQueries.knnPairsMassGated(spark, sf.dir)
+      val gated = queries.VectorQueries.knnPairsAt(spark, sf.dir, queries.GateRule.Mass)
       val n = exact.count()
       val hit = exact.join(gated, Seq("ida", "idb"), "left_semi").count()
       record("qe15c_massgated_density", sf, hit.toDouble / n,
@@ -424,7 +424,7 @@ class RecallSpec extends AnyFunSuite {
       val hit = exact.join(gated, Seq("vec_a", "vec_b"), "left_semi").count()
       record("qe22b_gated_mutual_nn", sf,
         if (n == 0) 1.0 else hit.toDouble / n,
-        s"qe22 exact mutual-top-1 pairs, sqrt(n)-cell ${queries.VectorQueries.resolvedGateProbes(sf.dir)}-probe IVF gate")
+        s"qe22 exact mutual-top-1 pairs, sqrt(n)-cell ${queries.GateRule.Fixed.resolved(sf.dir).toInt}-probe IVF gate")
     }
 
     test(s"qe22c mass-gated mutual-NN pair recall vs exact qe22 [${sf.label}]") {
@@ -440,7 +440,7 @@ class RecallSpec extends AnyFunSuite {
     test(s"qe25c mass-gated kNN-vote prediction agreement vs exact qe25 [${sf.label}]") {
       val exact = queries.VectorQueries.qe25PredExact(spark, sf.dir)
         .select(col("ida"), col("pred_label").as("pe"))
-      val gated = queries.VectorQueries.qe25PredMassGated(spark, sf.dir)
+      val gated = queries.VectorQueries.qe25PredAt(spark, sf.dir, queries.GateRule.Mass)
         .select(col("ida"), col("pred_label").as("pg"))
       val n = exact.count()
       val hit = exact.join(gated, Seq("ida"))
@@ -452,13 +452,13 @@ class RecallSpec extends AnyFunSuite {
     test(s"qe25b gated kNN-vote prediction agreement vs exact qe25 [${sf.label}]") {
       val exact = queries.VectorQueries.qe25PredExact(spark, sf.dir)
         .select(col("ida"), col("pred_label").as("pe"))
-      val gated = queries.VectorQueries.qe25PredGated(spark, sf.dir)
+      val gated = queries.VectorQueries.qe25PredAt(spark, sf.dir, queries.GateRule.Fixed)
         .select(col("ida"), col("pred_label").as("pg"))
       val n = exact.count()
       val hit = exact.join(gated, Seq("ida"))
         .filter(col("pe") === col("pg")).count()
       record("qe25b_gated_confusion", sf, hit.toDouble / n,
-        s"qe25 exact per-vector kNN label votes, sqrt(n)-cell ${queries.VectorQueries.resolvedGateProbes(sf.dir)}-probe IVF gate")
+        s"qe25 exact per-vector kNN label votes, sqrt(n)-cell ${queries.GateRule.Fixed.resolved(sf.dir).toInt}-probe IVF gate")
     }
   }
 

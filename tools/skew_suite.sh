@@ -1,8 +1,7 @@
 #!/usr/bin/env bash
-# One-command reproduction of the 10x skew-corpus scale evidence
-# (VERDICT r14 item 3: the corpus lives in tmpdir and dies on reboot,
-# and the knobs that make the sweeps runnable used to live only in
-# BENCH_NOTES prose).
+# One-command reproduction of the 10x skew-corpus scale evidence (the
+# corpus lives in tmpdir and dies on reboot, and the knobs that make the
+# sweeps runnable would otherwise live only in BENCH_NOTES prose).
 #
 # What it runs, in order, with the required session sizing
 # (SPARK_DRIVER_MEM=80g SPARK_GRAFT_CPUS=16 SPARK_GRAFT_SHUFFLE=192 —
@@ -11,14 +10,18 @@
 #                             present) + the skew-sensitive suite,
 #                             min-of-2 per query (SPARK_GRAFT_SUITE=all
 #                             adds the duplication-heavy text family)
-#   2. tools/CellBalance    — home-mass skew of the production gate fit
-#                             (the fixed-P vs mass-budget dispatch signal)
+#   2. tools/GateResolve    — home-mass distribution of the production
+#                             gate fit and the fixed-P vs mass-budget
+#                             dispatch it drives, plus the resolved
+#                             budgets and curves (with a Spark session)
 #   3. tools/GateSweep      — probe-budget recall curve, persisted as
 #                             _sweep.json (drives recall-targeted sizing)
 #   4. tools/GateSweep mass — scanned-mass recall curve, ditto
 #   5. tools/GateSweep K    — cell-count recall curve (_ksweep.json);
 #                             the COSTLIEST mode: every swept K is a
 #                             full quantizer refit, ~30+ min for 3 Ks
+#   6. tools/GateResolve    — registry resolve audit of sf0.01, sf0.1
+#                             and the skew corpus, no Spark session
 #
 # Wall-clock: ~30 min probe sweep + ~20 min mass sweep + ~30 min K
 # sweep + ~10 min suite on a 32-core box (BENCH_NOTES r14/r15).
@@ -39,7 +42,7 @@ STEP="${1:-all}"
 
 run() { echo ">>> $*"; sbt -batch "$@"; }
 
-# r17 (VERDICT r16 item 4): back-to-back 80g sessions leave load/GC/
+# Back-to-back 80g sessions leave load/GC/
 # page-cache residue that contaminated three rounds of receipts (qe15b
 # read 80-129 s where a controlled A/B read 39 s). Wait for the 1-min
 # load to decay below SPARK_GRAFT_LOAD_TARGET (default 2.0, the honest-
@@ -63,7 +66,7 @@ wait_load() {
 
 if [[ "$STEP" == "suite" || "$STEP" == "all" ]]; then
   # builds the corpus if absent, then times the skew suite. The SUITE
-  # runs at the full 32-thread width (the r13/r14 receipt config —
+  # runs at the full 32-thread width (the committed receipts' config —
   # 16-cpu/192-shuffle sweep knobs here read ~2x slow on the graph
   # family and 3x on qe15b, pure harness); only the SWEEPS need the
   # narrow/wide-shuffle session, because their 200M-row exact-pair
@@ -76,10 +79,10 @@ export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}"
 export SPARK_GRAFT_SHUFFLE="${SPARK_GRAFT_SHUFFLE:-192}"
 if [[ "$STEP" == "balance" || "$STEP" == "all" ]]; then
   wait_load
-  run "runMain graft.tools.CellBalance $SKEW_DIR"
+  run "runMain graft.tools.GateResolve $SKEW_DIR"
 fi
 if [[ "$STEP" == "sweep" || "$STEP" == "all" ]]; then
-  # budgets past the sf0.1 knee — the n=20k decay-study grid (r14)
+  # budgets past the sf0.1 knee — the n=20k decay-study grid
   wait_load
   SPARK_GRAFT_BUDGETS=8,16,32 run "runMain graft.tools.GateSweep $SKEW_DIR"
 fi
@@ -93,7 +96,7 @@ if [[ "$STEP" == "ksweep" || "$STEP" == "all" ]]; then
   SPARK_GRAFT_K_BUDGETS=71,142,284 run "runMain graft.tools.GateSweep $SKEW_DIR"
 fi
 if [[ "$STEP" == "resolve" || "$STEP" == "all" ]]; then
-  # r17 (VERDICT r16 item 6): the closing gate always includes the
+  # the closing gate always includes the
   # registry resolve audit — a silent key/format drift in the committed
   # curves would quietly revert sizing to constants on clean machines.
   # RESOLVE_ONLY skips the Spark session; the receipt goes under
