@@ -1,11 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.operators.PrincipalComponents
 import graft.operators.Rounding.dround
 import graft.sources.{HadoopFs, PersistedIndex}
 
@@ -3198,39 +3200,36 @@ object VectorQueries {
   /** PCA dimensionality reduction: project the 64-dim embeddings onto
     * the top-8 principal components — the offline compression step
     * before clustering/visualization sweeps (and the classical
-    * alternative to the learned PQ codebooks of qe14). Uses Spark ML's
-    * PCA, whose distributed shape is the right one at any scale: one
-    * treeAggregate builds the 64x64 Gramian (map-side combinable), the
-    * eigendecomposition runs on the driver on a d x d matrix, and the
-    * projection is a map-only matrix multiply.
+    * alternative to the learned PQ codebooks of qe14). The fit is
+    * [[pcaFit]] (one distributed covariance pass, a driver eigensolve);
+    * the projection is the map-only [[pcaProject]] that [[qe28b]] runs
+    * against the persisted basis.
     *
     * No SQL oracle for the fused fit+transform (eigenvectors are
     * engine-side state, like the qe2 hyperplanes); SketchSpec grades
     * the linear-algebra contract instead: component orthonormality,
-    * non-increasing explained variance, projection-norm bounds, and
-    * partitioning invariance. The PROBE path against the persisted
-    * basis, [[qe28b]], IS hash-match oracle-checked.
+    * non-increasing explained variance, projection-norm bounds,
+    * partitioning invariance, and agreement with Spark ML's PCA. The
+    * PROBE path against the persisted basis, [[qe28b]], IS hash-match
+    * oracle-checked.
     */
-  def qe28(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.feature.PCA
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    val e = embs(s, dir).withColumn("fvec", array_to_vector(col("vec")))
-    val model = new PCA().setK(8).setInputCol("fvec").setOutputCol("proj")
-      .fit(e)
-    model.transform(e)
-      .withColumn("parr", vector_to_array(col("proj")))
-      .select(col("vec_id") +: (0 until 8).map(i =>
-        dround(col("parr")(i), 6).as(s"pc$i")): _*)
-  }
+  def qe28(s: SparkSession, dir: String): DataFrame =
+    pcaProject(s, dir, pcaFit(s, dir, 8).components.toSeq.map(_.toSeq))
 
-  /** The fitted model's explained-variance vector, for the spec. */
-  private[graft] def pcaModel(s: SparkSession, dir: String)
-      : org.apache.spark.ml.feature.PCAModel = {
-    import org.apache.spark.ml.feature.PCA
-    import org.apache.spark.ml.functions.array_to_vector
-    val e = embs(s, dir).withColumn("fvec", array_to_vector(col("vec")))
-    new PCA().setK(8).setInputCol("fvec").setOutputCol("proj").fit(e)
-  }
+  /** The top-`k` principal components of the embeddings
+    * ([[PrincipalComponents.fit]]). Scale: one treeAggregate pass,
+    * O(d²) state per partition, O(d³) driver eigensolve; no vector is
+    * collected to the driver.
+    */
+  def pcaFit(s: SparkSession, dir: String, k: Int): PrincipalComponents.Fit =
+    PrincipalComponents.fit(embs(s, dir).select("vec"), k)
+
+  /** `pc<i>` = the 6dp-rounded dot of each raw (uncentered) embedding
+    * with component i: 8 codegen'd dot products per row, no shuffle.
+    */
+  private def pcaProject(s: SparkSession, dir: String, comps: Seq[Seq[Double]]): DataFrame =
+    embs(s, dir).select(col("vec_id") +: comps.zipWithIndex.map { case (c, i) =>
+      dround(dot(col("vec"), typedLit(c)), 6).as(s"pc$i") }: _*)
 
   // --------------------------------------------------------------- qe28b
   /** PCA PROBE path with a full hash-match oracle:
@@ -3246,25 +3245,31 @@ object VectorQueries {
     * FIT itself stays invariant-graded in SketchSpec (eigenvectors are
     * engine-side state, like qe2's hyperplanes and the PQ codebooks).
     *
-    * Scale: the fit is one treeAggregate Gramian + a driver-side d×d
-    * eigendecomposition, run OFFLINE once; the probe path is a map-only
-    * projection (8 codegen'd dot products per row) — no shuffle at all.
+    * Scale: the build is [[pcaFit]] (one treeAggregate pass, O(d²) per
+    * partition, O(d³) driver eigensolve) run OFFLINE once, plus one
+    * single-file parquet write; the probe path is a map-only projection
+    * (8 codegen'd dot products per row) — no shuffle at all.
     */
   def pcaIndexPath(dir: String): String =
     HadoopFs.indexPath("pca", dir, 8)
 
+  private val PcaBasisSchema = StructType(Seq(
+    StructField("pc_id", IntegerType, nullable = false),
+    StructField("cvec", ArrayType(DoubleType, containsNull = false))))
+
   def pcaBuild(s: SparkSession, dir: String, path: String): Unit = {
-    val basis = pcaModel(s, dir).pc.colIter.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
+    val comps = pcaFit(s, dir, 8).components
     new java.io.File(path).mkdirs()
     // %.17e round-trips binary64 exactly AND parses as a DOUBLE (not
     // DECIMAL) literal in DuckDB; sidecar first, basis (the witness) last
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$path/basis.json"),
-      basis.map(_._2.map(v =>
+      comps.map(_.map(v =>
           String.format(java.util.Locale.ROOT, "%.17e", Double.box(v)))
         .mkString("[", ",", "]")).mkString("[", ",", "]"))
-    s.createDataFrame(basis).toDF("pc_id", "cvec")
+    // rows against an explicit schema: no reflection-derived encoder
+    val rows = comps.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), PcaBasisSchema)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/basis")
   }
 
@@ -3274,9 +3279,8 @@ object VectorQueries {
   def qe28b(s: SparkSession, dir: String): DataFrame = {
     registerNative(s)
     val basis = HadoopFs.parquet(s, s"${Pca.ensure(s, dir)}/basis").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-    embs(s, dir).select(col("vec_id") +: basis.toSeq.map { case (i, c) =>
-      dround(dot(col("vec"), typedLit(c)), 6).as(s"pc$i") }: _*)
+      .sortBy(_.getInt(0)).toSeq.map(_.getSeq[Double](1))
+    pcaProject(s, dir, basis)
   }
 
   /** The nine gated-twin oracles (three tails × {fixed-P, mass-budget,

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
 import graft.sources.HadoopFs
@@ -12,37 +11,13 @@ import graft.sources.HadoopFs
   * `GraftConf.contextDefaults` keeps a repeated pass from recompiling.
   */
 class ParquetMemoSpec extends AnyFunSuite {
-  import SparkSpecBase.{spark, sf}
+  import SparkSpecBase.{jobsDuring, spark, sf}
 
   private val tables = Seq("lineitem", "orders", "customer", "supplier", "part",
     "nation", "region", "events", "documents", "embeddings")
 
   private def tmpPath(): String =
     java.nio.file.Files.createTempDirectory("graft_memo").resolve("t.parquet").toString
-
-  /** Jobs started while `body` builds its plans. A marker job run after
-    * `body` bounds the count: the listener bus delivers events in order,
-    * so once the marker's start arrives every earlier start has too.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup("memo_probe", "plan construction")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("memo_marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("memo_marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(groups.contains("memo_marker"), "the marker job never reached the listener")
-      groups.toArray.count(_ == "memo_probe")
-    } finally sc.removeSparkListener(l)
-  }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString).sorted

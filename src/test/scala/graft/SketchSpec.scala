@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.sources.HadoopFs
+
 /** qd20b's HLL++ NDV sketch, checked the way approximate operators are
   * checked here: error-floored against the exact twin (qd20) rather
   * than hash-matched, plus the property that makes the sketch safe at
@@ -10,6 +12,9 @@ import org.apache.spark.sql.functions._
   */
 class SketchSpec extends AnyFunSuite {
   import SparkSpecBase.{spark, sf}
+
+  /** The sf0.01 fixture next to the suite's sf0.001 one. */
+  private val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
 
   test("qd20b HLL NDV stays within 6% of the exact twin per source") {
     // rsd 0.02 → ~2% typical error; 6% is the 3σ envelope. A miss
@@ -118,19 +123,19 @@ class SketchSpec extends AnyFunSuite {
   test("qe28 PCA: orthonormal basis, ordered variance, norm-contractive projection") {
     val spark = SparkSpecBase.spark
     val dir = "/root/testdata/sf0.01"
-    val model = queries.VectorQueries.pcaModel(spark, dir)
+    val fit = queries.VectorQueries.pcaFit(spark, dir, 8)
     // explained variance is non-increasing and positive
-    val ev = model.explainedVariance.toArray
+    val ev = fit.explainedVariance
     assert(ev.forall(_ > 0.0))
     ev.sliding(2).foreach {
       case Array(a, b) => assert(a >= b - 1e-12)
       case _ =>
     }
     // the 64x8 loading matrix has orthonormal columns
-    val pc = model.pc
+    val pc = fit.components
     for (i <- 0 until 8; j <- i until 8) {
       var dot = 0.0
-      for (r <- 0 until pc.numRows) dot += pc(r, i) * pc(r, j)
+      for (r <- 0 until pc(i).length) dot += pc(i)(r) * pc(j)(r)
       if (i == j) assert(math.abs(dot - 1.0) < 1e-9, s"col $i not unit norm")
       else assert(math.abs(dot) < 1e-9, s"cols $i,$j not orthogonal")
     }
@@ -151,6 +156,67 @@ class SketchSpec extends AnyFunSuite {
     val again = queries.VectorQueries.qe28(spark, dir)
     assert(out.exceptAll(again).count() == 0 && again.exceptAll(out).count() == 0)
     out.unpersist()
+  }
+
+  test("pcaFit agrees with Spark ML's PCA on the sf0.01 embeddings") {
+    import org.apache.spark.ml.feature.PCA
+    import org.apache.spark.ml.functions.array_to_vector
+    val dir = sf01
+    val fit = queries.VectorQueries.pcaFit(spark, dir, 8)
+    val e = Tables.embeddings(spark, dir)
+      .select(array_to_vector(col("embedding").cast("array<double>")).as("fvec"))
+    val ml = new PCA().setK(8).setInputCol("fvec").fit(e)
+    val mlEv = ml.explainedVariance.toArray
+    assert(fit.explainedVariance.length == 8 && fit.components.forall(_.length == 64))
+    fit.explainedVariance.zip(mlEv).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(math.abs(a - b) <= 1e-9, s"explained variance $i: $a vs MLlib $b")
+    }
+    fit.components.zipWithIndex.foreach { case (c, i) =>
+      // both are unit vectors, so the cosine is the dot product
+      val cos = c.indices.map(r => c(r) * ml.pc(r, i)).sum
+      assert(math.abs(cos) >= 1 - 1e-9, s"component $i: |cos| ${math.abs(cos)} vs MLlib")
+      assert(c.maxBy(math.abs) > 0, s"component $i: largest coordinate not positive")
+    }
+  }
+
+  test("a cold pcaBuild runs one aggregate job and one parquet write") {
+    val dir = sf01
+    Tables.embeddings(spark, dir) // the schema memo is warm, as after any read
+    val path = java.nio.file.Files.createTempDirectory("graft_pca").toString
+    try {
+      assert(SparkSpecBase.jobsDuring(queries.VectorQueries.pcaBuild(spark, dir, path)) == 2)
+      val basis = HadoopFs.parquet(spark, s"$path/basis").orderBy("pc_id").collect()
+      val fit = queries.VectorQueries.pcaFit(spark, dir, 8)
+      assert(basis.map(_.getInt(0)).toSeq == (0 until 8))
+      assert(basis.map(_.getSeq[Double](1)).toSeq == fit.components.toSeq.map(_.toSeq))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+  }
+
+  test("the Jacobi eigensolver diagonalizes and refuses degenerate PCA inputs") {
+    val a = Array(Array(4.0, 1.0, 2.0), Array(1.0, 3.0, 0.5), Array(2.0, 0.5, 5.0))
+    val (vals, v) = graft.operators.PrincipalComponents.symmetricEigen(a)
+    // A v_c = λ_c v_c for every column c, and V is orthogonal
+    for (c <- 0 until 3; r <- 0 until 3) {
+      val av = (0 until 3).map(k => a(r)(k) * v(k)(c)).sum
+      assert(math.abs(av - vals(c) * v(r)(c)) < 1e-12)
+    }
+    for (c <- 0 until 3; c2 <- 0 until 3) {
+      val d = (0 until 3).map(r => v(r)(c) * v(r)(c2)).sum
+      assert(math.abs(d - (if (c == c2) 1.0 else 0.0)) < 1e-12)
+    }
+    assert(math.abs(vals.sum - 12.0) < 1e-12, "the trace is preserved")
+    import spark.implicits._
+    def fitOf(vs: Seq[Array[Double]], k: Int) =
+      graft.operators.PrincipalComponents.fit(vs.toDF("v"), k)
+    // a length mismatch can surface inside a task, wrapped by the scheduler
+    def failsWith(msg: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(msg)), e.toString)
+    }
+    failsWith("at least 2 vectors")(fitOf(Seq(Array(1.0, 2.0)), 1))
+    failsWith("k must be in [1, 2]")(fitOf(Seq(Array(1.0, 2.0), Array(3.0, 1.0)), 3))
+    failsWith("equal vector lengths")(fitOf(Seq(Array(1.0, 2.0), Array(3.0)), 1))
   }
 
   test("qe29 dim sweep: full-dim endpoint exactly 1.0, recalls in range") {

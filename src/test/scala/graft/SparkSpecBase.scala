@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (spark_guide: one session per
@@ -50,4 +51,29 @@ object SparkSpecBase {
   def withParetoTwoPhase[A](twoPhase: Boolean)(body: => A): A =
     withConf(GraftConf.paretoTwoPhaseBytesKey,
       if (twoPhase) "0" else Long.MaxValue.toString)(body)
+
+  /** Spark jobs started while `body` runs on this thread. A marker job
+    * run after `body` bounds the count: the listener bus delivers events
+    * in order, so once the marker's start arrives every earlier start
+    * has too.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("jobs_probe", "counted body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("jobs_marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("jobs_marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("jobs_marker"), "the marker job never reached the listener")
+      groups.toArray.count(_ == "jobs_probe")
+    } finally sc.removeSparkListener(l)
+  }
 }
