@@ -38,10 +38,10 @@ object SparkEntry {
 
   /** [[oracleSql]] plus the entries that can only be authored against
     * runtime state of a concrete sf dir (qe28b inlines its persisted
-    * PCA basis; the nine gated twins interpolate the budgets the
+    * PCA basis; the three gated twins interpolate the budget the
     * recall-targeted sizing resolved for that corpus) — Verify threads
     * the dir it ran so the dumped oracle_sql.json carries them. With no
-    * dir the gated twins carry the documented constant budgets.
+    * dir the gated twins carry the documented constant budget.
     */
   def oracleSqlFor(sfDir: Option[String]): Map[String, String] =
     graft.queries.VectorQueries.qe28bOracle(sfDir) ++

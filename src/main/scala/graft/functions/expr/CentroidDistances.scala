@@ -10,7 +10,7 @@ import graft.operators.Rounding
 /** Native per-row array of `(rounded squared-L2 distance, cid)` structs
   * against a constant centroid matrix — the k-means assignment /
   * multi-probe primitive behind centroidCands (qe9/qe10/qe16/qe18 and
-  * the qe15b/qe22b/qe25b gate).
+  * the qe15c/qe22c/qe25c gate).
   *
   * Why a custom Expression (builder preference order (b), and the exact
   * failure PqEncode's scaladoc records for the PQ codebooks): the

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import Rounding.dround
 
@@ -127,44 +128,60 @@ object Pareto {
     }
   }
 
-  private def rankCumTwoPhase(df: DataFrame, keys: Seq[Column], valueCol: Column,
-      rankCol: String, cumCol: String, totCol: String, nCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // Range partitioning gives partition i ≤ partition i+1 in key
-    // order, so local rank/cumsum + an exclusive per-partition offset
-    // reconstruct the global quantities. The cut pins the boundaries:
-    // the stats collect and the returned plan must see the SAME range
-    // partitioning.
+  /** The scaffold every two-phase shape shares. Range partitioning
+    * puts partition i before partition i+1 in key order, so a
+    * per-partition local window plus an exclusive scan of the
+    * per-partition totals of the preceding partitions reconstructs a
+    * global quantity. The cut pins the boundaries: the P-row stats
+    * collect and the returned plan see the SAME range partitioning.
+    *
+    * @param local the per-partition window columns, over `_pid` ordered
+    *              by `keys`
+    * @param stats per-partition totals (long or double) over the local
+    *              frame; P rows, driver-sized by construction
+    * @return the local frame joined to each stat's exclusive offset
+    *         (a column named as the stat), and each stat's grand total
+    */
+  private def twoPhase(df: DataFrame, keys: Seq[Column],
+      local: WindowSpec => Seq[(String, Column)],
+      stats: Seq[(String, Column)]): (DataFrame, Seq[Any]) = {
     val parted = Checkpoints.cut(df
       .repartitionByRange(keys: _*)
       .withColumn("_pid", spark_partition_id()))
-    // P rows — driver-sized by construction (P = shuffle partitions).
-    // Cast+coalesce: a non-double valueCol (decimal, int) or an all-NULL
-    // partition must not blow up the driver-side getDouble.
-    val stats = parted.groupBy("_pid")
-      .agg(coalesce(sum(valueCol.cast("double")), lit(0.0)).as("_s"), count(lit(1)).as("_c"))
-      .collect()
-      .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
-      .sortBy(_._1)
-    val total = stats.map(_._2).sum
-    val n = stats.map(_._3).sum
-    val offsets = stats
-      .scanLeft((0, 0.0, 0L)) { case ((_, s, c), (pid, ps, pc)) => (pid, s + ps, c + pc) }
-      .sliding(2)
-      .collect { case Array((_, s, c), (pid, _, _)) => (pid, s, c) }
-      .toSeq
-    val offDf = offsets.toDF("_pid", "_soff", "_coff")
     val wLocal = Window.partitionBy("_pid").orderBy(keys: _*)
-    parted
-      .withColumn("_lrn", row_number().over(wLocal))
-      .withColumn("_lcum",
-        sum(valueCol).over(wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .join(broadcast(offDf), Seq("_pid"))
+    val framed = local(wLocal).foldLeft(parted) { case (d, (n, c)) => d.withColumn(n, c) }
+    val agg = framed.groupBy("_pid").agg(stats.head._2.as(stats.head._1),
+      stats.tail.map { case (n, c) => c.as(n) }: _*)
+    val rows = agg.collect().sortBy(_.getInt(0))
+    // one left-to-right running sum per stat: P exclusive offsets, then
+    // the grand total
+    val scans = agg.schema.fields.indices.tail.map { i =>
+      agg.schema(i).dataType match {
+        case LongType => rows.map(_.getLong(i)).scanLeft(0L)(_ + _).toSeq
+        case _ => rows.map(_.getDouble(i)).scanLeft(0.0)(_ + _).toSeq
+      }
+    }
+    val offsets = rows.indices.map(p => Row.fromSeq(rows(p).get(0) +: scans.map(_(p))))
+    val offDf = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(offsets: _*), agg.schema)
+    (framed.join(broadcast(offDf), Seq("_pid")), scans.map(_.last))
+  }
+
+  private def rankCumTwoPhase(df: DataFrame, keys: Seq[Column], valueCol: Column,
+      rankCol: String, cumCol: String, totCol: String, nCol: String): DataFrame = {
+    // cast + coalesce: a non-double valueCol (decimal, int) or an
+    // all-NULL partition must not blow up the driver-side getDouble
+    val (joined, totals) = twoPhase(df, keys,
+      w => Seq("_lrn" -> row_number().over(w),
+        "_lcum" -> sum(valueCol).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))),
+      Seq("_soff" -> coalesce(sum(valueCol.cast("double")), lit(0.0)),
+        "_coff" -> count(lit(1))))
+    joined
       .withColumn(rankCol, (col("_lrn") + col("_coff")).cast("int"))
       .withColumn(cumCol, col("_lcum") + col("_soff"))
-      .withColumn(totCol, lit(total))
-      .withColumn(nCol, lit(n))
+      .withColumn(totCol, lit(totals(0)))
+      .withColumn(nCol, lit(totals(1)))
       .drop("_pid", "_lrn", "_lcum", "_soff", "_coff")
   }
 
@@ -195,53 +212,18 @@ object Pareto {
     else df.withColumn(rankCol, dense_rank().over(Window.orderBy(keys: _*)).cast("int"))
   }
 
-  private def denseRankTwoPhase(df: DataFrame, keys: Seq[Column], rankCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parted = Checkpoints.cut(df
-      .repartitionByRange(keys: _*)
-      .withColumn("_pid", spark_partition_id()))
-    val wLocal = Window.partitionBy("_pid").orderBy(keys: _*)
-    val local = parted.withColumn("_lrn", dense_rank().over(wLocal))
-    // P rows: each partition's distinct-group count is its max local
-    // dense rank — summing those of preceding partitions is the offset
-    val counts = local.groupBy("_pid").agg(max("_lrn").cast("long").as("_c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts
-      .scanLeft((0, 0L)) { case ((_, acc), (pid, c)) => (pid, acc + c) }
-      .sliding(2)
-      .collect { case Array((_, acc), (pid, _)) => (pid, acc) }
-      .toSeq
-    val offDf = offsets.toDF("_pid", "_coff")
-    local
-      .join(broadcast(offDf), Seq("_pid"))
+  private def denseRankTwoPhase(df: DataFrame, keys: Seq[Column], rankCol: String): DataFrame =
+    // each partition's distinct-group count is its max local dense rank
+    twoPhase(df, keys, w => Seq("_lrn" -> dense_rank().over(w)),
+      Seq("_coff" -> max("_lrn").cast("long")))._1
       .withColumn(rankCol, (col("_lrn") + col("_coff")).cast("int"))
       .drop("_pid", "_lrn", "_coff")
-  }
 
-  private def rankTwoPhase(df: DataFrame, keys: Seq[Column], rankCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // Same boundary-pinning rationale as rankCumTwoPhase: the count
-    // collect and the returned plan must see the SAME range partitioning.
-    val parted = Checkpoints.cut(df
-      .repartitionByRange(keys: _*)
-      .withColumn("_pid", spark_partition_id()))
-    val counts = parted.groupBy("_pid").agg(count(lit(1)).as("_c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts
-      .scanLeft((0, 0L)) { case ((_, acc), (pid, c)) => (pid, acc + c) }
-      .sliding(2)
-      .collect { case Array((_, acc), (pid, _)) => (pid, acc) }
-      .toSeq
-    val offDf = offsets.toDF("_pid", "_coff")
-    val wLocal = Window.partitionBy("_pid").orderBy(keys: _*)
-    parted
-      .withColumn("_lrn", row_number().over(wLocal))
-      .join(broadcast(offDf), Seq("_pid"))
+  private def rankTwoPhase(df: DataFrame, keys: Seq[Column], rankCol: String): DataFrame =
+    twoPhase(df, keys, w => Seq("_lrn" -> row_number().over(w)),
+      Seq("_coff" -> count(lit(1))))._1
       .withColumn(rankCol, (col("_lrn") + col("_coff")).cast("int"))
       .drop("_pid", "_lrn", "_coff")
-  }
 
   /** Shared tail: pct / forced-1.0 cumulative / ABC classes from the
     * rank, total, cumulative and row-count columns.

@@ -2,51 +2,56 @@ package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.Tables
 import graft.sources.HadoopFs
 
-/** One measured sizing curve of the ANN gate: the three twin-level
-  * recall measures and the candidate volume, swept along one gate
-  * parameter on one corpus. Every family shares one lifecycle: sweep
-  * the axis against the exact anchors, persist the table in the
+/** The measured sizing curve of the ANN gate ([[GateRule]]): the three
+  * twin-level recall measures and the candidate volume, swept along the
+  * scanned-mass fraction on one corpus. Its lifecycle: sweep the axis
+  * against the exact anchors, persist the table in the
   * fit-fingerprinted tmpdir, read it back through the staleness-guarded
   * cache or the committed registry, and pick the cheapest swept value
-  * the curve certifies. The families differ only in the fields below,
-  * and [[GateCurve.all]] lists them.
-  *
-  * @param family        registry name (`graft_<family>_...json`)
-  * @param dirFamily     tmpdir family whose directory holds the file
-  * @param fileName      file name inside that directory
-  * @param axisKey       JSON key of the swept axis
-  * @param integralAxis  the axis is a count and prints as an integer
-  * @param recordsProbes rows also record the probe budget they were
-  *                      measured at (a curve swept at a budget
-  *                      production no longer resolves answers a
-  *                      question production never asks)
-  * @param cands         the candidate frame one axis value measures
+  * the curve certifies.
   */
-final class GateCurve private (
-    val family: String,
-    dirFamily: String,
-    fileName: String,
-    val axisKey: String,
-    val integralAxis: Boolean,
-    recordsProbes: Boolean,
-    cands: (GateCurve.SweepInput, Double) => DataFrame) {
-  import GateCurve._
+object GateCurve {
 
-  /** The persisted curve for a corpus. Fingerprinted on the FIT
-    * parameters only: the curve sweeps its axis, so the axis value must
-    * not key the location (the sized build changes the budget, and must
-    * still find the curve that sized it). A fit-parameter change moves
-    * the path, so a curve is never paired with a differently fitted
-    * quantizer.
+  /** Registry and tmpdir family name (`graft_gatemasssweep_...`). */
+  val family = "gatemasssweep"
+
+  /** JSON key of the swept axis. */
+  val axisKey = "mass_frac"
+
+  /** One measured row: (mass fraction, scored candidate rows, recall15,
+    * recall22, agree25), the units GateSweep prints and RecallSpec
+    * floors.
     */
+  type Row = (Double, Long, Double, Double, Double)
+
+  // doubles serialize via toString, which goes scientific below 1e-3
+  // ("1.0E-4"): the number pattern must accept exponents or rows
+  // silently drop
+  private val Num = """-?[0-9.]+(?:[eE][-+]?[0-9]+)?"""
+
+  private val rowPattern =
+    (s"""\\{"$axisKey":($Num),"cand_rows":(\\d+),"recall15":($Num),""" +
+      s""""recall22":($Num),"agree25":($Num)\\}""").r
+
+  /** The build-parameter fingerprint of the gate fit, shared by [[path]]
+    * and [[registryFile]]. Fit parameters only: the curve sweeps the
+    * budget, so the budget must not key the location (the sized build
+    * changes the budget, and must still find the curve that sized it).
+    * A fit-parameter change moves both names, so a curve is never
+    * paired with a differently fitted quantizer.
+    */
+  private def fitFingerprint: String = HadoopFs.paramFingerprint(
+    VectorQueries.GateFitIters, VectorQueries.GateFitPerCell, "sqrtK")
+
+  /** The persisted curve for a corpus. */
   def path(dir: String): String =
-    HadoopFs.indexPath(dirFamily, dir,
-      VectorQueries.GateFitIters, VectorQueries.GateFitPerCell, "sqrtK") + "/" + fileName
+    s"${sys.props("java.io.tmpdir")}/graft_${family}_${fitFingerprint}_" +
+      s"${HadoopFs.dirSlug(dir)}/_sweep.json"
 
   /** The committed registry entry for a corpus, keyed by the same fit
     * fingerprint and dir slug as [[path]] plus the corpus's content key
@@ -61,72 +66,50 @@ final class GateCurve private (
   def registryFile(dir: String): Option[java.io.File] =
     HadoopFs.contentKey(new org.apache.hadoop.conf.Configuration(),
         s"$dir/embeddings.parquet").map { key =>
-      val fp = HadoopFs.paramFingerprint(
-        VectorQueries.GateFitIters, VectorQueries.GateFitPerCell, "sqrtK")
-      new java.io.File(s"$registryDir/graft_${family}_${fp}_${HadoopFs.dirSlug(dir)}_$key.json")
+      new java.io.File(
+        s"$registryDir/graft_${family}_${fitFingerprint}_${HadoopFs.dirSlug(dir)}_$key.json")
     }
 
-  /** An axis value as the curve file and the sweep table print it. */
-  def show(axis: Double): String =
-    if (integralAxis) axis.toLong.toString else axis.toString
-
-  /** The probe budget a sweep of `dir` measures at, when the family
-    * records one: the budget production resolves for this corpus, not
-    * the [[VectorQueries.GateProbes]] constant.
+  /** A mass fraction as the curve file, the oracle SQL and the index
+    * fingerprint print it.
     */
-  def sweptAt(dir: String): Option[Int] =
-    if (recordsProbes) Some(GateRule.Fixed.resolved(dir).toInt) else None
+  def show(axis: Double): String = axis.toString
 
-  /** One row per axis value, measured against the exact anchors, which
-    * are materialized once for the whole sweep (they dominate its cost).
+  /** One row per mass fraction, measured against the exact anchors,
+    * which are materialized once for the whole sweep (they dominate its
+    * cost), over one production fit (it does not depend on the budget).
     */
   def sweep(s: SparkSession, dir: String, axes: Seq[Double]): Seq[Row] = {
-    val in = new SweepInput(s, dir)
+    val e = VectorQueries.embs(s, dir)
+    val n = Tables.embeddings(s, dir).count()
+    val cents = VectorQueries.gateFitCents(e, VectorQueries.gateK(n), n)
     val measure = VectorQueries.gateSweepAnchors(s, dir)
     axes.map { a =>
-      val (rows, r15, r22, r25) = measure(cands(in, a))
+      val (rows, r15, r22, r25) = measure(GateRule.candsWith(e, cents, a, n))
       (a, rows, r15, r22, r25)
     }
   }
 
-  def encode(rows: Seq[Row], probes: Option[Int] = None): String =
+  def encode(rows: Seq[Row]): String =
     rows.map { case (a, n, r15, r22, r25) =>
-      s"""{"$axisKey":${show(a)},""" + probes.fold("")(p => s""""probes":$p,""") +
-        s""""cand_rows":$n,"recall15":$r15,"recall22":$r22,"agree25":$r25}"""
+      s"""{"$axisKey":${show(a)},"cand_rows":$n,"recall15":$r15,""" +
+        s""""recall22":$r22,"agree25":$r25}"""
     }.mkString("[", ",", "]")
 
   /** `srcAtStart` is the corpus mtime the sweep captured before it
-    * started measuring (see [[GateCurve.stampPastCorpus]]).
+    * started measuring (see [[stampPastCorpus]]).
     */
-  def write(dir: String, rows: Seq[Row], srcAtStart: Long = -1L,
-      probes: Option[Int] = None): Unit = {
-    require(probes.isDefined == recordsProbes,
-      s"$family rows ${if (recordsProbes) "must" else "do not"} record a probe budget")
+  def write(dir: String, rows: Seq[Row], srcAtStart: Long = -1L): Unit = {
     val f = new java.io.File(path(dir))
     f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath, encode(rows, probes).getBytes("UTF-8"))
+    java.nio.file.Files.write(f.toPath, encode(rows).getBytes("UTF-8"))
     stampPastCorpus(f, dir, srcAtStart)
   }
 
-  private val rowPattern = {
-    val axis = if (integralAxis) """(\d+)""" else s"($Num)"
-    // the empty group keeps the later group numbers fixed
-    val probes = if (recordsProbes) """"probes":(\d+),""" else "()"
-    (s"""\\{"$axisKey":$axis,$probes"cand_rows":(\\d+),"recall15":($Num),""" +
-      s""""recall22":($Num),"agree25":($Num)\\}""").r
-  }
-
-  /** (rows, recorded probe budget) of one curve text; no rows when the
-    * text does not parse with this family's format. A K curve without
-    * the probes field (an older format) is re-sweep bait, not data:
-    * the budget it measured at is unknowable.
-    */
-  def parse(txt: String): (Seq[Row], Option[Int]) = {
-    val ms = rowPattern.findAllMatchIn(txt).toSeq
-    (ms.map(m => (m.group(1).toDouble, m.group(3).toLong, m.group(4).toDouble,
-        m.group(5).toDouble, m.group(6).toDouble)),
-      ms.headOption.filter(_ => recordsProbes).map(_.group(2).toInt))
-  }
+  /** The rows of one curve text; none when the text does not parse. */
+  def parse(txt: String): Seq[Row] =
+    rowPattern.findAllMatchIn(txt).map(m => (m.group(1).toDouble, m.group(2).toLong,
+      m.group(3).toDouble, m.group(4).toDouble, m.group(5).toDouble)).toSeq
 
   /** Candidate curve texts for a corpus, most authoritative first: the
     * tmpdir cache when current, then the committed registry entry. Both
@@ -143,16 +126,13 @@ final class GateCurve private (
     (tmp ++ reg).map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
   }
 
-  /** (rows, recorded probe budget) of the current curve, skipping any
-    * source that fails to parse.
+  /** The rows of the current curve, skipping any source that fails to
+    * parse.
     */
-  def readRecorded(dir: String): Option[(Seq[Row], Option[Int])] =
-    texts(dir).map(parse).find(_._1.nonEmpty)
+  def read(dir: String): Option[Seq[Row]] = texts(dir).map(parse).find(_.nonEmpty)
 
-  def read(dir: String): Option[Seq[Row]] = readRecorded(dir).map(_._1)
-
-  /** The cheapest swept axis value whose measured recall15 meets
-    * `target` on this corpus. The row must also clear
+  /** The cheapest swept fraction whose measured recall15 meets `target`
+    * on this corpus. The row must also clear
     * [[VectorQueries.GateSecondaryMin]] on recall22 and agree25: the
     * value serves all three gated families, so the primary target alone
     * must not certify a secondary collapse. None when no current curve
@@ -164,71 +144,24 @@ final class GateCurve private (
       r._4 >= VectorQueries.GateSecondaryMin && r._5 >= VectorQueries.GateSecondaryMin)
       .map(_._1))
 
-  /** [[cheapest]] at [[VectorQueries.GateRecallTarget]], else `fallback`,
-    * memoized per (family, corpus dir) for the JVM lifetime: one Verify
-    * process runs the gated queries AND dumps their oracle SQL, and both
-    * must see the same value even if a concurrent GateSweep rewrites
-    * the curve between the two reads. First resolution wins; specs that
-    * plant curves call [[VectorQueries.clearGateSizing]].
+  private val resolvedAxis = new ConcurrentHashMap[String, java.lang.Double]()
+
+  /** [[cheapest]] at [[VectorQueries.GateRecallTarget]], else
+    * [[VectorQueries.GateMassFrac]], memoized per corpus dir for the JVM
+    * lifetime: one Verify process runs the gated queries AND dumps their
+    * oracle SQL, and both must see the same value even if a concurrent
+    * GateSweep rewrites the curve between the two reads. First
+    * resolution wins; specs that plant curves call [[clearResolved]].
     */
-  def resolved(dir: String, fallback: Double): Double =
-    resolvedAxis.computeIfAbsent((family, dir), _ => java.lang.Double.valueOf(
-      cheapest(dir, VectorQueries.GateRecallTarget).getOrElse(fallback))).doubleValue
-}
+  def resolved(dir: String): Double =
+    resolvedAxis.computeIfAbsent(dir, _ => java.lang.Double.valueOf(
+      cheapest(dir, VectorQueries.GateRecallTarget).getOrElse(VectorQueries.GateMassFrac)))
+      .doubleValue
 
-object GateCurve {
-
-  /** One measured row: (axis value, scored candidate rows, recall15,
-    * recall22, agree25), the units GateSweep prints and RecallSpec
-    * floors.
+  /** Spec hook: drop memoized sizing decisions (a test that plants a
+    * curve, resolves, then plants a different curve needs the second
+    * plant to be visible). Never called on a production path.
     */
-  type Row = (Double, Long, Double, Double, Double)
-
-  // doubles serialize via toString, which goes scientific below 1e-3
-  // ("1.0E-4"): the number pattern must accept exponents or rows
-  // silently drop. Defined before the families, whose row patterns use it.
-  private val Num = """-?[0-9.]+(?:[eE][-+]?[0-9]+)?"""
-
-  /** What every axis value of one sweep shares: the corpus, its size,
-    * and (for the families that keep K = ⌈√n⌉) the production fit,
-    * fitted once because it does not depend on the swept value.
-    */
-  private[queries] final class SweepInput(s: SparkSession, dir: String) {
-    val e: DataFrame = VectorQueries.embs(s, dir)
-    val n: Long = Tables.embeddings(s, dir).count()
-    lazy val cents: Array[(Int, Seq[Double])] =
-      VectorQueries.gateFitCents(e, VectorQueries.gateK(n), n)
-    lazy val probes: Int = GateRule.Fixed.resolved(dir).toInt
-  }
-
-  /** Probe budget P at the production K. The sweep sizes
-    * [[GateRule.Fixed]].
-    */
-  val Probe = new GateCurve("gatesweep", "gatesweep", "_sweep.json", "probes",
-    integralAxis = true, recordsProbes = false,
-    (in, p) => GateRule.Fixed.candsWith(in.e, in.cents, p, in.n))
-
-  /** Scanned-mass fraction of the mass-budgeted probe at the production
-    * K. The sweep sizes [[GateRule.Mass]].
-    */
-  val Mass = new GateCurve("gatemasssweep", "gatemasssweep", "_sweep.json", "mass_frac",
-    integralAxis = false, recordsProbes = false,
-    (in, f) => GateRule.Mass.candsWith(in.e, in.cents, f, in.n))
-
-  /** Cell count K, each value a full refit probed at the resolved
-    * budget. Informational: production keeps K = ⌈√n⌉ unless
-    * [[VectorQueries.gateKRuleWarning]] flags this curve. Lives beside
-    * the probe curve, in the same fit-fingerprinted directory.
-    */
-  val K = new GateCurve("gateksweep", "gatesweep", "_ksweep.json", "k_cells",
-    integralAxis = true, recordsProbes = true,
-    (in, k) => GateRule.Fixed.candsWith(
-      in.e, VectorQueries.gateFitCents(in.e, k.toInt, in.n), in.probes, in.n))
-
-  val all: Seq[GateCurve] = Seq(Probe, Mass, K)
-
-  private val resolvedAxis = new ConcurrentHashMap[(String, String), java.lang.Double]()
-
   private[graft] def clearResolved(): Unit = resolvedAxis.clear()
 
   /** The repo-committed curve registry: `SPARK_GRAFT_CURVE_REGISTRY`,

@@ -752,8 +752,8 @@ object VectorQueries {
     * k-means consumer shares. Lexicographic struct order =
     * (distance, cid), so `array_min` is the argmin with the
     * smaller-centroid-id tiebreak inside the expression, and
-    * `array_sort` + `slice` is the top-P multi-probe list for the
-    * ANN-gated variants (qe15b/qe22b/qe25b). Rounding BEFORE the
+    * `array_sort` is the distance-ranked probe list of the ANN gate
+    * ([[GateRule]]). Rounding BEFORE the
     * ordering keeps both engines' FP summation orders from flipping
     * near-ties.
     *
@@ -1564,18 +1564,19 @@ object VectorQueries {
     * (kNN-distance is the classic non-parametric density estimate).
     *
     * This is the exact all-pairs formulation — the oracle anchor, same
-    * role as qe4's exact twin. The production shape is [[qe15b]]:
-    * multi-probe IVF candidate gating (4 of 8 cells) with exact
-    * refinement on candidates only — a monotone upper bound on the
-    * true distance, never all-pairs. Single-probe gating (the qe10
+    * role as qe4's exact twin. The production shape is [[qe15c]]:
+    * multi-probe IVF candidate gating with exact refinement on
+    * candidates only — a monotone upper bound on the true distance,
+    * never all-pairs. Single-probe gating (the qe10
     * Σn_c² shape) was measured first and rejected for this operator:
     * on near-random 64-dim vectors whose 5th-NN distances concentrate
     * in [0.65, 0.76] a query's neighbors land in its own argmin cell
     * too rarely (0.00/0.05 flag agreement at sf0.01/sf0.1); probing
-    * the 4 nearest cells recovers neighbor recall into the floored
-    * band — see the qe15b section doc. The 6dp-round-then-tiebreak
-    * discipline makes the k-th-neighbor pick and the global top-2% rank
-    * a total order on both engines → full hash-match oracle.
+    * the nearest cells up to a mass budget recovers neighbor recall
+    * into the floored band — see the qe15c section doc. The
+    * 6dp-round-then-tiebreak discipline makes the k-th-neighbor pick
+    * and the global top-2% rank a total order on both engines → full
+    * hash-match oracle.
     */
   private val DensityK = 5
 
@@ -1759,7 +1760,7 @@ object VectorQueries {
       .filter(col("rnk") === DensityK)
       .select(col("ida").as("vec_id"), col("dist").as("knn_dist")))
 
-  /** Shared qe15/qe15b OOD tail: global top-2% rank over the per-vector
+  /** Shared qe15/qe15c OOD tail: global top-2% rank over the per-vector
     * K-th-neighbor distances (two-phase-capable rankBy, 1-row count
     * broadcast).
     */
@@ -1793,194 +1794,77 @@ object VectorQueries {
        |FROM (SELECT *, CAST(row_number() OVER (
        |        ORDER BY knn_dist DESC, vec_id) AS INT) AS grnk FROM kth), t""".stripMargin
 
-  // ------------------------------------------- qe15b / qe22b / qe25b
+  // ------------------------------------------- qe15c / qe22c / qe25c
   /** ANN-gated production twins of the three exact all-pairs corpus
     * operators (kNN density qe15, mutual-NN bitext mining qe22,
     * leave-one-out kNN confusion qe25). Candidate generation is
-    * multi-probe IVF over deterministic k-means cells: every vector is
-    * HOMED in its argmin cell and PROBES its [[GateProbes]] nearest
-    * cells, and a directed candidate (a → b) exists iff b's home cell
+    * multi-probe IVF over deterministic k-means cells ([[GateRule]]):
+    * every vector is HOMED in its argmin cell and PROBES its
+    * distance-ranked cells until their cumulative home mass reaches the
+    * budget, and a directed candidate (a → b) exists iff b's home cell
     * is among a's probed cells. That makes the pair join an equi-join
     * on the cell id — a posting-list scan, never an `ida < idb` theta
     * self-join.
     *
-    * Scale discipline (this is what makes the gate a complexity-class
-    * win, not a constant):
+    * Scale discipline:
     *
-    *  - K = max(8, ⌈√n⌉) cells ([[gateK]]), P = [[GateProbes]] fixed.
-    *    Per-query candidates ≈ P·n/K ≈ P·√n, total scored pairs
-    *    ≈ P·n^1.5 — sub-quadratic BY SIZING, and the assignment cost
-    *    (n·K dot products) is the same P·n^1.5 class.
-    *  - The quantizer fits on a deterministic strided SAMPLE
-    *    (~[[GateFitPerCell]]·K rows — at this corpus the stride is 1
-    *    and the fit sees everything; at 100 TB the fit cost is bounded
-    *    by the sample, not the corpus), [[GateFitIters]] Lloyd
-    *    refits, every averaged component 6dp-rounded so the fit is
-    *    reproducible across partitionings (invariance
-    *    property-pinned in GraftProperties).
+    *  - K = max(8, ⌈√n⌉) cells ([[gateK]]). The quantizer fits on a
+    *    deterministic strided SAMPLE (~[[GateFitPerCell]]·K rows — at
+    *    the oracle scales the stride is 1 and the fit sees everything;
+    *    at 100 TB the fit cost is bounded by the sample, not the
+    *    corpus), [[GateFitIters]] Lloyd refits, every averaged
+    *    component 6dp-rounded so the fit is reproducible across
+    *    partitionings (invariance property-pinned in GraftProperties).
+    *  - Each vector scans ⌈massFrac·n⌉ home mass whatever the fit's
+    *    mass distribution. A fixed count of probed cells scans P·n/K
+    *    only on a balanced fit: high-dimensional near-random vectors
+    *    concentrate distances, a K=142 Lloyd fit of the 10× corpus
+    *    (n=20k) put most of the corpus in a few megacells, and a fixed
+    *    16-cell probe there scanned 53% of all pairs. Recall is a
+    *    function of scanned mass on these corpora, so pinning the mass
+    *    pins recall and cost together.
     *  - The scored candidate frame is built ONCE and PERSISTED (the
     *    qe5b/qd6b offline-index lifecycle, staleness-checked against
-    *    the source): qe15b/qe22b/qe25b all read the same artifact, so
+    *    the source): qe15c/qe22c/qe25c all read the same artifact, so
     *    each twin's per-query cost is one slim parquet scan plus its
-    *    own rank/agg tail — cheaper than its exact anchor by
-    *    construction, not just by a constant.
+    *    own rank/agg tail.
     *
-    * The nprobe trade (Jégou et al. 2011) is real on this data:
-    * near-random 64-dim vectors put a 5-NN in the query's own argmin
-    * cell too rarely (the measured 0.00/0.05 single-probe flag
-    * agreement), so the gate probes [[GateProbes]] cells and accepts
-    * the recall the fixed P/√K budget buys. The exact forms stay
-    * registered as the oracle anchors; the gated twins are
-    * recall-floored against them in RecallSpec/RECALL.json (neighbor
-    * recall for qe15b, pair recall for qe22b, per-vector prediction
-    * agreement for qe25b), and PlanSpec pins that candidate generation
-    * never contains a nested-loop or cartesian join.
+    * The exact forms stay registered as the oracle anchors; the gated
+    * twins are recall-floored against them in RecallSpec/RECALL.json
+    * (neighbor recall for qe15c, pair recall for qe22c, per-vector
+    * prediction agreement for qe25c), and PlanSpec pins that candidate
+    * generation never contains a nested-loop or cartesian join.
     */
-  // measured with tools/GateSweep: the probe/
-  // recall curve over the SAME persisted-fit machinery reads, at sf0.1
-  // (K=45): P=8 → 0.57/0.41/0.45, P=12 → 0.68/0.56/0.54, P=16 →
-  // 0.78/0.71/0.65, P=24 → 0.89/0.85/0.81, with candidate volume
-  // linear in P (713k/1.07M/1.43M/2.14M rows). P=16 is the knee that
-  // clears the earlier floor levels (0.60/0.50/0.50) on ALL three twins
-  // while keeping the scanned fraction P/√n — at n=10⁹ that is 0.05%
-  // of the corpus, the same complexity class as P=8.
-  //
-  // DESIGN ENVELOPE (the sweep at the 10× corpus, n=20,000, K=142,
-  // gates/r14): the feared recall-vs-n decay at fixed P did NOT
-  // materialize — P=16 reads 0.867/0.806/0.775 at n=20k, ABOVE the n=2k
-  // 0.778/0.715/0.650 — because K=⌈√n⌉ refines the quantizer as n grows
-  // and the finer cells recover what the shrinking P/K probe fraction
-  // gives up. What DOES degrade on this near-uniform 64-dim corpus is the
-  // COST model: measured candidate volume at n=20k is 215M directed rows
-  // (53% of all pairs, 4.8× the balanced-cell P·n/K prediction; at n=2k
-  // the same model was within 2%). High-dimensional near-random vectors
-  // concentrate distances, so a K=142 Lloyd fit yields skewed cell masses
-  // and every query probes the same heavy central cells — uniformity
-  // taxes the SCAN, not the recall. Real embedding corpora are clustered
-  // (that is what an embedding model is FOR); there the cells track
-  // cluster structure and candidate volume stays near P·n/K. The
-  // operating contract at scale is therefore: size by K=⌈√n⌉, keep P=16,
-  // and READ the persisted measurement ([[GateCurve.Probe]], written by
-  // tools/GateSweep next to the index) before trusting either number on a
-  // new corpus — the sweep is cheap relative to one production run and
-  // the curve is corpus-specific state, not a universal constant.
-  //
-  // The skew is NOT an under-iteration artifact (BENCH_NOTES.md; the
-  // GateResolve tool prints a corpus's home-mass distribution): at n=20k/K=142 the median cell holds ONE vector
-  // and the top-16 cells hold 56.4% of the corpus at 3 Lloyd iters —
-  // and still 52.2% at 16 iters. Argmin cells on distance-concentrated
-  // data are intrinsically mass-skewed. If a corpus needs a cost
-  // GUARANTEE rather than a measured curve, the mass-budgeted probe
-  // (rank cells by distance, cut at a cumulative-mass budget instead
-  // of a fixed cell count — still deterministic and SQL-replicable via
-  // a window over the ranked cells) trades recall for a pinned scan
-  // fraction. That rule is SHIPPED as the oracle-checked qe15c
-  // twin ([[GateRule.Mass]] at [[GateMassFrac]]); the measured
-  // equivalence (recall is a function of scanned mass — at equal mass
-  // the two rules agree to 3dp) is in gates/r14/mass_sweep_sf.txt.
-  private[graft] val GateProbes = 16
   private[queries] val GateFitIters = 3
   private[queries] val GateFitPerCell = 64
 
   /** Default recall15 target for recall-targeted gate sizing (the
     * persisted sweep curves as production behavior, not advisory
-    * measurement). 0.70
-    * is the recall class the P=16 constant was chosen to deliver at the
-    * tuned sf0.1 scale (measured 0.778 there, 0.867 at the n=20k skew
-    * corpus — gates/r14), so on the tuned corpus the sized build and
-    * the constant build coincide, while a corpus whose curve certifies
-    * a CHEAPER budget at the target (e.g. sf0.01: P=8 at 0.738)
-    * actually gets the cheaper index.
+    * measurement). At 0.70 the committed sf0.1 curve certifies exactly
+    * [[GateMassFrac]], so on the tuned corpus the sized build and the
+    * constant build coincide, while a corpus whose curve certifies a
+    * cheaper fraction at the target gets the cheaper index.
     */
   private[graft] val GateRecallTarget = 0.70
 
   /** The sizing target certifies recall15, but the sized budget also
-    * serves qe22b's mutual-NN recall and qe25b's confusion agreement —
-    * and the floors for those were derived from
-    * the SAME sweep that picked the budget, so a secondary-measure
-    * collapse would have self-certified. Absolute minimums the
-    * certified budget's curve row must ALSO meet on recall22/agree25:
-    * a budget whose row shows a secondary measure below this is not
-    * certifiable no matter how cheap (sizing then tries the next
-    * budget, or falls back to the constants). 0.50 = "the approximate
-    * family still finds the majority of what the exact twin finds" —
-    * an independent, corpus-agnostic bound, deliberately below every
-    * committed curve's certified rows (gates/r15: 0.596-0.935) so it
-    * binds only on genuine collapse.
+    * serves qe22c's mutual-NN recall and qe25c's confusion agreement,
+    * and the floors for those come from the SAME sweep that picked the
+    * budget, so a secondary-measure collapse would self-certify.
+    * Absolute minimums the certified budget's curve row must ALSO meet
+    * on recall22/agree25: a budget whose row shows a secondary measure
+    * below this is not certifiable no matter how cheap (sizing then
+    * tries the next budget, or falls back to the constant). 0.50 = "the
+    * approximate family still finds the majority of what the exact twin
+    * finds" — an independent, corpus-agnostic bound, below every
+    * committed curve's certified rows so it binds only on genuine
+    * collapse.
     */
   private[graft] val GateSecondaryMin = 0.50
 
-  /** Spec hook: drop memoized sizing decisions (a test that plants a
-    * curve, resolves, then plants a different curve needs the second
-    * plant to be visible). Never called on a production path.
-    */
-  private[graft] def clearGateSizing(): Unit = {
-    GateCurve.clearResolved()
-    resolvedRule.clear()
-  }
-
-  /** Fixed-P vs mass-budget auto-dispatch threshold. Fixed-P's scan cost
-    * is P·n/K on a balanced fit; on a mass-skewed fit every query probes
-    * the same heavy cells and the scan inflates to the top-P cells'
-    * combined mass fraction — measured 4.8× the balanced model at the
-    * n=20k megacell fit where recall stayed HIGHER than at sf0.1
-    * (gates/r14). The dispatch rule: when the production fit's top-P
-    * home-mass fraction exceeds this factor × the balanced P/K model, the
-    * fixed-P cost contract is broken badly enough that the mass-budgeted
-    * gate (cost pinned BY CONSTRUCTION, recall equal at equal scanned
-    * mass — reproduced to 3dp at two sfs and at 10×) is the right rule.
-    * 2.0 sits between the measured near-balanced oracle fits
-    * (gates/r15/cellbalance_sf.txt: top-16 mass 77.8% vs 69.6% balanced
-    * at sf0.01 → ratio 1.12; 40.4% vs 35.6% at sf0.1 → 1.14 — comfortably
-    * fixed-P) and the megacell regime (n=20k: 52-56% vs 11.3% → ratio
-    * 4.6-5.0 — mass), with the n=20k receipts as the justification for
-    * the gap being real and wide.
-    */
-  private[graft] val GateSkewFactor = 2.0
-
-  /** The dispatch rule as a pure function of the fit's home-mass
-    * distribution (spec-pinned both ways in GateSizingSpec). K ≤ P means
-    * the gate probes every cell: fixed-P is exact AND cost-capped there,
-    * so it wins by construction.
-    */
-  private[graft] def gateRuleFor(masses: Seq[Long], n: Long, probes: Int, k: Int): GateRule =
-    if (k > probes && n > 0 && {
-      val topP = masses.sorted(Ordering[Long].reverse).take(probes).map(_.toDouble).sum
-      topP / n > GateSkewFactor * probes.toDouble / k
-    }) GateRule.Mass
-    else GateRule.Fixed
-
-  private val resolvedRule =
-    new java.util.concurrent.ConcurrentHashMap[String, GateRule]()
-
-  /** Production dispatch for this corpus: measure the production fit's
-    * home-mass skew once per JVM and pick the rule ([[gateRuleFor]] at
-    * the resolved probe budget). Memoized like the sizing: one Verify
-    * process decides once and both the engine run and the dumped oracle
-    * SQL see that decision.
-    */
-  private[graft] def gateRule(s: SparkSession, dir: String): GateRule =
-    resolvedRule.computeIfAbsent(dir, _ => {
-      val masses = gateHomeMasses(s, dir)
-      val n = masses.sum
-      gateRuleFor(masses, n, GateRule.Fixed.resolved(dir).toInt, gateK(n))
-    })
-
-  /** The decision already made for `dir` this JVM, if any — what the
-    * dump-time oracle reads (the engine ran qe15d earlier in the same
-    * process, so the memo is set; an unset memo means qe15d never ran
-    * and the entry defaults to the fixed-P arm, matching the engine's
-    * no-information default).
-    */
-  private[graft] def gateRuleDecided(dir: String): Option[GateRule] =
-    Option(resolvedRule.get(dir))
-
-  /** √n-list IVF sizing: candidate volume per query is P·n/K, so
-    * K ~ √n holds total work at P·n^1.5. Floor 8 keeps the quantizer
-    * meaningful on tiny corpora; when K ≤ [[GateProbes]] the gate
-    * probes EVERY cell and degenerates to the exact all-pairs set —
-    * correct (recall 1.0), just not sub-quadratic, which a ≤64-vector
-    * corpus doesn't need.
+  /** √n-list IVF sizing: K ~ √n keeps the assignment cost (n·K dot
+    * products) sub-quadratic. Floor 8 keeps the quantizer meaningful on
+    * tiny corpora.
     */
   private[graft] def gateK(n: Long): Int =
     math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -1988,7 +1872,7 @@ object VectorQueries {
   /** The gate's quantizer fit alone (strided sample + Lloyd refits) —
     * split from the probe stage so a budget sweep ([[GateCurve]]) fits
     * ONCE and re-probes at each budget (the fit does not depend on the
-    * probe rule or its budget).
+    * budget).
     */
   private[graft] def gateFitCents(e: DataFrame, k: Int, n: Long): Array[(Int, Seq[Double])] = {
     val stride = math.max(1L, n / (GateFitPerCell.toLong * k))
@@ -1997,18 +1881,18 @@ object VectorQueries {
     kmeansCentroids(fit.select("vec_id", "vec", "nrm"), k, GateFitIters)
   }
 
-  /** Shared unordered-pair scoring tail of every [[GateRule]]: directed
-    * (cid, ida) probes × (cid, idb) homes → each unordered pair
-    * cosine-scored once and mirrored into its surviving directions.
+  /** Unordered-pair scoring tail of [[GateRule]]: directed (cid, ida)
+    * probes × (cid, idb) homes → each unordered pair cosine-scored once
+    * and mirrored into its surviving directions.
     */
   private[queries] def gateScoreCands(e: DataFrame, probed: DataFrame,
       home: DataFrame): DataFrame = {
     // the candidate join runs on bare ids —
     // no embedding ever rides the explode or the cid shuffle — and each
     // UNORDERED pair is cosine-scored exactly once, then mirrored into
-    // whichever directions survived the gate. At P ≫ 1 both directions
-    // almost always survive (every vector probes its own home cell), so
-    // a directed frame would score nearly every cosine twice. dot() is
+    // whichever directions survived the gate. Both directions almost
+    // always survive (every vector probes its own home cell), so a
+    // directed frame would score nearly every cosine twice. dot() is
     // an index-ordered fold of commutative products, so cos(a,b) is
     // bit-equal to cos(b,a): the directed output rows — and the DuckDB
     // oracle hashes over them — are unchanged by construction.
@@ -2033,11 +1917,10 @@ object VectorQueries {
           col("lo").as("idb"), col("l_lo").as("lb"), col("cos")))
   }
 
-  /** The three exact-twin anchors every gate sweep measures against,
+  /** The three exact-twin anchors a gate sweep measures against,
     * materialized once (they are the sweep's dominant cost), returned
     * as a measurement closure: candidate frame in → (scored rows,
-    * recall15, recall22, agree25) out — every [[GateCurve]] sweep
-    * shares this tail.
+    * recall15, recall22, agree25) out.
     */
   private[queries] def gateSweepAnchors(s: SparkSession, dir: String)
       : DataFrame => (Long, Double, Double, Double) = {
@@ -2067,40 +1950,10 @@ object VectorQueries {
     }
   }
 
-  /** Onboarding contradiction check for the K rule: K = ⌈√n⌉ owns the
-    * gate's complexity class and the K-sweeps KEPT it with receipts at
-    * three corpora (equal-scanned-mass recall equivalence across the K
-    * axis). A persisted K curve CONTRADICTS the rule when some swept K
-    * strictly dominates the rule's own swept row — at least the recall15
-    * for strictly fewer candidate rows; on an equivalence-shaped curve
-    * (recall a function of scanned mass alone) that cannot happen, so a
-    * hit means this corpus's geometry genuinely breaks the rule. Same
-    * philosophy as [[gateRuleFor]]: a measured check with a receipt,
-    * consulted at onboarding (tools/GateSweep prints it after every K
-    * sweep) — not an auto-resize.
-    */
-  def gateKRuleWarning(dir: String, n: Long): Option[String] =
-    GateCurve.K.read(dir).flatMap { rows =>
-      val k0 = gateK(n)
-      // the sweeps bracket the rule (K/2, K, 2K) — judge its nearest row
-      val base = rows.minBy(r => math.abs(r._1 - k0))
-      // dominance must hold on ALL THREE measures — the
-      // GateSecondaryMin philosophy is that a budget is only certified
-      // when recall22/agree25 hold too, so a K that beats sqrt-n on
-      // recall15 while collapsing the secondaries is a trade, not a
-      // domination, and must not flag the rule
-      rows.find(r => r._1 != base._1 && r._2 < base._2 &&
-          r._3 >= base._3 && r._4 >= base._4 && r._5 >= base._5).map(r =>
-        s"K-sweep contradicts K=ceil(sqrt(n))=$k0: K=${r._1.toInt} dominates " +
-          s"K=${base._1.toInt} (cand_rows ${r._2} < ${base._2}, recall15/22/agree25 " +
-          s"${r._3}/${r._4}/${r._5} >= ${base._3}/${base._4}/${base._5})")
-    }
-
   /** Home-cell mass per non-empty cell of the PRODUCTION gate fit,
-    * heaviest first: the dispatch signal of [[gateRule]], and what
-    * tools/GateResolve prints (a skewed mass distribution, not the probe
-    * rule, is what inflates the scan past the balanced P·n/K model on
-    * near-uniform corpora).
+    * heaviest first: what tools/GateResolve prints (a skewed mass
+    * distribution is what makes a fixed cell count scan far more than
+    * its balanced share on near-uniform corpora).
     */
   private[graft] def gateHomeMasses(s: SparkSession, dir: String): Seq[Long] = {
     val e = embs(s, dir)
@@ -2113,24 +1966,15 @@ object VectorQueries {
       .collect().map(_.getLong(1)).sorted(Ordering[Long].reverse).toSeq
   }
 
-  /** qe15's production twin: K-th-NN distance + top-2% OOD flag over
-    * the gated candidates. A vector with fewer than [[DensityK]] gated
-    * candidates keeps its max-rank candidate distance instead of
-    * silently dropping out (a dropped vector would shrink
-    * the top-2% denominator relative to exact qe15 — every vector
-    * stays in the census with its best available distance estimate),
-    * and a vector with ZERO gated candidates — possible on degenerate
-    * corpora where its probed cells hold no other vector — enters at
-    * the maximum cosine distance 2.0, i.e. maximally OOD, via the
-    * left join from the full vector list (the max-rank fix alone
-    * still lost the zero-candidate case from the denominator).
-    */
-  def qe15b(s: SparkSession, dir: String): DataFrame =
-    densityTailFrom(s, dir, GateRule.Fixed.read(s, dir))
-
-  /** qe15's census/OOD tail over ANY directed scored candidate frame —
-    * shared verbatim by every [[GateRule]]'s twin, so the twins differ
-    * in candidate GENERATION only.
+  /** qe15's census/OOD tail over the gated candidate frame. A vector
+    * with fewer than [[DensityK]] gated candidates keeps its max-rank
+    * candidate distance instead of silently dropping out (a dropped
+    * vector would shrink the top-2% denominator relative to exact qe15
+    * — every vector stays in the census with its best available
+    * distance estimate), and a vector with ZERO gated candidates —
+    * possible on degenerate corpora where its probed cells hold no
+    * other vector — enters at the maximum cosine distance 2.0, i.e.
+    * maximally OOD, via the left join from the full vector list.
     */
   private def densityTailFrom(s: SparkSession, dir: String,
       sym: DataFrame): DataFrame = {
@@ -2144,7 +1988,6 @@ object VectorQueries {
       // cut lineage here: oodFrom consumes its input TWICE (the ranked
       // path and the broadcast n_all count) — without the cut each
       // consumer re-runs the two windows over the full candidate frame
-      // (~n^1.5 rows; measured +3-5 s at the 10x smoke)
       .localCheckpoint()
     // census base: the RAW table pruned to vec_id (embs()'s vec/nrm
     // projection would drag the embedding column through the scan)
@@ -2153,83 +1996,36 @@ object VectorQueries {
       .withColumn("knn_dist", coalesce(col("knn_dist"), lit(2.0))))
   }
 
-  /** qe15c's pinned scan fraction: each vector probes ranked cells
-    * until the cumulative home mass reaches ⌈0.35·n⌉. 0.35 is the
-    * measured equivalence point at the oracle scales — the fixed-P=16
-    * gate scans 1.43M directed candidates at sf0.1 and the 0.35 budget
-    * scans 1.44M at recall equal to 3dp (gates/r14/mass_sweep_sf.txt:
-    * 0.7811/0.7166/0.6505 vs 0.778/0.715/0.650) — so the twin pays
-    * P=16's cost at the sfs where the fit is near-balanced, and holds
-    * that cost BY CONSTRUCTION when a skewed fit would inflate the
-    * fixed-P scan (the n=20k megacell regime, BENCH_NOTES.md).
+  /** The gate's scanned-mass fraction when no current curve certifies
+    * one: each vector probes ranked cells until the cumulative home
+    * mass reaches ⌈0.35·n⌉. 0.35 is the fraction the committed sf0.1
+    * curve certifies at [[GateRecallTarget]] (0.7811/0.7166/0.6505 for
+    * 1.44M directed candidates, gates/curves/).
     */
   private[graft] val GateMassFrac = 0.35
 
-  /** qe15b's mass-budgeted sibling (the production form of the
-    * envelope note at [[GateProbes]]): identical density/OOD tail,
-    * candidate generation by [[GateRule.Mass]]. The operating difference
-    * is the COST contract: qe15b's fixed P=16 probes scan P·n/K on
-    * balanced fits but inflate to >50% of all pairs when argmin cells
-    * go mass-skewed (measured at n=20k, gates/r14), while qe15c's
-    * scanned mass is ⌈0.35·n⌉ per query regardless of the fit's mass
-    * distribution — recall floats, cost does not.
+  /** qe15's production twin: K-th-NN distance + top-2% OOD flag over
+    * the [[GateRule]] candidates.
     */
   def qe15c(s: SparkSession, dir: String): DataFrame =
-    densityTailFrom(s, dir, GateRule.Mass.read(s, dir))
-
-  /** The AUTO-DISPATCHED gated density twin:
-    * measures the production fit's home-mass skew and serves whichever
-    * gate rule [[gateRuleFor]] certifies for THIS corpus — fixed-P
-    * where the fit is near-balanced (the oracle sfs; fixed-P's scan
-    * tracks the P·n/K model there), the mass-budgeted cut where
-    * megacells break fixed-P's cost contract (the n=20k skew corpus).
-    * This is the entry a 100 TB operator actually calls: the two
-    * explicit twins stay registered as the rule-pinned anchors, and
-    * the dispatch decision is recorded once per JVM and mirrored into
-    * the dump-time oracle ([[gateOracle]]).
-    */
-  def qe15d(s: SparkSession, dir: String): DataFrame =
-    densityTailFrom(s, dir, gateRule(s, dir).read(s, dir))
-
-  /** The mutual-NN family's auto-dispatched entry. The dispatch signal is
-    * corpus-level (the production fit's home-mass skew), so all three
-    * families share the memoized decision; what this entry adds is the
-    * hash-checked receipt that the mutual-NN TAIL routes through it too.
-    */
-  def qe22d(s: SparkSession, dir: String): DataFrame =
-    mutualMarginFrom(gateRule(s, dir).read(s, dir).select("ida", "idb", "cos"))
-
-  /** The confusion family's auto-dispatched entry — see [[qe22d]]. */
-  def qe25d(s: SparkSession, dir: String): DataFrame =
-    confusionFrom(knnPredFrom(gateRule(s, dir).read(s, dir)))
-
-  /** qe22b's mass-budgeted sibling: identical mutual-top-1 ratio-margin
-    * tail over the [[GateRule.Mass]] candidate frame (one persisted
-    * index serves all three c-twins).
-    */
-  def qe22c(s: SparkSession, dir: String): DataFrame =
-    mutualMarginFrom(GateRule.Mass.read(s, dir).select("ida", "idb", "cos"))
-
-  /** qe25b's mass-budgeted sibling: identical vote/confusion tail. */
-  def qe25c(s: SparkSession, dir: String): DataFrame =
-    confusionFrom(knnPredFrom(GateRule.Mass.read(s, dir)))
+    densityTailFrom(s, dir, GateRule.read(s, dir))
 
   /** qe22's production twin: mutual-top-1 ratio-margin pairs over the
     * gated candidates (both directions must survive the gate AND be
     * each other's top-1 — the mutual check is unchanged).
     */
-  def qe22b(s: SparkSession, dir: String): DataFrame =
-    mutualMarginFrom(GateRule.Fixed.read(s, dir).select("ida", "idb", "cos"))
+  def qe22c(s: SparkSession, dir: String): DataFrame =
+    mutualMarginFrom(GateRule.read(s, dir).select("ida", "idb", "cos"))
 
   /** qe25's production twin: leave-one-out majority-label confusion
     * matrix voted over the gated candidate top-K.
     */
-  def qe25b(s: SparkSession, dir: String): DataFrame =
-    confusionFrom(knnPredFrom(GateRule.Fixed.read(s, dir)))
+  def qe25c(s: SparkSession, dir: String): DataFrame =
+    confusionFrom(knnPredFrom(GateRule.read(s, dir)))
 
   /** Recall-spec probes: per-vector top-[[DensityK]] neighbor id pairs
     * (ida, idb) and per-vector label predictions, on the exact path and
-    * on one gate rule's persisted candidates.
+    * on the gate's persisted candidates.
     */
   private def topKPairs(sym: DataFrame): DataFrame =
     sym.withColumn("rn", row_number().over(
@@ -2239,14 +2035,14 @@ object VectorQueries {
   private[graft] def knnPairsExact(s: SparkSession, dir: String): DataFrame =
     topKPairs(labeledSymExact(s, dir))
 
-  private[graft] def knnPairsAt(s: SparkSession, dir: String, rule: GateRule): DataFrame =
-    topKPairs(rule.read(s, dir))
+  private[graft] def knnPairsAt(s: SparkSession, dir: String): DataFrame =
+    topKPairs(GateRule.read(s, dir))
 
   private[graft] def qe25PredExact(s: SparkSession, dir: String): DataFrame =
     knnPredFrom(labeledSymExact(s, dir))
 
-  private[graft] def qe25PredAt(s: SparkSession, dir: String, rule: GateRule): DataFrame =
-    knnPredFrom(rule.read(s, dir))
+  private[graft] def qe25PredAt(s: SparkSession, dir: String): DataFrame =
+    knnPredFrom(GateRule.read(s, dir))
 
   /** Rounded squared L2 distance, the SQL twin of [[centroidCands]]. */
   private def d2Sql(v: String, c: String) =
@@ -2731,7 +2527,7 @@ object VectorQueries {
       .withColumn("cos", dround(col("rawcos"), 6))
       .select("ida", "idb", "cos"))
 
-  /** Shared qe22/qe22b tail: `scored` is a directed candidate frame
+  /** Shared qe22/qe22c tail: `scored` is a directed candidate frame
     * (ida, idb, cos) — each row "idb is a scored candidate of ida".
     * Ranks per ida, takes the top-K micro-cosine sums and the top-1,
     * keeps pairs where each side is the other's top-1, and emits the
@@ -2930,7 +2726,7 @@ object VectorQueries {
     confusionFrom(knnPredFrom(labeledSymExact(s, dir)))
 
   /** Exact directed labeled candidate frame shared by qe25 and the
-    * qe25b recall measurement — the blocked-kernel form of the retired
+    * qe25c recall measurement — the blocked-kernel form of the retired
     * mirrored theta self-join. Its consumers read each ida's true top-k
     * under (cos desc, idb asc) for k = K (knnPredFrom's votes) and
     * k = DensityK (knnPairsExact's pairs); building with the larger of
@@ -2942,7 +2738,7 @@ object VectorQueries {
       .withColumn("cos", dround(col("rawcos"), 6))
       .select("ida", "la", "idb", "lb", "cos")
 
-  /** Shared qe25/qe25b vote stage: top-K by cosine per vector, majority
+  /** Shared qe25/qe25c vote stage: top-K by cosine per vector, majority
     * label with the (votes desc, label asc) tiebreak. Keeps ida so the
     * recall spec can compare per-vector predictions across the exact
     * and gated paths.
@@ -2958,7 +2754,7 @@ object VectorQueries {
       .filter(col("vr") === 1)
       .select(col("ida"), col("la").as("true_label"), col("lb").as("pred_label"))
 
-  /** Shared qe25/qe25b matrix tail: true × predicted counts with row
+  /** Shared qe25/qe25c matrix tail: true × predicted counts with row
     * fractions (label-cardinality-sized frames, broadcast totals).
     */
   private def confusionFrom(pred: DataFrame): DataFrame = {
@@ -3283,26 +3079,20 @@ object VectorQueries {
     pcaProject(s, dir, basis)
   }
 
-  /** The nine gated-twin oracles (three tails × {fixed-P, mass-budget,
-    * dispatched}), generated AT DUMP TIME with the SAME resolved budgets
-    * the production builds used for this corpus: when Verify threads a
-    * concrete sf dir, each rule's budget is [[GateRule.resolved]],
-    * memoized per JVM, so the engine run earlier in the same Verify
-    * process built against the identical numbers. With no dir
-    * (SparkEntry.oracleSql) the documented constants are interpolated,
-    * matching the no-curve fallback build. The dispatched twins mirror
-    * the decision the engine memoized for this corpus earlier in the
-    * same JVM (unset = the fixed-P default the engine would also take).
+  /** The three gated-twin oracles, generated AT DUMP TIME with the SAME
+    * resolved budget the production build used for this corpus: when
+    * Verify threads a concrete sf dir, the budget is
+    * [[GateRule.resolved]], memoized per JVM, so the engine run earlier
+    * in the same Verify process built against the identical number. With
+    * no dir (SparkEntry.oracleSql) the documented constant is
+    * interpolated, matching the no-curve fallback build.
     */
   def gateOracle(sfDir: Option[String]): Map[String, String] = {
-    val dispatched = sfDir.flatMap(gateRuleDecided).getOrElse(GateRule.Fixed)
-    val rules = Seq("b_gated" -> GateRule.Fixed, "c_massgated" -> GateRule.Mass,
-      "d_autogated" -> dispatched)
-    val tails = Seq[(String, String, String => String)](
-      ("qe15", "density", densityTailSql), ("qe22", "mutual_nn", mutualTailSql),
-      ("qe25", "confusion", confusionTailSql))
-    (for ((q, t, tail) <- tails; (arm, r) <- rules)
-      yield s"$q${arm}_$t" -> tail(r.ctes(sfDir.fold(r.fallback)(r.resolved)))).toMap
+    val gcand = GateRule.ctes(sfDir.fold(GateMassFrac)(GateRule.resolved))
+    Map(
+      "qe15c_massgated_density" -> densityTailSql(gcand),
+      "qe22c_massgated_mutual_nn" -> mutualTailSql(gcand),
+      "qe25c_massgated_confusion" -> confusionTailSql(gcand))
   }
 
   /** The qe28b oracle, generated AT DUMP TIME from the persisted
@@ -3578,11 +3368,7 @@ object VectorQueries {
     "qe14_pq_ann" -> (qe14 _),
     "qe14b_pq_probe" -> (qe14b _),
     "qe15_knn_density" -> (qe15 _),
-    "qe15b_gated_density" -> (qe15b _),
     "qe15c_massgated_density" -> (qe15c _),
-    "qe15d_autogated_density" -> (qe15d _),
-    "qe22d_autogated_mutual_nn" -> (qe22d _),
-    "qe25d_autogated_confusion" -> (qe25d _),
     "qe22c_massgated_mutual_nn" -> (qe22c _),
     "qe25c_massgated_confusion" -> (qe25c _),
     "qe16_cluster_sample" -> (qe16 _),
@@ -3592,11 +3378,9 @@ object VectorQueries {
     "qe20_ivf_pq" -> (qe20 _),
     "qe21_rocchio_feedback" -> (qe21 _),
     "qe22_mutual_nn_pairs" -> (qe22 _),
-    "qe22b_gated_mutual_nn" -> (qe22b _),
     "qe23_centroid_matrix" -> (qe23 _),
     "qe24_segment_merge_topk" -> (qe24 _),
     "qe25_knn_confusion" -> (qe25 _),
-    "qe25b_gated_confusion" -> (qe25b _),
     "qe26_probe_sweep" -> (qe26 _),
     "qe27_embedding_health" -> (qe27 _),
     "qe28_pca_projection" -> (qe28 _),

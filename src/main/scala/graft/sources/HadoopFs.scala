@@ -83,9 +83,9 @@ object HadoopFs {
     catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
-  /** The parameter fingerprint [[indexPath]] embeds — exposed so the
-    * curve registry can key committed artifacts by the same
-    * build-parameter identity the tmpdir cache uses.
+  /** A hash of build parameters: [[indexPath]] embeds it over the
+    * parameters plus [[codeFingerprint]], and the gate curve's cache and
+    * registry names over the fit parameters alone.
     */
   def paramFingerprint(params: Any*): String =
     (scala.util.hashing.MurmurHash3.stringHash(
@@ -111,20 +111,58 @@ object HadoopFs {
     norm.replaceAll("[^A-Za-z0-9]", "_")
   }
 
-  /** Parameter-fingerprinted tmpdir location for a persisted index
-    * family: the directory name embeds a hash of every BUILD parameter,
-    * so a code/parameter change can never silently serve an artifact
-    * built by an older configuration — [[indexStale]]'s mtime check only
-    * protects against SOURCE changes, not against the builder itself
-    * changing. Distinct parameterizations get distinct directories
+  /** Fingerprint of graft's compiled code ([[codeFingerprintOf]] the
+    * code source this class was loaded from), computed once per JVM. An
+    * unreadable code source keys as `nocode`.
+    */
+  lazy val codeFingerprint: String = scala.util.Try(codeFingerprintOf(
+    new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)))
+    .getOrElse("nocode")
+
+  /** CRC-32C over every `.class` file below `graft/` in `root` (a classes
+    * directory or a jar), in path order, each file's `/`-separated
+    * relative path, a 0 byte and its bytes; 8 hex digits. The same
+    * classes key alike in a directory and in a jar.
+    */
+  private[graft] def codeFingerprintOf(root: java.io.File): String = {
+    import scala.jdk.CollectionConverters._
+    val classes: Seq[(String, Array[Byte])] =
+      if (root.isDirectory) {
+        def under(f: java.io.File, rel: String): Seq[(String, Array[Byte])] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(k => under(k, s"$rel/${k.getName}"))
+          else if (rel.endsWith(".class")) Seq(rel -> java.nio.file.Files.readAllBytes(f.toPath))
+          else Nil
+        under(new java.io.File(root, "graft"), "graft")
+      } else {
+        val jar = new java.util.jar.JarFile(root)
+        try jar.entries.asScala
+          .filter(e => e.getName.startsWith("graft/") && e.getName.endsWith(".class"))
+          .map(e => e.getName -> jar.getInputStream(e).readAllBytes()).toSeq
+        finally jar.close()
+      }
+    val crc = new java.util.zip.CRC32C()
+    for ((name, bytes) <- classes.sortBy(_._1)) {
+      crc.update(name.getBytes("UTF-8"))
+      crc.update(0)
+      crc.update(bytes)
+    }
+    f"${crc.getValue}%08x"
+  }
+
+  /** Fingerprinted tmpdir location for a persisted index family: the
+    * directory name embeds a hash of every BUILD parameter and of
+    * graft's compiled code ([[codeFingerprint]]), so neither a parameter
+    * change nor a change to the build code can serve an artifact built
+    * by the older one — [[indexStale]]'s mtime check only protects
+    * against SOURCE changes. Distinct builds get distinct directories
     * (they coexist; the orphaned one ages out with the tmpdir).
-    * Concurrent writers of the SAME parameterization still share a
-    * path — acceptable because the build is deterministic (both produce
+    * Concurrent writers of the SAME build still share a path —
+    * acceptable because the build is deterministic (both produce
     * identical bytes) and the witness-last commit means a reader never
     * sees a torn write as fresh.
     */
   def indexPath(family: String, dir: String, params: Any*): String = {
-    val fp = paramFingerprint(params: _*)
+    val fp = paramFingerprint(params :+ codeFingerprint: _*)
     s"${sys.props("java.io.tmpdir")}/graft_${family}_${fp}_${dirSlug(dir)}"
   }
 

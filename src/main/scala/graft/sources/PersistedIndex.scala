@@ -41,6 +41,5 @@ object PersistedIndex {
     * pq before ivfpq, which merges them).
     */
   lazy val all: Seq[PersistedIndex] =
-    Seq(V.Ivf, T.Minhash, T.Bm25, V.Pq, V.IvfPq) ++ GateRule.all.map(_.index) ++
-      Seq(V.Pca, T.Bloom)
+    Seq(V.Ivf, T.Minhash, T.Bm25, V.Pq, V.IvfPq, GateRule.index, V.Pca, T.Bloom)
 }

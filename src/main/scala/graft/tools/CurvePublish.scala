@@ -4,18 +4,18 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.queries.GateCurve
 
-/** Publish the tmpdir gate sizing curves into the repo-committed curve
+/** Publish the tmpdir gate sizing curve into the repo-committed curve
   * registry. Without it sizing depended on hidden machine state: the
   * curves lived only under the tmpdir, so `rm -rf /tmp/graft_gate*` (or
   * a clean checkout) silently flipped the production gate builds from
-  * the certified-cheaper sized budget back to the constants. This copies
-  * each corpus's CURRENT tmpdir curve of every [[GateCurve.all]] family
-  * into `SPARK_GRAFT_CURVE_REGISTRY` (default `gates/curves`) under the
-  * name the reader resolves ([[GateCurve.registryFile]]: the slug pins
-  * the corpus, the content key is its staleness witness), making the
-  * sized build reproducible from the committed tree alone.
+  * the certified-cheaper sized budget back to the constant. This copies
+  * each corpus's CURRENT tmpdir [[GateCurve]] into
+  * `SPARK_GRAFT_CURVE_REGISTRY` (default `gates/curves`) under the name
+  * the reader resolves ([[GateCurve.registryFile]]: the slug pins the
+  * corpus, the content key is its staleness witness), making the sized
+  * build reproducible from the committed tree alone.
   *
-  * No Spark session: the curves are small JSON files and the corpus
+  * No Spark session: a curve is a small JSON file and the corpus
   * fingerprint is a filesystem stat. Usage:
   * `sbt "runMain graft.tools.CurvePublish <sfDir> [<sfDir> ...]"`.
   * Stale tmpdir curves (older than the corpus) are refused: a registry
@@ -26,10 +26,10 @@ object CurvePublish {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: CurvePublish <sfDir> [<sfDir> ...]")
     Files.createDirectories(Paths.get(GateCurve.registryDir))
-    for (dir <- args; curve <- GateCurve.all) {
-      val family = curve.family
-      val src = Paths.get(curve.path(dir))
-      curve.registryFile(dir) match {
+    val family = GateCurve.family
+    for (dir <- args) {
+      val src = Paths.get(GateCurve.path(dir))
+      GateCurve.registryFile(dir) match {
         case None =>
           println(s"[publish] SKIP $family @ $dir - corpus absent/empty (no content identity)")
         case Some(dst) if !Files.exists(src) =>
@@ -41,9 +41,9 @@ object CurvePublish {
           val fresh = GateCurve.cacheCurrent(src.toFile, dir)
           // a registry entry that doesn't parse with its reader is worse
           // than none: the clean-machine build would silently fall back
-          // to constants while the registry claims the curve is
+          // to the constant while the registry claims the curve is
           // published. Validate BEFORE copying.
-          lazy val parses = curve.parse(new String(Files.readAllBytes(src), "UTF-8"))._1.nonEmpty
+          lazy val parses = GateCurve.parse(new String(Files.readAllBytes(src), "UTF-8")).nonEmpty
           if (!fresh)
             println(s"[publish] REFUSE $family @ $dir - tmpdir curve is stale vs the corpus")
           else if (!parses)

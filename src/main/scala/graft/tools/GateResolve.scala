@@ -4,21 +4,19 @@ import graft.queries.{GateCurve, GateRule, VectorQueries}
 
 /** One-stop gate onboarding readout for a corpus: what the production
   * gate would ACTUALLY build here, from the committed curve registry and
-  * tmpdir cache as they stand. It prints each [[GateRule]]'s resolved
-  * budget (curve-sized when a current curve exists), the curve each
-  * [[GateCurve.all]] family reads, the home-cell mass distribution of
-  * the production fit with the fixed-P vs mass-budget dispatch decision
-  * it drives, and the K-rule contradiction check over the persisted K
-  * curve. A clean checkout runs it and reads the same numbers the
-  * committed receipts were built with.
+  * tmpdir cache as they stand. It prints the resolved mass budget
+  * (curve-sized when a current curve exists), the curve it reads, and
+  * the home-cell mass distribution of the production fit. A clean
+  * checkout runs it and reads the same numbers the committed receipts
+  * were built with.
   *
   * The mass line reads `n`, `K`, the non-empty cell count, the heaviest
-  * and median cell, and the top-P cells' share of the corpus next to
-  * the P/K share a balanced fit would give: empty cells and a heavy
-  * tail mean the quantizer, not the probe rule, skews the scan.
+  * and median cell, and how many of the heaviest cells hold the budget
+  * ⌈massFrac·n⌉ next to the ⌈massFrac·K⌉ a balanced fit would need:
+  * empty cells and a heavy tail mean a few megacells hold the corpus.
   *
   * Usage: `sbt "runMain graft.tools.GateResolve <sfDir> [...]"`.
-  * `SPARK_GRAFT_RESOLVE_ONLY=1` skips the Spark-session steps (the
+  * `SPARK_GRAFT_RESOLVE_ONLY=1` skips the Spark-session step (the
   * mass distribution needs a fit) and prints just the curve-driven
   * sizing, enough to audit registry resolution without a cluster.
   */
@@ -39,51 +37,21 @@ object GateResolve {
         s"${sys.props("user.dir")} - sizing will use tmpdir cache/constants " +
         "only (set SPARK_GRAFT_CURVE_REGISTRY to the committed gates/curves)")
     for (dir <- args) {
-      def budget(r: GateRule) = {
-        val b = r.resolved(dir)
-        r.curve.show(b) + (if (b == r.fallback) " (constant-or-curve)" else " (curve-sized)")
-      }
-      val p = GateRule.Fixed.resolved(dir).toInt
-      println(s"[resolve] $dir probes=${budget(GateRule.Fixed)} massFrac=${budget(GateRule.Mass)}")
-      for (curve <- GateCurve.all)
-        println(s"[resolve] $dir ${curve.family}: " + curve.read(dir).fold("no curve")(rows =>
-          s"${rows.size} rows, ${curve.axisKey} ${rows.map(r => curve.show(r._1)).mkString("/")}"))
-      // K-curve budget audit: pure filesystem reads, so it runs in
-      // RESOLVE_ONLY mode too
-      val kCurve = GateCurve.K.readRecorded(dir)
-      val kBudgetMismatch = kCurve.flatMap(_._2).filter(_ != p)
-      (kCurve, kBudgetMismatch) match {
-        case (None, _) =>
-          println(s"[resolve] $dir K curve: none persisted (run the GateSweep K mode to measure)")
-        case (_, Some(pk)) =>
-          println(s"[resolve] $dir K curve was swept at P=$pk but production " +
-            s"resolves P=$p - re-sweep (GateSweep K mode) before trusting it")
-        case _ => () // budget-matched; the rule check below adjudicates it
-      }
+      val frac = GateRule.resolved(dir)
+      val how = if (frac == VectorQueries.GateMassFrac) "constant-or-curve" else "curve-sized"
+      println(s"[resolve] $dir massFrac=${GateCurve.show(frac)} ($how)")
+      println(s"[resolve] $dir ${GateCurve.family}: " + GateCurve.read(dir).fold("no curve")(rows =>
+        s"${rows.size} rows, ${GateCurve.axisKey} ${rows.map(r => GateCurve.show(r._1)).mkString("/")}"))
       spark.foreach { s =>
         val masses = VectorQueries.gateHomeMasses(s, dir)
         val n = masses.sum
         val k = VectorQueries.gateK(n)
-        val topP = masses.take(p).sum
+        val budget = math.max(1L, math.ceil(frac * n).toLong)
+        val cells = masses.scanLeft(0L)(_ + _).indexWhere(_ >= budget)
         println(s"[resolve] $dir mass: n=$n K=$k non-empty=${masses.size} " +
           s"max=${masses.head} p50=${masses(masses.size / 2)} " +
-          f"top${p}Mass=$topP (${100.0 * topP / n}%.1f%% of corpus; " +
-          f"balanced would be ${100.0 * math.min(p, k) / k}%.1f%%)")
-        val rule = VectorQueries.gateRuleFor(masses, n, p, k) match {
-          case GateRule.Mass => "MASS-BUDGET"
-          case GateRule.Fixed => "FIXED-P"
-        }
-        println(s"[resolve] $dir n=$n K=$k dispatch=$rule")
-        // the contradiction check only speaks for curves measured at
-        // the budget production actually resolves — a wrong-budget
-        // curve answers a question production never asks (the audit
-        // above already told the operator to re-sweep)
-        if (kCurve.isDefined && kBudgetMismatch.isEmpty)
-          VectorQueries.gateKRuleWarning(dir, n) match {
-            case Some(w) => println(s"[resolve] $dir K RULE WARNING: $w")
-            case None =>
-              println(s"[resolve] $dir K rule: sqrt-n undominated on the persisted curve (P=$p) - KEEP")
-          }
+          s"budget=$budget held by the $cells heaviest cells " +
+          s"(balanced would be ${math.ceil(frac * k).toInt})")
       }
     }
     spark.foreach(_.stop())

@@ -122,10 +122,11 @@ object Sf1Skew {
     * Each line carries the same self-adjudication key as the Bench
     * artifacts: the machine 1-min load average at [start, end] of the
     * query's reps. The skew corpus's 80 g sessions showed 2-3×
-    * back-to-back variance (qe15b read 80-129 s where a controlled
-    * same-session A/B read 38.9 s); a receipt line whose load reads hot
-    * names its own contamination. Read rule (BENCH_NOTES): trust a line
-    * only when both samples sit ≲ 0.2 over the session's own width.
+    * back-to-back variance (the gated density twin read 80-129 s where
+    * a controlled same-session A/B read 38.9 s); a receipt line whose
+    * load reads hot names its own contamination. Read rule
+    * (BENCH_NOTES): trust a line only when both samples sit ≲ 0.2 over
+    * the session's own width.
     *
     * Each line also summarizes the post-AQE stage widths of its reps
     * (min/median/max completed-stage task counts): what AQE actually
@@ -242,10 +243,8 @@ object Sf1Skew {
       "q43_copurchase_pagerank" -> (graft.queries.CoreQueries.q43 _),
       "q44_triangle_count" -> (graft.queries.CoreQueries.q44 _),
       "q45_lpa_communities" -> (graft.queries.CoreQueries.q45 _),
-      "qe15b_gated_density" -> (graft.queries.VectorQueries.qe15b _),
-      // the mass-budgeted twin — at this corpus's mass-skewed fit its
-      // pinned 0.35·n² scan is ~0.7× the fixed gate's inflated volume, so
-      // the smoke tracks BOTH probe rules' 10× behavior
+      // the gated density twin: its scan is pinned at 0.35·n² directed
+      // candidates on this corpus's mass-skewed fit
       "qe15c_massgated_density" -> (graft.queries.VectorQueries.qe15c _))
     val qs = sys.env.get("SPARK_GRAFT_SUITE") match {
       case Some("text") => textQs

@@ -20,6 +20,31 @@ object GraftProperties extends Properties("graft") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters)
       : org.scalacheck.Test.Parameters =
     p.withInitialSeed(org.scalacheck.rng.Seed(20260814L))
+      .withTestCallback(p.testCallback.chain(PropTimes))
+
+  // ScalaCheck suites report no durations to the JUnit XML, so each
+  // property's `Test.Result.time` goes to one `name<TAB>seconds<TAB>passed`
+  // line of target/test-reports/PROPTIMES-graft.GraftProperties.tsv,
+  // which tools/testcost.py lists. The sbt runner checks one property at
+  // a time and reports each result under an empty name, so every
+  // property marks itself current as it evaluates.
+  @volatile private var current = ""
+
+  override def properties: scala.collection.Seq[(String, Prop)] =
+    super.properties.map { case (n, prop) => n -> prop.contramap { gp => current = n; gp } }
+
+  private object PropTimes extends org.scalacheck.Test.TestCallback {
+    private lazy val out = {
+      val f = new java.io.File("target/test-reports/PROPTIMES-graft.GraftProperties.tsv")
+      f.getParentFile.mkdirs()
+      new java.io.PrintWriter(new java.io.FileWriter(f), true)
+    }
+
+    override def onTestResult(name: String, r: org.scalacheck.Test.Result): Unit =
+      synchronized {
+        out.println(s"${if (name.nonEmpty) name else current}\t${r.time / 1000.0}\t${r.passed}")
+      }
+  }
 
   private val finiteD: Gen[Double] =
     Gen.chooseNum(-1e9, 1e9).suchThat(d => !d.isNaN && !d.isInfinite)
@@ -359,7 +384,7 @@ object GraftProperties extends Properties("graft") {
   }
 
   property("gate candidate set invariant to input partitioning") = {
-    // the qe15b/qe22b/qe25b recall floors assume
+    // the qe15c/qe22c/qe25c recall floors assume
     // the IVF gate fit is reproducible — the seed pick is an
     // orderBy(vec_id).limit(k) (partition-independent by sort), and
     // every refit component is a 6dp-rounded avg, so FP summation
@@ -374,8 +399,8 @@ object GraftProperties extends Properties("graft") {
         val e = rows.toDF("vec_id", "label", "vec")
           .repartition(parts)
           .withColumn("nrm", functions.VectorFunctions.norm(col("vec")))
-        queries.GateRule.Fixed.candsWith(
-            e, queries.VectorQueries.gateFitCents(e, 8, n.toLong), 4, n.toLong)
+        queries.GateRule.candsWith(
+            e, queries.VectorQueries.gateFitCents(e, 8, n.toLong), 0.5, n.toLong)
           .select("ida", "idb", "cos").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
       }
@@ -385,14 +410,14 @@ object GraftProperties extends Properties("graft") {
   }
 
   property("mass-budgeted gate: full budget = probe-all, unit budget = home cell, budgets nest") = {
-    // the mass-budgeted probe (GateRule.Mass): the fixed-P rule's
-    // cost guarantee dies on mass-skewed fits, so the alternative cuts
-    // each vector's ranked-cell list at a cumulative home-mass budget.
-    // Its contract, pinned here against the production probe stage over
-    // the SAME fit: budget = n degenerates to probing every cell,
-    // budget = 1 degenerates to the home cell only (the nearest cell is
-    // always taken and always holds the vector itself), and candidate
-    // sets NEST as the budget grows (cum_before is budget-independent).
+    // the mass-budgeted probe (GateRule) cuts each vector's ranked-cell
+    // list at a cumulative home-mass budget. Its contract, pinned here
+    // against references built from the SAME fit: budget = n
+    // degenerates to probing every cell (every ordered pair of distinct
+    // ids), budget = 1 degenerates to the home cell only (the nearest
+    // cell is always taken and always holds the vector itself, so the
+    // pairs that share an argmin home cell), and candidate sets NEST as
+    // the budget grows (cum_before is budget-independent).
     forAll(Gen.chooseNum(20, 50), Gen.chooseNum(0L, 400L)) { (n, seed) =>
       val rnd = new scala.util.Random(seed)
       val rows = (0 until n).map(i =>
@@ -405,13 +430,24 @@ object GraftProperties extends Properties("graft") {
         df.select("ida", "idb", "cos").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       def mass(frac: Double) = collectSet(
-        queries.GateRule.Mass.candsWith(e, cents, frac, n.toLong))
-      def fixed(p: Int) = collectSet(
-        queries.GateRule.Fixed.candsWith(e, cents, p, n.toLong))
+        queries.GateRule.candsWith(e, cents, frac, n.toLong))
+      // (ida, idb, 6dp cosine) of the ordered pairs of distinct ids that
+      // `keep` admits, cid being each side's argmin home cell
+      def pairs(keep: org.apache.spark.sql.Column) = {
+        val homed = queries.GateRule.homes(e,
+            functions.VectorFunctions.centroidDists(col("vec"), cents))
+          .join(e, col("idb") === col("vec_id"))
+        def side(x: String) = homed.select(col("vec_id").as(s"id$x"),
+          col("vec").as(s"v$x"), col("nrm").as(s"n$x"), col("cid").as(s"c$x"))
+        collectSet(side("a").crossJoin(side("b"))
+          .filter(col("ida") =!= col("idb") && keep)
+          .withColumn("cos", Rounding.dround(functions.VectorFunctions.cosine(
+            col("va"), col("vb"), col("na"), col("nb")), 6)))
+      }
       val full = mass(1.0)
       val unit = mass(1e-12)
       val mid = mass(0.5)
-      full.nonEmpty && full == fixed(k) && unit == fixed(1) &&
+      full.nonEmpty && full == pairs(lit(true)) && unit == pairs(col("ca") === col("cb")) &&
         unit.subsetOf(mid) && mid.subsetOf(full)
     }
   }

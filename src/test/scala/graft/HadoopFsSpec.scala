@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path => JPath}
 
+import queries.GateCurve
+
 /** Probe semantics for sources.HadoopFs — the one place index staleness
   * (qd6b/qe5b) and streaming history listing answer "is it there, is it
   * fresh". Local-FS backed (the FileSystem API is the same object
@@ -56,83 +58,36 @@ class HadoopFsSpec extends AnyFunSuite {
   }
 
   test("gate sweep curve round-trips through _sweep.json in the fit-fingerprinted dir") {
-    // the measured probes→recall table
-    // persists at a path fingerprinted on the FIT parameters only —
-    // the curve sweeps the budget axis, so the budget must not key its
-    // location (the sized build changes the budget and must still find
-    // the curve that sized it). A fit change still orphans the curve.
+    // the measured mass→recall table persists at a path fingerprinted
+    // on the FIT parameters only — the curve sweeps the budget axis, so
+    // the budget must not key its location (the sized build changes the
+    // budget and must still find the curve that sized it). A fit change
+    // still orphans the curve.
     val dir = tmpDir().toString
-    val rows: Seq[graft.queries.GateCurve.Row] = Seq(
-      (8, 713000L, 0.57, 0.41, 0.45), (16, 1430000L, 0.7782, 0.7146, 0.65))
-    assert(graft.queries.GateCurve.Probe.read(dir).isEmpty)
-    graft.queries.GateCurve.Probe.write(dir, rows)
-    assert(graft.queries.GateCurve.Probe.path(dir).endsWith("/_sweep.json"))
-    assert(graft.queries.GateCurve.Probe.path(dir)
-      != graft.queries.GateCurve.Mass.path(dir),
-      "probe and mass curves are different measurements with distinct homes")
-    assert(graft.queries.GateCurve.Probe.read(dir).contains(rows))
+    val rows: Seq[GateCurve.Row] = Seq(
+      (0.2, 839988L, 0.6118, 0.4656, 0.4855), (0.35, 1440819L, 0.7811, 0.7166, 0.6505))
+    assert(GateCurve.read(dir).isEmpty)
+    GateCurve.write(dir, rows)
+    assert(GateCurve.path(dir).endsWith("/_sweep.json"))
+    assert(GateCurve.read(dir).contains(rows))
   }
 
   test("mass sweep round-trips; recall-targeted sizing reads the persisted curves") {
-    // GateCurve.cheapest is the P(n)-policy endpoint —
-    // smallest measured budget meeting the recall target, None when the
-    // curve is absent or never reaches it (no silent under-delivery)
+    // GateCurve.cheapest is the sizing policy's endpoint — smallest
+    // measured budget meeting the recall target, None when the curve is
+    // absent or never reaches it (no silent under-delivery)
     val dir = tmpDir().toString
-    val probeRows: Seq[graft.queries.GateCurve.Row] = Seq(
-      (16, 1430000L, 0.7782, 0.7146, 0.65), (8, 713000L, 0.57, 0.41, 0.45),
-      (24, 2140000L, 0.89, 0.85, 0.81))
-    val massRows: Seq[graft.queries.GateCurve.Row] = Seq(
-      (0.2, 839988L, 0.6118, 0.4656, 0.4855),
+    val massRows: Seq[GateCurve.Row] = Seq(
       (0.35, 1440819L, 0.7811, 0.7166, 0.6505),
+      (0.2, 839988L, 0.6118, 0.4656, 0.4855),
       (0.5, 2043242L, 0.8812, 0.8381, 0.7945))
-    assert(graft.queries.GateCurve.Probe.cheapest(dir, 0.7).isEmpty)
-    assert(graft.queries.GateCurve.Mass.cheapest(dir, 0.7).isEmpty)
-    graft.queries.GateCurve.Probe.write(dir, probeRows)
-    graft.queries.GateCurve.Mass.write(dir, massRows)
-    assert(graft.queries.GateCurve.Mass.path(dir).endsWith("/_sweep.json"))
-    assert(graft.queries.GateCurve.Mass.read(dir).contains(massRows))
+    assert(GateCurve.cheapest(dir, 0.7).isEmpty)
+    GateCurve.write(dir, massRows)
+    assert(GateCurve.read(dir).contains(massRows))
     // smallest budget meeting the target, in budget order not file order
-    assert(graft.queries.GateCurve.Probe.cheapest(dir, 0.70).contains(16))
-    assert(graft.queries.GateCurve.Probe.cheapest(dir, 0.85).contains(24))
-    assert(graft.queries.GateCurve.Probe.cheapest(dir, 0.95).isEmpty)
-    assert(graft.queries.GateCurve.Mass.cheapest(dir, 0.70).contains(0.35))
-    assert(graft.queries.GateCurve.Mass.cheapest(dir, 0.85).contains(0.5))
-    assert(graft.queries.GateCurve.Mass.cheapest(dir, 0.95).isEmpty)
-  }
-
-  test("K-sweep curve round-trips beside the probe curve with the same staleness rule") {
-    val dir = tmpDir().toString
-    val rows: Seq[graft.queries.GateCurve.Row] = Seq(
-      (71, 2800000L, 0.91, 0.88, 0.85), (142, 1400000L, 0.867, 0.806, 0.775),
-      (284, 700000L, 0.78, 0.7, 0.66))
-    assert(graft.queries.GateCurve.K.read(dir).isEmpty)
-    graft.queries.GateCurve.K.write(dir, rows, probes = Some(16))
-    assert(graft.queries.GateCurve.K.path(dir).endsWith("/_ksweep.json"))
-    // the artifact records the probe budget it measured at
-    assert(new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(graft.queries.GateCurve.K.path(dir)).toPath), "UTF-8")
-      .contains(""""probes":16"""))
-    // shares the probe curve's fit-fingerprinted home, distinct file
-    assert(new java.io.File(graft.queries.GateCurve.K.path(dir)).getParent
-      == new java.io.File(graft.queries.GateCurve.Probe.path(dir)).getParent)
-    assert(graft.queries.GateCurve.K.read(dir).contains(rows))
-    // the committed curve shape is a
-    // monotone cost/recall trade — the sqrt-n rule is undominated
-    assert(graft.queries.VectorQueries.gateKRuleWarning(dir, 20164L).isEmpty,
-      "an equivalence-shaped K curve must not flag the sqrt-n rule")
-  }
-
-  test("K-rule onboarding check flags a curve where another K dominates sqrt-n (VERDICT r15 item 7)") {
-    val dir = tmpDir().toString
-    // K=284 reaches MORE recall15 than the rule's own K=142 row at
-    // HALF the candidate rows — this corpus's geometry breaks the
-    // equal-scanned-mass equivalence, so onboarding must hear about it
-    graft.queries.GateCurve.K.write(dir, Seq(
-      (71, 2800000L, 0.91, 0.88, 0.85),
-      (142, 1400000L, 0.80, 0.75, 0.72),
-      (284, 700000L, 0.85, 0.80, 0.77)), probes = Some(16))
-    val w = graft.queries.VectorQueries.gateKRuleWarning(dir, 20164L)
-    assert(w.exists(_.contains("K=284 dominates K=142")), s"got $w")
+    assert(GateCurve.cheapest(dir, 0.70).contains(0.35))
+    assert(GateCurve.cheapest(dir, 0.85).contains(0.5))
+    assert(GateCurve.cheapest(dir, 0.95).isEmpty)
   }
 
   test("sweep readers parse scientific-notation doubles and refuse curves older than the corpus") {
@@ -141,34 +96,79 @@ class HadoopFsSpec extends AnyFunSuite {
     // Double.toString goes scientific below 1e-3
     // ("1.0E-4") — a reader that drops such rows silently truncates the
     // curve it certifies budgets from
-    val rows: Seq[graft.queries.GateCurve.Row] =
-      Seq((8, 713000L, 1.0E-4, 0.41, 0.45), (16, 1430000L, 0.78, 0.71, 0.65))
-    graft.queries.GateCurve.Probe.write(dir, rows)
-    assert(graft.queries.GateCurve.Probe.read(dir).contains(rows))
-    assert(graft.queries.GateCurve.Probe.cheapest(dir, 0.5).contains(16))
+    val rows: Seq[GateCurve.Row] =
+      Seq((1.0E-4, 713000L, 1.0E-4, 0.41, 0.45), (0.35, 1430000L, 0.78, 0.71, 0.65))
+    GateCurve.write(dir, rows)
+    assert(GateCurve.read(dir).contains(rows))
+    assert(GateCurve.cheapest(dir, 0.5).contains(0.35))
     // same parameters + same path but a REGENERATED
     // source corpus must orphan the curve — stale measurements may
     // neither certify budgets nor raise floors
-    val sweepF = new java.io.File(graft.queries.GateCurve.Probe.path(dir))
+    val sweepF = new java.io.File(GateCurve.path(dir))
     touch(dirP.resolve("embeddings.parquet"), sweepF.lastModified + 60_000)
-    assert(graft.queries.GateCurve.Probe.read(dir).isEmpty,
+    assert(GateCurve.read(dir).isEmpty,
       "a sweep older than its corpus must read as absent")
     // refreshing the sweep AFTER the data change serves again
     sweepF.setLastModified(sweepF.lastModified + 120_000)
-    assert(graft.queries.GateCurve.Probe.read(dir).contains(rows))
+    assert(GateCurve.read(dir).contains(rows))
   }
 
-  test("K-rule check requires dominance on ALL THREE measures (ADVICE r16)") {
-    val dir = tmpDir().toString
-    // K=284 beats the rule's row on recall15 with fewer candidates but
-    // COLLAPSES recall22/agree25 — under the GateSecondaryMin
-    // philosophy that is a trade, not a domination, and must not flag
-    graft.queries.GateCurve.K.write(dir, Seq(
-      (71, 2800000L, 0.91, 0.88, 0.85),
-      (142, 1400000L, 0.80, 0.75, 0.72),
-      (284, 700000L, 0.85, 0.40, 0.35)), probes = Some(16))
-    assert(graft.queries.VectorQueries.gateKRuleWarning(dir, 20164L).isEmpty,
-      "a recall15-only win with collapsed secondaries must not flag the sqrt-n rule")
+  test("indexPath keys on the compiled code: stable per JVM, a hash of the class bytes, other keys not served") {
+    import sources.HadoopFs
+    // the test-side hash: every .class file below graft/ under the code
+    // source, in relative-path order, path + 0 byte + bytes, CRC-32C
+    val root = java.nio.file.Paths.get(
+      HadoopFs.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val walk = Files.walk(root.resolve("graft"))
+    val classes = try walk.toArray.map(_.asInstanceOf[JPath])
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".class"))
+      .map(p => root.relativize(p).toString.replace(java.io.File.separatorChar, '/') -> p)
+      .sortBy(_._1) finally walk.close()
+    assert(classes.nonEmpty)
+    val crc = new java.util.zip.CRC32C()
+    for ((name, p) <- classes) {
+      crc.update(name.getBytes("UTF-8"))
+      crc.update(0)
+      crc.update(Files.readAllBytes(p))
+    }
+    assert(HadoopFs.codeFingerprint == f"${crc.getValue}%08x")
+    // the same classes packaged as a jar key alike
+    val jar = Files.createTempFile("graft_code", ".jar")
+    val out = new java.util.jar.JarOutputStream(Files.newOutputStream(jar))
+    try for ((name, p) <- classes.reverse) {
+      out.putNextEntry(new java.util.jar.JarEntry(name))
+      out.write(Files.readAllBytes(p))
+      out.closeEntry()
+    } finally out.close()
+    assert(HadoopFs.codeFingerprintOf(jar.toFile) == HadoopFs.codeFingerprint)
+    Files.delete(jar)
+    // memoized: a recomputation over the same classes agrees
+    assert(HadoopFs.codeFingerprintOf(root.toFile) == HadoopFs.codeFingerprint)
+    val data = tmpDir()
+    touch(data.resolve("embeddings.parquet"), 1_700_000_000_000L)
+    val dir = data.toString
+    assert(HadoopFs.indexPath("probe", dir, 1) == HadoopFs.indexPath("probe", dir, 1))
+    var builds = 0
+    val ix = sources.PersistedIndex("probe", "embeddings", "w",
+      d => HadoopFs.indexPath("probe", d, 1), (_, _, p) => {
+        builds += 1
+        touch(Files.createDirectories(java.nio.file.Paths.get(s"$p/w")).resolve("_SUCCESS"),
+          System.currentTimeMillis())
+      })
+    // a fresh-looking index written under another code key
+    val other = s"${sys.props("java.io.tmpdir")}/graft_probe_" +
+      s"${HadoopFs.paramFingerprint(1, "0ther0k3")}_${HadoopFs.dirSlug(dir)}"
+    touch(Files.createDirectories(java.nio.file.Paths.get(s"$other/w")).resolve("_SUCCESS"),
+      System.currentTimeMillis())
+    try {
+      assert(ix.path(dir) != other)
+      assert(!ix.fresh(spark, dir), "an index planted under another code key must not be served")
+      assert(ix.ensure(spark, dir) == ix.path(dir) && builds == 1)
+      assert(ix.fresh(spark, dir))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(other))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ix.path(dir)))
+    }
   }
 
   test("dirSlug: clean local paths normalize; URI-style dirs keep their raw slug (ADVICE r16)") {

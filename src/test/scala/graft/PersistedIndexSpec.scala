@@ -28,7 +28,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     val d = dir.getPath
     val all = PersistedIndex.all
     try {
-      assert(all.map(_.name).distinct.size == 9)
+      assert(all.map(_.name).distinct.size == 8)
       all.foreach(ix => assert(!ix.fresh(spark, d), s"${ix.name} not cold"))
       all.foreach(_.ensure(spark, d))
       val torn = all.flatMap { ix =>

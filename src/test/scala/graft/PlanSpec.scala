@@ -365,32 +365,6 @@ class PlanSpec extends AnyFunSuite {
         "its candidate join must stay an equi-join on the cluster id")
   }
 
-  test("qe15b/qe22b/qe25b gated twins: cell-id equi-join, no all-pairs theta join") {
-    // the b-variants exist to replace the exact `ida < idb` self-joins
-    // of qe15/qe22/qe25 with a multi-probe posting-list equi-join on
-    // the IVF cell id — a nested-loop or cartesian anywhere means the
-    // gate regressed to the all-pairs shape. The scored candidate
-    // frame is a PERSISTED shared index, so the load-bearing pin is on
-    // the BUILD plan (GateRule.Fixed.cands — the fit + probe/home equi-join);
-    // the per-twin plans must additionally stay free of theta joins
-    // in their rank/agg tails. qe15b's full plan carries ONE
-    // BroadcastNestedLoopJoin: the 1-row n_all count
-    // crossJoin(broadcast(...)) in the OOD tail — the scalar-broadcast
-    // idiom, scale-safe.
-    val build = finalPlan(queries.GateRule.Fixed.cands(spark, sf))
-    assert(!build.contains("BroadcastNestedLoopJoin") &&
-      !build.contains("CartesianProduct"),
-      "gate index build must stay an equi-join on the cell id")
-    for (q <- Seq(queries.VectorQueries.knnPairsAt(spark, sf, queries.GateRule.Fixed),
-                  queries.VectorQueries.qe22b(spark, sf),
-                  queries.VectorQueries.qe25b(spark, sf))) {
-      val p = finalPlan(q)
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-        "gated twin candidate generation must stay an equi-join on the cell id")
-    }
-    assert(!finalPlan(queries.VectorQueries.qe15b(spark, sf)).contains("CartesianProduct"))
-  }
-
   test("qe15c mass-budgeted gate: map-only running-mass cut, no theta join, no Window") {
     // an earlier twin used an n·K window cumsum; the build now cuts
     // each vector's ranked cell list by a running-sum
@@ -399,13 +373,13 @@ class PlanSpec extends AnyFunSuite {
     // NO Window operator and no Exchange between probe assignment and
     // the candidate equi-join (the only joins left are the cell-id
     // equi-join and the two id-side lookups).
-    val build = finalPlan(queries.GateRule.Mass.cands(spark, sf))
+    val build = finalPlan(queries.GateRule.cands(spark, sf))
     assert(!build.contains("BroadcastNestedLoopJoin") &&
       !build.contains("CartesianProduct"),
       "mass-budget build must stay equi-joins on the cell id")
     assert(!build.contains("Window"),
       "the cut is map-only — a Window in the build means the n·K cumsum shuffle is back")
-    for (q <- Seq(queries.VectorQueries.knnPairsAt(spark, sf, queries.GateRule.Mass),
+    for (q <- Seq(queries.VectorQueries.knnPairsAt(spark, sf),
                   queries.VectorQueries.qe22c(spark, sf),
                   queries.VectorQueries.qe25c(spark, sf)))
       assert(!finalPlan(q).contains("CartesianProduct"),

@@ -74,32 +74,14 @@ class RecallSpec extends AnyFunSuite {
     // qe14b's shortlist (different depths), so the old ≤-qe14b note is
     // retired with the ML quantizer.
     ("qe20_ivf_pq", "sf0.01") -> 0.60, ("qe20_ivf_pq", "sf0.1") -> 0.60,
-    // The scale-true resizing
-    // (K = ⌈√n⌉ cells) bought the n^1.5 complexity class by LOWERING
-    // the sf0.1 floors to 0.48/0.33/0.38 at a fixed 8-probe budget.
-    // tools/GateSweep measured the probe/recall curve the verdict
-    // asked for: at sf0.1, P=8 → 0.57/0.41/0.45, P=12 →
-    // 0.68/0.56/0.54, P=16 → 0.78/0.71/0.65, P=24 → 0.89/0.85/0.81,
-    // candidate volume linear in P. GateProbes=16 is the knee that
-    // clears the earlier floor levels on all three twins while the
-    // scanned fraction stays P/√n (0.05% at n=10⁹) — complexity
-    // class unchanged, bench bars (≤2 s, ≤ exact anchor) re-measured
-    // and held (BENCH_NOTES r13). Floors sit under measured
-    // (0.9452/0.9348/0.9020 at sf0.01, 0.7782/0.7146/0.6500 at
-    // sf0.1) with the usual one-unlucky-corpus margin; qe22b stays
-    // structurally lowest (a mutual pair must survive the gate in
-    // BOTH directions).
-    ("qe15b_gated_density", "sf0.01") -> 0.85, ("qe15b_gated_density", "sf0.1") -> 0.65,
-    // the mass-budgeted twin pins COST (⌈0.35·n⌉ scanned mass per
+    // the mass-budgeted gate pins COST (⌈0.35·n⌉ scanned mass per
     // query) and lets recall float — measured 0.7448/0.7811 at
-    // sf0.01/sf0.1 (gates/r14/mass_sweep_sf.txt); floors are measured
-    // minus the 0.10 one-unlucky-corpus margin. No probe-sweep curve
-    // applies (the swept axis is mass, not probes), so these stay static.
+    // sf0.01/sf0.1 (gates/curves/); floors are measured minus the 0.10
+    // one-unlucky-corpus margin, tightened by the sweep curve when one
+    // applies (sweepFloor).
     ("qe15c_massgated_density", "sf0.01") -> 0.64, ("qe15c_massgated_density", "sf0.1") -> 0.68,
     ("qe22c_massgated_mutual_nn", "sf0.01") -> 0.53, ("qe22c_massgated_mutual_nn", "sf0.1") -> 0.61,
-    ("qe25c_massgated_confusion", "sf0.01") -> 0.50, ("qe25c_massgated_confusion", "sf0.1") -> 0.55,
-    ("qe22b_gated_mutual_nn", "sf0.01") -> 0.85, ("qe22b_gated_mutual_nn", "sf0.1") -> 0.60,
-    ("qe25b_gated_confusion", "sf0.01") -> 0.80, ("qe25b_gated_confusion", "sf0.1") -> 0.55)
+    ("qe25c_massgated_confusion", "sf0.01") -> 0.50, ("qe25c_massgated_confusion", "sf0.1") -> 0.55)
 
   private val results =
     scala.collection.mutable.LinkedHashMap[(String, String), (Double, Double, String)]()
@@ -156,15 +138,6 @@ class RecallSpec extends AnyFunSuite {
     * Returns (floor, sizedAway).
     */
   private def sweepFloor(name: String, sf: Sf): Option[(Double, Boolean)] = {
-    // the c-trio reads the MASS sweep at GateMassFrac, the b-trio
-    // the probe sweep at GateProbes — each curve lives inside its own
-    // fingerprinted index dir, so neither can cross-apply.
-    val probeCol = name match {
-      case "qe15b_gated_density" => Some(3)
-      case "qe22b_gated_mutual_nn" => Some(4)
-      case "qe25b_gated_confusion" => Some(5)
-      case _ => None
-    }
     val massCol = name match {
       case "qe15c_massgated_density" => Some(3)
       case "qe22c_massgated_mutual_nn" => Some(4)
@@ -176,22 +149,17 @@ class RecallSpec extends AnyFunSuite {
       case 4 => r._4
       case _ => r._5
     }
-    // the production build is sized by GateRule.Fixed/Mass.resolved
-    // (curve-driven when a current sweep exists),
-    // so the floor must read the curve at the budget the build ACTUALLY
-    // used — reading the static constant would floor a P=8-sized build
-    // against P=16's measured recall and fail spuriously.
-    val measured = probeCol.flatMap { c =>
-      val p = queries.GateRule.Fixed.resolved(sf.dir)
-      queries.GateCurve.Probe.read(sf.dir)
-        .flatMap(_.find(_._1 == p))
-        .map(r => (pick(c, r), c, p != queries.VectorQueries.GateProbes))
-    }.orElse(massCol.flatMap { c =>
-      val f = queries.GateRule.Mass.resolved(sf.dir)
-      queries.GateCurve.Mass.read(sf.dir)
+    // the production build is sized by GateRule.resolved (curve-driven
+    // when a current sweep exists), so the floor must read the curve at
+    // the budget the build ACTUALLY used — reading the static constant
+    // would floor a 0.2-sized build against 0.35's measured recall and
+    // fail spuriously.
+    val measured = massCol.flatMap { c =>
+      val f = queries.GateRule.resolved(sf.dir)
+      queries.GateCurve.read(sf.dir)
         .flatMap(_.find(_._1 == f))
         .map(r => (pick(c, r), c, f != queries.VectorQueries.GateMassFrac))
-    })
+    }
     // when sizing chose a non-constant budget, the
     // sweep-derived floor is measured-minus-margin AT the budget the
     // same sweep picked — self-certifying on its own. There the sizing
@@ -399,32 +367,13 @@ class RecallSpec extends AnyFunSuite {
         "qe1 exact top-5, 16/64-dim coarse + n/5 rerank pool")
     }
 
-    test(s"qe15b gated-density neighbor recall@5 vs exact all-pairs [${sf.label}]") {
-      val exact = queries.VectorQueries.knnPairsExact(spark, sf.dir)
-      val gated = queries.VectorQueries.knnPairsAt(spark, sf.dir, queries.GateRule.Fixed)
-      val n = exact.count()
-      val hit = exact.join(gated, Seq("ida", "idb"), "left_semi").count()
-      record("qe15b_gated_density", sf, hit.toDouble / n,
-        s"qe15 exact 5-NN pairs, sqrt(n)-cell ${queries.GateRule.Fixed.resolved(sf.dir).toInt}-probe IVF gate")
-    }
-
     test(s"qe15c mass-gated density neighbor recall@5 vs exact all-pairs [${sf.label}]") {
       val exact = queries.VectorQueries.knnPairsExact(spark, sf.dir)
-      val gated = queries.VectorQueries.knnPairsAt(spark, sf.dir, queries.GateRule.Mass)
+      val gated = queries.VectorQueries.knnPairsAt(spark, sf.dir)
       val n = exact.count()
       val hit = exact.join(gated, Seq("ida", "idb"), "left_semi").count()
       record("qe15c_massgated_density", sf, hit.toDouble / n,
         "qe15 exact 5-NN pairs, mass-budgeted gate at ceil(0.35n) scanned mass")
-    }
-
-    test(s"qe22b gated mutual-NN pair recall vs exact qe22 [${sf.label}]") {
-      val exact = queries.VectorQueries.qe22(spark, sf.dir).select("vec_a", "vec_b")
-      val gated = queries.VectorQueries.qe22b(spark, sf.dir).select("vec_a", "vec_b")
-      val n = exact.count()
-      val hit = exact.join(gated, Seq("vec_a", "vec_b"), "left_semi").count()
-      record("qe22b_gated_mutual_nn", sf,
-        if (n == 0) 1.0 else hit.toDouble / n,
-        s"qe22 exact mutual-top-1 pairs, sqrt(n)-cell ${queries.GateRule.Fixed.resolved(sf.dir).toInt}-probe IVF gate")
     }
 
     test(s"qe22c mass-gated mutual-NN pair recall vs exact qe22 [${sf.label}]") {
@@ -440,25 +389,13 @@ class RecallSpec extends AnyFunSuite {
     test(s"qe25c mass-gated kNN-vote prediction agreement vs exact qe25 [${sf.label}]") {
       val exact = queries.VectorQueries.qe25PredExact(spark, sf.dir)
         .select(col("ida"), col("pred_label").as("pe"))
-      val gated = queries.VectorQueries.qe25PredAt(spark, sf.dir, queries.GateRule.Mass)
+      val gated = queries.VectorQueries.qe25PredAt(spark, sf.dir)
         .select(col("ida"), col("pred_label").as("pg"))
       val n = exact.count()
       val hit = exact.join(gated, Seq("ida"))
         .filter(col("pe") === col("pg")).count()
       record("qe25c_massgated_confusion", sf, hit.toDouble / n,
         "qe25 exact LOO votes, mass-budgeted gate at ceil(0.35n)")
-    }
-
-    test(s"qe25b gated kNN-vote prediction agreement vs exact qe25 [${sf.label}]") {
-      val exact = queries.VectorQueries.qe25PredExact(spark, sf.dir)
-        .select(col("ida"), col("pred_label").as("pe"))
-      val gated = queries.VectorQueries.qe25PredAt(spark, sf.dir, queries.GateRule.Fixed)
-        .select(col("ida"), col("pred_label").as("pg"))
-      val n = exact.count()
-      val hit = exact.join(gated, Seq("ida"))
-        .filter(col("pe") === col("pg")).count()
-      record("qe25b_gated_confusion", sf, hit.toDouble / n,
-        s"qe25 exact per-vector kNN label votes, sqrt(n)-cell ${queries.GateRule.Fixed.resolved(sf.dir).toInt}-probe IVF gate")
     }
   }
 

@@ -11,24 +11,18 @@
 #                             min-of-2 per query (SPARK_GRAFT_SUITE=all
 #                             adds the duplication-heavy text family)
 #   2. tools/GateResolve    — home-mass distribution of the production
-#                             gate fit and the fixed-P vs mass-budget
-#                             dispatch it drives, plus the resolved
-#                             budgets and curves (with a Spark session)
-#   3. tools/GateSweep      — probe-budget recall curve, persisted as
+#                             gate fit, plus the resolved mass budget
+#                             and curve (with a Spark session)
+#   3. tools/GateSweep      — scanned-mass recall curve, persisted as
 #                             _sweep.json (drives recall-targeted sizing)
-#   4. tools/GateSweep mass — scanned-mass recall curve, ditto
-#   5. tools/GateSweep K    — cell-count recall curve (_ksweep.json);
-#                             the COSTLIEST mode: every swept K is a
-#                             full quantizer refit, ~30+ min for 3 Ks
-#   6. tools/GateResolve    — registry resolve audit of sf0.01, sf0.1
+#   4. tools/GateResolve    — registry resolve audit of sf0.01, sf0.1
 #                             and the skew corpus, no Spark session
 #
-# Wall-clock: ~30 min probe sweep + ~20 min mass sweep + ~30 min K
-# sweep + ~10 min suite on a 32-core box (BENCH_NOTES r14/r15).
-# Artifacts print to stdout; commit them under gates/r<N>/ like
-# gates/r14/sf1skew_suite.txt.
+# Wall-clock: ~20 min mass sweep + ~10 min suite on a 32-core box
+# (BENCH_NOTES). Artifacts print to stdout; commit them under
+# gates/r<N>/ like gates/r14/sf1skew_suite.txt.
 #
-# Usage: tools/skew_suite.sh [suite|balance|sweep|masssweep|ksweep|resolve|all]
+# Usage: tools/skew_suite.sh [suite|balance|masssweep|resolve|all]
 # (default: all). Suite lines carry per-query "load [start, end]"
 # samples — the Bench artifacts' self-adjudication key (trust a line
 # only when both samples read idle); SPARK_GRAFT_ONLY=name,name
@@ -43,7 +37,7 @@ STEP="${1:-all}"
 run() { echo ">>> $*"; sbt -batch "$@"; }
 
 # Back-to-back 80g sessions leave load/GC/
-# page-cache residue that contaminated three rounds of receipts (qe15b
+# page-cache residue that contaminated the receipts (the gated density twin
 # read 80-129 s where a controlled A/B read 39 s). Wait for the 1-min
 # load to decay below SPARK_GRAFT_LOAD_TARGET (default 2.0, the honest-
 # close-take level) before each session, capped at 10 min — if it never
@@ -68,7 +62,7 @@ if [[ "$STEP" == "suite" || "$STEP" == "all" ]]; then
   # builds the corpus if absent, then times the skew suite. The SUITE
   # runs at the full 32-thread width (the committed receipts' config —
   # 16-cpu/192-shuffle sweep knobs here read ~2x slow on the graph
-  # family and 3x on qe15b, pure harness); only the SWEEPS need the
+  # family and 3x on the gated density twin, pure harness); only the SWEEPS need the
   # narrow/wide-shuffle session, because their 200M-row exact-pair
   # anchors OOM 32 concurrent sort tasks on an 80g heap.
   wait_load
@@ -81,19 +75,9 @@ if [[ "$STEP" == "balance" || "$STEP" == "all" ]]; then
   wait_load
   run "runMain graft.tools.GateResolve $SKEW_DIR"
 fi
-if [[ "$STEP" == "sweep" || "$STEP" == "all" ]]; then
-  # budgets past the sf0.1 knee — the n=20k decay-study grid
-  wait_load
-  SPARK_GRAFT_BUDGETS=8,16,32 run "runMain graft.tools.GateSweep $SKEW_DIR"
-fi
 if [[ "$STEP" == "masssweep" || "$STEP" == "all" ]]; then
   wait_load
   SPARK_GRAFT_MASS_BUDGETS=0.1,0.35,0.53 run "runMain graft.tools.GateSweep $SKEW_DIR"
-fi
-if [[ "$STEP" == "ksweep" || "$STEP" == "all" ]]; then
-  # K = sqrt(n)/2, sqrt(n), 2*sqrt(n) at n=20k (sqrt = 142)
-  wait_load
-  SPARK_GRAFT_K_BUDGETS=71,142,284 run "runMain graft.tools.GateSweep $SKEW_DIR"
 fi
 if [[ "$STEP" == "resolve" || "$STEP" == "all" ]]; then
   # the closing gate always includes the
@@ -104,7 +88,5 @@ if [[ "$STEP" == "resolve" || "$STEP" == "all" ]]; then
   SPARK_GRAFT_RESOLVE_ONLY=1 \
     run "runMain graft.tools.GateResolve /root/testdata/sf0.01 /root/testdata/sf0.1 $SKEW_DIR"
 fi
-echo ">>> done; persisted curves:"
-ls -la "${TMPDIR:-/tmp}"/graft_gatesweep_*_sf1_skew/_sweep.json \
-  "${TMPDIR:-/tmp}"/graft_gatesweep_*_sf1_skew/_ksweep.json \
-  "${TMPDIR:-/tmp}"/graft_gatemasssweep_*_sf1_skew/_sweep.json 2>/dev/null || true
+echo ">>> done; persisted curve:"
+ls -la "${TMPDIR:-/tmp}"/graft_gatemasssweep_*_sf1_skew/_sweep.json 2>/dev/null || true

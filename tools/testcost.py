@@ -22,6 +22,11 @@ against the wall time of the sbt command that produced the reports.
 sbt overwrites only the reports of the suites it runs, so empty the
 directory before a full run whose table you mean to keep.
 
+A ScalaCheck suite that writes `PROPTIMES-<suite>.tsv` next to the
+reports (one `name<TAB>seconds<TAB>passed` line per property, from each
+property's `Test.Result.time`; GraftProperties does) gets a second
+table: its properties, most expensive first.
+
 Usage:
   python3 tools/testcost.py [report_dir] [--start 2026-01-01T00:00:00]
   python3 tools/testcost.py --selftest
@@ -75,6 +80,33 @@ def table(rows):
     return "\n".join(lines)
 
 
+def read_prop_times(report_dir):
+    """{suite: [(property, seconds, passed)]} from PROPTIMES-<suite>.tsv."""
+    out = {}
+    for name in sorted(os.listdir(report_dir)):
+        if not (name.startswith("PROPTIMES-") and name.endswith(".tsv")):
+            continue
+        rows = []
+        with open(os.path.join(report_dir, name)) as f:
+            for line in f:
+                parts = line.rstrip("\n").split("\t")
+                if len(parts) == 3:
+                    rows.append((parts[0], float(parts[1]), parts[2] == "true"))
+        out[name[len("PROPTIMES-"):-len(".tsv")]] = rows
+    return out
+
+
+def prop_table(suite, rows):
+    """The per-property markdown table of one suite, most expensive first."""
+    total = sum(r[1] for r in rows)
+    lines = [f"| {suite} property | s | passed | share |", "|---|---:|---|---:|"]
+    for prop, secs, passed in sorted(rows, key=lambda r: (-r[1], r[0])):
+        share = secs / total if total > 0 else 0.0
+        lines.append(f"| {prop} | {secs:.1f} | {'yes' if passed else 'NO'} | {share:.1%} |")
+    lines.append(f"| **total** ({len(rows)} properties) | {total:.1f} | | 100.0% |")
+    return "\n".join(lines)
+
+
 def selftest():
     def suite(name, tests, failures, time):
         return (f'<testsuite name="{name}" tests="{tests}" errors="0" failures="{failures}" '
@@ -109,6 +141,16 @@ def selftest():
     assert no_start[0] == ("graft.Props", 4, 0, -0.004, None), no_start[0]
     assert "| graft.Props | 4 | 0 | -0.0 | — |" in table(no_start)
     assert table([]).splitlines()[-1] == "| **total** | 0 | 0 | 0.0 | 0.0 | 100.0% |"
+    with tempfile.TemporaryDirectory() as d:
+        with open(os.path.join(d, "PROPTIMES-graft.Props.tsv"), "w") as f:
+            f.write("graft.fast\t0.5\ttrue\ngraft.slow\t59.5\tfalse\nnot a row\n")
+        props = read_prop_times(d)
+    assert props == {"graft.Props": [("graft.fast", 0.5, True),
+                                     ("graft.slow", 59.5, False)]}, props
+    out = prop_table("graft.Props", props["graft.Props"]).splitlines()
+    assert out[2] == "| graft.slow | 59.5 | NO | 99.2% |", out[2]
+    assert out[3] == "| graft.fast | 0.5 | yes | 0.8% |", out[3]
+    assert out[4] == "| **total** (2 properties) | 60.0 | | 100.0% |", out[4]
     print("selftest OK")
 
 
@@ -127,6 +169,9 @@ def main(argv):
         print(f"no TEST-*.xml reports in {args.report_dir}", file=sys.stderr)
         return 1
     print(table(rows))
+    for suite, props in read_prop_times(args.report_dir).items():
+        print()
+        print(prop_table(suite, props))
     return 0
 
 
